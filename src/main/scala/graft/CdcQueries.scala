@@ -166,22 +166,6 @@ object CdcQueries {
         .write.mode("overwrite").text(out)
     }
 
-  /** Gzip-compressed variant of [[upsertLinesDir]] for the third-decade
-    * CDC series: the 1000× feed is ~41 GB of raw text — more than the
-    * sandbox disk holds — and a production spool compresses its segments
-    * anyway. The WHOLE round-12 decade series uses this variant at every
-    * scale so the codec is held constant within the series (a decade
-    * table mixing raw-text and gzip points would not be one curve).
-    * Gzip specifically because its codec is pure-JDK zlib — no native
-    * hadoop dependency — and non-splittable: `parts` sets the file count
-    * = read parallelism (one decompress task per file), the knob a real
-    * spool turns via segment size. */
-  def upsertLinesDirGz(s: SparkSession, dir: String, parts: Int = 32): String =
-    cachedFeedDir(s, dir, "UPSERTGZ") { out =>
-      upsertFeed(Tables(s, dir, "events").repartition(parts))
-        .write.mode("overwrite").option("compression", "gzip").text(out)
-    }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
     "q_cdc_roundtrip" -> ((s, dir) => {
       val decoded = WalDecoder.decodeTablesFromDir(

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
  * queries (default: all) against SPARK_GRAFT_SF_DIR. The review
  * checklist per query: filters pushed to the scan (`PushedFilters`),
  * projections pruned (`ReadSchema`), small sides broadcast, no
- * unexpected exchanges, wide `WholeStageCodegen` spans.
+ * unexpected exchanges, wide `WholeStageCodegen` spans. The pseudo-query
+ * `waldecode` prints the plan of the WAL decode of the `events` table.
  *
  *   sbt "runMain graft.ExplainQ q_bloom_semi q_gapfill"
  */
@@ -25,7 +26,14 @@ object ExplainQ {
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     wanted.foreach { name =>
       println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      val df = name match {
+        case "waldecode" =>
+          graft.cdc.WalDecoder.decodeTables(spark,
+            spark.read.text(CdcQueries.walLinesDir(spark, sfDir)),
+            Seq(CdcQueries.eventsSchema))("events")
+        case n => SparkEntry.queries(n)(spark, sfDir)
+      }
+      df.explain("formatted")
     }
     spark.stop()
   }

@@ -681,34 +681,20 @@ object Dedup {
 
   /** The dup-span window-hash table `(idCol, pos, h)` — shared by
     * [[duplicateSpans]], [[stripDuplicateSpans]], and the skew guard's
-    * sample pass.
-    *
-    * rollingHash — THE DEFAULT since r15: the table comes from ONE
-    * codegen'd two-poly prefix-hash pass per document
-    * ([[graft.functions.WindowHashes]]) instead of a per-window
-    * slice+join+md5 — same 16-byte key width through the shuffle, same
-    * exactness class (~2^-122 vs md5's 2^-128 per-pair collision odds),
-    * and it removes the materialization CPU the r14 stage profile
-    * measured dominant. Measured on the fused shape (DiagSpanFusion
-    * rolling, paired arms): 100x 10.0 -> 6.6 s, 1000x 122.6 -> 66.2 s
-    * (0.54x). rollingHash=false keeps the md5 form the SQL oracle
-    * replays literally. */
+    * sample pass. It comes from ONE codegen'd two-poly prefix-hash pass
+    * per document ([[graft.functions.WindowHashes]]): a 16-byte key per
+    * L-token window (~2^-122 per-pair collision odds, the exactness
+    * class of md5's 2^-128). r15 adopted it over a per-window
+    * slice+join+md5 materialization, whose CPU the r14 stage profile
+    * measured dominant: on the fused shape 100x 10.0 -> 6.6 s, 1000x
+    * 122.6 -> 66.2 s (0.54x, SCALING.md r15). The SQL oracle replays
+    * the md5 form literally — any exact repeated-window detector must
+    * agree with it. */
   private[graft] def windowHashTable(docs: DataFrame, L: Int, idCol: String,
-                                     textCol: String, rollingHash: Boolean): DataFrame =
-    if (rollingHash)
-      docs.select(col(idCol),
-          posexplode(graft.functions.WindowHashes(col(textCol), L)))
-        .toDF(idCol, "pos", "h")
-    else
-      docs.select(col(idCol), split(col(textCol), " ").as("toks"))
-        .where(size(col("toks")) >= L)
-        .select(col(idCol), posexplode(transform(
-          sequence(lit(0), size(col("toks")) - L),
-          // chr(31) separator: without one ("ab","c") and ("a","bc")
-          // would hash equal; the DuckDB oracle mirrors with chr(31).
-          // unhex: shuffle the 16-byte binary digest, not 32 hex chars
-          i => unhex(md5(concat_ws("\u001f", slice(col("toks"), i + 1, lit(L))))))))
-        .toDF(idCol, "pos", "h")
+                                     textCol: String): DataFrame =
+    docs.select(col(idCol),
+        posexplode(graft.functions.WindowHashes(col(textCol), L)))
+      .toDF(idCol, "pos", "h")
 
   /**
    * Sampled heavy-hitter guard for the fused dup-span window (r15
@@ -730,7 +716,7 @@ object Dedup {
    * AUTO-ENABLED since r17 (the default `skewGuard` of the span
    * operators): the fused-vs-guard crossover was MEASURED one decade
    * above r16's hot50 tie — at ~1e8 occurrences of ONE window hash
-   * (hot100 at 1000x, DiagSpanSkew) the fused window loses 2.2x
+   * (hot100 at 1000x, SCALING.md r17) the fused window loses 2.2x
    * (spans 183.7 vs 85.1 s), so from ~2x an average partition's mass up
    * the salt is no longer optional insurance. Flagging is still the
    * scale-relative partition-share rule (0.25x an average partition's
@@ -765,31 +751,31 @@ object Dedup {
    *    opt-in for such plans (it bypasses the size gate entirely, never
    *    the determinism gate).
    *
-   * `maxHotHashes` is the flag-list capacity FLOOR, not a truncation
-   * point: the effective capacity is max(maxHotHashes,
-   * parts/partitionShare) (<= 1e6), and parts/partitionShare is the
-   * mass rule's own bound on how many hashes can clear the threshold at
-   * once — so under the default rule the hot set always contains EVERY
-   * flagged hash (a warning logs if a forced config ever saturates the
-   * capacity). At default share 0.25 that is 4x the shuffle partition
-   * count in 16-byte keys — trivially broadcastable at any realistic
-   * parallelism.
+   * The flag list holds max(10000, parts/partitionShare) (<= 1e6)
+   * hashes, and parts/partitionShare is the mass rule's own bound on
+   * how many hashes can clear the threshold at once — so under the
+   * default rule the hot set always contains EVERY flagged hash (a
+   * warning logs if a forced config ever fills the list). At default
+   * share 0.25 that is 4x the shuffle partition count in 16-byte keys —
+   * trivially broadcastable at any realistic parallelism.
    */
   final case class SpanSkewGuard(sampleRate: Double = 0.002,
                                  partitionShare: Double = 0.25,
-                                 maxHotHashes: Int = 10000,
-                                 seed: Long = 42L,
                                  minInputBytes: Long = 256L << 20)
+
+  /** Floor of the guard's flag-list capacity (see [[hotWindowHashes]]). */
+  private val HotHashFloor = 10000
+  /** Seed of the guard's document sample. */
+  private val GuardSampleSeed = 42L
 
   /** The guard's sample pass: hot window hashes as driver-side bytes.
     * Empty when no hash clears max(2, partitionShare x an average
     * partition's sample mass). The flag-list capacity is
-    * max(maxHotHashes, parts/partitionShare) (<= 1e6): the second term
+    * max(HotHashFloor, parts/partitionShare) (<= 1e6): the second term
     * is the mass rule's own flaggable-count bound, so under the default
     * rule NO flagged hash is ever truncated — see the inline derivation. */
   private def hotWindowHashes(docs: DataFrame, g: SpanSkewGuard, L: Int,
-                              idCol: String, textCol: String,
-                              rollingHash: Boolean): Array[Array[Byte]] = {
+                              idCol: String, textCol: String): Array[Array[Byte]] = {
     if (docs.isStreaming) return Array.empty
     // determinism gate (see [[SpanSkewGuard]]): a plan with any
     // nondeterministic expression would be evaluated differently by the
@@ -810,7 +796,7 @@ object Dedup {
     if (g.minInputBytes > 0 && (unknownSize || size < BigInt(g.minInputBytes)))
       return Array.empty
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val agg = windowHashTable(docs.sample(g.sampleRate, g.seed), L, idCol, textCol, rollingHash)
+    val agg = windowHashTable(docs.sample(g.sampleRate, GuardSampleSeed), L, idCol, textCol)
       .groupBy("h").agg(count(lit(1)).as("c")).persist()
     try {
       val total = Option(agg.agg(sum("c")).head.get(0)).fold(0L)(_.asInstanceOf[Long])
@@ -820,7 +806,7 @@ object Dedup {
       // count — per-hash masses sum to `total`, so at most
       // parts/partitionShare hashes can each hold >= partitionShare x an
       // average partition's mass. Capping the flag list at that bound
-      // (when it exceeds maxHotHashes) makes largest-first truncation
+      // (when it exceeds HotHashFloor) makes largest-first truncation
       // IMPOSSIBLE under the default rule: every hash the rule flags is
       // kept. The bound covers BOTH threshold regimes (r19, closing the
       // r18 advice question): when the thr=2 floor binds,
@@ -834,21 +820,21 @@ object Dedup {
       // logs the warning below. At the default share 0.25 the bound is 4x the shuffle
       // partition count (1k parts -> 4k keys = 64 KiB broadcast, 20k
       // parts -> 80k keys = 1.25 MiB), so the broadcast stays trivial;
-      // maxHotHashes remains the capacity floor and a 1e6 ceiling bounds
+      // HotHashFloor remains the capacity floor and a 1e6 ceiling bounds
       // the collect under forced near-zero-share test configs. The old
       // fixed 10k cap could bind only above 2,500 shuffle partitions —
       // and for hashes at the measured ~2x-partition-mass crossover only
       // above 20,000 (at most parts/2 such hashes can exist).
       val flaggableBound =
         if (g.partitionShare > 0) math.min(1e6, parts / g.partitionShare) else 1e6
-      val cap = math.max(g.maxHotHashes.toDouble, flaggableBound).toInt
+      val cap = math.max(HotHashFloor.toDouble, flaggableBound).toInt
       val flagged = agg.where(col("c") >= thr).orderBy(col("c").desc, col("h"))
         .limit(cap).select("h").collect()
         .map(_.getAs[Array[Byte]](0))
       if (flagged.length == cap) log.warn(
         s"SpanSkewGuard: flag list hit its capacity $cap — some hashes at " +
         "or above the detection threshold stay on the (exact, unguarded) " +
-        "window path; raise maxHotHashes or partitionShare")
+        "window path; raise partitionShare")
       flagged
     } finally { agg.unpersist(); () }
   }
@@ -871,20 +857,16 @@ object Dedup {
    *
    * Relational shape instead of the paper's suffix array: a duplicated
    * substring of length ≥ L exists iff some L-token window repeats, so
-   *  1. each doc's window hashes materialize in ONE narrow projection —
-   *     `transform(sequence(0, n−L), i → unhex(md5(slice(toks, i+1, L))))`
-   *     on the already-split token array, no per-window explode, no shuffle;
+   *  1. each doc's window hashes materialize in ONE narrow projection
+   *     ([[windowHashTable]]), no shuffle;
    *  2. repeated hashes surface via ONE window-count over the hash (the
-   *     only corpus-wide shuffle, keyed on the 16-BYTE binary md5 —
-   *     half the key bytes of the hex-string form through the one
-   *     spill-bound stage at 1000×, bijective with it so exactness is
-   *     unchanged); r15: this replaced an aggregate + join-back pair of
+   *     only corpus-wide shuffle, keyed on the 16-byte binary hash);
+   *     r15: this replaced an aggregate + join-back pair of
    *     exchanges and the checkpoint sharing their scan — measured
    *     0.64× at 100×, tie at 1000×, and it removes the checkpoint's
    *     big-heap storage churn (597.6 → 162 s at 64g/256);
-   *  3. surviving window starts merge into maximal spans with one
-   *     windowed island pass per doc (starts p, p' of L-windows are
-   *     contiguous-or-overlapping iff p' − p ≤ L).
+   *  3. surviving window starts merge into maximal spans per doc (starts
+   *     p, p' of L-windows are contiguous-or-overlapping iff p' − p ≤ L).
    * Output: (doc_id, span_start, span_end, n_windows) in token
    * coordinates, every occurrence reported. The q_dup_spans oracle
    * replays all three stages in SQL; OpsSpec pins hand-computed extents
@@ -898,40 +880,25 @@ object Dedup {
    * plan with zero eager work.
    *
    * DETERMINISM REQUIREMENT: an ACTIVE `skewGuard` (its sample pass,
-   * input >= `minInputBytes`) and `legacyCheckpoint=false` (the
-   * agg+join shape's self-join) both evaluate the `docs` plan MORE THAN
-   * ONCE. If `docs` is nondeterministic (rand()-derived text, an
-   * un-seeded sample(), a non-idempotent source), the passes can
-   * disagree — in the guard's case voiding the "sample is a subset of
-   * the corpus" argument behind the c=2 short-circuit.
-   * `localCheckpoint()` such inputs first (the legacy default pins
-   * exactly this), or pass `skewGuard = None`. An active guard also
-   * triggers eager Spark jobs at plan-CONSTRUCTION time (the sample
-   * aggregate + collect), not at action time.
+   * input >= `minInputBytes`) evaluates the `docs` plan MORE THAN ONCE.
+   * If `docs` comes from a non-idempotent source, the passes can
+   * disagree, voiding the "sample is a subset of the corpus" argument
+   * behind the c=2 short-circuit. `localCheckpoint()` such inputs
+   * first, or pass `skewGuard = None`. An active guard also triggers
+   * eager Spark jobs at plan-CONSTRUCTION time (the sample aggregate +
+   * collect), not at action time.
    */
   def duplicateSpans(docs: DataFrame, windowTokens: Int,
                      idCol: String = "doc_id", textCol: String = "text",
-                     fuseWindowCount: Boolean = true,
-                     rollingHash: Boolean = true,
-                     skewGuard: Option[SpanSkewGuard] = Some(SpanSkewGuard()),
-                     legacyCheckpoint: Boolean = true,
-                     islandAgg: Boolean = true,
-                     hashAggCount: Boolean = false): DataFrame = {
+                     skewGuard: Option[SpanSkewGuard] = Some(SpanSkewGuard())): DataFrame = {
     require(windowTokens >= 2, s"windowTokens >= 2 required, got $windowTokens")
     import org.apache.spark.sql.expressions.Window
     val L = windowTokens
-    val whBase = windowHashTable(docs, L, idCol, textCol, rollingHash)
-    val hot: Array[Array[Byte]] =
-      if (fuseWindowCount)
-        skewGuard.fold(Array.empty[Array[Byte]])(g =>
-          hotWindowHashes(docs, g, L, idCol, textCol, rollingHash))
-      else Array.empty
-    val starts = if (fuseWindowCount && hot.nonEmpty) {
-      if (hashAggCount) log.warn(
-        "duplicateSpans: hashAggCount=true requested but the active skew " +
-        "guard takes precedence (hot hashes detected) — the guarded fused-" +
-        "window form runs; pass skewGuard = None to force the hash-agg shape")
-      // GUARDED fused form: flagged rows are salted OUT of the per-h
+    val whBase = windowHashTable(docs, L, idCol, textCol)
+    val hot = skewGuard.fold(Array.empty[Array[Byte]])(g =>
+      hotWindowHashes(docs, g, L, idCol, textCol))
+    val starts = if (hot.nonEmpty) {
+      // GUARDED form: flagged rows are salted OUT of the per-h
       // window (scatter key xxhash64(id, pos) is unique per row, so the
       // one-task pileup becomes hash-uniform across partitions) and
       // their repetition test short-circuits to `c = 2`: membership in
@@ -939,9 +906,8 @@ object Dedup {
       // subset of the corpus), and duplicateSpans only needs the >= 2
       // predicate, never the count value. Cold rows keep the exact
       // windowed count over (h, 0) — the same groups as the unguarded
-      // window. Output is bit-identical to the unguarded/legacy forms
-      // (OpsSpec pins it on a planted-skew corpus with a forced-hot
-      // guard).
+      // window. Output is bit-identical to the unguarded form (OpsSpec
+      // pins it with a forced-hot guard).
       val marked = whBase.join(hotHashDf(docs, hot), Seq("h"), "left")
       val scatter = when(col("__hot"), xxhash64(col(idCol), col("pos"))).otherwise(lit(0L))
       val byHSalt = Window.partitionBy(col("h"), scatter)
@@ -949,100 +915,40 @@ object Dedup {
         .withColumn("c", when(col("__hot"), lit(2L))
           .otherwise(count(lit(1)).over(byHSalt)))
         .where(col("c") >= 2).select(col(idCol), col("pos"))
-    } else if (fuseWindowCount && hashAggCount) {
-      // EXPERIMENTAL r17 shape (verdict task 5 candidate): the same
-      // single exchange keyed on h, but consumed by a HASH aggregate
-      // whose group state carries the occurrences — singleton groups
-      // (the vast majority of a realistic corpus) die in place as
-      // 1-element lists without a partition-wide sort, where the fused
-      // WindowExec must sort every shuffled row by h first. Same
-      // exchange volume, sort removed; the trade is per-group object
-      // state (ObjectHashAggregate falls back to sort-based past
-      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-      // in-memory groups, so the win requires raising it). Measured
-      // under the family protocol (r17: 1.19x/4.1x LOSSES) — kept only
-      // as the A/B reference. UNBOUNDED-STATE WARNING: collect_list
-      // puts every (id, pos) occurrence of a hash into ONE group's
-      // in-memory state, and neither the OHA fallback threshold (it
-      // counts groups, not list length) nor sort-based fallback bounds
-      // a single group's list — a heavy-hitter hash at the ~1e8-
-      // occurrence crossover mass is multi-GB single-task state and
-      // OOMs. An active skew guard takes precedence over this flag
-      // (with a logged warning); with skewGuard = None this shape must
-      // only run on corpora known free of heavy hitters.
-      whBase.groupBy("h")
-        .agg(collect_list(struct(col(idCol), col("pos"))).as("__occ"))
-        .where(size(col("__occ")) >= 2)
-        .select(explode(col("__occ")).as("__o"))
-        .select(col(s"__o.$idCol").as(idCol), col("__o.pos").as("pos"))
-    } else if (fuseWindowCount) {
-      // FUSED form — THE DEFAULT since r15 (the r14 stage profile's
-      // lever b, measured): the corpus-wide repetition test is ONE
-      // window-count over `h` — a single exchange + in-partition sort —
-      // replacing the default form's aggregate exchange AND join-back
-      // exchange. With a single consumer of the window-hash table, the
-      // 1B-row localCheckpoint (which existed to share the scan between
-      // the aggregate and the join-back) disappears too. Measured
-      // (DiagSpanFusion, quiet windows): 100× 20.3 → 13.0 s (0.64×),
-      // 1000× 190.5 → 189.3 s (tie — md5 CPU dominates there), and the
-      // checkpoint's big-heap pathology is GONE: 64g/256 serves 162 s
-      // where the checkpointed form measured 597.6 s (SCALING.md r14).
-      // Semantics identical (count per h >= 2), OpsSpec pins equality.
+    } else {
+      // FUSED form (r15, the r14 stage profile's lever b, measured):
+      // the corpus-wide repetition test is ONE window-count over `h` —
+      // a single exchange + in-partition sort — replacing an aggregate
+      // exchange AND a join-back exchange. With a single consumer of
+      // the window-hash table, the 1B-row localCheckpoint (which
+      // existed to share the scan between the aggregate and the
+      // join-back) disappears too. Measured (SCALING.md r15, quiet
+      // windows): 100× 20.3 → 13.0 s (0.64×), 1000× 190.5 → 189.3 s
+      // (tie — md5 CPU dominated there), and the checkpoint's big-heap
+      // pathology is GONE: 64g/256 serves 162 s where the checkpointed
+      // form measured 597.6 s (SCALING.md r14). The checkpoint-free
+      // aggregate + join-back measured 1.2-2.7x slower (SCALING.md r16),
+      // and a collect_list hash aggregate over h 1.19x/4.1x slower (r17)
+      // — it also holds a heavy hitter's every occurrence in one group.
       val byH = Window.partitionBy("h")
       whBase.withColumn("c", count(lit(1)).over(byH))
         .where(col("c") >= 2).select(col(idCol), col("pos"))
-    } else if (legacyCheckpoint) {
-      // pre-r15 form, kept as the A/B reference: feeds the dup
-      // aggregate AND the join-back off one checkpointed scan
-      val wh = whBase.localCheckpoint()
-      val dup = wh.groupBy("h").agg(count(lit(1)).as("c")).where(col("c") >= 2).select("h")
-      wh.join(dup, "h").select(col(idCol), col("pos"))
-    } else {
-      // AGG+JOIN candidate shape (r15 verdict task 4): the repetition
-      // test shuffles ONLY the 16-byte hash through a map-side-combined
-      // aggregate — never the full (id, pos, h) rows — and the dup-hash
-      // set filters the table via the join-back. The checkpoint that
-      // motivated the r14 protocol is GONE: the codegen'd rolling-hash
-      // pass made recomputing the window-hash table cheaper than
-      // materializing 10^9 rows of it. On a realistic (singleton-
-      // dominated) corpus the dup side is tiny and AQE converts the
-      // join-back to a BROADCAST at runtime — the full-row table then
-      // never shuffles at all, and the shape is skew-immune on both
-      // stages (partial aggregation; no per-h window anywhere). When
-      // the dup side is large, AQE keeps a skew-splittable shuffle join.
-      val dup = whBase.groupBy("h").agg(count(lit(1)).as("c"))
-        .where(col("c") >= 2).select("h")
-      whBase.join(dup, "h").select(col(idCol), col("pos"))
     }
-    if (islandAgg) {
-      // r16 DEFAULT: per-doc island merge as ONE hash aggregate + a
-      // codegen'd per-row call ([[graft.functions.PosIslands]]) — the
-      // exchange is the same (survivor rows keyed by doc) but reached
-      // through ObjectHashAggregate's map-side partials instead of a
-      // sort-based window, removing the survivor-table-wide sort + lag
-      // + running-sum + second aggregate. On the all-duplicate extreme
-      // (uniform amplified fixtures: EVERY window survives) that sort
-      // is 10^8 rows; per-doc arrays stay bounded by windows/doc.
-      // Measured (DiagSpanSkew uniform 1000x): see SCALING.md r16.
-      starts.groupBy(col(idCol)).agg(collect_list(col("pos")).as("__ps"))
-        .select(col(idCol),
-          explode(graft.functions.PosIslands(col("__ps"), L)).as("__sp"))
-        .select(col(idCol),
-          col("__sp.span_start").as("span_start"),
-          col("__sp.span_end").as("span_end"),
-          col("__sp.n_windows").as("n_windows"))
-    } else {
-      // pre-r16 relational island pass, kept as the A/B reference
-      val byDoc = Window.partitionBy(idCol).orderBy("pos")
-      val grouped = starts
-        .withColumn("brk", when(col("pos") - lag("pos", 1).over(byDoc) > L, 1).otherwise(0))
-        .withColumn("g", sum("brk").over(byDoc))
-      grouped.groupBy(col(idCol), col("g"))
-        .agg(min("pos").cast("long").as("span_start"),
-          (max("pos") + L - 1).cast("long").as("span_end"),
-          count(lit(1)).as("n_windows"))
-        .drop("g")
-    }
+    // per-doc island merge as ONE hash aggregate + a codegen'd per-row
+    // call ([[graft.functions.PosIslands]]): survivor rows reach the
+    // doc-keyed exchange through ObjectHashAggregate's map-side partials
+    // instead of a sort-based window + lag + running-sum + second
+    // aggregate — on the all-duplicate extreme (uniform amplified
+    // fixtures: EVERY window survives) that sort is 10^8 rows, while
+    // per-doc arrays stay bounded by windows/doc. Measured r16 (uniform
+    // 1000x): 34.5 s vs 63.0 s for the relational pass (SCALING.md).
+    starts.groupBy(col(idCol)).agg(collect_list(col("pos")).as("__ps"))
+      .select(col(idCol),
+        explode(graft.functions.PosIslands(col("__ps"), L)).as("__sp"))
+      .select(col(idCol),
+        col("__sp.span_start").as("span_start"),
+        col("__sp.span_end").as("span_end"),
+        col("__sp.n_windows").as("n_windows"))
   }
 
   /**
@@ -1058,131 +964,68 @@ object Dedup {
    *
    * DETERMINISM REQUIREMENT: as in [[duplicateSpans]] — an active
    * `skewGuard` (ON by default, self-disabled below `minInputBytes`)
-   * and `legacyCheckpoint=false` re-evaluate the `docs` plan;
-   * nondeterministic inputs must be `localCheckpoint()`ed first (or
-   * pass `skewGuard = None`), and an active guard runs eager jobs at
-   * plan-construction time.
+   * re-evaluates the `docs` plan; inputs from non-idempotent sources
+   * must be `localCheckpoint()`ed first (or pass `skewGuard = None`),
+   * and an active guard runs eager jobs at plan-construction time.
    */
   def stripDuplicateSpans(docs: DataFrame, windowTokens: Int,
                           idCol: String = "doc_id", textCol: String = "text",
-                          fuseWindowCount: Boolean = true,
-                          rollingHash: Boolean = true,
-                          skewGuard: Option[SpanSkewGuard] = Some(SpanSkewGuard()),
-                          legacyCheckpoint: Boolean = true,
-                          islandAgg: Boolean = true,
-                          hashAggCount: Boolean = false,
-                          hotFirstAboveWindow: Boolean = true): DataFrame = {
+                          skewGuard: Option[SpanSkewGuard] = Some(SpanSkewGuard())): DataFrame = {
     require(windowTokens >= 2, s"windowTokens >= 2 required, got $windowTokens")
     import org.apache.spark.sql.expressions.{Window => W}
     val L = windowTokens
     val toks = docs.select(col(idCol), split(col(textCol), " ").as("toks"))
-    val whBase = windowHashTable(docs, L, idCol, textCol, rollingHash)
-    val hot: Array[Array[Byte]] =
-      if (fuseWindowCount)
-        skewGuard.fold(Array.empty[Array[Byte]])(g =>
-          hotWindowHashes(docs, g, L, idCol, textCol, rollingHash))
-      else Array.empty
-    val removable = if (fuseWindowCount && hot.nonEmpty) {
-      if (hashAggCount) log.warn(
-        "stripDuplicateSpans: hashAggCount=true requested but the active " +
-        "skew guard takes precedence (hot hashes detected) — the guarded " +
-        "fused-window form runs; pass skewGuard = None to force the hash-agg shape")
-      // GUARDED fused form. Counts: as in [[duplicateSpans]] (hot rows
+    val whBase = windowHashTable(docs, L, idCol, textCol)
+    val hot = skewGuard.fold(Array.empty[Array[Byte]])(g =>
+      hotWindowHashes(docs, g, L, idCol, textCol))
+    val removable = if (hot.nonEmpty) {
+      // GUARDED form. Counts: as in [[duplicateSpans]] (hot rows
       // short-circuit to c = 2, exact because hot membership proves
       // corpus count >= 2). Canonical-first: the strip policy needs each
       // hot hash's GLOBAL min (id, pos), which salted singleton groups
-      // cannot provide. Two measured ways to get it:
-      val hotDf = hotHashDf(docs, hot)
-      if (hotFirstAboveWindow) {
-        // r18 DEFAULT (VERDICT r17 task 4, measured): the hot
-        // canonical-first is broadcast-joined AFTER the salted window
-        // instead of below it. The restricted-pass form attached both
-        // the hot marker and the per-hash canonical struct to every row
-        // BEFORE the window, so the corpus-wide (h, salt) exchange and
-        // its in-partition sort carried the joined struct on all 10^8+
-        // rows; here the window input stays narrow ((id, pos, h, hot,
-        // salt) only) and the <= |hot|-row canonical side meets the
-        // survivors in a trivially-broadcast join above the window. The
-        // hot-only min aggregate itself still costs one corpus re-scan
-        // (a planned exchange-reuse variant did NOT materialize: the
-        // optimizer pushes the hot filter below any explicit
-        // repartition, so the two exchange subtrees never canonicalize
-        // equal — plan-audited r18), but the scan is the cheap half;
-        // the wide window sort was the cost. Exactness: min over ALL
-        // occurrences of each hot hash — the same value the restricted
-        // pass computes (OpsSpec pins byte-identical strips; the
-        // forced-guard oracle hash-matches at sf0.01/sf0.1). Measured
-        // (DiagSpanSkew strip 1000x hot100, alternated min-of-2, family
-        // protocol): restricted pass 236.5 s vs this form 149.0 s —
-        // 0.63x, closing most of strip's gap to spans' guarded
-        // economics.
-        val marked = whBase.join(hotDf, Seq("h"), "left")
-          .withColumn("__sc", when(col("__hot"),
-            xxhash64(col(idCol), col("pos"))).otherwise(lit(0L)))
-        val hotFirst = broadcast(marked.where(col("__hot"))
-          .groupBy("h").agg(min(struct(col(idCol), col("pos"))).as("__hfirst")))
-        val byHSalt = W.partitionBy(col("h"), col("__sc"))
-        marked
-          .withColumn("c", when(col("__hot"), lit(2L))
-            .otherwise(count(lit(1)).over(byHSalt)))
-          .withColumn("__wfirst", min(struct(col(idCol), col("pos"))).over(byHSalt))
-          .join(hotFirst, Seq("h"), "left")
-          .withColumn("first", when(col("__hot"), col("__hfirst"))
-            .otherwise(col("__wfirst")))
-          .where(col("c") >= 2 &&
-            !(col(idCol) === col("first").getField(idCol) &&
-              col("pos") === col("first").getField("pos")))
-          .select(col(idCol), col("pos"))
-      } else {
-        // restricted second pass (the r17 shape, kept as the A/B
-        // reference): a hot-only map-side-combined aggregate (semi-join
-        // against the tiny broadcast hot set; a heavy hitter is exactly
-        // where partial aggregation collapses best) broadcast back. One
-        // extra corpus scan+hash, only when skew was detected; no extra
-        // full-row exchange.
-        val hotFirst = broadcast(
-          whBase.join(hotDf.select("h"), Seq("h"), "left_semi")
-            .groupBy("h")
-            .agg(min(struct(col(idCol), col("pos"))).as("__hfirst")))
-        val marked = whBase.join(hotDf, Seq("h"), "left")
-          .join(hotFirst, Seq("h"), "left")
-        val scatter = when(col("__hot"), xxhash64(col(idCol), col("pos"))).otherwise(lit(0L))
-        val byHSalt = W.partitionBy(col("h"), scatter)
-        marked
-          .withColumn("c", when(col("__hot"), lit(2L))
-            .otherwise(count(lit(1)).over(byHSalt)))
-          .withColumn("first", when(col("__hot"), col("__hfirst"))
-            .otherwise(min(struct(col(idCol), col("pos"))).over(byHSalt)))
-          .where(col("c") >= 2 &&
-            !(col(idCol) === col("first").getField(idCol) &&
-              col("pos") === col("first").getField("pos")))
-          .select(col(idCol), col("pos"))
-      }
-    } else if (fuseWindowCount && hashAggCount) {
-      // EXPERIMENTAL r17 shape (see [[duplicateSpans]], incl. the
-      // unbounded-group-state OOM warning — a heavy-hitter hash is one
-      // multi-GB collect_list group here too): one hash
-      // aggregate carries the occurrences AND the canonical-first min;
-      // singleton hashes die as 1-element lists without the
-      // partition-wide sort.
-      whBase.groupBy("h")
-        .agg(collect_list(struct(col(idCol), col("pos"))).as("__occ"),
-          min(struct(col(idCol), col("pos"))).as("first"))
-        .where(size(col("__occ")) >= 2)
-        .select(explode(col("__occ")).as("__o"), col("first"))
-        .where(!(col(s"__o.$idCol") === col("first").getField(idCol) &&
-          col("__o.pos") === col("first").getField("pos")))
-        .select(col(s"__o.$idCol").as(idCol), col("__o.pos").as("pos"))
-    } else if (fuseWindowCount) {
-      // FUSED form — THE DEFAULT since r15 (same lever as
-      // [[duplicateSpans]], measured: 100× 15.2 → 11.0 s, 1000×
-      // 159.8 → 141.5 s in the same windows): per-hash count AND
-      // canonical-first occurrence come from two window functions over
-      // ONE partitionBy(h) window — a single exchange + in-partition
-      // sort replaces the aggregate exchange, the join-back exchange,
-      // and the localCheckpoint that shared the window-hash scan
-      // between them (and with it the big-heap storage churn the r14
-      // 16g/64 protocol worked around).
+      // cannot provide, so the hot canonical-first is broadcast-joined
+      // AFTER the salted window (r18, measured). Joining it below the
+      // window would carry the canonical struct through the
+      // corpus-wide (h, salt) exchange and its in-partition sort on all
+      // 10^8+ rows; here the window input stays narrow ((id, pos, h,
+      // hot, salt) only) and the <= |hot|-row canonical side meets the
+      // survivors in a trivially-broadcast join above the window. The
+      // hot-only min aggregate itself still costs one corpus re-scan
+      // (an exchange-reuse variant did NOT materialize: the optimizer
+      // pushes the hot filter below any explicit repartition, so the
+      // two exchange subtrees never canonicalize equal — plan-audited
+      // r18), but the scan is the cheap half; the wide window sort was
+      // the cost. Exactness: min over ALL occurrences of each hot hash
+      // (OpsSpec pins the strip against the unguarded form; the
+      // forced-guard oracle hash-matches at sf0.01/sf0.1). Measured
+      // (strip 1000x hot100, alternated min-of-2, family protocol): the
+      // below-window form 236.5 s vs this form 149.0 s — 0.63x.
+      val marked = whBase.join(hotHashDf(docs, hot), Seq("h"), "left")
+        .withColumn("__sc", when(col("__hot"),
+          xxhash64(col(idCol), col("pos"))).otherwise(lit(0L)))
+      val hotFirst = broadcast(marked.where(col("__hot"))
+        .groupBy("h").agg(min(struct(col(idCol), col("pos"))).as("__hfirst")))
+      val byHSalt = W.partitionBy(col("h"), col("__sc"))
+      marked
+        .withColumn("c", when(col("__hot"), lit(2L))
+          .otherwise(count(lit(1)).over(byHSalt)))
+        .withColumn("__wfirst", min(struct(col(idCol), col("pos"))).over(byHSalt))
+        .join(hotFirst, Seq("h"), "left")
+        .withColumn("first", when(col("__hot"), col("__hfirst"))
+          .otherwise(col("__wfirst")))
+        .where(col("c") >= 2 &&
+          !(col(idCol) === col("first").getField(idCol) &&
+            col("pos") === col("first").getField("pos")))
+        .select(col(idCol), col("pos"))
+    } else {
+      // FUSED form (r15, same lever as [[duplicateSpans]], measured:
+      // 100× 15.2 → 11.0 s, 1000× 159.8 → 141.5 s in the same windows):
+      // per-hash count AND canonical-first occurrence come from two
+      // window functions over ONE partitionBy(h) window — a single
+      // exchange + in-partition sort replaces an aggregate exchange, a
+      // join-back exchange, and the localCheckpoint that shared the
+      // window-hash scan between them (and with it the big-heap storage
+      // churn the r14 16g/64 protocol worked around).
       val byH = W.partitionBy("h")
       whBase
         .withColumn("c", count(lit(1)).over(byH))
@@ -1190,27 +1033,6 @@ object Dedup {
         .where(col("c") >= 2 &&
           !(col(idCol) === col("first").getField(idCol) &&
             col("pos") === col("first").getField("pos")))
-        .select(col(idCol), col("pos"))
-    } else if (legacyCheckpoint) {
-      val wh = whBase.localCheckpoint()
-      val byHash = wh.groupBy("h").agg(
-        count(lit(1)).as("c"),
-        min(struct(col(idCol), col("pos"))).as("first"))
-      wh.join(byHash.where(col("c") >= 2), "h")
-        .where(!(col(idCol) === col("first").getField(idCol) &&
-          col("pos") === col("first").getField("pos")))
-        .select(col(idCol), col("pos"))
-    } else {
-      // AGG+JOIN candidate shape — see [[duplicateSpans]]. The strip
-      // aggregate additionally carries min(struct(id, pos)) per hash:
-      // a wider dup side (count + canonical per dup hash) but the same
-      // narrow-shuffle / AQE-broadcast / skew-immune structure.
-      val byHash = whBase.groupBy("h").agg(
-        count(lit(1)).as("c"),
-        min(struct(col(idCol), col("pos"))).as("first"))
-      whBase.join(byHash.where(col("c") >= 2), "h")
-        .where(!(col(idCol) === col("first").getField(idCol) &&
-          col("pos") === col("first").getField("pos")))
         .select(col(idCol), col("pos"))
     }
     // r14 rewrite of the tree's heaviest 1000× row: removable window
@@ -1225,30 +1047,14 @@ object Dedup {
     // r14). The per-token interval test is an interpreted higher-order
     // lambda, but it is O(tokens·spans/doc) CPU with ZERO shuffle —
     // the shuffles were the cost, not the compare.
-    val intervals = if (islandAgg) {
-      // r16 DEFAULT: interval merge via ONE hash aggregate + the
-      // codegen'd [[graft.functions.PosIslands]] call (see
-      // [[duplicateSpans]]) — and the per-doc interval LIST falls
-      // straight out of the same call (a narrow transform over a
-      // handful of islands), removing the pre-r16 form's window pass,
-      // intermediate aggregate, AND the re-collect of intervals.
-      removable.groupBy(col(idCol)).agg(collect_list(col("pos")).as("__ps"))
-        .select(col(idCol), transform(
-          graft.functions.PosIslands(col("__ps"), L),
-          r => struct(r.getField("span_start").cast("int").as("s"),
-            r.getField("span_end").cast("int").as("e"))).as("__rm"))
-    } else {
-      // pre-r16 relational interval pass, kept as the A/B reference
-      import org.apache.spark.sql.expressions.Window
-      val byDoc = Window.partitionBy(idCol).orderBy("pos")
-      removable
-        .withColumn("brk", when(col("pos") - lag("pos", 1).over(byDoc) > L, 1).otherwise(0))
-        .withColumn("g", sum("brk").over(byDoc))
-        .groupBy(col(idCol), col("g"))
-        .agg(min("pos").cast("int").as("s"), (max("pos") + L - 1).cast("int").as("e"))
-        .groupBy(idCol)
-        .agg(collect_list(struct(col("s"), col("e"))).as("__rm"))
-    }
+    // The interval merge is the [[duplicateSpans]] PosIslands aggregate
+    // (r16), and the per-doc interval LIST falls straight out of the
+    // same call (a narrow transform over a handful of islands).
+    val intervals = removable.groupBy(col(idCol)).agg(collect_list(col("pos")).as("__ps"))
+      .select(col(idCol), transform(
+        graft.functions.PosIslands(col("__ps"), L),
+        r => struct(r.getField("span_start").cast("int").as("s"),
+          r.getField("span_end").cast("int").as("e"))).as("__rm"))
     toks.join(intervals, Seq(idCol), "left")
       .select(col(idCol), col("toks"),
         when(col("__rm").isNull, col("toks")).otherwise(

@@ -113,8 +113,8 @@ object NaiveBayes {
    * so both engines order identical values. Returns
    * (id, predicted, actual, correct). A doc with NO non-empty tokens
    * has no likelihood rows, so it falls back to the prior argmax
-   * (largest label by doc count, ties to the smaller label) instead of
-   * silently vanishing from the output.
+   * (largest label by doc count, ties to the smaller label, NULL label
+   * last) instead of silently vanishing from the output.
    */
   def domainPredict(docs: DataFrame, labelCol: String = "source",
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -128,10 +128,13 @@ object NaiveBayes {
     val top = scores.groupBy(col(idCol))
       .agg(min_by(col("label"),
         struct((-col("score")).as("__ns"), col("label").as("__lb"))).as("predicted"))
-    // r20: the prior argmax (largest doc count, ties to smaller label)
+    // r20: the prior argmax (largest doc count, ties to smaller label,
+    // NULL label last — the oracle's ORDER BY count(*) DESC, source)
     // derives from the already-collected prior counts — the old form
-    // re-scanned the corpus for an identical aggregation
-    val priorTop = priorCounts.minBy { case (lbl, n) => (-n, lbl) }._1
+    // re-scanned the corpus for an identical aggregation. An empty
+    // corpus has no prior and no rows to predict.
+    val priorTop = priorCounts.sortBy { case (lbl, n) => (-n, lbl == null, Option(lbl)) }
+      .headOption.map(_._1).orNull
     docs.select(col(idCol), col(labelCol).as("actual"))
       .join(top, Seq(idCol), "left")
       .withColumn("predicted", coalesce(col("predicted"), lit(priorTop)))

@@ -57,6 +57,23 @@ class NaiveBayesSpec extends SparkSpec {
     assert(pred(9L) == "a" && pred(10L) == "a", pred.toString)
   }
 
+  test("empty corpus predicts no rows") {
+    assert(NaiveBayes.domainPredict(docs.where(lit(false))).count() == 0L)
+  }
+
+  test("prior-argmax tie with a NULL label breaks to the non-NULL label") {
+    // priors: a = 2, NULL = 2 -> tie; the oracle's ORDER BY count(*)
+    // DESC, source puts NULL last, so the token-less docs predict 'a'
+    val withNull = Seq[(Long, Option[String], String)](
+      (1L, Some("a"), "ham eggs"), (2L, None, "spam"),
+      (3L, Some("a"), ""), (4L, None, "  ")
+    ).toDF("doc_id", "source", "text")
+    val pred = NaiveBayes.domainPredict(withNull).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(pred.size == 4)
+    assert(pred(3L) == "a" && pred(4L) == "a", pred.toString)
+  }
+
   test("real corpus: every (doc, source) pair scored, scores finite") {
     val d = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
     val n = d.count()

@@ -107,6 +107,26 @@ class OpsPlanShapeSpec extends SparkSpec {
     assertShape("stripDuplicateSpans", p, maxEx = 4, wantBroadcast = false)
   }
 
+  test("dup spans + strip on real documents: forced-hot guard salts the plan, output ≡ default") {
+    // the guarded (salted) plan against a real corpus, not just planted
+    // fixtures: every repeated hash flagged hot must still yield the
+    // default plan's spans and strips, row for row
+    val L = graft.R8Queries.DupSpanWindow
+    val forcedHot = Some(Dedup.SpanSkewGuard(
+      sampleRate = 1.0, partitionShare = 1e-9, minInputBytes = 0))
+    val spansHot = Dedup.duplicateSpans(docs, windowTokens = L, skewGuard = forcedHot)
+    val stripHot = Dedup.stripDuplicateSpans(docs, windowTokens = L, skewGuard = forcedHot)
+    assert(planOf(spansHot).contains("xxhash64") && planOf(stripHot).contains("xxhash64"),
+      "forced guard must take the salted path")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val spans = rows(Dedup.duplicateSpans(docs, windowTokens = L))
+    assert(spans.nonEmpty, "the corpus must contain repeated windows")
+    assert(rows(spansHot) == spans)
+    val strip = rows(Dedup.stripDuplicateSpans(docs, windowTokens = L))
+    assert(strip.exists(_(2) != 0L), "some text must be stripped")
+    assert(rows(stripHot) == strip)
+  }
+
   test("ivfPqTopK serve path: cell pruning via broadcast joins, no corpus shuffle before it") {
     val emb = graft.Tables(spark, sf, "embeddings")
     val cents = graft.OpsQueries.ivfCentsFor(spark, sf)

@@ -229,22 +229,6 @@ class OpsSpec extends SparkSpec {
       .agg(sum(col("n_chunks") - col("n_kept"))).collect()(0).getLong(0)
     assert(chunked == 0L)
 
-    // the pre-r15 aggregate+join-back form is semantics-identical to
-    // the fused default — same spans, bit for bit (both pinned to the
-    // hand-computed extents above through `spans`)
-    val unfused = Dedup.duplicateSpans(corpus, windowTokens = 8, fuseWindowCount = false)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(unfused == spans)
-
-    // the md5 window materialization (the form the SQL oracle replays
-    // literally) detects the same spans as the rolling-hash default —
-    // any exact repeated-window detector must
-    val md5Form = Dedup.duplicateSpans(corpus, windowTokens = 8, rollingHash = false)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(md5Form == spans)
-
     // the skew guard with a FORCED-hot config (full sample, near-zero
     // partition share -> every repeated hash flagged hot) must route all
     // repeated rows around the window and still emit identical spans —
@@ -323,27 +307,6 @@ class OpsSpec extends SparkSpec {
         skewGuard = None).queryExecution.optimizedPlan
     assert(derivedPlan.sameResult(offDerived),
       "a projection/filter over a stat-less source must still skip the guard")
-
-    // the checkpoint-free agg+join candidate shape (r16): same spans
-    val aggJoin = Dedup.duplicateSpans(corpus, windowTokens = 8,
-        fuseWindowCount = false, legacyCheckpoint = false)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(aggJoin == spans)
-
-    // the r17 hash-aggregate count shape (collect_list group state in
-    // place of the WindowExec sort): same spans
-    val hashAgg = Dedup.duplicateSpans(corpus, windowTokens = 8, hashAggCount = true)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(hashAgg == spans)
-
-    // the pre-r16 relational island pass (sort-based window + lag +
-    // running sum) must emit the same spans as the PosIslands default
-    val oldIslands = Dedup.duplicateSpans(corpus, windowTokens = 8, islandAgg = false)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(oldIslands == spans)
   }
 
   test("PosIslands: unsorted input, break rule, counts, empty") {
@@ -411,24 +374,12 @@ class OpsSpec extends SparkSpec {
     assert(ident.forall(_.getAs[Long]("n_removed") == 0L) &&
       ident(0).getAs[String]("text_stripped") == words("u", 12).mkString(" "))
 
-    // the pre-r15 aggregate+join-back form is semantics-identical to
-    // the fused default: same canonical-first policy, same rebuilt texts
     def triples(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[Long]("doc_id"),
         r.getAs[String]("text_stripped"), r.getAs[Long]("n_removed"))).toSeq
-    val unfused = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      fuseWindowCount = false).orderBy("doc_id").collect()
-    assert(triples(unfused) == triples(out))
-    // and the md5 materialization strips identically to the rolling
-    // default (the canonical-first policy keys on (doc_id, pos), not on
-    // the hash value)
-    val md5Form = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      rollingHash = false).orderBy("doc_id").collect()
-    assert(triples(md5Form) == triples(out))
 
-    // forced-hot skew guard (r18 default: narrow window input + the
-    // broadcast canonical join placed ABOVE the window, with a hot-only
-    // re-scan — the exchange-reuse variant was refuted by plan audit):
+    // forced-hot skew guard (narrow window input + the broadcast
+    // canonical join placed ABOVE the window, with a hot-only re-scan):
     // the salted window + broadcast hot-canonical path must reproduce
     // the same canonical-first strip exactly
     val guarded = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
@@ -436,19 +387,9 @@ class OpsSpec extends SparkSpec {
       .orderBy("doc_id").collect()
     assert(triples(guarded) == triples(out))
 
-    // the pre-r18 restricted-second-pass form (hot-only corpus re-scan +
-    // map-side-combined aggregate), kept as the A/B reference: min over
-    // ALL occurrences of each hot hash either way — byte-identical strip
-    val restricted = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      skewGuard = Some(Dedup.SpanSkewGuard(sampleRate = 1.0, partitionShare = 1e-9, minInputBytes = 0)),
-      hotFirstAboveWindow = false)
-      .orderBy("doc_id").collect()
-    assert(triples(restricted) == triples(out))
-
-    // r18 plan gate on the adoption's MECHANISM (the 0.56-0.63x win is
-    // the narrow window input): in the default guarded strip no Window
-    // node's input may carry the joined canonical struct; the restricted
-    // A/B form is the discriminating negative (it joins below the window)
+    // r18 plan gate on the guarded strip's MECHANISM (the 0.56-0.63x win
+    // is the narrow window input): no Window node's input may carry the
+    // joined canonical struct
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     def windowCarriesHFirst(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.collect {
@@ -458,26 +399,32 @@ class OpsSpec extends SparkSpec {
       sampleRate = 1.0, partitionShare = 1e-9, minInputBytes = 0))
     assert(!windowCarriesHFirst(Dedup.stripDuplicateSpans(
         corpus, windowTokens = 8, skewGuard = forcedHot)),
-      "adopted guarded strip must keep the window input narrow")
-    assert(windowCarriesHFirst(Dedup.stripDuplicateSpans(
-        corpus, windowTokens = 8, skewGuard = forcedHot, hotFirstAboveWindow = false)),
-      "the restricted A/B form should still join the canonical side below the window")
+      "guarded strip must keep the window input narrow")
+    // the detector fires on a window whose input does carry the column
+    val wide = corpus.withColumn("__hfirst", col("doc_id") + 1)
+      .withColumn("__w", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
+    assert(windowCarriesHFirst(wide), "the plan-gate detector must see __hfirst")
+  }
 
-    // checkpoint-free agg+join candidate shape (r16): identical strip
-    val aggJoin = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      fuseWindowCount = false, legacyCheckpoint = false).orderBy("doc_id").collect()
-    assert(triples(aggJoin) == triples(out))
-
-    // r17 hash-aggregate count shape: identical strip (count AND the
-    // canonical-first min from one aggregate)
-    val hashAgg = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      hashAggCount = true).orderBy("doc_id").collect()
-    assert(triples(hashAgg) == triples(out))
-
-    // pre-r16 relational interval pass ≡ the PosIslands default
-    val oldIslands = Dedup.stripDuplicateSpans(corpus, windowTokens = 8,
-      islandAgg = false).orderBy("doc_id").collect()
-    assert(triples(oldIslands) == triples(out))
+  test("stripDuplicateSpans: a within-doc repeat keeps its first copy, default and forced-hot") {
+    def words(prefix: String, n: Int) = (1 to n).map(i => s"$prefix$i")
+    // r1..r8 at token idx 4..11 and again at 16..23: the canonical
+    // occurrence is (doc 3, pos 4), so only the second copy goes
+    val c = words("p", 4) ++ words("r", 8) ++ words("q", 4) ++ words("r", 8)
+    val corpus = Seq((3L, c.mkString(" "))).toDF("doc_id", "text")
+    val expected = (words("p", 4) ++ words("r", 8) ++ words("q", 4)).mkString(" ")
+    val forcedHot = Some(Dedup.SpanSkewGuard(
+      sampleRate = 1.0, partitionShare = 1e-9, minInputBytes = 0))
+    for (g <- Seq(Some(Dedup.SpanSkewGuard()), forcedHot)) {
+      val df = Dedup.stripDuplicateSpans(corpus, windowTokens = 8, skewGuard = g)
+      // only the forced guard takes the salted path on this tiny corpus
+      assert(df.queryExecution.optimizedPlan.toString.contains("xxhash64") == (g eq forcedHot))
+      val out = df.collect()
+      assert(out.length == 1)
+      assert(out(0).getAs[String]("text_stripped") == expected, g.toString)
+      assert(out(0).getAs[Long]("n_removed") == 8L, g.toString)
+    }
   }
 
   test("skew guard DEFAULT threshold flags a planted boilerplate, stays cold without one") {
