@@ -13,6 +13,19 @@ import org.apache.spark.sql.SparkSession
  * queries happen to run first.
  */
 object Bench {
+  private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The summary line's per-query entries: `"name":seconds`, slowest
+    * first, as a true prefix of that order that fits in `room` chars
+    * (entries joined by commas). Packing stops at the first entry that
+    * does not fit; skipping it and adding faster ones after it would
+    * make the line look like a slowest-N list when it is not. */
+  def summaryEntries(results: Seq[(String, Double)], room: Int): Seq[String] = {
+    val ordered = results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val ends = ordered.scanLeft(-1)(_ + _.length + 1).tail // length with separators
+    ordered.zip(ends).takeWhile(_._2 <= room).map(_._1)
+  }
+
   /** Extract a FLAT `"key":{...}` object from the committed one-line
     * artifact as name→value pairs. Anchored to the named key (not
     * first-match over the whole file) so the sentinels object and the
@@ -133,7 +146,6 @@ object Bench {
     val results = raw.map { case (name, runs) =>
       name -> (if (runs.size < 2) -1.0 else runs.min)
     }
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // run-to-run spread per query (the timed runs' max/min): queries
     // whose spread exceeds 1.5x get their min+max recorded so unstable
     // measurements are visible in the artifact instead of silently
@@ -175,6 +187,10 @@ object Bench {
     val qjson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a query whose timed runs threw reads -1 in the map and stays out of
+    // `total`; naming it here keeps a breakage from passing as a speed-up
+    val failedJson = results.collect { case (n, v) if v < 0 => "\"" + n + "\"" }
+      .mkString("[", ",", "]")
 
     // The harness capturing this output keeps only a bounded (~2000 char)
     // tail of stdout AND parses the bench contract from the last line; a
@@ -190,21 +206,15 @@ object Bench {
     //     budget instead of a fixed top-20. build.sbt's StdoutOutput +
     //     showSuccess=false guarantee this line is the LAST line of
     //     stdout, unprefixed — the two properties the parser needs.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"sentinels":$sentinelJson,"spread":$spreadJson,"regressed":$regressedJson,"queries":$qjson}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"sentinels":$sentinelJson,"spread":$spreadJson,"regressed":$regressedJson,"failed":$failedJson,"queries":$qjson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (full + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop() // before the contract lines: nothing may print after them
     println(full)
-    val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"queries_file":"$outFile","queries":"""
+    val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"failed":$failedJson,"queries_file":"$outFile","queries":"""
     val budget = 1900 // < the harness's 2000-char stdout tail, with margin
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var len = prefix.length + 3 // "{" + closing "}}"
-    results.sortBy(-_._2).foreach { case (k, v) =>
-      val e = "\"" + k + "\":" + fmt(v)
-      val add = e.length + (if (entries.isEmpty) 0 else 1)
-      if (len + add <= budget) { entries += e; len += add }
-    }
+    val entries = summaryEntries(results, budget - prefix.length - 3) // "{" + closing "}}"
     println(prefix + entries.mkString("{", ",", "}") + "}")
     System.out.flush()
   }

@@ -84,7 +84,8 @@ object BenchRows {
     val onlyRows = sys.env.get("SPARK_GRAFT_ROW_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val frozenAnchor = sys.env.get("SPARK_GRAFT_ROW_ANCHOR").map(_.toDouble)
-    // In-row steal gate (r19, mirrors ThirdDecade): brackets sample the
+    // In-row steal gate (r19; the 1000x registry reads used the same
+    // gate, SCALING.md "Round 19"): brackets sample the
     // EDGES of a row; hypervisor-steal bursts live in the interior and
     // inflated eight "certified" 1000x reads 1.3-2.0x before the gate
     // existed. A row whose runs accrued more than this stolen fraction

@@ -7,10 +7,12 @@ package graft
   * and trivial sentinels cannot see, and which point probes bracketing
   * a multi-second row miss entirely (the bursts live in the row's
   * interior — eight 1.3-2.0x loosenings were "certified" in-band by
-  * brackets while /proc/stat showed mean stolen_frac 0.30). Both
-  * certification mains (BenchRows for the sf0.1 map, ThirdDecade for
-  * the 1000x registry) therefore integrate steal OVER the timed body
-  * and disqualify reads whose stolen fraction exceeds their threshold.
+  * brackets while /proc/stat showed mean stolen_frac 0.30). BenchRows,
+  * the certification main for the sf0.1 map, therefore integrates
+  * steal OVER the timed body and disqualifies reads whose stolen
+  * fraction exceeds its threshold. (The 1000x registry rows in
+  * SCALING_1000.json were certified the same way; `graft.Measure time`
+  * re-reads them without a gate.)
   *
   * stolen_frac = steal / (busy + steal): the fraction of time the
   * guest's runnable vCPUs were denied the physical CPU; the effective

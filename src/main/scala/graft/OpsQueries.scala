@@ -116,7 +116,7 @@ object OpsQueries {
           pqBooksFor(s, dir), queries, k = 5)
       case "imipq" =>
         // the in-memory composed two-level index, same configs as the
-        // q_ann_imi / q_ann_imipq_layout rows (RecallCheck: 0.90-0.94)
+        // q_ann_imi / q_ann_imipq_layout rows (recall 0.90-0.94, SCALING.md)
         val cents = imiCentsFor(s, dir)
         Similarity.imiPqTopK(Similarity.assignImiCells(emb, cents), cents,
           pqBooksFor(s, dir), queries, k = 5,
@@ -668,7 +668,7 @@ object OpsQueries {
     // the query emits result-shape counts plus a flag that measured
     // recall clears a bound safely under the observed floor (LSH
     // 6 bits × 16 tables: 0.98-1.0; IVF 64 cells × 32 probes:
-    // 0.90-0.92 across sf0.001-0.1 — see RecallCheck); the oracle
+    // 0.90-0.92 across sf0.001-0.1 — SCALING.md recall grid); the oracle
     // recomputes the shape and asserts the flag. ANN output is
     // deterministic, so a flag flip is a real quality regression.
     "q_ann_lsh" -> ((s, dir) => annRecallContract(s, dir, "lsh", bound = 0.9)),
@@ -779,7 +779,7 @@ object OpsQueries {
     // 8-byte ADC code words (16x narrower scans than imiWrite's raw
     // vectors). Same build/serve fixture split; recall contract + row
     // parity with the in-memory Similarity.imiPqTopK composition.
-    // Measured (RecallCheck r12 grid): 0.90-0.94 across sf0.001-0.1 at
+    // Measured (r12 recall grid, SCALING.md): 0.90-0.94 across sf0.001-0.1 at
     // this probe=12-of-16 config — ADC quantization costs ~2 points vs
     // the raw-vector imiTopK's 0.92-0.96, recovered to within noise by
     // the exact shortlist re-rank; 0.8 contract has wide margin.

@@ -85,8 +85,8 @@ object R8Queries {
     // training's vocab reduction; at 100 TB this runs at parquet-scan
     // speed with only doc_id+text read. r15: the memoized per-word
     // counter replaced the nested-replace state encoding — the apply
-    // stage measured 40.7 → 0.98 s at 1000× (DiagBpeApply, equality
-    // asserted on every sf0.1 doc first); the nested-replace form
+    // stage measured 40.7 → 0.98 s at 1000× (SCALING.md "Round 15: BPE
+    // apply", equality asserted on every sf0.1 doc first); the nested-replace form
     // remains Bpe.tokenCountAfter, spec-pinned value-identical and
     // literally replayed by the SQL oracle)
     "q_bpe_tokens" -> ((s, dir) => {

@@ -38,13 +38,28 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
       .write.mode("append").parquet(vaultsPath)
   }
 
-  def vaults: DataFrame =
-    try spark.read.parquet(vaultsPath)
-    catch { case _: Exception =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "vault STRING, account STRING, cache_duration INT, created_seq BIGINT"))
+  /** `read`, or an empty frame of `ddl` when the store is not there yet.
+    * ONLY the two legitimate empty-catalog shapes map to empty: the dir
+    * not existing yet, and an existing dir with no parquet to infer a
+    * schema from. Anything else (transient IO, corrupt footer)
+    * PROPAGATES — a swallow-all would let a corrupt `vaults` store read
+    * as empty (the next create restarting `created_seq` at 1) and let
+    * appendEvent's ifAbsent dedupe read dup=false off a failed `events`
+    * read and silently append a duplicate. */
+  private def readOrEmpty(ddl: String)(read: => DataFrame): DataFrame =
+    try read
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if Option(e.getCondition).exists(c =>
+            c.startsWith("PATH_NOT_FOUND") ||
+            c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType.fromDDL(ddl))
     }
+
+  def vaults: DataFrame =
+    readOrEmpty("vault STRING, account STRING, cache_duration INT, created_seq BIGINT")(
+      spark.read.parquet(vaultsPath))
 
   /** Q1: list vaults for an account. */
   def listVaults(account: Account): DataFrame =
@@ -129,7 +144,8 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   }
 
   def events: DataFrame =
-    try {
+    readOrEmpty("cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, " +
+        "digest STRING, window BIGINT, vault STRING") {
       // mergeSchema: event files written before the digest / window
       // columns were introduced coexist with new ones (old rows read
       // the missing column as NULL)
@@ -140,21 +156,6 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
       if (df.columns.contains("window")) df
       else df.withColumn("window",
         org.apache.spark.sql.functions.lit(null).cast("bigint"))
-    }
-    catch {
-      // ONLY the two legitimate empty-catalog shapes map to an empty
-      // DataFrame: the events dir not existing yet, and an existing dir
-      // with no parquet to infer a schema from. Anything else (transient
-      // IO, corrupt footer) PROPAGATES — a swallow-all here would let
-      // appendEvent's ifAbsent dedupe read dup=false off a failed read
-      // and silently append a duplicate (advisor r14).
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c.startsWith("PATH_NOT_FOUND") ||
-            c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, digest STRING, window BIGINT, vault STRING"))
     }
 
   /**

@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * recomputes). Saturation — a >1M-distinct-word vocabulary, i.e.
  * high-entropy tokens rather than natural language — logs one WARN per
  * counter instance (per plan per executor) and degrades to uncached
- * recompute for the tail; measured in DiagBpeApply's highentropy arm.
+ * recompute for the tail; measured in SCALING.md "Round 16: BPE memo
+ * saturation measured".
  */
 final class BpeCounter(val merges: Array[(String, String)],
                        cacheCap: Int = 1 << 20) extends Serializable {

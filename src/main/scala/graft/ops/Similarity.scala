@@ -423,7 +423,8 @@ object Similarity {
   }
 
   /** IMI probe-count sizing from MEASURED recall grids — two regimes,
-    * both grids in RecallCheck:
+    * both recorded in SCALING.md (the shallow rule's standing gate is
+    * `ImiRecallSpec`):
     *
     * SHALLOW (pair space ≤ 64; measured r13 at k = 4–8, sf0.001–0.1,
     * k@5 vs brute force, raw IMI and IMI+PQ arms; each entry the
@@ -434,8 +435,8 @@ object Similarity {
     * At the registered k = 4 / 0.9 target this derives exactly the
     * hand-picked 12-of-16 config the q_ann_imi* rows ship.
     *
-    * DEEP (pair space > 64; measured r14, `RecallCheck deep`, on the
-    * jittered 2M fixture at k = 16/32/64 — pair spaces 256/1024/4096,
+    * DEEP (pair space > 64; measured r14, SCALING.md "Round 14: the
+    * fourth decade gets its recall anchor", on the jittered 2M fixture at k = 16/32/64 — pair spaces 256/1024/4096,
     * probed fractions 0.2%–25%): recall is ABSOLUTE-COUNT-driven and
     * nearly k-independent — probes 8 → 0.78, 16 → 0.88, 32 → 0.98,
     * 64 → 1.00 (minimum across the three k) — a query's true neighbors
@@ -446,8 +447,8 @@ object Similarity {
     * target where 32 measure at 0.98.
     *
     * The BAND between the regimes (pair space 65–255, k = 9–15) is
-    * measured too (r15, `RecallCheck band`, k = 9/12 on the same
-    * fixture): probes 8 → 0.86, 16 → 0.98, 32 → 1.00 (min across the
+    * measured too (r15, SCALING.md "Round 15: probe-regime band
+    * measured", k = 9/12 on the same fixture): probes 8 → 0.86, 16 → 0.98, 32 → 1.00 (min across the
     * band) — at least the deep grid's recall at every count, so the
     * absolute rule is CONSERVATIVE there and the regime boundary
     * (k = 8 → 48 probes by fraction, k = 9 → 32 absolute) is a
@@ -456,9 +457,9 @@ object Similarity {
     * Scope: the deep grid's fixture is CLUSTERED (jittered copies —
     * tight same-base neighbor groups, the LLM-dedup corpus shape). A
     * corpus whose true neighbors spread uniformly across cells has no
-    * small covering probe set; re-run `RecallCheck deep` on such a
-    * corpus before trusting the absolute counts, like any ANN
-    * deployment. The absolute grid also assumes [[autoCellsImi]]-SIZED
+    * small covering probe set; re-measure the deep grid on such a
+    * corpus (build scale fixtures with `graft.Measure amplify`) before
+    * trusting the absolute counts, like any ANN deployment. The absolute grid also assumes [[autoCellsImi]]-SIZED
     * cells (~0.5–2k rows/cell): a measured boundary point at 10× finer
     * sharding (k = 99 over 2M, ~204 rows/cell) needs DOUBLE the probes
     * for the same target (32 → 0.88, 64 → 0.94) — clusters fragment
@@ -471,13 +472,13 @@ object Similarity {
       "autoProbesImi: need k > 0 and targetRecall in (0, 1]")
     val pairSpace = k.toLong * k
     if (pairSpace <= 64) {
-      val grid = Seq( // probed fraction -> min recall measured (RecallCheck r13)
+      val grid = Seq( // probed fraction -> min recall measured (SCALING.md, r13)
         0.25 -> 0.48, 0.50 -> 0.66, 0.75 -> 0.90, 1.00 -> 0.96)
       val frac = grid.collectFirst { case (f, r) if r >= targetRecall => f }
         .getOrElse(1.0) // above the measured ceiling: probe everything
       math.max(1L, math.min(pairSpace, math.ceil(pairSpace * frac).toLong)).toInt
     } else {
-      val grid = Seq( // absolute probes -> min recall measured (RecallCheck r14 deep)
+      val grid = Seq( // absolute probes -> min recall measured (SCALING.md, r14 deep grid)
         8 -> 0.78, 16 -> 0.88, 32 -> 0.98, 64 -> 1.00)
       val probes = grid.collectFirst { case (p, r) if r >= targetRecall => p }
         .getOrElse(64)
@@ -492,14 +493,15 @@ object Similarity {
     * re-rank recovers everything the shortlist admits, so recall buys
     * linearly-priced re-rank width rather than extra probes. On
     * well-separated corpora the default 100 already measures ≥ 0.9
-    * (the sf-scale RecallCheck arms).
+    * (the sf-scale recall grid in SCALING.md).
     *
     * The sufficient shortlist scales with the DUPLICATE-CLUSTER size C
-    * (r14's two anchors, both `RecallCheck`):
+    * (r14's two anchors, SCALING.md "Round 14: the fourth decade gets
+    * its recall anchor"):
     *   - jittered 2M, C ≈ 1000, nProbe = 32, constant across
     *     k = 16/32/64: sl 100 → 0.54, 400 (0.4·C) → 0.92,
     *     1600 (1.6·C) → 0.98+;
-    *   - jittered 20M, C ≈ 10000 (`RecallCheck 10000x`): sl 400 → 0.44,
+    *   - jittered 20M, C ≈ 10000: sl 400 → 0.44,
     *     1600 (0.16·C) → 0.80, 6400 (0.64·C) → 0.94 = the probe-bound
     *     ceiling.
     * The cross-anchor law certified at BOTH decades (taking the minimum
@@ -536,8 +538,8 @@ object Similarity {
         s"autoShortlistImiPq: target $targetRecall at cluster size $c is " +
           "beyond the measured anchors — the 20M sweep's ceiling is " +
           "PROBE-bound at 0.94 (sl 0.64*C rejoins raw IMI), so a wider " +
-          "shortlist cannot certify it; raise nProbe and re-measure " +
-          "(RecallCheck deep / 10000x) before trusting a config here")
+          "shortlist cannot certify it; raise nProbe and re-measure recall " +
+          "on a scale fixture (graft.Measure amplify) before trusting a config here")
       math.max(1600L, math.ceil(1.6 * c).toLong).toInt
     }
   }
@@ -576,7 +578,7 @@ object Similarity {
    * two codegen'd ArgMaxDot passes per row, no shuffle; search joins on
    * the pair key. `k = 0` auto-sizes via [[autoCellsImi]].
    *
-   * Measured trade vs single-level IVF (RecallCheck r12 grid,
+   * Measured trade vs single-level IVF (r12 recall grid in SCALING.md,
    * sf0.001–0.1): at the SAME probed fraction IMI recalls lower
    * (0.66–0.86 at 50% vs IVF's ~0.90) — two independent half-space
    * quantizers rank pair-cells noisier than one full-vector quantizer —
@@ -863,7 +865,8 @@ object Similarity {
    * inlines that array construction into every reference and no rule
    * simplifies `element_at(CreateArray, i)`, so each row paid m×m
    * argmax evaluations plus m×m slice allocations — measured 774 s vs
-   * 7 s for the same 2M-row stage computed once (DiagAnnBuild, r11).
+   * 7 s for the same 2M-row stage computed once (SCALING.md "Layout
+   * BUILD path: one projection was 119× too slow").
    * The 16-element interpreted fold is noise next to that.
    *
    * The fold runs over `slice(codes, 1, m)` — still exactly one

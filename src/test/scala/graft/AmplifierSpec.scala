@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /**
- * The scale-sweep amplifiers are measurement infrastructure: a bug in
- * either would silently invalidate every recorded scaling exponent, so
- * their construction is spec-pinned like any operator.
- *  - ScaleBench.amplify: factor-way union, per-copy key shift (10×/100×
- *    decades in SCALING.md / SCALING_DEEP.json / SCALING_R10.json);
- *  - ThirdDecade.amplify1000: single explode(sequence) pass, same shift
- *    (1000× decade in SCALING_1000.json).
- * The decades are only comparable because the two constructions produce
- * THE SAME corpus — asserted row-for-row here.
+ * `Measure.amplify` builds every scale-sweep fixture: a bug in it would
+ * silently invalidate every recorded scaling exponent, so its
+ * construction is spec-pinned like any operator — multiplicity, the
+ * per-copy key shift, payload fidelity, foreign keys joining within a
+ * copy, and the (factor, source snapshot) reuse gate.
  */
 class AmplifierSpec extends SparkSpec {
   import spark.implicits._
@@ -30,7 +26,7 @@ class AmplifierSpec extends SparkSpec {
   test("explode amplifier: row multiplicity, key shift, payload fidelity") {
     val (src, out) = freshDirs()
     writeBase(src)
-    ThirdDecade.amplify1000(spark, src, out, factor = 7)
+    Measure.amplify(spark, src, out, factor = 7, Seq("documents"))
     val amp = spark.read.parquet(s"$out/documents.parquet")
     assert(amp.count() === 21)
     assert(amp.select("doc_id").distinct().count() === 21) // ids stay unique
@@ -46,33 +42,22 @@ class AmplifierSpec extends SparkSpec {
     assert(perCopy.count() === 1) // every copy is the base corpus verbatim
   }
 
-  test("explode amplifier ≡ union amplifier (decade comparability)") {
-    val (src, outA) = freshDirs()
-    val outB = outA + "-union"
-    writeBase(src)
-    ThirdDecade.amplify1000(spark, src, outA, factor = 5)
-    ScaleBench.amplify(spark, src, outB, factor = 5, tables = Seq("documents"))
-    val a = spark.read.parquet(s"$outA/documents.parquet")
-    val b = spark.read.parquet(s"$outB/documents.parquet")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("amplifier reuse is gated on (factor, source snapshot), not existence") {
     val (src, out) = freshDirs()
     writeBase(src)
-    ThirdDecade.amplify1000(spark, src, out, factor = 2)
+    Measure.amplify(spark, src, out, factor = 2, Seq("documents"))
     val p = java.nio.file.Paths.get(s"$out/documents.parquet")
     val count2 = spark.read.parquet(p.toString).count()
     assert(count2 === 6)
 
     // same factor, same source → fixture untouched (idempotent reuse)
     val before = java.nio.file.Files.getLastModifiedTime(p)
-    ThirdDecade.amplify1000(spark, src, out, factor = 2)
+    Measure.amplify(spark, src, out, factor = 2, Seq("documents"))
     assert(java.nio.file.Files.getLastModifiedTime(p) === before)
 
     // DIFFERENT factor → rebuild (silent reuse of the wrong corpus would
     // invalidate recorded exponents — the round-10 ADVICE finding)
-    ThirdDecade.amplify1000(spark, src, out, factor = 3)
+    Measure.amplify(spark, src, out, factor = 3, Seq("documents"))
     assert(spark.read.parquet(p.toString).count() === 9)
 
     // changed SOURCE data under the same factor → rebuild
@@ -80,27 +65,31 @@ class AmplifierSpec extends SparkSpec {
         (3L, "delta eps", "en", 9L), (4L, "zeta", "fr", 4L))
       .toDF("doc_id", "text", "lang", "n_chars")
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
-    ThirdDecade.amplify1000(spark, src, out, factor = 3)
+    Measure.amplify(spark, src, out, factor = 3, Seq("documents"))
     assert(spark.read.parquet(p.toString).count() === 12)
 
     // a fixture with NO marker (pre-marker or torn write) → rebuild
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$out/documents.parquet.marker"))
     val beforeTorn = java.nio.file.Files.getLastModifiedTime(p)
-    ThirdDecade.amplify1000(spark, src, out, factor = 3)
+    Measure.amplify(spark, src, out, factor = 3, Seq("documents"))
     assert(java.nio.file.Files.getLastModifiedTime(p) !== beforeTorn)
     assert(spark.read.parquet(p.toString).count() === 12)
   }
 
-  test("union amplifier carries the same (factor, source) reuse gate") {
-    val (src, out) = freshDirs()
-    writeBase(src)
-    ScaleBench.amplify(spark, src, out, factor = 2, tables = Seq("documents"))
-    val p = java.nio.file.Paths.get(s"$out/documents.parquet")
-    assert(spark.read.parquet(p.toString).count() === 6)
-    val before = java.nio.file.Files.getLastModifiedTime(p)
-    ScaleBench.amplify(spark, src, out, factor = 2, tables = Seq("documents"))
-    assert(java.nio.file.Files.getLastModifiedTime(p) === before) // reuse
-    ScaleBench.amplify(spark, src, out, factor = 3, tables = Seq("documents"))
-    assert(spark.read.parquet(p.toString).count() === 9) // factor change rebuilds
+  test("amplified tables keep their foreign keys joining within a copy") {
+    // lineitem.l_partkey -> part.p_partkey: both key columns get the same
+    // per-copy shift, so copy i's lineitems join exactly copy i's parts
+    val base = "/root/testdata/sf0.001"
+    val (_, out) = freshDirs()
+    val factor = 3
+    Measure.amplify(spark, base, out, factor, Seq("lineitem", "part"))
+    def joined(dir: String) = spark.read.parquet(s"$dir/lineitem.parquet")
+      .join(spark.read.parquet(s"$dir/part.parquet"), col("l_partkey") === col("p_partkey"))
+    val baseCount = joined(base).count()
+    assert(baseCount > 0)
+    val amp = joined(out)
+    assert(amp.count() === factor * baseCount)
+    // every joined row pairs a lineitem and a part of the same copy
+    assert(amp.where(expr("l_orderkey div 100000000 != p_partkey div 100000000")).isEmpty)
   }
 }

@@ -130,5 +130,16 @@ class CatalogSpec extends SparkSpec {
       cc.appendEvent(v, "cidX", 100L, isArchived = false,
         new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
     }
+    // a CORRUPT vaults store must throw too: read as empty, it would list
+    // no vaults and the next create would restart created_seq at 1.
+    // Every data file is clobbered, so schema inference itself fails.
+    val vroot = Files.createTempDirectory("catalog_corrupt_vaults")
+    val cv = VaultCatalog(spark, vroot.toString)
+    cv.createVault(v, acct, 30)
+    Files.list(vroot.resolve("vaults")).toArray(n => new Array[java.nio.file.Path](n))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(Files.write(_, "this is not a parquet file".getBytes("UTF-8")))
+    intercept[Exception] { cv.listVaults(acct).count() }
+    intercept[Exception] { cv.createVault(VaultName("ns", "u"), acct, 30) }
   }
 }

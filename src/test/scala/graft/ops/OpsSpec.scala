@@ -874,13 +874,14 @@ class OpsSpec extends SparkSpec {
     assert(Similarity.autoCellsImi(100000000000L) == 4096) // 100B rows hits the cap
     assert(Similarity.autoCellsImi(Long.MaxValue / 2) == 4096) // capped
 
-    // probe sizing: the two measured regimes (RecallCheck r13 shallow
-    // fraction grid / r14 deep absolute grid) and their boundary
+    // probe sizing: the two measured regimes (SCALING.md: r13 shallow
+    // fraction grid, whose target ImiRecallSpec re-checks at every test
+    // scale / r14 deep absolute grid) and their boundary
     assert(Similarity.autoProbesImi(4, 0.9) == 12)   // shallow: the registered 12-of-16
     assert(Similarity.autoProbesImi(8, 0.9) == 48)   // shallow edge: 75% of 64
     assert(Similarity.autoProbesImi(16, 0.9) == 32)  // deep: absolute count, not 192
     assert(Similarity.autoProbesImi(64, 0.9) == 32)  // deep: same absolute count
-    // the 65-255-pair band (r15 RecallCheck band, k=9/12: 32 probes
+    // the 65-255-pair band (r15 band grid in SCALING.md, k=9/12: 32 probes
     // measure 1.00) — the absolute rule holds conservative in-band
     assert(Similarity.autoProbesImi(9, 0.9) == 32)
     assert(Similarity.autoProbesImi(12, 0.9) == 32)

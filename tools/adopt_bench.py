@@ -168,8 +168,9 @@ def main():
                 f"{nshared}-row geomean this far; this is an ambient window (lumpy "
                 f"drift can even push untouched rows past 1.5x, as r16's "
                 f"1.19-geomean window did to 7 of them). Re-run in a "
-                f"calibrated-quiet window (DiagRuns q_dedup_embed steady "
-                f"0.35-0.5s) or --force for a deliberate global change")
+                f"calibrated-quiet window (graft.Measure time --runs 4 "
+                f"<sf0.1> q_dedup_embed steady 0.35-0.5s) or --force for a "
+                f"deliberate global change")
     if args.prior_round:
         prior, prior_src = load(args.prior_round)
         compare(cand, prior, f"prior round ({prior_src})")

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Split graft.ExplainQ output into one plan file per query.
+"""Split `graft.Measure explain` output into one plan file per query.
 
 Usage: python3 tools/split_plans.py EXPLAIN_LOG OUT_DIR SUFFIX
 Writes OUT_DIR/<query>_<SUFFIX>.txt for every '========== name =========='
