@@ -237,7 +237,8 @@ object CdcQueries {
       // without it the upsert merge (scan+shuffle) runs three times
       val state = CdcMerge.latestStateFromDir(s, upsertLinesDir(s, dir),
         eventsSchema).cache()
-      val canonical = CdcMerge.canonicalRow(eventsSchema)
+      val canonical = graft.crypto.EcmhAggregator.canonicalRow(
+        eventsSchema.columns.map(_.name))
       val d1 = state.agg(
         graft.crypto.EcmhAggregator.digest(canonical).as("d1"))
       val d2 = state.repartition(64, col("user_id")).agg(

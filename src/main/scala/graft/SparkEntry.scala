@@ -388,7 +388,7 @@ object SparkEntry {
       val ranked = base
         .withColumn("__lrn", row_number().over(wBk))
         .join(broadcast(offs), Seq("l_returnflag", "__bk"))
-        .withColumn("rn", (col("__off") + col("__lrn")).cast("int"))
+        .withColumn("rn", col("__off") + col("__lrn"))
       def pct(p: Double, name: String): Seq[Column] = {
         val pos = (col("n") - 1) * p
         val lo = floor(pos).cast("long"); val hi = ceil(pos).cast("long")

@@ -38,24 +38,16 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
       .write.mode("append").parquet(vaultsPath)
   }
 
-  /** `read`, or an empty frame of `ddl` when the store is not there yet.
-    * ONLY the two legitimate empty-catalog shapes map to empty: the dir
-    * not existing yet, and an existing dir with no parquet to infer a
-    * schema from. Anything else (transient IO, corrupt footer)
-    * PROPAGATES — a swallow-all would let a corrupt `vaults` store read
+  /** `read`, or an empty frame of `ddl` when the store is not there yet
+    * ([[graft.core.FsUtil.readIfPresent]]). Anything but absence
+    * propagates: a swallow-all would let a corrupt `vaults` store read
     * as empty (the next create restarting `created_seq` at 1) and let
     * appendEvent's ifAbsent dedupe read dup=false off a failed `events`
     * read and silently append a duplicate. */
   private def readOrEmpty(ddl: String)(read: => DataFrame): DataFrame =
-    try read
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c.startsWith("PATH_NOT_FOUND") ||
-            c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
+    graft.core.FsUtil.readIfPresent(read).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(ddl)))
 
   def vaults: DataFrame =
     readOrEmpty("vault STRING, account STRING, cache_duration INT, created_seq BIGINT")(

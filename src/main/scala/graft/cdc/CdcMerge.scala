@@ -127,12 +127,10 @@ object CdcMerge {
         numericAsDecimal, driftMode), schema)
       .select(schema.columns.map(c => col(c.name)): _*)
 
-  /** Canonical row bytes for digesting: JSON of the schema's columns in
-    * declaration order (deterministic field order + value rendering),
-    * UTF-8. Both the from-scratch and the incremental digest paths MUST
-    * use this same encoding. */
-  def canonicalRow(schema: TableSchema): org.apache.spark.sql.Column =
-    to_json(struct(schema.columns.map(c => col(c.name)): _*)).cast("binary")
+  /** Canonical row bytes of the schema's columns in declaration order:
+    * the from-scratch and the incremental digest paths share it. */
+  private def canonicalRow(schema: TableSchema): org.apache.spark.sql.Column =
+    graft.crypto.EcmhAggregator.canonicalRow(schema.columns.map(_.name))
 
   /**
    * ECMH digest of a state table, from scratch: one distributed pass,

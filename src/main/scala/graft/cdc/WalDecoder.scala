@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -89,17 +89,26 @@ object WalDecoder {
     lines.where(anyMarker)
   }
 
-  /** Drift gate for [[decodeTables]]/[[decodeTablesFromDir]]: I/U records
-    * must match the stream-start schema ([[PgValueDecoder.schemaDriftGuard]]);
-    * D records pass (a real wal2json DELETE carries only `identity`). */
-  private def driftGated(records: DataFrame, ts: TableSchema, strict: Boolean,
-                         mode: DriftMode = DriftMode.Prefix): DataFrame =
-    if (!strict) records
-    else records.where(
-      // table scope INSIDE the guard: robust even if an optimizer rule
-      // reorders this conjunct relative to the table-routing filter
-      when(col("table") === ts.table && col("action").isin("I", "U"),
-        PgValueDecoder.schemaDriftGuard(ts, mode)).otherwise(lit(true)))
+  /** Per-table route → drift gate → typed pivot, the shared body of the
+    * table decoders. Under `strict` an I/U record must match the
+    * stream-start schema ([[PgValueDecoder.schemaDriftGuard]]); D records
+    * pass (a real wal2json DELETE carries only `identity`). */
+  private def tablesOf(records: DataFrame, schemas: Seq[TableSchema],
+                       strict: Boolean, driftMode: DriftMode,
+                       numericAsDecimal: Boolean,
+                       keepCols: Seq[String] = Nil): Map[String, DataFrame] =
+    schemas.map { ts =>
+      val routed = records.where(col("table") === ts.table)
+      val gated =
+        if (!strict) routed
+        else routed.where(
+          // table scope INSIDE the guard: robust even if an optimizer rule
+          // reorders this conjunct relative to the table-routing filter
+          when(col("table") === ts.table && col("action").isin("I", "U"),
+            PgValueDecoder.schemaDriftGuard(ts, driftMode)).otherwise(lit(true)))
+      ts.table -> PgValueDecoder.pivotToTable(gated, ts, keepCols = keepCols,
+        numericAsDecimal = numericAsDecimal)
+    }.toMap
 
   /** Full batch decode: lines → Map(table → typed DataFrame).
     * `strict = true` applies the mid-stream DDL contract: any I/U record
@@ -112,27 +121,22 @@ object WalDecoder {
       replayActions: Set[String] = Set("I"),
       strict: Boolean = false,
       driftMode: DriftMode = DriftMode.Prefix,
-      numericAsDecimal: Boolean = false): Map[String, DataFrame] = {
+      numericAsDecimal: Boolean = false): Map[String, DataFrame] =
     // replay needs only routing + payload fields; skip xid/lsn/pk/etc.
-    val records = filterActions(
+    tablesOf(filterActions(
       decodeRecords(actionPrefilter(lines, replayActions),
         recordFields = Some(Seq("action", "table", "columns"))),
-      replayActions)
-    schemas.map { ts =>
-      ts.table -> PgValueDecoder.pivotToTable(
-        driftGated(records.where(col("table") === ts.table), ts, strict, driftMode), ts,
-        numericAsDecimal = numericAsDecimal)
-    }.toMap
-  }
+      replayActions), schemas, strict, driftMode, numericAsDecimal)
 
   /** [[decodeTables]] additionally carrying each record's wal2json
     * commit timestamp parsed to a `__graft_ts` TimestampType column —
     * the EVENT-TIME axis for windowed export
-    * ([[graft.engine.VaultSink]]'s `eventTime` mode). Both wal2json
-    * spellings parse: the offset-bearing live form
-    * (`2023-08-22 14:44:02.043586-03`) and the offset-less spool form;
-    * an unparseable timestamp yields NULL (callers treat it as
-    * droppable-late rather than failing the stream). */
+    * ([[graft.engine.VaultSink]]'s `eventTime` mode), which also takes
+    * its watermark input from these rows. Both wal2json spellings parse:
+    * the offset-bearing live form (`2023-08-22 14:44:02.043586-03`) and
+    * the offset-less spool form; an unparseable timestamp yields NULL
+    * (callers treat it as droppable-late rather than failing the
+    * stream). `try_`: ANSI to_timestamp throws on unparseable input. */
   def decodeTablesWithTs(
       spark: SparkSession,
       lines: DataFrame,
@@ -145,46 +149,11 @@ object WalDecoder {
       decodeRecords(actionPrefilter(lines, replayActions),
         recordFields = Some(Seq("action", "table", "columns", "timestamp"))),
       replayActions)
-      .withColumn("__graft_ts", parsedEventTs(col("timestamp")))
-    schemas.map { ts =>
-      ts.table -> PgValueDecoder.pivotToTable(
-        driftGated(records.where(col("table") === ts.table), ts, strict, driftMode), ts,
-        keepCols = Seq("__graft_ts"),
-        numericAsDecimal = numericAsDecimal)
-    }.toMap
-  }
-
-  /** THE event-time parse — the watermark ([[maxEventTime]]) and the
-    * per-row window assignment ([[decodeTablesWithTs]]'s `__graft_ts`)
-    * MUST parse identically or watermark advancement desynchronizes
-    * from row windowing; both wal2json spellings parse (offset-bearing
-    * live form, offset-less spool form). `try_`: ANSI to_timestamp
-    * throws on unparseable input; the event-time contract is NULL
-    * (droppable-late), never a throw. */
-  private def parsedEventTs(ts: Column): Column = coalesce(
-    try_to_timestamp(ts, lit("yyyy-MM-dd HH:mm:ss[.SSSSSS][xxx][xx][x]")),
-    try_to_timestamp(ts))
-
-  /** Max parsed record timestamp (epoch seconds) across a batch of WAL
-    * lines, restricted to the replayed actions AND to `tables` — the
-    * sink's tracked set: an untracked table's commits must never
-    * advance the export watermark (they could close a tracked table's
-    * window early and silently drop its in-lateness rows as late).
-    * ONE narrow pass at the records level (action + table + timestamp,
-    * no per-table pivot) for event-time watermark advancement. None
-    * when the batch carries no parseable replayed tracked-table
-    * timestamp. */
-  def maxEventTime(spark: SparkSession, lines: DataFrame,
-                   tables: Seq[String],
-                   replayActions: Set[String] = Set("I")): Option[Long] = {
-    val records = filterActions(
-      decodeRecords(actionPrefilter(lines, replayActions),
-        recordFields = Some(Seq("action", "table", "timestamp"))),
-      replayActions)
-      .where(col("table").isin(tables: _*))
-    val row = records.agg(max(parsedEventTs(col("timestamp")).cast("long")))
-      .collect()(0)
-    if (row.isNullAt(0)) None else Some(row.getLong(0))
+      .withColumn("__graft_ts", coalesce(
+        try_to_timestamp(col("timestamp"), lit("yyyy-MM-dd HH:mm:ss[.SSSSSS][xxx][xx][x]")),
+        try_to_timestamp(col("timestamp"))))
+    tablesOf(records, schemas, strict, driftMode, numericAsDecimal,
+      keepCols = Seq("__graft_ts"))
   }
 
   /** [[decodeTables]] over an on-disk feed directory, single-parse at the
@@ -196,15 +165,9 @@ object WalDecoder {
       replayActions: Set[String] = Set("I"),
       strict: Boolean = false,
       driftMode: DriftMode = DriftMode.Prefix,
-      numericAsDecimal: Boolean = false): Map[String, DataFrame] = {
-    val records = filterActions(
+      numericAsDecimal: Boolean = false): Map[String, DataFrame] =
+    tablesOf(filterActions(
       explodeTx(parseTxDir(spark, dir,
         recordFields = Some(Seq("action", "table", "columns")))),
-      replayActions)
-    schemas.map { ts =>
-      ts.table -> PgValueDecoder.pivotToTable(
-        driftGated(records.where(col("table") === ts.table), ts, strict, driftMode), ts,
-        numericAsDecimal = numericAsDecimal)
-    }.toMap
-  }
+      replayActions), schemas, strict, driftMode, numericAsDecimal)
 }

@@ -132,13 +132,18 @@ object EcmhAggregator {
   def pointSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.udaf(new EcmhAggregator(offsetBase = false)).apply(c)
 
-  /** Content digest of a DataFrame's rows over `cols` (canonical JSON of
-    * the columns in the given order). Order- and partitioning-
-    * independent, so writer and reader need not agree on row layout —
-    * the vault-event verification digest. */
-  def rowDigest(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): String = {
+  /** Canonical row bytes for digesting: JSON of `cols` in the given
+    * order (deterministic field order + value rendering), UTF-8. Every
+    * row digest — the vault-event digest, `CdcMerge`'s from-scratch and
+    * incremental state digests — uses this one encoding. */
+  def canonicalRow(cols: Seq[String]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, struct, to_json}
-    df.agg(digest(to_json(struct(cols.map(col): _*)).cast("binary")).as("d"))
-      .collect()(0).getString(0)
+    to_json(struct(cols.map(col): _*)).cast("binary")
   }
+
+  /** Content digest of a DataFrame's rows over `cols`. Order- and
+    * partitioning-independent, so writer and reader need not agree on
+    * row layout — the vault-event verification digest. */
+  def rowDigest(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): String =
+    df.agg(digest(canonicalRow(cols)).as("d")).collect()(0).getString(0)
 }

@@ -62,9 +62,12 @@ object BatchWrite {
  */
 final class Retriever(cache: ContentStore, cold: Option[ContentStore] = None) {
 
+  /** A hot-store error falls back to the cold tier; when the cold tier
+    * is absent or misses too, the error — not "not found" — is the
+    * answer. */
   def retrieve(cid: String): Option[Path] =
-    (try cache.get(cid).orElse(coldGet(cid))
-     catch { case _: Exception => coldGet(cid) })
+    scala.util.Try(cache.get(cid))
+      .fold(e => coldGet(cid).orElse(throw e), _.orElse(coldGet(cid)))
 
   /** Extracted root blocks land in one per-process dir, one file per
     * cid, reused across repeated retrievals (no temp-file accumulation)

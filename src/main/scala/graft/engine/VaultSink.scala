@@ -2,8 +2,10 @@ package graft.engine
 
 import graft.cdc.{TableSchema, WalDecoder}
 import graft.core.{FsUtil, VaultName}
+import graft.crypto.EcmhAggregator
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, floor, lit, max}
 
 /** Pluggable file signer (C1). Production impl = keccak256 + secp256k1;
   * see [[graft.crypto.Keccak256]]. */
@@ -164,7 +166,7 @@ final class VaultSink(
           strict = strictSchema, driftMode = driftMode,
           numericAsDecimal = numericAsDecimal)
         tables.toSeq.sortBy(_._1).flatMap { case (table, df) =>
-          publish(spark, table, df, windowId, ts)
+          publish(table, df, windowId, ts)
         }
     }
   }
@@ -177,27 +179,24 @@ final class VaultSink(
   private def eventTimeBatch(spark: SparkSession, batch: DataFrame,
                              batchId: Long, w: EventTimeWindows,
                              ts: Long): Seq[(String, String)] = {
-    import org.apache.spark.sql.functions._
     val pendingRoot = Paths.get(stagingDir, "pending")
     val wmFile = Paths.get(stagingDir, "_watermark")
     val priorWm =
       if (Files.exists(wmFile)) Files.readString(wmFile).trim.toLong
       else Long.MinValue
-    // ONE narrow records-level pass for the watermark input (action +
-    // timestamp only — no per-table pivot, no per-table agg jobs), then
-    // one full decode per table for the pending writes. The previous
-    // shape ran a per-table max() agg over the fully-decoded batch —
-    // 2T full parses of the batch where T+1 (one narrow) suffice.
-    val maxSeen = WalDecoder.maxEventTime(spark, batch,
-        schemas.map(_.table), replayActions)
-      .getOrElse(Long.MinValue)
     val tables = WalDecoder.decodeTablesWithTs(spark, batch, schemas,
       replayActions, strict = strictSchema, driftMode = driftMode,
       numericAsDecimal = numericAsDecimal)
-    tables.toSeq.sortBy(_._1).foreach { case (table, df0) =>
+    val seen = tables.toSeq.sortBy(_._1).map { case (table, df0) =>
+      // the watermark input is observed on the rows this write decodes,
+      // BEFORE the `live` filter so late rows still advance it; only
+      // tracked tables are decoded, so an untracked table's commits can
+      // never close a tracked window early
+      val maxTs = Observation()
       // keep records whose window is still open; a NULL/unparseable
       // timestamp is droppable-late by contract (never fails the stream)
       val live = df0
+        .observe(maxTs, max(col("__graft_ts").cast("long")).as("max_ts"))
         .withColumn("__wstart",
           (floor(col("__graft_ts").cast("long") / w.windowSeconds) *
             w.windowSeconds).cast("long"))
@@ -208,10 +207,10 @@ final class VaultSink(
       // same batchId overwrites its own sub-dir — idempotent
       live.write.mode("overwrite").partitionBy("__wstart")
         .parquet(pendingRoot.resolve(table).resolve(f"batch-$batchId%012d").toString)
+      Option(maxTs.get("max_ts")).map(_.asInstanceOf[Long]) // NULL: no rows
     }
-    val newWm =
-      if (maxSeen == Long.MinValue) priorWm
-      else math.max(priorWm, maxSeen - w.latenessSeconds)
+    val newWm = seen.flatten.maxOption
+      .fold(priorWm)(maxSeen => math.max(priorWm, maxSeen - w.latenessSeconds))
     // finalize windows that closed THIS batch — (priorWm, newWm] only,
     // and DELETE NOTHING yet: pending slices must outlive both the
     // publish and the watermark commit below, or a failure between them
@@ -242,7 +241,7 @@ final class VaultSink(
           val slices = batchDirs.map(_.resolve(s"__wstart=$ws"))
             .filter(Files.exists(_))
           val df = spark.read.parquet(slices.map(_.toString): _*)
-          publish(spark, table, df, ws, ts)
+          publish(table, df, ws, ts)
         }
       }
     }
@@ -288,26 +287,35 @@ final class VaultSink(
   /** Stage → (optionally) single-file → sign → content-store put →
     * event-log append for one table's window slice. `windowToken` is the
     * artifact-naming token: the micro-batch id in processing-time mode,
-    * the window start (epoch seconds) in event-time mode. */
-  private def publish(spark: SparkSession, table: String, df: DataFrame,
-                      windowToken: Long, ts: Long): Option[(String, String)] = {
-    val pk = schemas.find(_.table == table).toSeq
-      .flatMap(_.columns.filter(_.isPrimary).map(_.name))
+    * the window start (epoch seconds) in event-time mode. The one
+    * staging write also observes the window's row count (P6: an empty
+    * window is skipped) and its rows' ECMH digest. */
+  private def publish(table: String, df: DataFrame, windowToken: Long,
+                      ts: Long): Option[(String, String)] = {
+    val cols = schemas.find(_.table == table).toSeq.flatMap(_.columns)
+    val pk = cols.filter(_.isPrimary).map(_.name)
+    // row-content ECMH digest recorded with the event: a retriever can
+    // re-derive it from the downloaded parquet and compare — content
+    // verification independent of the transport (the reference's stated
+    // purpose for pkg/ecmh). Order-independent, so observed before the
+    // coalesce and sort it is the digest of the artifact's rows.
+    val written = Observation()
+    val observed = df.observe(written, count(lit(1)).as("rows"),
+      EcmhAggregator.digest(EcmhAggregator.canonicalRow(cols.map(_.name))).as("digest"))
     // sort by PK within each output file: parquet row-group min/max
     // stats become selective, so PK-ranged reads of the artifact
     // prune row groups instead of scanning the window (sort applied
     // AFTER the single-file coalesce so that file is globally sorted)
     def pkSorted(d: DataFrame): DataFrame = pk match {
       case Nil => d
-      case cols => d.sortWithinPartitions(cols.map(org.apache.spark.sql.functions.col): _*)
+      case keys => d.sortWithinPartitions(keys.map(col): _*)
     }
-    val out = if (singleFile) pkSorted(df.coalesce(1)) else pkSorted(df)
+    val out = if (singleFile) pkSorted(observed.coalesce(1)) else pkSorted(observed)
     val stagePath = Paths.get(stagingDir, s"$table-$windowToken")
     out.write.mode("overwrite").parquet(stagePath.toString)
-    // P6: skip empty windows — cheap check on the written files
-    val parts = FsUtil.listDir(stagePath).filter(_.toString.endsWith(".parquet"))
-    val hasRows = parts.nonEmpty && spark.read.parquet(stagePath.toString).head(1).nonEmpty
-    if (!hasRows) { FsUtil.deleteRecursive(stagePath); None }
+    val facts = written.get
+    // P6: skip empty windows
+    if (facts("rows") == 0L) { FsUtil.deleteRecursive(stagePath); None }
     else {
       // singleFile: one `<table>-<window>.parquet` like the reference;
       // scale mode: upload the whole window DIRECTORY (all part files)
@@ -324,15 +332,6 @@ final class VaultSink(
         }
       val sig = signer.map(_.sign(artifact)).getOrElse(Array.emptyByteArray)
       val vault = VaultName(namespace, table)
-      // row-content ECMH digest recorded with the event: a retriever
-      // can re-derive it from the downloaded parquet and compare —
-      // content verification independent of the transport (the
-      // reference's stated purpose for pkg/ecmh). Order-independent,
-      // so it survives any row layout the reader produces.
-      val digest = schemas.find(_.table == table).map { sch =>
-        graft.crypto.EcmhAggregator.rowDigest(
-          spark.read.parquet(artifact.toString), sch.columns.map(_.name))
-      }.getOrElse("")
       val cid = store.put(vault, artifact, ts, sig)
       // ifAbsent + window token: a crash-replayed window (at-least-once
       // foreachBatch / event-time republish) re-derives the same content
@@ -343,8 +342,8 @@ final class VaultSink(
       // Deliberate re-uploads go through BatchWrite, which keeps the
       // append-always listing semantic.
       catalog.foreach(c => c.appendEvent(vault, cid, ts,
-        isArchived = false, c.cacheExpiryFor(vault, ts), digest,
-        ifAbsent = true, window = windowToken))
+        isArchived = false, c.cacheExpiryFor(vault, ts),
+        facts("digest").asInstanceOf[String], ifAbsent = true, window = windowToken))
       FsUtil.deleteRecursive(stagePath)
       Some(table -> cid)
     }

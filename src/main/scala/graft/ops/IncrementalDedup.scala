@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -24,10 +24,6 @@ import org.apache.spark.sql.functions._
 final class IncrementalDedup(indexDir: String, k: Int = 8, bands: Int = 4,
                              idCol: String = "doc_id", textCol: String = "text") {
 
-  private def readIndex(spark: SparkSession): Option[DataFrame] =
-    try Some(spark.read.parquet(indexDir))
-    catch { case _: Exception => None }
-
   /**
    * Process one batch: returns the batch annotated with
    * `dup_of` (lowest-id earlier near-dup, or NULL) considering both the
@@ -39,8 +35,10 @@ final class IncrementalDedup(indexDir: String, k: Int = 8, bands: Int = 4,
     val sig = Dedup.minhashExploded(docs, k, idCol, textCol)
     val bandsNew = Dedup.lshBands(sig, idCol, k, bands)
 
-    // vs earlier batches (persisted index)
-    val vsIndex = readIndex(spark) match {
+    // vs earlier batches (persisted index; absent before the first
+    // batch, while a corrupt one throws — read as empty it would mark
+    // every document unique)
+    val vsIndex = graft.core.FsUtil.readIfPresent(spark.read.parquet(indexDir)) match {
       case Some(idx) =>
         bandsNew.join(idx.withColumnRenamed(idCol, "prior_id"),
             Seq("band", "band_sig"))

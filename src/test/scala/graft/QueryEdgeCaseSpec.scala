@@ -63,3 +63,26 @@ class ApproxStatsNullKeySpec extends SparkSpec {
     assert(out.length == 4, out.mkString(";"))
   }
 }
+
+class QuantilesRankSpec extends SparkSpec {
+
+  test("q_quantiles: the global rank rn stays a bigint") {
+    // an int rank overflows (and throws under ANSI) past 2^31 rows a group
+    val dir = java.nio.file.Files.createTempDirectory("graft_q_fixture").toString
+    val schema = StructType(Seq(
+      StructField("l_returnflag", StringType), StructField("l_extendedprice", DoubleType)))
+    val rows = Seq(1000.0, 2000.0, 3000.0, 4000.0, 5000.0).map(Row("A", _)) ++
+      Seq(Row("R", 10.0), Row("R", 20.0))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val q = SparkEntry.queries("q_quantiles")(spark, dir)
+    val rn = q.queryExecution.analyzed.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias if a.name == "rn" => a.dataType
+      })
+    assert(rn.nonEmpty && rn.forall(_ == LongType), s"rn types: $rn")
+    // interpolated like quantile_cont: (flag, p50, p95, lo, hi)
+    assert(q.collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq ==
+      Seq(("A", 3000.0, 4800.0), ("R", 15.0, 19.5)))
+  }
+}

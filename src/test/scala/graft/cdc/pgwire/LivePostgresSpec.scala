@@ -133,7 +133,8 @@ class LivePostgresSpec extends SparkSpec {
     // and every row is dropped as late — the stream stays green while
     // the vault exports nothing. Pin the real spelling end-to-end: real
     // commits, real pgoutput decode, the unchanged spool envelope fed
-    // through WalDecoder.maxEventTime AND the event-time VaultSink.
+    // through the event-time VaultSink (its committed watermark and its
+    // pending windows).
     gate()
     val sql = cluster.sqlClient()
     try sql.simpleQuery("CREATE DATABASE cdc_et") finally sql.close()
@@ -152,13 +153,6 @@ class LivePostgresSpec extends SparkSpec {
         assert(eventually()(feed.txRefsAfter(0L, 10).size >= 2))
 
         val batch = spark.read.text(spool).toDF("value")
-        // the watermark input parses and is sane (live commit time ≈ now)
-        val maxTs = graft.cdc.WalDecoder.maxEventTime(spark, batch, Seq("t"))
-        assert(maxTs.isDefined, "live commit timestamp did not parse — watermark would never advance")
-        val nowSec = System.currentTimeMillis() / 1000
-        assert(math.abs(maxTs.get - nowSec) < 600,
-          s"parsed live timestamp ${maxTs.get} implausibly far from now $nowSec")
-
         // the event-time sink lands BOTH rows in their pending window
         // (1h windows, commits are 'now' → the window is open): zero
         // stored, zero dropped — a parse regression would show up as
@@ -169,6 +163,14 @@ class LivePostgresSpec extends SparkSpec {
         val sink = new graft.engine.VaultSink("ns", Seq(schema), staging, store,
           eventTime = Some(graft.engine.EventTimeWindows(3600L, 0L)))
         sink.processBatch(batch, 0L)
+        // the committed watermark (lateness 0 = the max parsed commit
+        // time) is sane: live commit time ≈ now
+        val wmFile = java.nio.file.Paths.get(staging, "_watermark")
+        val wm = java.nio.file.Files.readString(wmFile).trim.toLong
+        val nowSec = System.currentTimeMillis() / 1000
+        assert(wm != Long.MinValue, "live commit timestamp did not parse — watermark would never advance")
+        assert(math.abs(wm - nowSec) < 600,
+          s"parsed live timestamp $wm implausibly far from now $nowSec")
         val pendingRoot = java.nio.file.Paths.get(staging, "pending", "t")
         assert(java.nio.file.Files.exists(pendingRoot), "no pending window dir — rows were dropped")
         val slices = graft.core.FsUtil.listDir(pendingRoot)

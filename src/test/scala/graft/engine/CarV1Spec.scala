@@ -160,4 +160,23 @@ class CarV1Spec extends AnyFunSuite {
     val gotPlain = r.retrieve(plainCid)
     assert(gotPlain.isDefined && new String(Files.readAllBytes(gotPlain.get)) == "plain cold")
   }
+
+  test("Retriever: a hot-store error is an error unless the cold tier serves the cid") {
+    val failing = new ContentStore {
+      def put(vault: graft.core.VaultName, file: java.nio.file.Path, timestampSec: Long,
+              signature: Array[Byte]): String = throw new UnsupportedOperationException
+      def get(cid: String): Option[java.nio.file.Path] =
+        throw new java.io.IOException("hot store unreachable")
+    }
+    val cold = new LocalContentStore(Files.createTempDirectory("ret-cold-err").toString)
+    val f = Files.createTempFile("cold", ".bin")
+    Files.write(f, "cold bytes".getBytes)
+    val coldCid = cold.put(graft.core.VaultName("ns", "vault"), f, 0L, Array.emptyByteArray)
+    // no cold tier, or a cold miss: the hot error, not "not found"
+    intercept[java.io.IOException](new Retriever(failing).retrieve(coldCid))
+    intercept[java.io.IOException](new Retriever(failing, Some(cold)).retrieve("bafy-missing"))
+    // a cold hit still serves, like retriever.go:44-50
+    val got = new Retriever(failing, Some(cold)).retrieve(coldCid)
+    assert(got.isDefined && new String(Files.readAllBytes(got.get)) == "cold bytes")
+  }
 }

@@ -32,6 +32,22 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(r2(5L) == Some(4L))
   }
 
+  test("a corrupt signature index fails the batch instead of reading as empty") {
+    val base = Files.createTempDirectory("incdedup-corrupt").toString
+    val d = new IncrementalDedup(s"$base/index")
+    d.processBatch(Seq((1L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")).collect()
+    // clobber every index data file: read as empty, the index would mark
+    // the next batch's duplicate of doc 1 unique
+    graft.core.FsUtil.listDir(java.nio.file.Paths.get(s"$base/index"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(Files.write(_, "this is not a parquet file".getBytes("UTF-8")))
+    intercept[Exception] {
+      d.processBatch(Seq((2L, "the quick brown fox jumps over the lazy dog"))
+        .toDF("doc_id", "text")).collect()
+    }
+  }
+
   test("streaming exact dedup: dropDuplicatesWithinWatermark spans batches") {
     // built-in streaming dedup: duplicate fingerprints arriving within
     // the watermark window are emitted once, state expires after it
