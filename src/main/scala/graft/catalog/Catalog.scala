@@ -1,8 +1,9 @@
 package graft.catalog
 
 import graft.core.{Account, VaultName}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Vault catalog + per-vault event log as DataFrames.
@@ -16,9 +17,18 @@ import org.apache.spark.sql.functions._
  * Storage: parquet directories under a root path, partition-friendly.
  * At scale the event log is `partitionBy(vault)` so per-vault queries
  * partition-prune instead of scanning the full log.
+ *
+ * Both stores are written only here, so their schemas are declared
+ * ([[VaultCatalog.VaultsSchema]], [[VaultCatalog.EventsSchema]]) and every
+ * read passes them to `spark.read.schema`: no Spark job runs just to
+ * learn a schema from footers. A file written before a column existed
+ * (events without `digest`/`window`, vaults without `created_seq`) reads
+ * that column as NULL. A per-vault read opens only that vault's
+ * partition, so a corrupt file in one vault fails that vault's reads and
+ * whole-log reads, not another vault's listing.
  */
 final case class VaultCatalog(spark: SparkSession, root: String) {
-  import spark.implicits._
+  import VaultCatalog.{EventsSchema, VaultsSchema}
 
   private def vaultsPath = s"$root/vaults"
   private def eventsPath = s"$root/events"
@@ -28,30 +38,29 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
     * enumeration order is arbitrary). Catalog mutations are single-writer
     * (CLI control plane), so read-max-then-append is race-free here. */
   def createVault(vault: VaultName, account: Account, cacheDurationMins: Int): Unit = {
-    val cur = vaults
     val nextSeq =
-      if (cur.columns.contains("created_seq"))
-        cur.agg(coalesce(max("created_seq"), lit(0L))).collect()(0).getLong(0) + 1L
-      else 1L
-    Seq((vault.toString, account.address, cacheDurationMins, nextSeq))
-      .toDF("vault", "account", "cache_duration", "created_seq")
+      vaults.agg(coalesce(max("created_seq"), lit(0L))).collect()(0).getLong(0) + 1L
+    rowOf(VaultsSchema, vault.toString, account.address, cacheDurationMins, nextSeq)
       .write.mode("append").parquet(vaultsPath)
   }
 
-  /** `read`, or an empty frame of `ddl` when the store is not there yet
-    * ([[graft.core.FsUtil.readIfPresent]]). Anything but absence
-    * propagates: a swallow-all would let a corrupt `vaults` store read
-    * as empty (the next create restarting `created_seq` at 1) and let
-    * appendEvent's ifAbsent dedupe read dup=false off a failed `events`
-    * read and silently append a duplicate. */
-  private def readOrEmpty(ddl: String)(read: => DataFrame): DataFrame =
-    graft.core.FsUtil.readIfPresent(read).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+  /** The store at `path` read with `schema`, or an empty frame of it
+    * when the store is not there yet ([[graft.core.FsUtil.readIfPresent]]).
+    * Anything but absence propagates: a swallow-all would let a corrupt
+    * `vaults` store read as empty (the next create restarting
+    * `created_seq` at 1) and let appendEvent's ifAbsent dedupe read
+    * dup=false off a failed `events` read and silently append a
+    * duplicate. */
+  private def readOrEmpty(schema: StructType, path: String): DataFrame =
+    graft.core.FsUtil.readIfPresent(spark.read.schema(schema).parquet(path)).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 
-  def vaults: DataFrame =
-    readOrEmpty("vault STRING, account STRING, cache_duration INT, created_seq BIGINT")(
-      spark.read.parquet(vaultsPath))
+  /** A one-row frame of `schema`: the stores are written with the schema
+    * they are read with. */
+  private def rowOf(schema: StructType, values: Any*): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
+
+  def vaults: DataFrame = readOrEmpty(VaultsSchema, vaultsPath)
 
   /** Q1: list vaults for an account. */
   def listVaults(account: Account): DataFrame =
@@ -62,15 +71,11 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   /** Cache duration (minutes) configured at vault create, if any —
     * the row with the highest `created_seq` wins if the vault was
     * re-created (deterministic, unlike file enumeration order). */
-  def cacheDurationOf(vault: VaultName): Option[Int] = {
-    val matching = vaults.where(col("vault") === vault.toString)
-    val ordered =
-      if (matching.columns.contains("created_seq"))
-        matching.orderBy(col("created_seq").desc)
-      else matching
-    ordered.select("cache_duration").limit(1).collect()
+  def cacheDurationOf(vault: VaultName): Option[Int] =
+    vaults.where(col("vault") === vault.toString)
+      .orderBy(col("created_seq").desc)
+      .select("cache_duration").limit(1).collect()
       .headOption.map(_.getInt(0))
-  }
 
   /** Hot-cache expiry for an upload at `timestampSec` to this vault:
     * ts + cache_duration minutes (the reference's provider computes the
@@ -113,42 +118,23 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
                   isArchived: Boolean, cacheExpiry: java.sql.Timestamp,
                   digest: String = "", ifAbsent: Boolean = false,
                   window: Long = -1L): Unit = {
-    import org.apache.spark.sql.functions.col
-    // Existence probed explicitly: a transient/corrupt READ failure
-    // must propagate, not silently degrade to append-always — the
-    // exact duplicate the flag exists to prevent (advisor r13).
-    def eventsDirExists: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(eventsPath)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
-    val dup = ifAbsent && eventsDirExists && {
+    // `events` reads a store that is not there yet as empty and throws
+    // on any other read failure: a failed probe must not degrade to
+    // append-always, the exact duplicate the flag exists to prevent.
+    val dup = ifAbsent && {
       val base = events.where(col("vault") === vault.toString && col("cid") === cid)
-      // Pre-window event files read window = NULL under mergeSchema;
-      // NULL === w is never true, so legacy rows can't suppress a new
-      // window's append.
+      // Pre-window event files read window = NULL; NULL === w is never
+      // true, so legacy rows can't suppress a new window's append.
       val scoped = if (window >= 0L) base.where(col("window") === window) else base
       scoped.head(1).nonEmpty
     }
     if (!dup)
-      Seq((vault.toString, cid, timestampSec, isArchived, cacheExpiry, digest, window))
-        .toDF("vault", "cid", "timestamp", "is_archived", "cache_expiry", "digest", "window")
+      rowOf(EventsSchema, cid, timestampSec, isArchived, cacheExpiry, digest, window,
+          vault.toString)
         .write.mode("append").partitionBy("vault").parquet(eventsPath)
   }
 
-  def events: DataFrame =
-    readOrEmpty("cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, " +
-        "digest STRING, window BIGINT, vault STRING") {
-      // mergeSchema: event files written before the digest / window
-      // columns were introduced coexist with new ones (old rows read
-      // the missing column as NULL)
-      val df0 = spark.read.option("mergeSchema", "true").parquet(eventsPath)
-      val df =
-        if (df0.columns.contains("digest")) df0
-        else df0.withColumn("digest", org.apache.spark.sql.functions.lit(null: String))
-      if (df.columns.contains("window")) df
-      else df.withColumn("window",
-        org.apache.spark.sql.functions.lit(null).cast("bigint"))
-    }
+  def events: DataFrame = readOrEmpty(EventsSchema, eventsPath)
 
   /**
    * Q2: per-vault event listing with before/after/at/latest filters and
@@ -165,6 +151,15 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
 }
 
 object VaultCatalog {
+
+  /** The vault catalog's rows, one per create (M1). */
+  val VaultsSchema: StructType =
+    StructType.fromDDL("vault STRING, account STRING, cache_duration INT, created_seq BIGINT")
+
+  /** The event log's rows; `vault` is its partition column. */
+  val EventsSchema: StructType = StructType.fromDDL(
+    "cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, " +
+      "digest STRING, window BIGINT, vault STRING")
 
   /** Q2 filter core, shared by the instance method (separated so the
     * archival view below can reuse the exact newest-first semantics). */

@@ -18,7 +18,9 @@ object FsUtil {
     * legitimate absent shapes — the path not existing, and an existing
     * dir with no data file to infer a schema from. Anything else
     * (transient IO, a corrupt footer) PROPAGATES, so a damaged store
-    * never reads as an empty one. */
+    * never reads as an empty one. The second shape needs a read that
+    * infers its schema: `VaultCatalog` declares its schemas, so only
+    * `IncrementalDedup`'s index read can reach it. */
   def readIfPresent[T](read: => T): Option[T] =
     try Some(read)
     catch {

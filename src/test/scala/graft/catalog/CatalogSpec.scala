@@ -2,7 +2,8 @@ package graft.catalog
 
 import graft.SparkSpec
 import graft.core.{Account, VaultName}
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import org.apache.spark.graftspec.JobCount
 
 /** Q1/Q2/M1 catalog semantics: filters, flag mapping, ordering
   * (cmd/vaults/commands.go:427-586, :787-803, :524-549). */
@@ -22,6 +23,9 @@ class CatalogSpec extends SparkSpec {
 
   private def cids(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.getAs[String]("cid")).toSeq
+
+  private def corrupt(file: Path): Unit =
+    Files.write(file, "this is not a parquet file".getBytes("UTF-8"))
 
   test("events: newest-first default, before/after window") {
     val c = freshCatalog(); seed(c)
@@ -132,14 +136,87 @@ class CatalogSpec extends SparkSpec {
     }
     // a CORRUPT vaults store must throw too: read as empty, it would list
     // no vaults and the next create would restart created_seq at 1.
-    // Every data file is clobbered, so schema inference itself fails.
+    // Every data file is clobbered, so the scan of the declared schema fails.
     val vroot = Files.createTempDirectory("catalog_corrupt_vaults")
     val cv = VaultCatalog(spark, vroot.toString)
     cv.createVault(v, acct, 30)
     Files.list(vroot.resolve("vaults")).toArray(n => new Array[java.nio.file.Path](n))
       .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach(Files.write(_, "this is not a parquet file".getBytes("UTF-8")))
+      .foreach(corrupt)
     intercept[Exception] { cv.listVaults(acct).count() }
     intercept[Exception] { cv.createVault(VaultName("ns", "u"), acct, 30) }
+    // a corrupt file inside one vault's partition fails every read that
+    // opens that partition, and only those: another vault's listing is
+    // partition-pruned and never opens it
+    val c2 = freshCatalog(); seed(c2)
+    val other = VaultName("ns", "other")
+    c2.createVault(other, acct, 0)
+    c2.appendEvent(other, "cidB", 999L, isArchived = false, new java.sql.Timestamp(0))
+    corrupt(Path.of(c2.root, "events", s"vault=$v", "part-corrupt.parquet"))
+    intercept[Exception] { c2.listEvents(v).count() }
+    intercept[Exception] {
+      c2.appendEvent(v, "cidY", 100L, isArchived = false,
+        new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
+    }
+    intercept[Exception] { c2.events.count() }
+    assert(cids(c2.listEvents(other)) == Seq("cidB"))
+  }
+
+  test("a store written before digest, window and created_seq existed still reads") {
+    val c = freshCatalog()
+    val ts0 = new java.sql.Timestamp(0)
+    // event files and a vaults file in the shapes older writers left
+    spark.createDataFrame(Seq(("old1", 100L, false, ts0), ("old2", 200L, true, ts0)))
+      .toDF("cid", "timestamp", "is_archived", "cache_expiry")
+      .write.parquet(s"${c.root}/events/vault=$v")
+    spark.createDataFrame(Seq((v.toString, acct.address, 10)))
+      .toDF("vault", "account", "cache_duration")
+      .write.parquet(s"${c.root}/vaults")
+    // they list, and the missing columns read NULL
+    assert(cids(c.listEvents(v)) == Seq("old2", "old1"))
+    assert(c.listVaults(acct).collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
+      Seq((v.toString, 10)))
+    assert(c.events.select("digest", "window").collect()
+      .forall(r => r.isNullAt(0) && r.isNullAt(1)))
+    assert(c.vaults.select("created_seq").collect().forall(_.isNullAt(0)))
+    assert(c.cacheDurationOf(v).contains(10))
+    // a window-scoped replay-safe append over an old row with the same cid
+    // appends: the old row's NULL window never equals the token
+    c.appendEvent(v, "old1", 300L, isArchived = false, ts0, digest = "d",
+      ifAbsent = true, window = 1L)
+    assert(cids(c.listEvents(v)) == Seq("old1", "old2", "old1"))
+    // and its own replay is a no-op
+    c.appendEvent(v, "old1", 300L, isArchived = false, ts0, digest = "d",
+      ifAbsent = true, window = 1L)
+    assert(c.listEvents(v).count() == 3)
+    // re-creates start created_seq at 1 over the unsequenced row, and
+    // the highest created_seq wins over it
+    c.createVault(v, acct, 30)
+    assert(c.cacheDurationOf(v).contains(30))
+    c.createVault(v, acct, 45)
+    assert(c.cacheDurationOf(v).contains(45))
+    val seqs = c.vaults.select("created_seq").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(seqs.sortBy(_.getOrElse(0L)) == Seq(None, Some(1L), Some(2L)))
+  }
+
+  test("catalog reads run no schema-inference job") {
+    val c = freshCatalog(); seed(c)
+    val other = VaultName("ns", "other")
+    c.createVault(other, acct, 0)
+    for (i <- 1 to 3)
+      c.appendEvent(other, s"o$i", i * 10L, isArchived = false, new java.sql.Timestamp(0))
+    def jobs(body: => Any): Int = JobCount.of(spark.sparkContext)(body)._2
+    val counts = Seq(
+      "listEvents" -> jobs(c.listEvents(v, limit = Some(5)).collect()),
+      "listVaults" -> jobs(c.listVaults(acct).collect()),
+      "cacheExpiryFor" -> jobs(c.cacheExpiryFor(v, 1000L)),
+      "appendEvent ifAbsent" -> jobs(c.appendEvent(v, "cidNew", 600L, isArchived = false,
+        new java.sql.Timestamp(0), ifAbsent = true, window = 7L)))
+    // each read's own jobs only, no footer job to infer a schema: a top-N
+    // listing is one job; the sorted vault listing samples, shuffles and
+    // collects; the probe scans one split, then the rest; the append writes
+    assert(counts == Seq("listEvents" -> 1, "listVaults" -> 3, "cacheExpiryFor" -> 1,
+      "appendEvent ifAbsent" -> 3))
   }
 }
