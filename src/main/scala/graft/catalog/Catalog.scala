@@ -4,6 +4,14 @@ import graft.core.{Account, VaultName}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
+
+/** One uploaded artifact's event ([[VaultCatalog.appendEvents]]). `digest`:
+  * the ECMH multiset digest of the artifact's rows (hex, the reference's
+  * `MultisetHash.String()` form), "" when the writer computed none, so a
+  * reader can verify retrieved content without trusting the transport. */
+final case class UploadEvent(vault: VaultName, cid: String, timestampSec: Long,
+                             digest: String = "", window: Option[Long] = None)
 
 /**
  * Vault catalog + per-vault event log as DataFrames.
@@ -40,25 +48,26 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   def createVault(vault: VaultName, account: Account, cacheDurationMins: Int): Unit = {
     val nextSeq =
       vaults.agg(coalesce(max("created_seq"), lit(0L))).collect()(0).getLong(0) + 1L
-    rowOf(VaultsSchema, vault.toString, account.address, cacheDurationMins, nextSeq)
+    frameOf(VaultsSchema, Row(vault.toString, account.address, cacheDurationMins, nextSeq))
       .write.mode("append").parquet(vaultsPath)
   }
 
-  /** The store at `path` read with `schema`, or an empty frame of it
-    * when the store is not there yet ([[graft.core.FsUtil.readIfPresent]]).
+  /** The store at `path` read with `schema`, or an empty local frame of
+    * it (no Spark job) when the store is not there yet
+    * ([[graft.core.FsUtil.readIfPresent]]).
     * Anything but absence propagates: a swallow-all would let a corrupt
     * `vaults` store read as empty (the next create restarting
-    * `created_seq` at 1) and let appendEvent's ifAbsent dedupe read
-    * dup=false off a failed `events` read and silently append a
+    * `created_seq` at 1) and let appendEvents' replay dedupe read
+    * "not logged" off a failed `events` read and silently append a
     * duplicate. */
   private def readOrEmpty(schema: StructType, path: String): DataFrame =
-    graft.core.FsUtil.readIfPresent(spark.read.schema(schema).parquet(path)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+    graft.core.FsUtil.readIfPresent(spark.read.schema(schema).parquet(path))
+      .getOrElse(frameOf(schema))
 
-  /** A one-row frame of `schema`: the stores are written with the schema
-    * they are read with. */
-  private def rowOf(schema: StructType, values: Any*): DataFrame =
-    spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
+  /** A frame of `rows` in `schema`: the stores are written with the
+    * schema they are read with. */
+  private def frameOf(schema: StructType, rows: Row*): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   def vaults: DataFrame = readOrEmpty(VaultsSchema, vaultsPath)
 
@@ -68,70 +77,59 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
       .select(col("vault"), col("cache_duration"))
       .orderBy(col("vault"))
 
-  /** Cache duration (minutes) configured at vault create, if any —
-    * the row with the highest `created_seq` wins if the vault was
-    * re-created (deterministic, unlike file enumeration order). */
+  /** Cache duration (minutes) configured at vault create, if any. */
   def cacheDurationOf(vault: VaultName): Option[Int] =
-    vaults.where(col("vault") === vault.toString)
-      .orderBy(col("created_seq").desc)
-      .select("cache_duration").limit(1).collect()
-      .headOption.map(_.getInt(0))
+    cacheDurations(Seq(vault)).get(vault.toString)
 
-  /** Hot-cache expiry for an upload at `timestampSec` to this vault:
-    * ts + cache_duration minutes (the reference's provider computes the
-    * same from the `cache` form field, provider.go:39-64); epoch 0 when
-    * the vault has no cache duration (never cached / unknown vault). */
-  def cacheExpiryFor(vault: VaultName, timestampSec: Long): java.sql.Timestamp =
-    cacheDurationOf(vault) match {
-      case Some(mins) if mins > 0 =>
-        new java.sql.Timestamp((timestampSec + mins * 60L) * 1000L)
-      case _ => new java.sql.Timestamp(0L)
-    }
+  /** The cache durations of `names` in one read: the row with the highest
+    * `created_seq` wins if a vault was re-created (deterministic, unlike
+    * file enumeration order; an unsequenced row loses to any other). */
+  private def cacheDurations(names: Seq[VaultName]): Map[String, Int] =
+    vaults.where(col("vault").isin(names.map(_.toString).distinct: _*))
+      .select("vault", "cache_duration", "created_seq").collect()
+      .groupBy(_.getString(0))
+      .flatMap { case (vault, rows) =>
+        val latest = rows.maxBy(r => if (r.isNullAt(2)) Long.MinValue else r.getLong(2))
+        Option.when(!latest.isNullAt(1))(vault -> latest.getInt(1))
+      }
 
-  /** P8/M1: record an uploaded file event. */
-  /** `digest`: optional ECMH multiset digest of the artifact's ROWS
-    * (hex, reference `MultisetHash.String()` form) — lets a reader
-    * verify retrieved content against the catalog without trusting the
-    * transport; "" when the writer didn't compute one.
+  /** P8/M1: record uploaded artifacts' events in one append (one task,
+    * so one file per vault per call). Each event's hot-cache expiry is
+    * ts + its vault's `cache_duration` minutes (the reference's provider
+    * computes the same from the `cache` form field, provider.go:39-64),
+    * epoch 0 when the vault has none (never cached / unknown vault).
     *
-    * `ifAbsent = true` makes the append IDEMPOTENT on (vault, cid,
-    * window): a crash-replay that re-publishes the same content (the
-    * event-time sink's at-least-once window republish — `VaultSink`
-    * replays a window whose publish landed but whose watermark commit
-    * didn't) re-derives the same cid FOR THE SAME WINDOW, and the
-    * second append becomes a no-op instead of a duplicate listing row.
-    * The `window` token scopes the dedupe to actual replays: a LATER
-    * window that legitimately emits byte-identical content (same cid,
-    * different window) is a distinct event and appends normally — its
-    * newer timestamp and refreshed cache_expiry land in the log like
-    * the reference's append-always semantics (advisor r13). With no
-    * window token (window < 0) the dedupe falls back to (vault, cid).
-    * It stays OFF by default because a deliberate re-upload of
-    * identical content IS an event — the content-addressed cid
-    * legitimately repeats in the log (`CompactorSpec` pins that
-    * listing semantic). The existence check is a vault-partition-pruned
-    * read of one vault's events — catalog-sized, not corpus-sized.
-    * Single-writer per vault (one streaming query owns a vault's
-    * exports) is the concurrency contract that makes read-then-append
-    * sound. */
-  def appendEvent(vault: VaultName, cid: String, timestampSec: Long,
-                  isArchived: Boolean, cacheExpiry: java.sql.Timestamp,
-                  digest: String = "", ifAbsent: Boolean = false,
-                  window: Long = -1L): Unit = {
-    // `events` reads a store that is not there yet as empty and throws
-    // on any other read failure: a failed probe must not degrade to
-    // append-always, the exact duplicate the flag exists to prevent.
-    val dup = ifAbsent && {
-      val base = events.where(col("vault") === vault.toString && col("cid") === cid)
-      // Pre-window event files read window = NULL; NULL === w is never
-      // true, so legacy rows can't suppress a new window's append.
-      val scoped = if (window >= 0L) base.where(col("window") === window) else base
-      scoped.head(1).nonEmpty
-    }
-    if (!dup)
-      rowOf(EventsSchema, cid, timestampSec, isArchived, cacheExpiry, digest, window,
-          vault.toString)
-        .write.mode("append").partitionBy("vault").parquet(eventsPath)
+    * An event with a window token is replay-safe: it is dropped when its
+    * (vault, cid, window) is already in the log, so a crash-replayed
+    * window, which re-derives the same content cid for the same window,
+    * adds no listing row. A later window emitting byte-identical content
+    * is a distinct (cid, window) and appends. An event without a window
+    * always appends: a deliberate re-upload of identical content is an
+    * event (`CompactorSpec` pins the repeated cid). The existence check
+    * is one read pruned to the batch's vault partitions and cids; a
+    * failed read throws rather than append a duplicate. Single-writer
+    * per vault (one streaming query owns a vault's exports) makes
+    * read-then-append sound. */
+  def appendEvents(batch: Seq[UploadEvent]): Unit = if (batch.nonEmpty) {
+    val mins = cacheDurations(batch.map(_.vault))
+    val windowed = batch.filter(_.window.isDefined)
+    // pre-window event files read window = NULL, which never equals a token
+    val logged: Set[(String, String, Long)] =
+      if (windowed.isEmpty) Set.empty
+      else events
+        .where(col("vault").isin(windowed.map(_.vault.toString).distinct: _*) &&
+          col("cid").isin(windowed.map(_.cid).distinct: _*) && col("window").isNotNull)
+        .select("vault", "cid", "window").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    val fresh = batch.filterNot(e =>
+      e.window.exists(w => logged((e.vault.toString, e.cid, w))))
+    if (fresh.nonEmpty)
+      frameOf(EventsSchema, fresh.map { e =>
+        val expiryMs = mins.get(e.vault.toString).filter(_ > 0)
+          .fold(0L)(m => (e.timestampSec + m * 60L) * 1000L)
+        Row(e.cid, e.timestampSec, false, new java.sql.Timestamp(expiryMs), e.digest,
+          e.window.map(Long.box).orNull, e.vault.toString)
+      }: _*).coalesce(1).write.mode("append").partitionBy("vault").parquet(eventsPath)
   }
 
   def events: DataFrame = readOrEmpty(EventsSchema, eventsPath)
@@ -186,7 +184,7 @@ object VaultCatalog {
    * once `asOf` passes that expiry only the archived copy remains. A
    * vault with no (or non-positive) cache duration never caches — its
    * expiry is epoch 0 and the upload is archived from the start, the
-   * `cacheExpiryFor` convention above.
+   * convention [[VaultCatalog.appendEvents]] records.
    *
    * `uploads` needs (`vault`, `ts_us` — upload time in epoch micros);
    * `vaultDims` needs (`vault`, `cache_duration` minutes). Adds

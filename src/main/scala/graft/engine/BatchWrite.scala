@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.catalog.UploadEvent
 import graft.core.{Timestamps, VaultName}
 import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
@@ -8,10 +9,8 @@ import org.apache.spark.sql.SparkSession
  * `vaults write` (B1): upload an existing Parquet file to a vault —
  * validate it is readable Parquet, default/parse the timestamp, sign,
  * hand to the content store, record the event
- * (`cmd/vaults/commands.go:250-348`).
- *
- * Unlike the single-threaded reference, `writeAll` fans independent
- * files out as parallel driver-side tasks (each upload is I/O-bound).
+ * (`cmd/vaults/commands.go:250-348`). The event carries no window token,
+ * so a re-upload of identical content appends another event.
  */
 object BatchWrite {
 
@@ -33,21 +32,8 @@ object BatchWrite {
     val staged = Files.createTempFile("graft-write", "-" + file.getFileName)
     Files.copy(file, staged, StandardCopyOption.REPLACE_EXISTING)
     val cid = store.put(vault, staged, ts, sig)
-    catalog.foreach(c => c.appendEvent(vault, cid, ts, isArchived = false,
-      c.cacheExpiryFor(vault, ts)))
+    catalog.foreach(_.appendEvents(Seq(UploadEvent(vault, cid, ts))))
     cid
-  }
-
-  def writeAll(spark: SparkSession, vault: VaultName, files: Seq[Path],
-               store: ContentStore, signer: Option[FileSigner] = None,
-               catalog: Option[graft.catalog.VaultCatalog] = None): Seq[(Path, String)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.traverse(files)(f =>
-        Future(f -> write(spark, vault, f, store, signer, catalog))),
-      Duration.Inf)
   }
 }
 

@@ -60,8 +60,7 @@ object Compactor {
 
     val sig = signer.map(_.sign(stage)).getOrElse(Array.emptyByteArray)
     val cid = store.put(vault, stage, ts, sig)
-    catalog.appendEvent(vault, cid, ts, isArchived = false,
-      catalog.cacheExpiryFor(vault, ts))
+    catalog.appendEvents(Seq(graft.catalog.UploadEvent(vault, cid, ts)))
     paths.foreach { case (oldCid, _) => store.delete(oldCid) }
     FsUtil.deleteRecursive(stage)
     Some(cid)

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.catalog.{UploadEvent, VaultCatalog}
 import graft.cdc.{TableSchema, WalDecoder}
 import graft.core.{FsUtil, VaultName}
 import graft.crypto.EcmhAggregator
@@ -112,7 +113,9 @@ final case class EventTimeWindows(windowSeconds: Long, latenessSeconds: Long) {
  * The windowed vault sink (P5-P10): for one micro-batch of WAL lines,
  * decode per-table typed DataFrames, write one parquet snapshot per
  * non-empty table (P6 empty-skip), sign it, hand it to the content store,
- * record an event, clean staging (P10).
+ * clean staging (P10), then record the batch's events in one catalog
+ * append. Events carry their window token, so a replayed batch re-puts
+ * the same content-addressed artifacts and appends no second event.
  *
  * Called from `foreachBatch` — micro-batch sequencing replaces the
  * reference's mutex-serialized ticker rotation (`internal/app/db.go:83-101`).
@@ -128,7 +131,7 @@ final class VaultSink(
     stagingDir: String,
     store: ContentStore,
     signer: Option[FileSigner] = None,
-    catalog: Option[graft.catalog.VaultCatalog] = None,
+    catalog: Option[VaultCatalog] = None,
     replayActions: Set[String] = Set("I"),
     singleFile: Boolean = true,
     clock: () => Long = () => java.time.Instant.now().getEpochSecond,
@@ -159,16 +162,19 @@ final class VaultSink(
     // One timestamp per window keeps all tables of a window coherent.
     val ts = clock()
     val spark = batch.sparkSession
-    eventTime match {
+    val published = eventTime match {
       case Some(w) => eventTimeBatch(spark, batch, windowId, w, ts)
       case None =>
         val tables = WalDecoder.decodeTables(spark, batch, schemas, replayActions,
           strict = strictSchema, driftMode = driftMode,
           numericAsDecimal = numericAsDecimal)
-        tables.toSeq.sortBy(_._1).flatMap { case (table, df) =>
+        val out = tables.toSeq.sortBy(_._1).flatMap { case (table, df) =>
           publish(table, df, windowId, ts)
         }
+        catalog.foreach(_.appendEvents(out))
+        out
     }
+    published.map(e => e.vault.relation -> e.cid)
   }
 
   /** Event-time micro-batch step: decode with the per-record wal
@@ -178,7 +184,7 @@ final class VaultSink(
     * the watermark, and finalize every window it passed. */
   private def eventTimeBatch(spark: SparkSession, batch: DataFrame,
                              batchId: Long, w: EventTimeWindows,
-                             ts: Long): Seq[(String, String)] = {
+                             ts: Long): Seq[UploadEvent] = {
     val pendingRoot = Paths.get(stagingDir, "pending")
     val wmFile = Paths.get(stagingDir, "_watermark")
     val priorWm =
@@ -245,6 +251,9 @@ final class VaultSink(
         }
       }
     }
+    // events land before the commit point: a crash after the append
+    // replays into a no-op append of the same (cid, window)s
+    catalog.foreach(_.appendEvents(out))
     // COMMIT POINT: the watermark move. A crash anywhere above replays
     // the whole batch against intact slices — every re-publish sees the
     // FULL slice set, so the content-addressed put re-produces the same
@@ -284,14 +293,15 @@ final class VaultSink(
     out
   }
 
-  /** Stage → (optionally) single-file → sign → content-store put →
-    * event-log append for one table's window slice. `windowToken` is the
-    * artifact-naming token: the micro-batch id in processing-time mode,
-    * the window start (epoch seconds) in event-time mode. The one
+  /** Stage → (optionally) single-file → sign → content-store put for one
+    * table's window slice; returns the artifact's catalog event, which
+    * the caller appends with the rest of the batch's. `windowToken` is
+    * the artifact-naming token: the micro-batch id in processing-time
+    * mode, the window start (epoch seconds) in event-time mode. The one
     * staging write also observes the window's row count (P6: an empty
     * window is skipped) and its rows' ECMH digest. */
   private def publish(table: String, df: DataFrame, windowToken: Long,
-                      ts: Long): Option[(String, String)] = {
+                      ts: Long): Option[UploadEvent] = {
     val cols = schemas.find(_.table == table).toSeq.flatMap(_.columns)
     val pk = cols.filter(_.isPrimary).map(_.name)
     // row-content ECMH digest recorded with the event: a retriever can
@@ -333,19 +343,11 @@ final class VaultSink(
       val sig = signer.map(_.sign(artifact)).getOrElse(Array.emptyByteArray)
       val vault = VaultName(namespace, table)
       val cid = store.put(vault, artifact, ts, sig)
-      // ifAbsent + window token: a crash-replayed window (at-least-once
-      // foreachBatch / event-time republish) re-derives the same content
-      // cid for the SAME window — that append must not double the
-      // listing row (advisor r12). A LATER window that legitimately
-      // emits byte-identical content is a distinct (cid, window) and
-      // appends normally with its own timestamp/expiry (advisor r13).
-      // Deliberate re-uploads go through BatchWrite, which keeps the
-      // append-always listing semantic.
-      catalog.foreach(c => c.appendEvent(vault, cid, ts,
-        isArchived = false, c.cacheExpiryFor(vault, ts),
-        facts("digest").asInstanceOf[String], ifAbsent = true, window = windowToken))
       FsUtil.deleteRecursive(stagePath)
-      Some(table -> cid)
+      // the window token makes the event replay-safe; deliberate
+      // re-uploads go through BatchWrite, whose events carry none
+      Some(UploadEvent(vault, cid, ts, facts("digest").asInstanceOf[String],
+        Some(windowToken)))
     }
   }
 

@@ -505,6 +505,10 @@ object Dedup {
    */
   def clusters(pairs: DataFrame,
                driverThreshold: Long = 1000000L): DataFrame = {
+    // the driver path takes threshold+1 edges in one Int-sized limit; no
+    // driver can union-find 2^31 edges anyway
+    require(driverThreshold < Int.MaxValue,
+      s"driverThreshold must be below Int.MaxValue, got $driverThreshold")
     // materialize the edge list once — its upstream (minhash + banding)
     // would otherwise re-execute on every round / in the driver collect
     val edges = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
@@ -517,7 +521,7 @@ object Dedup {
     // the collect volume is gone too — identical output.
     import org.apache.spark.sql.Encoders
     val take = edges
-      .limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1)
+      .limit(driverThreshold.toInt + 1)
       .as[(Long, Long)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .collect()
     if (take.length <= driverThreshold) clustersDriver(take, edges.sparkSession)

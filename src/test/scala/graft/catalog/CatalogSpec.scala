@@ -17,8 +17,7 @@ class CatalogSpec extends SparkSpec {
 
   private def seed(c: VaultCatalog): Unit = {
     c.createVault(v, acct, 30)
-    for (i <- 1 to 5)
-      c.appendEvent(v, s"cid$i", i * 100L, isArchived = false, new java.sql.Timestamp(0))
+    for (i <- 1 to 5) c.appendEvents(Seq(UploadEvent(v, s"cid$i", i * 100L)))
   }
 
   private def cids(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -55,7 +54,7 @@ class CatalogSpec extends SparkSpec {
     val c = freshCatalog(); seed(c)
     val other = VaultName("ns", "other")
     c.createVault(other, acct, 0)
-    c.appendEvent(other, "cidX", 999L, isArchived = false, new java.sql.Timestamp(0))
+    c.appendEvents(Seq(UploadEvent(other, "cidX", 999L)))
     assert(!cids(c.listEvents(v)).contains("cidX"))
     assert(cids(c.listEvents(other)) == Seq("cidX"))
     val vaults = c.listVaults(acct).collect().map(_.getString(0)).toSet
@@ -64,49 +63,43 @@ class CatalogSpec extends SparkSpec {
     assert(c.listVaults(nobody).isEmpty)
   }
 
-  test("appendEvent ifAbsent: replay-safe dedupe on (vault, cid); default keeps re-upload events") {
+  test("appendEvents: a window-less event always appends") {
     val c = freshCatalog(); c.createVault(v, acct, 30)
-    // first append through the replay-safe path works on an empty catalog
-    c.appendEvent(v, "cidA", 100L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true)
-    // a crash-replayed window re-derives the same content cid: no-op
-    c.appendEvent(v, "cidA", 150L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true)
-    assert(cids(c.listEvents(v)) == Seq("cidA"))
-    // dedupe is per-vault: the same cid in another vault still appends
+    c.appendEvents(Seq(UploadEvent(v, "cidA", 100L, window = Some(1L))))
+    // replay dedupe is per vault: the same cid and window in another
+    // vault still appends
     val other = VaultName("ns", "other2")
     c.createVault(other, acct, 0)
-    c.appendEvent(other, "cidA", 200L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true)
+    c.appendEvents(Seq(UploadEvent(other, "cidA", 200L, window = Some(1L))))
     assert(cids(c.listEvents(other)) == Seq("cidA"))
-    // the DEFAULT (append-always) listing semantic is unchanged — a
-    // deliberate re-upload of identical content IS an event
-    // (CompactorSpec's 'cid repeats in the log' contract)
-    c.appendEvent(v, "cidA", 300L, isArchived = false, new java.sql.Timestamp(0))
-    assert(cids(c.listEvents(v)) == Seq("cidA", "cidA"))
+    // an event without a window token appends every time: a deliberate
+    // re-upload of identical content IS an event (CompactorSpec's 'cid
+    // repeats in the log' contract)
+    c.appendEvents(Seq(UploadEvent(v, "cidA", 300L)))
+    c.appendEvents(Seq(UploadEvent(v, "cidA", 400L)))
+    assert(cids(c.listEvents(v)) == Seq("cidA", "cidA", "cidA"))
   }
 
-  test("appendEvent ifAbsent with a window token dedupes only true replays") {
+  test("appendEvents: a window token dedupes only true replays") {
     val c = freshCatalog(); c.createVault(v, acct, 30)
-    // window 1 publishes; its crash-replay (same cid, SAME window) no-ops
-    c.appendEvent(v, "cidW", 100L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
-    c.appendEvent(v, "cidW", 100L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
+    // window 1 publishes on an empty catalog; its crash-replay (same
+    // cid, SAME window) no-ops
+    c.appendEvents(Seq(UploadEvent(v, "cidW", 100L, window = Some(1L))))
+    c.appendEvents(Seq(UploadEvent(v, "cidW", 100L, window = Some(1L))))
     assert(cids(c.listEvents(v)) == Seq("cidW"))
     // a LATER window legitimately emitting byte-identical content (same
     // cid, different window) is a distinct event: appended with its own
-    // timestamp, not silently dropped (advisor r13)
-    c.appendEvent(v, "cidW", 200L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true, window = 2L)
+    // timestamp, not silently dropped
+    c.appendEvents(Seq(UploadEvent(v, "cidW", 200L, window = Some(2L))))
     assert(cids(c.listEvents(v)) == Seq("cidW", "cidW"))
     val ts = c.listEvents(v).collect().map(r =>
       r.getLong(r.fieldIndex("timestamp"))).sorted
     assert(ts.toSeq == Seq(100L, 200L))
-    // and window 2's own replay still no-ops
-    c.appendEvent(v, "cidW", 200L, isArchived = false,
-      new java.sql.Timestamp(0), ifAbsent = true, window = 2L)
-    assert(cids(c.listEvents(v)) == Seq("cidW", "cidW"))
+    // and window 2's own replay still no-ops, also inside a batch whose
+    // other event is new
+    c.appendEvents(Seq(UploadEvent(v, "cidW", 200L, window = Some(2L)),
+      UploadEvent(v, "cidV", 200L, window = Some(2L))))
+    assert(cids(c.listEvents(v)) == Seq("cidV", "cidW", "cidW"))
   }
 
   test("events read failures: empty catalog maps to empty, corruption propagates") {
@@ -114,7 +107,7 @@ class CatalogSpec extends SparkSpec {
     val c = freshCatalog(); c.createVault(v, acct, 30)
     assert(c.listEvents(v).count() == 0)
     // a CORRUPT events store must THROW, not read as empty — a swallowed
-    // read failure would let ifAbsent dedupe silently append a duplicate
+    // read failure would let the replay dedupe silently append a duplicate
     // (advisor r14: the catch-all in `events` covered this path)
     val root = Files.createTempDirectory("catalog_corrupt")
     val cc = VaultCatalog(spark, root.toString)
@@ -131,8 +124,7 @@ class CatalogSpec extends SparkSpec {
       s"corruption must not map to the empty-catalog shape: $ex")
     // and the replay-safe append path fails loud instead of duplicating
     intercept[Exception] {
-      cc.appendEvent(v, "cidX", 100L, isArchived = false,
-        new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
+      cc.appendEvents(Seq(UploadEvent(v, "cidX", 100L, window = Some(1L))))
     }
     // a CORRUPT vaults store must throw too: read as empty, it would list
     // no vaults and the next create would restart created_seq at 1.
@@ -151,12 +143,11 @@ class CatalogSpec extends SparkSpec {
     val c2 = freshCatalog(); seed(c2)
     val other = VaultName("ns", "other")
     c2.createVault(other, acct, 0)
-    c2.appendEvent(other, "cidB", 999L, isArchived = false, new java.sql.Timestamp(0))
+    c2.appendEvents(Seq(UploadEvent(other, "cidB", 999L)))
     corrupt(Path.of(c2.root, "events", s"vault=$v", "part-corrupt.parquet"))
     intercept[Exception] { c2.listEvents(v).count() }
     intercept[Exception] {
-      c2.appendEvent(v, "cidY", 100L, isArchived = false,
-        new java.sql.Timestamp(0), ifAbsent = true, window = 1L)
+      c2.appendEvents(Seq(UploadEvent(v, "cidY", 100L, window = Some(1L))))
     }
     intercept[Exception] { c2.events.count() }
     assert(cids(c2.listEvents(other)) == Seq("cidB"))
@@ -182,12 +173,10 @@ class CatalogSpec extends SparkSpec {
     assert(c.cacheDurationOf(v).contains(10))
     // a window-scoped replay-safe append over an old row with the same cid
     // appends: the old row's NULL window never equals the token
-    c.appendEvent(v, "old1", 300L, isArchived = false, ts0, digest = "d",
-      ifAbsent = true, window = 1L)
+    c.appendEvents(Seq(UploadEvent(v, "old1", 300L, "d", Some(1L))))
     assert(cids(c.listEvents(v)) == Seq("old1", "old2", "old1"))
     // and its own replay is a no-op
-    c.appendEvent(v, "old1", 300L, isArchived = false, ts0, digest = "d",
-      ifAbsent = true, window = 1L)
+    c.appendEvents(Seq(UploadEvent(v, "old1", 300L, "d", Some(1L))))
     assert(c.listEvents(v).count() == 3)
     // re-creates start created_seq at 1 over the unsequenced row, and
     // the highest created_seq wins over it
@@ -204,19 +193,30 @@ class CatalogSpec extends SparkSpec {
     val c = freshCatalog(); seed(c)
     val other = VaultName("ns", "other")
     c.createVault(other, acct, 0)
-    for (i <- 1 to 3)
-      c.appendEvent(other, s"o$i", i * 10L, isArchived = false, new java.sql.Timestamp(0))
+    for (i <- 1 to 3) c.appendEvents(Seq(UploadEvent(other, s"o$i", i * 10L)))
     def jobs(body: => Any): Int = JobCount.of(spark.sparkContext)(body)._2
+    def files(vault: VaultName): Int =
+      Files.list(Path.of(c.root, "events", s"vault=$vault"))
+        .filter(_.toString.endsWith(".parquet")).count().toInt
+    val filesBefore = Seq(v, other).map(files)
     val counts = Seq(
       "listEvents" -> jobs(c.listEvents(v, limit = Some(5)).collect()),
       "listVaults" -> jobs(c.listVaults(acct).collect()),
-      "cacheExpiryFor" -> jobs(c.cacheExpiryFor(v, 1000L)),
-      "appendEvent ifAbsent" -> jobs(c.appendEvent(v, "cidNew", 600L, isArchived = false,
-        new java.sql.Timestamp(0), ifAbsent = true, window = 7L)))
+      "appendEvents of 1" -> jobs(c.appendEvents(Seq(
+        UploadEvent(v, "cidNew", 600L, window = Some(7L))))),
+      "appendEvents of 3 in 2 vaults" -> jobs(c.appendEvents(Seq(
+        UploadEvent(v, "cidA", 700L, window = Some(8L)),
+        UploadEvent(v, "cidB", 700L, window = Some(9L)),
+        UploadEvent(other, "oNew", 700L, window = Some(8L))))))
     // each read's own jobs only, no footer job to infer a schema: a top-N
     // listing is one job; the sorted vault listing samples, shuffles and
-    // collects; the probe scans one split, then the rest; the append writes
-    assert(counts == Seq("listEvents" -> 1, "listVaults" -> 3, "cacheExpiryFor" -> 1,
-      "appendEvent ifAbsent" -> 3))
+    // collects; an append reads its vaults' cache durations, probes the
+    // log for its (vault, cid, window)s and writes, whatever its size
+    assert(counts == Seq("listEvents" -> 1, "listVaults" -> 3,
+      "appendEvents of 1" -> 3, "appendEvents of 3 in 2 vaults" -> 3))
+    // one file per vault per append
+    assert(Seq(v, other).map(files) == filesBefore.zip(Seq(2, 1)).map(p => p._1 + p._2))
+    assert(cids(c.listEvents(v, limit = Some(3))) == Seq("cidA", "cidB", "cidNew"))
+    assert(cids(c.listEvents(other, limit = Some(1))) == Seq("oNew"))
   }
 }

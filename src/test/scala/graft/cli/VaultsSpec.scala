@@ -59,7 +59,9 @@ class VaultsSpec extends SparkSpec {
       (1700000000L + 30 * 60) * 1000L)
     // vault with no configured duration → epoch 0 (never cached)
     val other = graft.core.VaultName("ns", "nocache")
-    assert(catalog.cacheExpiryFor(other, 1700000000L).getTime == 0L)
+    catalog.appendEvents(Seq(graft.catalog.UploadEvent(other, "cidU", 1700000000L)))
+    assert(catalog.listEvents(other).collect()(0)
+      .getAs[java.sql.Timestamp]("cache_expiry").getTime == 0L)
 
     // re-created vault: the LATEST create wins deterministically
     // (created_seq ordering, not parquet file enumeration order)

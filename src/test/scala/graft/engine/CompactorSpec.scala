@@ -65,8 +65,7 @@ class CompactorSpec extends SparkSpec {
         timestamp = Some((1700000000L + w).toString))
     }
     // same content re-uploaded: content-addressed cid repeats in the log
-    catalog.appendEvent(vault, cids.head, 1700000100L, isArchived = false,
-      catalog.cacheExpiryFor(vault, 1700000100L))
+    catalog.appendEvents(Seq(graft.catalog.UploadEvent(vault, cids.head, 1700000100L)))
     assert(catalog.listEvents(vault).count() == 3)
 
     val newCid = Compactor.compact(spark, vault, store, catalog,

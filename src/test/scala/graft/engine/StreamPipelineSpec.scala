@@ -459,9 +459,10 @@ class StreamPipelineSpec extends SparkSpec {
   private def etBatchOf(lines: String*) =
     spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING).toDF("value")
 
-  private def etTx(lsn: Long, ts: String, id: Int, name: String): String =
+  private def etTx(lsn: Long, ts: String, id: Int, name: String,
+                   table: String = "t"): String =
     s"""{"commit_lsn": $lsn, "records": [{"action": "I", "xid": 1, "lsn": "0/$lsn",
-       |"nextlsn": "", "timestamp": "$ts", "schema": "public", "table": "t",
+       |"nextlsn": "", "timestamp": "$ts", "schema": "public", "table": "$table",
        |"columns": [{"name": "id", "type": "integer", "value": $id},
        |{"name": "name", "type": "text", "value": "$name"}],
        |"pk": [{"name": "id", "type": "integer"}]}]}""".stripMargin.replace("\n", " ")
@@ -606,5 +607,84 @@ class StreamPipelineSpec extends SparkSpec {
       "post-poison in-band record must be dropped, not published")
     assert(pendingIds(staging) == Set(99),
       "only the outlier's own window may stay pending")
+  }
+
+  // ---- replay through a sink with a catalog ---------------------------
+
+  private val schemaU = schemaT.copy(table = "u")
+
+  /** A catalog whose vaults ns.t and ns.u cache for 30 minutes. */
+  private def catalogOf(storeDir: String): graft.catalog.VaultCatalog = {
+    val catalog = graft.catalog.VaultCatalog(spark, s"$storeDir-catalog")
+    val acct = graft.core.Account("0x396F15b0A2be942193BBBdC11BE3bF6F6EB1a08a")
+    Seq("t", "u").foreach(t => catalog.createVault(VaultName("ns", t), acct, 30))
+    catalog
+  }
+
+  /** Every artifact in the store has exactly one event per (vault, cid,
+    * window), carrying the artifact's row digest and an expiry of
+    * ts + 30 minutes; returns the events' (vault, window) pairs. */
+  private def oneEventPerArtifact(catalog: graft.catalog.VaultCatalog,
+                                  storeDir: String): Seq[(String, Long)] = {
+    val evs = catalog.events
+      .select("vault", "cid", "window", "timestamp", "cache_expiry", "digest").collect()
+    val keys = evs.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(keys.distinct == keys, s"duplicate events: $keys")
+    val stored = storeFiles(storeDir).map(_.getFileName.toString.takeWhile(_ != '-'))
+    assert(stored.sorted == keys.map(_._2).sorted, s"store $stored vs events $keys")
+    evs.foreach { r =>
+      val artifact = spark.read.parquet(
+        new LocalContentStore(storeDir).get(r.getString(1)).get.toString)
+      assert(r.getString(5) == graft.crypto.EcmhAggregator.rowDigest(artifact, Seq("id", "name")))
+      assert(r.getTimestamp(4).getTime == (r.getLong(3) + 30 * 60L) * 1000L)
+    }
+    keys.map(k => (k._1, k._3)).sorted
+  }
+
+  test("sink with a catalog: a replayed batch id adds no event") {
+    val (_, staging, _, storeDir) = freshDirs()
+    val catalog = catalogOf(storeDir)
+    var now = 1692715442L
+    val sink = new VaultSink("ns", Seq(schemaT, schemaU), staging,
+      new LocalContentStore(storeDir), catalog = Some(catalog),
+      clock = () => { now += 60; now })
+    val batch = etBatchOf(etTx(1, "2024-01-01 00:00:10.000000", 1, "a", "t"),
+      etTx(2, "2024-01-01 00:00:20.000000", 2, "b", "u"))
+    val first = sink.processBatch(batch, 3L)
+    // foreachBatch redelivers a batch whose checkpoint did not commit,
+    // later: same content, same cids, same window token
+    assert(sink.processBatch(batch, 3L) == first && first.map(_._1) == Seq("t", "u"))
+    assert(oneEventPerArtifact(catalog, storeDir) == Seq("ns.t" -> 3L, "ns.u" -> 3L))
+  }
+
+  test("sink with a catalog: a failure after finalize leaves one event per window") {
+    // the flaky-put case above, with a catalog: t's window 0 is put,
+    // then u's put fails the batch before the watermark commit
+    val (_, staging, _, storeDir) = freshDirs()
+    val catalog = catalogOf(storeDir)
+    val store = new LocalContentStore(storeDir)
+    var failOn: String = null
+    val flaky = new ContentStore {
+      override def put(vault: VaultName, file: java.nio.file.Path,
+                       timestampSec: Long, sig: Array[Byte]): String = {
+        if (vault.relation == failOn) sys.error("transient store outage")
+        store.put(vault, file, timestampSec, sig)
+      }
+      override def get(cid: String): Option[java.nio.file.Path] = store.get(cid)
+    }
+    val sink = new VaultSink("ns", Seq(schemaT, schemaU), staging, flaky,
+      catalog = Some(catalog), eventTime = Some(EventTimeWindows(60L, 30L)))
+    sink.processBatch(etBatchOf(etTx(1, "2024-01-01 00:00:10.000000", 1, "a", "t")), 0L)
+    val b1 = etBatchOf(
+      etTx(2, "2024-01-01 00:00:20.000000", 2, "b", "t"),
+      etTx(3, "2024-01-01 00:00:30.000000", 7, "x", "u"),
+      etTx(4, "2024-01-01 00:02:15.000000", 3, "c", "t"))
+    failOn = "u"
+    intercept[Exception](sink.processBatch(b1, 1L))
+    assert(catalog.events.count() == 0, "a failed batch appends none of its events")
+    failOn = null
+    sink.processBatch(b1, 1L)
+    assert(oneEventPerArtifact(catalog, storeDir) ==
+      Seq("ns.t" -> 1704067200L, "ns.u" -> 1704067200L))
   }
 }

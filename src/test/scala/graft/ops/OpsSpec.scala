@@ -533,6 +533,17 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("cluster resolution: a driverThreshold at or past Int.MaxValue is refused") {
+    // the driver path takes threshold+1 edges in an Int-sized limit: a
+    // clamped threshold would union-find a truncated edge list
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    for (t <- Seq(Int.MaxValue.toLong, Long.MaxValue))
+      intercept[IllegalArgumentException](Dedup.clusters(pairs, driverThreshold = t))
+    val c = Dedup.clusters(pairs, driverThreshold = Int.MaxValue - 1L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(c == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
   test("big-star CC: deep chain converges fast and matches driver union-find") {
     // a 400-edge path graph — diameter 400 — is the adversarial case for
     // plain min-label propagation (it needs one round per hop); the
