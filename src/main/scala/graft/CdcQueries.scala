@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /**
  * Oracle-checked CDC queries: synthesize wal2json v2 transaction lines
  * from the `events` table, run them through the full decode path
- * (`from_json` → explode → action filter → typed pivot,
+ * (JSON data source → explode → action filter → typed pivot,
  * [[graft.cdc.WalDecoder]]), and emit the replayed table. The oracle is a
  * plain SELECT over `events` — if decode is correct the round trip is the
  * identity. This exercises S4 (WAL decode), S3's record ordering, P2
@@ -168,8 +168,8 @@ object CdcQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
     "q_cdc_roundtrip" -> ((s, dir) => {
-      val decoded = WalDecoder.decodeTablesFromDir(
-        s, walLinesDir(s, dir), Seq(eventsSchema))("events")
+      val decoded = WalDecoder.decodeTables(
+        s, s.read.text(walLinesDir(s, dir)), Seq(eventsSchema))("events")
       decoded.select(
         col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
@@ -183,8 +183,8 @@ object CdcQueries {
       // a deterministic subset tagged U/D: event_id % 3 == 1 → U, == 2 → D
       val action = when(col("event_id") % 3 === 1, "U")
         .when(col("event_id") % 3 === 2, "D").otherwise("I")
-      val decoded = WalDecoder.decodeTablesFromDir(
-        s, walLinesDir(s, dir, action, tag = "IUD"), Seq(eventsSchema))("events")
+      val decoded = WalDecoder.decodeTables(
+        s, s.read.text(walLinesDir(s, dir, action, tag = "IUD")), Seq(eventsSchema))("events")
       decoded.select(col("event_id"), col("event_type")).orderBy("event_id")
     }),
 
@@ -197,7 +197,7 @@ object CdcQueries {
     // 1.20 vs 0.99 — SCALING.md r12). The registered shape now times
     // the operator; production `VaultSink` uses sortWithinPartitions.
     "q_cdc_upsert" -> ((s, dir) => {
-      CdcMerge.latestStateFromDir(s, upsertLinesDir(s, dir), eventsSchema)
+      CdcMerge.latestState(s.read.text(upsertLinesDir(s, dir)), eventsSchema)
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
           col("user_id"), col("event_type"), col("value"))
@@ -209,8 +209,8 @@ object CdcQueries {
     // as canonical decimal strings (scale-preserving) for a stable
     // cross-engine compare.
     "q_cdc_numeric_decimal" -> ((s, dir) => {
-      val decoded = WalDecoder.decodeTablesFromDir(
-        s, moneyLinesDir(s, dir), Seq(moneySchema),
+      val decoded = WalDecoder.decodeTables(
+        s, s.read.text(moneyLinesDir(s, dir)), Seq(moneySchema),
         numericAsDecimal = true)("money")
       decoded.select(col("event_id"),
         col("amount").cast("string").as("amount_s"))
@@ -221,8 +221,8 @@ object CdcQueries {
     // numeric → double, oracle casts the same literal text to DOUBLE —
     // both engines round to the same nearest IEEE-754 value
     "q_cdc_numeric_double" -> ((s, dir) => {
-      val decoded = WalDecoder.decodeTablesFromDir(
-        s, moneyLinesDir(s, dir), Seq(moneySchema))("money")
+      val decoded = WalDecoder.decodeTables(
+        s, s.read.text(moneyLinesDir(s, dir)), Seq(moneySchema))("money")
       decoded.select(col("event_id"), col("amount"))
         .orderBy("event_id")
     }),
@@ -235,7 +235,7 @@ object CdcQueries {
     "q_cdc_digest" -> ((s, dir) => {
       // cached: the merged state feeds BOTH digest arms and the count —
       // without it the upsert merge (scan+shuffle) runs three times
-      val state = CdcMerge.latestStateFromDir(s, upsertLinesDir(s, dir),
+      val state = CdcMerge.latestState(s.read.text(upsertLinesDir(s, dir)),
         eventsSchema).cache()
       val canonical = graft.crypto.EcmhAggregator.canonicalRow(
         eventsSchema.columns.map(_.name))

@@ -736,7 +736,7 @@ object OpsQueries {
         java.nio.file.Files.write(marker, buildTag.getBytes("UTF-8"))
       }
       val served = Layout.ivfPqTopKFromLayout(s, layoutDir, emb, queries, k = 5)
-      val direct = s.read.parquet(directPath).select(served.columns.map(col): _*)
+      val direct = s.read.parquet(directPath).select(served.columns.toSeq.map(col): _*)
       layoutContract(s, dir, served, direct)
     }),
 
@@ -765,7 +765,7 @@ object OpsQueries {
         java.nio.file.Files.write(marker, buildTag.getBytes("UTF-8"))
       }
       val served = Layout.imiTopKFromLayout(s, layoutDir, queries, k = 5, nProbe = 12)
-      val direct = s.read.parquet(directPath).select(served.columns.map(col): _*)
+      val direct = s.read.parquet(directPath).select(served.columns.toSeq.map(col): _*)
       layoutContract(s, dir, served, direct)
     }),
 
@@ -807,7 +807,7 @@ object OpsQueries {
       }
       val served = Layout.imiPqTopKFromLayout(s, layoutDir, emb, queries,
         k = 5, nProbe = 12)
-      val direct = s.read.parquet(directPath).select(served.columns.map(col): _*)
+      val direct = s.read.parquet(directPath).select(served.columns.toSeq.map(col): _*)
       layoutContract(s, dir, served, direct)
     }),
 

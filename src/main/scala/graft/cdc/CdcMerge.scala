@@ -39,38 +39,17 @@ object CdcMerge {
     * omits unchanged key columns). Precondition that remains: an UPDATE
     * that *changes* the PK value merges as its new key (the old key's row
     * survives) — handling PK-rewrites needs a delete+insert split
-    * upstream.
+    * upstream. `strict` applies [[PgValueDecoder.schemaDriftGuard]] to
+    * I/U records BEFORE the D-identity substitution (a DELETE's
+    * identity-only column list is not drift).
     */
-  private val mergeRecordFields = Seq("action", "table", "columns", "identity")
-
   private def typedWithOrder(lines: DataFrame, schema: TableSchema,
-                             strict: Boolean = false,
-                             numericAsDecimal: Boolean = false,
-                             driftMode: DriftMode = DriftMode.Prefix): DataFrame =
-    typedRecordsWithOrder(
-      WalDecoder.decodeRecords(lines, recordFields = Some(mergeRecordFields)),
-      schema, strict, numericAsDecimal, driftMode)
-
-  /** As [[typedWithOrder]] but over already-exploded records (shared by
-    * the line-fed streaming path and the scan-parsed batch-dir path).
-    * `strict` applies [[PgValueDecoder.schemaDriftGuard]] to I/U records
-    * BEFORE the D-identity substitution (a DELETE's identity-only column
-    * list is not drift). */
-  private def typedRecordsWithOrder(records0: DataFrame, schema: TableSchema,
-                                    strict: Boolean = false,
-                                    numericAsDecimal: Boolean = false,
-                                    driftMode: DriftMode = DriftMode.Prefix): DataFrame = {
-    val routed = records0
-      .where(col("table") === schema.table &&
-        col("action").isin("I", "U", "D"))
-    val gated =
-      if (!strict) routed
-      else routed.where(
-        // table scope INSIDE the guard: robust even if an optimizer rule
-        // reorders this conjunct relative to the routing filter above
-        when(col("table") === schema.table && col("action").isin("I", "U"),
-          PgValueDecoder.schemaDriftGuard(schema, driftMode)).otherwise(lit(true)))
-    val records = gated
+                             strict: Boolean, numericAsDecimal: Boolean,
+                             driftMode: DriftMode): DataFrame = {
+    val changes = WalDecoder.decodeRecords(lines,
+        recordFields = Some(Seq("action", "table", "columns", "identity")))
+      .where(col("action").isin("I", "U", "D"))
+    val records = WalDecoder.routeGated(changes, schema, strict, driftMode)
       .withColumn("columns",
         when(col("action") === "D" &&
              (col("columns").isNull || size(col("columns")) === 0), col("identity"))
@@ -111,20 +90,6 @@ object CdcMerge {
                   driftMode: DriftMode = DriftMode.Prefix): DataFrame =
     mergeLatest(typedWithOrder(lines, schema, strict, numericAsDecimal,
       driftMode), schema)
-      .select(schema.columns.map(c => col(c.name)): _*)
-
-  /** [[latestState]] over an on-disk feed directory: the json data source
-    * parses each line once at the scan (see
-    * [[WalDecoder.decodeTablesFromDir]]); the merge plan is identical. */
-  def latestStateFromDir(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, schema: TableSchema,
-                         strict: Boolean = false,
-                         numericAsDecimal: Boolean = false,
-                         driftMode: DriftMode = DriftMode.Prefix): DataFrame =
-    mergeLatest(typedRecordsWithOrder(
-        WalDecoder.explodeTx(WalDecoder.parseTxDir(spark, dir,
-          recordFields = Some(mergeRecordFields))), schema, strict,
-        numericAsDecimal, driftMode), schema)
       .select(schema.columns.map(c => col(c.name)): _*)
 
   /** Canonical row bytes of the schema's columns in declaration order:

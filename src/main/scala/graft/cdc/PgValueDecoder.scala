@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
  * [[graft.functions.PgArrayParse]] + `transform` for PG array literals.
  *
  * NULL semantics follow the reference: JSON `null` (already a SQL NULL
- * after `from_json`) passes through every transform; inside array literals
+ * after the JSON parse) passes through every transform; inside array literals
  * the token is uppercase `NULL` (`type_converter.go:10`).
  */
 object PgValueDecoder {

@@ -1,62 +1,40 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Decodes a stream/batch of wal2json transaction lines into row-change
- * records and typed per-table DataFrames.
+ * Decodes a batch of wal2json transaction lines into row-change records
+ * and typed per-table DataFrames.
  *
  * Spark-native equivalent of the reference's replication consume + replay
  * path (`pkg/pgrepl/replicator.go:235-284` decode,
  * `internal/app/db.go:254-289` replay): instead of generating SQL INSERT
- * text per record, the whole decode is one declarative plan —
- * `from_json` → `explode(records)` → action filter → typed pivot — which
- * Catalyst pipelines and whole-stage-codegens. No shuffle anywhere: the
- * plan is narrow from text line to typed row.
+ * text per record, the whole decode is one declarative plan — the JSON
+ * data source parses each line once → `posexplode(records)` → action
+ * filter → typed pivot. No shuffle anywhere: the plan is narrow from
+ * text line to typed row. Every feed decodes here: a spooled directory
+ * as `spark.read.text(dir)`, a stream per micro-batch in `foreachBatch`.
  */
 object WalDecoder {
 
-  /** Parsed tx envelope (commit_lsn, records) → one row per WAL record.
-    * Malformed-line skip is free: a failed parse yields a null `records`
-    * array and `posexplode` of null emits no rows. */
-  private[cdc] def explodeTx(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("commit_lsn"),
-              posexplode(col("records")).as(Seq("record_idx", "r")))
-      .select(col("commit_lsn"), col("record_idx"), col("r.*"))
-
-  /** Raw text lines (one JSON tx per line) → one row per WAL record via
-    * `from_json` — the STREAMING decode path (a socket/file-stream feed
-    * has no scan to push parsing into). `recordFields = Some(...)`
-    * projects the parse schema to just those record fields (cheaper JSON
-    * decode on the replay hot path).
-    *
-    * Plan caveat, measured: optimizer rules (predicate pushdown alias
-    * substitution, InferFiltersFromGenerate) duplicate the `from_json` —
-    * a CodegenFallback expression with no subexpression elimination —
-    * into derived null/size filters, so each line parses ~3x. For BATCH
-    * decode of an on-disk feed use [[decodeTablesFromDir]], which parses
-    * once at the scan. */
+  /** Raw text lines (one JSON tx per line, in the first column) → one
+    * row per WAL record. The JSON data source parses each line once;
+    * `recordFields = Some(...)` projects the parse schema to just those
+    * record fields (cheaper decode on the replay hot path), and filters
+    * on `lines` such as [[actionPrefilter]] run below the parse.
+    * Malformed-line skip is free: a line that fails to parse reads as a
+    * null envelope (PERMISSIVE) and `posexplode` of a null `records`
+    * emits no rows. */
   def decodeRecords(lines: DataFrame,
                     recordFields: Option[Seq[String]] = None): DataFrame = {
     val valueCol = lines.columns.headOption.getOrElse("value")
     val schema = recordFields.fold(WalModel.txSchema)(WalModel.txSchemaProjected)
-    explodeTx(lines
-      .select(from_json(col(valueCol), schema).as("tx"))
-      .select(col("tx.commit_lsn").as("commit_lsn"), col("tx.records").as("records")))
-  }
-
-  /** A WAL text-feed directory parsed by the json DATA SOURCE: each line
-    * is parsed exactly once at the scan (PERMISSIVE mode nulls malformed
-    * lines), the record-field projection is real column pruning in the
-    * reader, and no optimizer rule can duplicate the parse — unlike the
-    * `from_json` expression path (see [[decodeRecords]]). This is the
-    * batch decode entry for everything already spooled to disk. */
-  def parseTxDir(spark: SparkSession, dir: String,
-                 recordFields: Option[Seq[String]] = None): DataFrame = {
-    val schema = recordFields.fold(WalModel.txSchema)(WalModel.txSchemaProjected)
-    spark.read.schema(schema).json(dir)
+    lines.sparkSession.read.schema(schema)
+      .json(lines.select(col(valueCol)).as(Encoders.STRING))
+      .select(col("commit_lsn"),
+              posexplode(col("records")).as(Seq("record_idx", "r")))
+      .select(col("commit_lsn"), col("record_idx"), col("r.*"))
   }
 
   /**
@@ -89,25 +67,29 @@ object WalDecoder {
     lines.where(anyMarker)
   }
 
+  /** `records` routed to `ts.table`. Under `strict` an I/U record must
+    * match the stream-start schema ([[PgValueDecoder.schemaDriftGuard]]);
+    * D records pass (a real wal2json DELETE carries only `identity`). */
+  private[cdc] def routeGated(records: DataFrame, ts: TableSchema,
+                              strict: Boolean, driftMode: DriftMode): DataFrame = {
+    val routed = records.where(col("table") === ts.table)
+    if (!strict) routed
+    else routed.where(
+      // table scope INSIDE the guard: robust even if an optimizer rule
+      // reorders this conjunct relative to the table-routing filter
+      when(col("table") === ts.table && col("action").isin("I", "U"),
+        PgValueDecoder.schemaDriftGuard(ts, driftMode)).otherwise(lit(true)))
+  }
+
   /** Per-table route → drift gate → typed pivot, the shared body of the
-    * table decoders. Under `strict` an I/U record must match the
-    * stream-start schema ([[PgValueDecoder.schemaDriftGuard]]); D records
-    * pass (a real wal2json DELETE carries only `identity`). */
+    * table decoders. */
   private def tablesOf(records: DataFrame, schemas: Seq[TableSchema],
                        strict: Boolean, driftMode: DriftMode,
                        numericAsDecimal: Boolean,
                        keepCols: Seq[String] = Nil): Map[String, DataFrame] =
     schemas.map { ts =>
-      val routed = records.where(col("table") === ts.table)
-      val gated =
-        if (!strict) routed
-        else routed.where(
-          // table scope INSIDE the guard: robust even if an optimizer rule
-          // reorders this conjunct relative to the table-routing filter
-          when(col("table") === ts.table && col("action").isin("I", "U"),
-            PgValueDecoder.schemaDriftGuard(ts, driftMode)).otherwise(lit(true)))
-      ts.table -> PgValueDecoder.pivotToTable(gated, ts, keepCols = keepCols,
-        numericAsDecimal = numericAsDecimal)
+      ts.table -> PgValueDecoder.pivotToTable(routeGated(records, ts, strict, driftMode),
+        ts, keepCols = keepCols, numericAsDecimal = numericAsDecimal)
     }.toMap
 
   /** Full batch decode: lines → Map(table → typed DataFrame).
@@ -155,19 +137,4 @@ object WalDecoder {
     tablesOf(records, schemas, strict, driftMode, numericAsDecimal,
       keepCols = Seq("__graft_ts"))
   }
-
-  /** [[decodeTables]] over an on-disk feed directory, single-parse at the
-    * scan via [[parseTxDir]]. Preferred for batch replay of spooled WAL. */
-  def decodeTablesFromDir(
-      spark: SparkSession,
-      dir: String,
-      schemas: Seq[TableSchema],
-      replayActions: Set[String] = Set("I"),
-      strict: Boolean = false,
-      driftMode: DriftMode = DriftMode.Prefix,
-      numericAsDecimal: Boolean = false): Map[String, DataFrame] =
-    tablesOf(filterActions(
-      explodeTx(parseTxDir(spark, dir,
-        recordFields = Some(Seq("action", "table", "columns")))),
-      replayActions), schemas, strict, driftMode, numericAsDecimal)
 }

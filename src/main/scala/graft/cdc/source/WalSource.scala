@@ -58,8 +58,9 @@ import scala.jdk.CollectionConverters._
  * received transactions to the same line-framed files.
  *
  * Usage: `spark.readStream.format("graft-wal").option("path", dir).load()`
- * → schema `(value STRING, commit_lsn LONG)`, directly consumable by
- * [[graft.cdc.WalDecoder.decodeRecords]].
+ * → schema `(value STRING, commit_lsn LONG)`. Each micro-batch
+ * (`foreachBatch`) is consumable by [[graft.cdc.WalDecoder.decodeRecords]],
+ * which parses its `value` column with the JSON data source.
  */
 class WalSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "graft-wal"

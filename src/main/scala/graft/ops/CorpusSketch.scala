@@ -89,7 +89,7 @@ object CorpusSketch {
       : org.apache.spark.util.sketch.CountMinSketch = {
     val bytes = keys
       .select(count_min_sketch(keyCol, lit(eps), lit(confidence), lit(seed)).as("s"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
     org.apache.spark.util.sketch.CountMinSketch.readFrom(
       new java.io.ByteArrayInputStream(bytes))
   }

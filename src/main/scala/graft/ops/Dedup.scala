@@ -803,7 +803,7 @@ object Dedup {
     val agg = windowHashTable(docs.sample(g.sampleRate, GuardSampleSeed), L, idCol, textCol)
       .groupBy("h").agg(count(lit(1)).as("c")).persist()
     try {
-      val total = Option(agg.agg(sum("c")).head.get(0)).fold(0L)(_.asInstanceOf[Long])
+      val total = Option(agg.agg(sum("c")).head().get(0)).fold(0L)(_.asInstanceOf[Long])
       if (total == 0L) return Array.empty
       val thr = math.max(2L, (g.partitionShare * total / parts).toLong)
       // r18 (VERDICT r17 task 3): the mass rule bounds its own flaggable

@@ -113,7 +113,7 @@ object DiagComposed {
       docsOfIds(expected.except(pendingIds).toDF("id")), windowTokens = 8)
     val divergent = a.except(b).count() + b.except(a).count()
     require(divergent == 0, s"strip diverges through the seam: $divergent rows")
-    val nRemoved = a.agg(sum("n_removed")).head.getLong(0)
+    val nRemoved = a.agg(sum("n_removed")).head().getLong(0)
     val stripSec = (System.nanoTime() - t2) / 1e9
 
     println(f"[composed] nTx=$nTx records=${nTx * rpt} ingest=$ingestSec%.1fs " +

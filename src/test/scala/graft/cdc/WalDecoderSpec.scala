@@ -1,6 +1,8 @@
 package graft.cdc
 
 import graft.SparkSpec
+import org.apache.spark.graftspec.JobCount
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
 /**
@@ -339,5 +341,29 @@ class WalDecoderSpec extends SparkSpec {
     assert(out(1) == out(2), s"offset and naive forms must agree: $out")
     assert(out(1).get - out(3).get == 43L, "fractional millis preserved")
     assert(out(4).isEmpty, "unparseable timestamp decodes NULL, never throws")
+  }
+
+  test("one parser: decoded frames carry no from_json and building them runs no job") {
+    val line = walLine("integer", "7")
+    val dir = java.nio.file.Files.createTempDirectory("wal-feed")
+    java.nio.file.Files.writeString(dir.resolve("feed.txt"), line + "\n")
+    val feeds = Seq(
+      "local lines" -> spark.createDataset(Seq(line))(
+        org.apache.spark.sql.Encoders.STRING).toDF("value"),
+      "text dir" -> spark.read.text(dir.toString))
+    val schema = TableSchema("t", Seq(TableColumn("c", "integer", true, true)))
+    for ((feed, lines) <- feeds) {
+      val (frames, jobs) = JobCount.of(spark.sparkContext)(Seq(
+        "decodeTables" -> WalDecoder.decodeTables(spark, lines, Seq(schema))("t"),
+        "decodeTablesWithTs" -> WalDecoder.decodeTablesWithTs(spark, lines, Seq(schema))("t"),
+        "latestState" -> CdcMerge.latestState(lines, schema, strict = true)))
+      assert(jobs == 0, s"$feed: building the frames ran $jobs Spark jobs")
+      for ((entry, df) <- frames) {
+        val plan = df.queryExecution.optimizedPlan
+        assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))) &&
+          !plan.toString.contains("from_json"), s"$feed/$entry parses per expression:\n$plan")
+        assert(df.collect().map(_.getAs[Int]("c")).toSeq == Seq(7), s"$feed/$entry")
+      }
+    }
   }
 }

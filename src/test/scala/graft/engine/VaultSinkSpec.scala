@@ -86,6 +86,80 @@ class VaultSinkSpec extends SparkSpec {
     }
   }
 
+  /** Content id of a parquet artifact with each column chunk's encoding
+    * list in enum order. parquet-mr writes that list from a `HashSet` of
+    * enum constants, whose order follows identity hash codes and so
+    * changes from one JVM to the next; every other byte is kept. */
+  private def canonicalCid(file: java.nio.file.Path): String = {
+    import org.apache.parquet.format.{FileMetaData, Util}
+    import scala.jdk.CollectionConverters._
+    val bytes = Files.readAllBytes(file)
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    val footerStart = bytes.length - 8 - footerLen
+    val footer = bytes.slice(footerStart, footerStart + footerLen)
+    def encode(m: FileMetaData): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      Util.writeFileMetaData(m, out)
+      out.toByteArray
+    }
+    val meta = Util.readFileMetaData(new java.io.ByteArrayInputStream(footer))
+    assert(encode(meta).sameElements(footer), s"$file: footer does not re-encode as read")
+    meta.getRow_groups.asScala.flatMap(_.getColumns.asScala).map(_.getMeta_data).foreach { m =>
+      m.setEncodings(m.getEncodings.asScala.sortBy(_.getValue).asJava)
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(bytes, 0, footerStart)
+    md.update(encode(meta))
+    md.update(bytes, bytes.length - 8, 8)
+    CarV1.Cid.v1FromDigest(CarV1.CodecRaw, md.digest()).toString
+  }
+
+  test("golden artifacts: a fixed two-table feed publishes pinned bytes and digests") {
+    // an artifact's bytes are its content id: any change to the decode
+    // (column types, nullability, row order, values) shows up here
+    val orders = TableSchema("orders", Seq(
+      TableColumn("id", "integer", nullable = false, isPrimary = true),
+      TableColumn("amount", "numeric(10,2)", nullable = true, isPrimary = false),
+      TableColumn("placed", "timestamp without time zone", nullable = true, isPrimary = false),
+      TableColumn("tags", "text[]", nullable = true, isPrimary = false)))
+    val notes = TableSchema("notes", Seq(
+      TableColumn("body", "text", nullable = true, isPrimary = false),
+      TableColumn("seen", "boolean", nullable = true, isPrimary = false)))
+    def order(id: Int, amount: String, placed: String, tags: String) =
+      Seq(("id", "integer", id.toString), ("amount", "numeric(10,2)", amount),
+        ("placed", "timestamp without time zone", placed), ("tags", "text[]", tags))
+    def note(body: String, seen: String) =
+      Seq(("body", "text", body), ("seen", "boolean", seen))
+    val feed = lines(
+      tx(1, "orders", "2024-01-01 00:00:01", Seq(
+        order(3, "12.50", "\"2024-01-01 00:00:01\"", "\"{a,b}\""),
+        order(1, "-0.07", "\"2023-12-31 23:59:59.5\"", "\"{}\""))),
+      tx(2, "notes", "2024-01-01 00:00:02", Seq(
+        note("\"first\"", "true"), note("\"sec\\\"ond\"", "null"))),
+      tx(3, "orders", "2024-01-01 00:00:03", Seq(order(2, "null", "null", "null"))),
+      tx(4, "notes", "2024-01-01 00:00:04", Seq(note("null", "false"))))
+    val base = Files.createTempDirectory("sink-golden")
+    val store = new LocalContentStore(base.resolve("store").toString)
+    val catalog = graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString)
+    val sink = new VaultSink("ns", Seq(orders, notes), base.resolve("staging").toString,
+      store, catalog = Some(catalog), clock = () => 1700000000L)
+    val published = sink.processBatch(feed, 7L).toMap
+    val events = catalog.events.select("cid", "digest", "timestamp").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    val golden = Map(
+      "orders" -> ("bafkreie72gylceelznesyjq63ovw3ujjgj3v7erx3gjajoy7lk6gi4ojja",
+        "f00261a61bc42891db4d2478cc40a85940ea8a47748a3491139f19ff5bd74b14"),
+      "notes" -> ("bafkreif4yyegvyrya6g5fqbcej2nast4rgpfc2xu4liztuir6fygtk6rsu",
+        "aee30dfde514c29176a3fe05c3bd8b82b253d29e68f2c31238e3eea2c3fd9205"))
+    assert(published.keySet == golden.keySet)
+    for ((table, (canonical, digest)) <- golden) {
+      val cid = published(table)
+      assert(canonicalCid(store.get(cid).get) == canonical, table)
+      assert(events(cid) == (digest -> 1700000000L), table)
+    }
+  }
+
   test("event-time: an untracked table's later commits never close a tracked window") {
     val schemaT = TableSchema("t", Seq(
       TableColumn("id", "integer", nullable = false, isPrimary = true),

@@ -22,8 +22,8 @@ class LayoutSpec extends SparkSpec {
     assert(totalY == 16)
     assert(readY <= totalY / 2, s"y-pruning read $readY of $totalY files")
     // exactness: pruned result == full-scan filter
-    val expectY = grid.where(col("y").between(0, 7)).agg(sum("payload")).head.getLong(0)
-    assert(dfY.agg(sum("payload")).head.getLong(0) == expectY)
+    val expectY = grid.where(col("y").between(0, 7)).agg(sum("payload")).head().getLong(0)
+    assert(dfY.agg(sum("payload")).head().getLong(0) == expectY)
     assert(dfY.count() == 64 * 8)
 
     // x-range scan prunes too (same layout, other dimension)
