@@ -735,7 +735,7 @@ object OpsQueries {
           .write.mode("overwrite").parquet(directPath)
         java.nio.file.Files.write(marker, buildTag.getBytes("UTF-8"))
       }
-      val served = Layout.ivfPqTopKFromLayout(s, layoutDir, emb, queries, k = 5)
+      val served = Layout.ivfPqTopKFromLayout(s, layoutDir, queries, k = 5)
       val direct = s.read.parquet(directPath).select(served.columns.toSeq.map(col): _*)
       layoutContract(s, dir, served, direct)
     }),
@@ -805,7 +805,7 @@ object OpsQueries {
           .write.mode("overwrite").parquet(directPath)
         java.nio.file.Files.write(marker, buildTag.getBytes("UTF-8"))
       }
-      val served = Layout.imiPqTopKFromLayout(s, layoutDir, emb, queries,
+      val served = Layout.imiPqTopKFromLayout(s, layoutDir, queries,
         k = 5, nProbe = 12)
       val direct = s.read.parquet(directPath).select(served.columns.toSeq.map(col): _*)
       layoutContract(s, dir, served, direct)

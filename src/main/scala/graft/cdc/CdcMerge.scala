@@ -243,14 +243,11 @@ object CdcMerge {
           // prior accumulated sum: the CURRENT version's digest file;
           // a pre-digest state (feature enabled mid-stream) falls back
           // to one full scan of the prior rows
-          val cur = stateRoot.resolve("CURRENT")
           val priorSum =
-            if (!Files.exists(cur)) Ristretto255.Identity
-            else {
-              val f = stateRoot.resolve(Files.readString(cur).trim).resolve("_digest")
-              if (Files.exists(f)) Ecmh.decodeHex(Files.readString(f).trim)
-              else Ecmh.decodeHex(rowsPointSum(prior, schema))
-            }
+            if (resolveCurrent(stateDir).isEmpty) Ristretto255.Identity
+            else resolveCurrent(stateDir, "_digest")
+              .map(f => Ecmh.decodeHex(Files.readString(f).trim))
+              .getOrElse(Ecmh.decodeHex(rowsPointSum(prior, schema)))
           val next = priorSum + Ecmh.decodeHex(rowsPointSum(added, schema)) -
             Ecmh.decodeHex(rowsPointSum(removed, schema))
           Files.writeString(stateRoot.resolve(version).resolve("_digest"),
@@ -279,19 +276,23 @@ object CdcMerge {
     writer.start()
   }
 
+  /** The version directory that the `CURRENT` pointer of a
+    * [[streamingLatestState]] dir names — or `child` inside it — when
+    * it exists; None before the first committed batch. */
+  private def resolveCurrent(stateDir: String, child: String*): Option[java.nio.file.Path] = {
+    import java.nio.file.{Files, Paths}
+    val cur = Paths.get(stateDir, "CURRENT")
+    if (!Files.exists(cur)) None
+    else Some(Paths.get(stateDir, (Files.readString(cur).trim +: child): _*))
+      .filter(Files.exists(_))
+  }
+
   /** Resolve the live state written by [[streamingLatestState]]: follow
     * the `CURRENT` pointer to its version directory. None before the
     * first committed batch. */
   def readState(spark: org.apache.spark.sql.SparkSession,
-                stateDir: String): Option[DataFrame] = {
-    val cur = java.nio.file.Paths.get(stateDir, "CURRENT")
-    if (!java.nio.file.Files.exists(cur)) None
-    else {
-      val version = java.nio.file.Files.readString(cur).trim
-      val p = java.nio.file.Paths.get(stateDir, version)
-      if (java.nio.file.Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
-    }
-  }
+                stateDir: String): Option[DataFrame] =
+    resolveCurrent(stateDir).map(p => spark.read.parquet(p.toString))
 
   /** The archival/retention view committed with the live state version
     * (`archival = Some(...)` on [[streamingLatestState]]); equal to
@@ -299,28 +300,15 @@ object CdcMerge {
     * recomputation. None before the first committed batch or when the
     * stream runs without archival maintenance. */
   def readArchival(spark: org.apache.spark.sql.SparkSession,
-                   stateDir: String): Option[DataFrame] = {
-    import java.nio.file.{Files, Paths}
-    val cur = Paths.get(stateDir, "CURRENT")
-    if (!Files.exists(cur)) None
-    else {
-      val p = Paths.get(stateDir, Files.readString(cur).trim, "_archival")
-      if (Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
-    }
-  }
+                   stateDir: String): Option[DataFrame] =
+    resolveCurrent(stateDir, "_archival").map(p => spark.read.parquet(p.toString))
 
   /** The incrementally-maintained ECMH digest of the live state, in the
     * reference's `MultisetHash.String()` form — equal to
     * `stateDigest(readState(...))` without rescanning the table. None
     * before the first committed batch or when the stream runs without
     * `withDigest`. */
-  def readStateDigest(stateDir: String): Option[String] = {
-    import java.nio.file.{Files, Paths}
-    val cur = Paths.get(stateDir, "CURRENT")
-    if (!Files.exists(cur)) None
-    else {
-      val f = Paths.get(stateDir, Files.readString(cur).trim, "_digest")
-      if (Files.exists(f)) Some(digestOfSum(Files.readString(f).trim)) else None
-    }
-  }
+  def readStateDigest(stateDir: String): Option[String] =
+    resolveCurrent(stateDir, "_digest")
+      .map(f => digestOfSum(java.nio.file.Files.readString(f).trim))
 }

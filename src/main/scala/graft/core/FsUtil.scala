@@ -33,6 +33,29 @@ object FsUtil {
   /** `listDir` sorted by path name. */
   def listDirSorted(dir: Path): Vector[Path] = listDir(dir).sorted
 
+  /** Stream an artifact's bytes to `update.accept(buf, n)` in 4 KB
+    * chunks (signing.go:79): the file itself, or a directory artifact's
+    * regular files in name order. The one walk behind both the
+    * artifact's signature and its content id, so the two cover the same
+    * bytes. Returns the number of bytes streamed. (`ObjIntConsumer`:
+    * the chunk length is passed unboxed.) */
+  def streamArtifact(artifact: Path)(
+      update: java.util.function.ObjIntConsumer[Array[Byte]]): Long = {
+    val buf = new Array[Byte](4096)
+    var total = 0L
+    def absorb(f: Path): Unit = {
+      val in = Files.newInputStream(f)
+      try {
+        var n = in.read(buf)
+        while (n > 0) { update.accept(buf, n); total += n; n = in.read(buf) }
+      } finally in.close()
+    }
+    if (Files.isDirectory(artifact))
+      listDirSorted(artifact).filter(Files.isRegularFile(_)).foreach(absorb)
+    else absorb(artifact)
+    total
+  }
+
   /** O(listing) snapshot fingerprint of a file or directory tree: file
     * count plus an md5 over the sorted per-file (relative name, size,
     * nanosecond mtime) records — per-file, not totals, so a rewrite

@@ -19,19 +19,7 @@ final class Signer(privKey: BigInteger) extends FileSigner {
   override def sign(file: Path): Array[Byte] = {
     if (!Files.exists(file)) throw new java.io.FileNotFoundException(file.toString)
     val hasher = new Keccak256.Hasher
-    var total = 0L
-    def absorb(f: Path): Unit = {
-      val in = Files.newInputStream(f)
-      try {
-        val buf = new Array[Byte](4096) // 4 KB chunks (signing.go:79)
-        var n = in.read(buf)
-        while (n > 0) { hasher.update(buf, 0, n); total += n; n = in.read(buf) }
-      } finally in.close()
-    }
-    // directory artifact (multi-file window): hash parts in name order
-    if (Files.isDirectory(file)) {
-      graft.core.FsUtil.listDirSorted(file).filter(Files.isRegularFile(_)).foreach(absorb)
-    } else absorb(file)
+    val total = graft.core.FsUtil.streamArtifact(file)((buf, n) => hasher.update(buf, 0, n))
     if (total == 0) throw new IllegalArgumentException("error with file: content is empty")
     Secp256k1.sign(hasher.digest(), privKey)
   }

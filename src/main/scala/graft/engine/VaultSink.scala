@@ -35,7 +35,10 @@ final class LocalContentStore(rootDir: String) extends ContentStore {
   override def put(vault: VaultName, file: Path, timestampSec: Long, sig: Array[Byte]): String = {
     val cid = LocalContentStore.contentId(file)
     val dest = root.resolve(s"$cid-${file.getFileName}")
-    Files.move(file, dest, StandardCopyOption.REPLACE_EXISTING)
+    // a replayed directory artifact: the same cid means the same bytes
+    // are already stored (a move cannot replace a non-empty directory)
+    if (Files.isDirectory(dest)) FsUtil.deleteRecursive(file)
+    else Files.move(file, dest, StandardCopyOption.REPLACE_EXISTING)
     cid
   }
 
@@ -49,21 +52,11 @@ final class LocalContentStore(rootDir: String) extends ContentStore {
 object LocalContentStore {
   /** Deterministic content id: CIDv1 (raw codec, sha2-256 multihash) in
     * multibase base32 — the reference's id format, computed offline
-    * from the streamed content hash. Directory artifacts hash their
-    * files in name order. */
+    * from the streamed content hash over the bytes the signature covers
+    * ([[FsUtil.streamArtifact]]). */
   def contentId(file: Path): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    def absorb(f: Path): Unit = {
-      val in = Files.newInputStream(f)
-      try {
-        val buf = new Array[Byte](4096) // chunked like signing.go:79
-        var n = in.read(buf)
-        while (n > 0) { md.update(buf, 0, n); n = in.read(buf) }
-      } finally in.close()
-    }
-    if (Files.isDirectory(file)) {
-      FsUtil.listDirSorted(file).filter(Files.isRegularFile(_)).foreach(absorb)
-    } else absorb(file)
+    FsUtil.streamArtifact(file)((buf, n) => md.update(buf, 0, n))
     CarV1.Cid.v1FromDigest(CarV1.CodecRaw, md.digest()).toString
   }
 }

@@ -44,13 +44,8 @@ object Layout {
     indexed
       .repartition(centroids.length, col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    val spark = indexed.sparkSession
-    val p = new org.apache.hadoop.fs.Path(dir, "_centroids.tsv")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try centroids.foreach { case (cid, v) =>
-      out.write(s"$cid\t${v.mkString(",")}\n".getBytes("UTF-8"))
-    } finally out.close()
+    writeTsv(indexed.sparkSession, s"$dir/_centroids.tsv",
+      centroids.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
   }
 
   /**
@@ -183,51 +178,42 @@ object Layout {
         s.getPath.getName.startsWith("pair="))) "pair" else "cell1"
   }
 
-  private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.ops.Layout")
-
-  /** One-line deprecation signal when a serve falls back to a pre-r13
-    * layout regime. Results stay exact either way; the legacy read
-    * bounds (full-corpus re-rank, Cartesian-superset pruning) do not
-    * scale — see DEPLOY.md "Legacy layouts" for the rewrite path. */
-  private def legacyWarn(dir: String, what: String, fix: String): Unit =
-    logger.warn(s"DEPRECATED legacy layout served from $dir: $what. " +
-      s"Rewrite path: $fix (DEPLOY.md 'Legacy layouts').")
-
   /** Exact pair-probe predicate for an IMI layout scan: partition
     * pruning on the layout's partition column plus the EXACT fused-pair
-    * set pushed to row-group stats. Falls back to the r12 Cartesian
-    * superset predicate only for legacy layouts that predate the `pair`
-    * column (results were always exact either way — the (cell1, cell2)
-    * probe join filters the superset; only the read bound differed). */
+    * set pushed to row-group stats. */
   private def prunePairs(all: DataFrame, partCol: String, k2: Int,
-                         pairs: Array[(Int, Int)], dir: String): DataFrame = {
+                         pairs: Array[(Int, Int)]): DataFrame = {
     if (pairs.isEmpty) return all.where(lit(false))
-    val fusedPairs = pairs.map { case (a, b) => a * k2 + b }.toIndexedSeq
-    if (partCol == "pair")
-      all.where(col("pair").isin(fusedPairs: _*))
-    else if (all.columns.contains("pair"))
-      all.where(col("cell1").isin(pairs.map(_._1).distinct.toIndexedSeq: _*) &&
-        col("pair").isin(fusedPairs: _*))
-    else {
-      legacyWarn(dir, "no fused `pair` column — pruning by the Cartesian " +
-        "(cell1 IN, cell2 IN) superset, a loose read bound",
-        "rebuild with imiWrite/imiPqWrite (appends mirror the legacy schema, they do not upgrade it)")
-      all.where(col("cell1").isin(pairs.map(_._1).distinct.toIndexedSeq: _*) &&
-        col("cell2").isin(pairs.map(_._2).distinct.toIndexedSeq: _*))
-    }
+    val fusedPairs = col("pair").isin(pairs.map { case (a, b) => a * k2 + b }.toIndexedSeq: _*)
+    if (partCol == "pair") all.where(fusedPairs)
+    else all.where(col("cell1").isin(pairs.map(_._1).distinct.toIndexedSeq: _*) && fusedPairs)
+  }
+
+  /** Refuse a layout dir that lacks a column the current format stores
+    * (`pair` in IMI layouts, the raw vector in PQ layouts): it was
+    * written before that format, and this module neither serves nor
+    * appends such a layout — it has to be rebuilt with `writer`.
+    * `columns` is the dir's schema from the caller's own read, so the
+    * check costs no Spark job. */
+  private def requireCurrent(columns: Array[String], path: String,
+                             needed: Seq[String], writer: String): Unit = {
+    val missing = needed.filterNot(columns.contains)
+    require(missing.isEmpty,
+      s"layout $path has no ${missing.mkString(", ")} column: it predates " +
+        s"the current layout format; rebuild it with Layout.$writer")
   }
 
   /**
    * Persist the full two-level compressed index (IMI + PQ): 8-byte
-   * packed code words partitioned by `cell1` (bounded at k directories)
-   * and SORTED by `cell2` within each partition's files, plus both half
-   * codebooks and the PQ codebooks as sidecars. The production serving
-   * layout past the single-level cell cap: pair probes prune twice
-   * (cell1 at the listing, cell2 at the row-group stats) AND every
-   * scanned row is a packed code word instead of a raw vector — the
-   * [[pqWrite]] compression and the [[imiWrite]] cell-count path
-   * composed. Raw vectors stay in the corpus table for the shortlist
-   * re-rank only.
+   * packed code words in the [[imiWrite]] partition regimes (fused
+   * `pair` directories, or `cell1` directories with pair-sorted files),
+   * plus both half codebooks and the PQ codebooks as sidecars. The
+   * production serving layout past the single-level cell cap: pair
+   * probes prune exactly to the probed pair set AND every scanned row
+   * is a packed code word instead of a raw vector — the [[pqWrite]]
+   * compression and the [[imiWrite]] cell-count path composed. Raw
+   * vectors are stored beside the code words (as in [[pqWrite]]) for
+   * the shortlist re-rank only.
    *
    * Expects `indexed` from [[Similarity.imiIndex]] (has `cell1`/`cell2`)
    * and `books` from [[Similarity.pqTrain]] on the same corpus.
@@ -258,14 +244,12 @@ object Layout {
    * ADC top-k served straight off an [[imiPqWrite]] layout — identical
    * results to the in-memory [[Similarity.imiPqTopK]] (same pair
    * probes, same lookup table, same shortlist re-rank; `LayoutSpec`
-   * pins parity), but the scan is a two-level pruned read of packed
-   * codes: probed cell1 values list only their partition directories,
-   * probed cell2 values push into the cell2-sorted files' row-group
-   * stats, and each scanned row is 8 bytes. `corpus` supplies the raw
-   * vectors for the shortlist re-rank only.
+   * pins parity), but the scan reads packed codes pruned exactly to
+   * the probed pair set, and each scanned row is 8 bytes. The shortlist
+   * re-rank reads raw vectors from the same pair-pruned files.
    */
-  def imiPqTopKFromLayout(spark: SparkSession, dir: String, corpus: DataFrame,
-                          queries: DataFrame, k: Int, nProbe: Int = 32,
+  def imiPqTopKFromLayout(spark: SparkSession, dir: String, queries: DataFrame,
+                          k: Int, nProbe: Int = 32,
                           shortlist: Int = 100, dims: Int = 64,
                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = readImiCentroids(spark, dir)
@@ -281,8 +265,8 @@ object Layout {
     val pairs = probes.select("cell1", "cell2").distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1)))
     val all = spark.read.parquet(s"$dir/codes")
-    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/codes"),
-      cents._2.length, pairs, s"$dir/codes")
+    requireCurrent(all.columns, s"$dir/codes", Seq("pair", vecCol), "imiPqWrite")
+    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/codes"), cents._2.length, pairs)
     // fused ADC over the packed words (r13) — see [[graft.functions.PqAdcDist]]
     val approx = pruned
       .join(broadcast(probes), Seq("cell1", "cell2"))
@@ -290,18 +274,9 @@ object Layout {
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         graft.functions.PqAdcDist(col("packed"), col("query_id"),
           qIds, lutM, m).as("adist"))
-    // Re-rank from the same pair-pruned read when the layout stores raw
-    // vectors (r13; see [[pqWrite]]) — the corpus arg is the legacy
-    // fallback whose full-corpus join this change removed.
-    val rerankSrc =
-      if (all.columns.contains(vecCol)) pruned.select(col(idCol), col(vecCol))
-      else {
-        legacyWarn(s"$dir/codes", s"no `$vecCol` column — shortlist re-rank " +
-          "joins the full corpus argument, an O(corpus) serve input",
-          "rebuild with imiPqWrite (appends mirror the legacy schema, they do not upgrade it)")
-        corpus
-      }
-    Similarity.adcShortlistRerank(approx, rerankSrc, queries, k, shortlist, idCol, vecCol)
+    // re-rank from the same pair-pruned read (see [[pqWrite]])
+    Similarity.adcShortlistRerank(approx, pruned.select(col(idCol), col(vecCol)),
+      queries, k, shortlist, idCol, vecCol)
   }
 
   /** Incremental maintenance for an [[ivfWrite]] layout: assign ONLY
@@ -328,26 +303,24 @@ object Layout {
     val cents = readImiCentroids(spark, dir)
     appendImiPartitioned(
       Similarity.assignImiCells(newVectors, cents, dims, vecCol),
-      cents, s"$dir/data")
+      cents, s"$dir/data", Seq("pair"), "imiWrite")
   }
 
   /** Append `assigned` (has cell1/cell2) into an existing IMI layout
-    * dir, mirroring its partition regime AND its schema (a legacy
-    * pre-`pair` layout keeps its schema — mixed per-file schemas would
-    * make the column vanish under the default non-merging read). */
+    * dir in its own partition regime, after [[requireCurrent]] on the
+    * `needed` columns. A fused-regime dir is named by `pair`, so its
+    * schema is read only when `needed` holds more than `pair` — at most
+    * one schema read per append (each spark.read.parquet is a leaf-file
+    * listing job, measurable per micro-batch under streaming ingest). */
   private def appendImiPartitioned(assigned: DataFrame,
                                    cents: (Array[(Int, Array[Double])], Array[(Int, Array[Double])]),
-                                   path: String,
-                                   layoutCols: Option[Seq[String]] = None): Unit = {
+                                   path: String, needed: Seq[String], writer: String): Unit = {
     val spark = assigned.sparkSession
     val partCol = imiPartCol(spark, path)
-    // layoutCols: pre-read schema columns, so one append costs ONE
-    // directory listing/schema read, not one per flag (each
-    // spark.read.parquet is a leaf-file listing job — measurable per
-    // micro-batch under streaming ingest)
-    val hasPair = partCol == "pair" ||
-      layoutCols.getOrElse(spark.read.parquet(path).columns.toSeq).contains("pair")
-    val df = if (hasPair) withPairKey(assigned, cents._2.length) else assigned
+    val unproven = if (partCol == "pair") needed.filterNot(_ == "pair") else needed
+    if (unproven.nonEmpty)
+      requireCurrent(spark.read.parquet(path).columns, path, unproven, writer)
+    val df = withPairKey(assigned, cents._2.length)
     if (partCol == "pair")
       df.repartition(math.min(cents._1.length.toLong * cents._2.length,
           df.sparkSession.sparkContext.defaultParallelism.toLong).toInt,
@@ -379,18 +352,12 @@ object Layout {
     val centroids = readIvfCentroids(spark, dir)
     val books = readPqBooks(spark, dir)
     val m = books.length
-    // mirror the layout's own schema: a legacy pre-vector layout must
-    // not gain a mixed per-file schema (the column would vanish under
-    // the default non-merging read)
-    val hasVec = spark.read.parquet(s"$dir/codes").columns.contains(vecCol)
-    val encoded = Similarity.pqEncode(
+    requireCurrent(spark.read.parquet(s"$dir/codes").columns, s"$dir/codes",
+      Seq(vecCol), "pqWrite")
+    Similarity.pqEncode(
         Similarity.assignCells(newVectors, centroids, vecCol), books, dims, idCol, vecCol)
-    val rows =
-      if (hasVec) encoded.select(col(idCol), col("cell"),
+      .select(col(idCol), col("cell"),
         Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol))
-      else encoded.select(col(idCol), col("cell"),
-        Similarity.pqPack(col("codes"), m).as("packed"))
-    rows
       .repartition(centroids.length, col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
   }
@@ -405,17 +372,12 @@ object Layout {
     val cents = readImiCentroids(spark, dir)
     val books = readPqBooks(spark, dir)
     val m = books.length
-    // ONE schema read serves both the vector-column and pair-column
-    // mirroring decisions (legacy layouts keep their schema)
-    val layoutCols = spark.read.parquet(s"$dir/codes").columns.toSeq
-    val hasVec = layoutCols.contains(vecCol)
-    val encoded = Similarity.pqEncode(
-        Similarity.assignImiCells(newVectors, cents, dims, vecCol), books, dims, idCol, vecCol)
-    val base = Seq(col(idCol), col("cell1"), col("cell2"),
-      Similarity.pqPack(col("codes"), m).as("packed"))
     appendImiPartitioned(
-      encoded.select((if (hasVec) base :+ col(vecCol) else base): _*),
-      cents, s"$dir/codes", Some(layoutCols))
+      Similarity.pqEncode(
+          Similarity.assignImiCells(newVectors, cents, dims, vecCol), books, dims, idCol, vecCol)
+        .select(col(idCol), col("cell1"), col("cell2"),
+          Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol)),
+      cents, s"$dir/codes", Seq("pair", vecCol), "imiPqWrite")
   }
 
   /** Both codebook sidecars of an [[imiWrite]] layout. */
@@ -449,8 +411,8 @@ object Layout {
     val pairs = q.select("cell1", "cell2").distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1)))
     val all = spark.read.parquet(s"$dir/data")
-    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/data"),
-      cents._2.length, pairs, s"$dir/data")
+    requireCurrent(all.columns, s"$dir/data", Seq("pair"), "imiWrite")
+    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/data"), cents._2.length, pairs)
     val c = pruned.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
       col("cell1"), col("cell2"))
     Similarity.ivfScore(c, q, k, keys = Seq("cell1", "cell2"))
@@ -472,11 +434,11 @@ object Layout {
    * cells, same lookup table, same shortlist re-rank; `LayoutSpec`
    * pins parity), but the scan is a partition-pruned read of packed
    * codes: `cell IN (probes)` lists only the probed directories and
-   * each scanned row is 8 bytes. `corpus` supplies the raw vectors for
-   * the shortlist re-rank only.
+   * each scanned row is 8 bytes. The shortlist re-rank reads raw
+   * vectors from the same cell-pruned files.
    */
-  def ivfPqTopKFromLayout(spark: SparkSession, dir: String, corpus: DataFrame,
-                          queries: DataFrame, k: Int, nProbe: Int = 32,
+  def ivfPqTopKFromLayout(spark: SparkSession, dir: String, queries: DataFrame,
+                          k: Int, nProbe: Int = 32,
                           shortlist: Int = 100, dims: Int = 64,
                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centroids = readIvfCentroids(spark, dir)
@@ -487,6 +449,7 @@ object Layout {
     val probes = Similarity.probeCells(spark, centroids, qRows, nProbe)
     val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     val all = spark.read.parquet(s"$dir/codes")
+    requireCurrent(all.columns, s"$dir/codes", Seq(vecCol), "pqWrite")
     val pruned = all
       .where(col("cell").isin(cells: _*)) // partition filter: probed dirs only
     // fused ADC over the packed words (r13): one row per (query,
@@ -498,20 +461,11 @@ object Layout {
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         graft.functions.PqAdcDist(col("packed"), col("query_id"),
           qIds, lutM, m).as("adist"))
-    // Shortlist re-rank vectors come from the SAME cell-pruned read when
-    // the layout stores them (r13) — O(probed cells), and columnar
-    // pruning keeps the ADC scan above 8-bytes-per-row narrow. The corpus arg
-    // is the fallback for legacy pre-vector layouts only (a full-corpus
-    // re-rank join — the scan this change removed from the serve path).
-    val rerankSrc =
-      if (all.columns.contains(vecCol)) pruned.select(col(idCol), col(vecCol))
-      else {
-        legacyWarn(s"$dir/codes", s"no `$vecCol` column — shortlist re-rank " +
-          "joins the full corpus argument, an O(corpus) serve input",
-          "rebuild with pqWrite (appends mirror the legacy schema, they do not upgrade it)")
-        corpus
-      }
-    Similarity.adcShortlistRerank(approx, rerankSrc, queries, k, shortlist, idCol, vecCol)
+    // Shortlist re-rank vectors come from the SAME cell-pruned read —
+    // O(probed cells), and columnar pruning keeps the ADC scan above
+    // 8-bytes-per-row narrow.
+    Similarity.adcShortlistRerank(approx, pruned.select(col(idCol), col(vecCol)),
+      queries, k, shortlist, idCol, vecCol)
   }
 
   private def writeTsv(spark: SparkSession, path: String,

@@ -46,6 +46,25 @@ class CryptoSpec extends AnyFunSuite {
     assert(e.getMessage.contains("content is empty"))
   }
 
+  test("directory artifact: signature and content id cover the same name-ordered bytes") {
+    // two part files written out of name order, each past one 4 KB
+    // chunk, plus a sub-directory the walk must skip
+    val dir = Files.createTempDirectory("artifact")
+    val partB = Array.tabulate[Byte](6000)(i => (i * 7).toByte)
+    val partA = Array.tabulate[Byte](4500)(i => (i * 13 + 1).toByte)
+    Files.write(dir.resolve("part-b.parquet"), partB)
+    Files.write(dir.resolve("part-a.parquet"), partA)
+    Files.createDirectory(dir.resolve("sub"))
+    Files.write(dir.resolve("sub").resolve("ignored"), Array[Byte](1, 2, 3))
+    val bytes = partA ++ partB
+    val priv = new BigInteger(privHex, 16)
+    val sig = Signer.fromHex(privHex).sign(dir)
+    assert(Secp256k1.verify(Keccak256.hash(bytes), sig, Secp256k1.pubKey(priv)))
+    import graft.engine.{CarV1, LocalContentStore}
+    assert(LocalContentStore.contentId(dir) == CarV1.Cid.v1FromDigest(CarV1.CodecRaw,
+      java.security.MessageDigest.getInstance("SHA-256").digest(bytes)).toString)
+  }
+
   test("signature verifies and is low-s") {
     val priv = new BigInteger(privHex, 16)
     val hash = Keccak256.hash("data to be signed".getBytes("UTF-8"))

@@ -160,6 +160,33 @@ class VaultSinkSpec extends SparkSpec {
     }
   }
 
+  test("scale mode: a replayed batch id keeps its stored directory artifact and logs one event") {
+    // singleFile = false uploads each window as a DIRECTORY; re-putting
+    // the same window (a processing-time batch id replaying in the same
+    // JVM) lands on the stored copy of the same cid
+    val schemaT = TableSchema("t", Seq(
+      TableColumn("id", "integer", nullable = false, isPrimary = true),
+      TableColumn("name", "text", nullable = false, isPrimary = false)))
+    val batch = lines(tx(1, "t", "2024-01-01 00:00:10",
+      Seq(Seq(("id", "integer", "1"), ("name", "text", "\"a\"")),
+        Seq(("id", "integer", "2"), ("name", "text", "\"b\"")))))
+    val base = Files.createTempDirectory("sink-replay")
+    val storeDir = base.resolve("store")
+    val store = new LocalContentStore(storeDir.toString)
+    val catalog = graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString)
+    val sink = new VaultSink("ns", Seq(schemaT), base.resolve("staging").toString, store,
+      catalog = Some(catalog), singleFile = false, clock = () => 1700000000L)
+    val first = sink.processBatch(batch, 5L)
+    val replay = sink.processBatch(batch, 5L)
+    assert(replay == first)
+    val Seq(("t", cid)) = first
+    assert(graft.core.FsUtil.listDir(storeDir).map(_.getFileName.toString) ==
+      Vector(store.get(cid).get.getFileName.toString), "one stored artifact")
+    assert(Files.isDirectory(store.get(cid).get))
+    assert(catalog.events.count() == 1L, "one event for the replayed window")
+    assert(spark.read.parquet(store.get(cid).get.toString).count() == 2L)
+  }
+
   test("event-time: an untracked table's later commits never close a tracked window") {
     val schemaT = TableSchema("t", Seq(
       TableColumn("id", "integer", nullable = false, isPrimary = true),

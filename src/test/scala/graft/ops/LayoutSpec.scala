@@ -208,7 +208,7 @@ class LayoutSpec extends SparkSpec {
 
     val queries = emb.where(col("vec_id") < 3)
     val nProbe = 2
-    val result = Layout.ivfPqTopKFromLayout(spark, dir, emb, queries,
+    val result = Layout.ivfPqTopKFromLayout(spark, dir, queries,
       k = 5, nProbe = nProbe)
     val rows = result.collect()
     assert(rows.length == 3 * 5)
@@ -232,58 +232,16 @@ class LayoutSpec extends SparkSpec {
     assert(fromLayout == direct)
 
     // r13: the shortlist re-rank reads raw vectors from the SAME
-    // cell-pruned layout files, never the corpus table (the hidden
-    // O(corpus) join this removed). Proof by starvation: an EMPTY
-    // corpus arg must yield identical results — if the re-rank joined
-    // the corpus, every shortlist row would lose its vector and the
-    // serve would return nothing.
-    val starved = Layout.ivfPqTopKFromLayout(spark, dir, emb.limit(0), queries,
-        k = 5, nProbe = nProbe)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(starved == direct,
-      "re-rank must source vectors from the layout, not the corpus arg")
-    // ...and columnar pruning keeps the ADC stage narrow: among the
-    // layout scans, at least one must NOT read the vector column (the
-    // 8-byte ADC scan) and one must (the pruned re-rank fetch)
+    // cell-pruned layout files, and columnar pruning keeps the ADC
+    // stage narrow: among the layout scans, at least one must NOT read
+    // the vector column (the 8-byte ADC scan) and one must (the pruned
+    // re-rank fetch)
     val reads = org.apache.spark.sql.graftbridge.Bridge.scanReads(result)
       .filter(_._1.exists(_.contains("/codes")))
     assert(reads.exists(!_._2.contains("embedding")),
       s"ADC scan reads the vector column (width regression): $reads")
     assert(reads.exists(_._2.contains("embedding")),
       s"no layout scan reads vectors — re-rank source missing: $reads")
-  }
-
-  test("legacy IVF+PQ layout (no vector column) serves via the corpus fallback; appends stay legacy") {
-    val dir = Files.createTempDirectory("layout-ivfpq-legacy").toString + "/ivfpq"
-    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val half = emb.where(col("vec_id") % 2 === 0)
-    val (indexed, centroids) = Similarity.ivfIndex(emb, nCells = 8, lloydIters = 2)
-    val books = Similarity.pqTrain(emb)
-    Layout.pqWrite(indexed.join(half.select("vec_id"), "vec_id"), centroids, books, dir)
-    // strip the r13 vector column in place — the pre-r13 on-disk format
-    // (materialized driver-side first: a lazy self-overwrite would race
-    // its own read)
-    locally {
-      val full = spark.read.parquet(s"$dir/codes").select("vec_id", "packed", "cell")
-      val rows = full.collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), full.schema)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    }
-
-    val queries = emb.where(col("vec_id") < 3)
-    val served = Layout.ivfPqTopKFromLayout(spark, dir, emb, queries, k = 5, nProbe = 4)
-    assert(served.collect().nonEmpty) // corpus-arg fallback still works
-    // the fallback really is the corpus table: its scan appears in the plan
-    val reads = org.apache.spark.sql.graftbridge.Bridge.scanReads(served)
-    assert(reads.exists(r => r._1.exists(_.contains("embeddings.parquet")) &&
-      r._2.contains("embedding")),
-      s"legacy serve must fetch re-rank vectors from the corpus: $reads")
-
-    // append mirrors the legacy schema — no mixed per-file schemas
-    Layout.pqAppend(emb.where(col("vec_id") % 2 === 1), dir)
-    assert(!spark.read.parquet(s"$dir/codes").columns.contains("embedding"))
-    assert(Layout.ivfPqTopKFromLayout(spark, dir, emb, queries, k = 5, nProbe = 4)
-      .collect().nonEmpty)
   }
 
   test("IMI+PQ layout: ADC served off the two-level pruned codes, parity with in-memory") {
@@ -315,7 +273,7 @@ class LayoutSpec extends SparkSpec {
     // ONE query, nProbe = 3: only 3 of the 16 pair dirs are probed, so
     // partition pruning is guaranteed visible
     val queries = emb.where(col("vec_id") === 0)
-    val result = Layout.imiPqTopKFromLayout(spark, dir, emb, queries,
+    val result = Layout.imiPqTopKFromLayout(spark, dir, queries,
       k = 5, nProbe = 3)
     val rows = result.collect()
     assert(rows.nonEmpty)
@@ -338,13 +296,8 @@ class LayoutSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
     assert(fromLayout == direct)
 
-    // r13: re-rank vectors come from the pair-pruned layout read —
-    // starvation proof as in the IVF+PQ test
-    val starved = Layout.imiPqTopKFromLayout(spark, dir, emb.limit(0), queries,
-        k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(starved == direct,
-      "re-rank must source vectors from the layout, not the corpus arg")
+    // r13: re-rank vectors come from the pair-pruned layout read, as
+    // in the IVF+PQ test
     val widths = org.apache.spark.sql.graftbridge.Bridge.scanReads(result)
       .filter(_._1.exists(_.contains("/codes")))
     assert(widths.exists(!_._2.contains("embedding")),
@@ -384,7 +337,7 @@ class LayoutSpec extends SparkSpec {
     // same for the composed IMI+PQ layout, including append + compact
     // staying in the layout's own regime
     Layout.imiPqWrite(indexed, cents, books, s"$base/imipq", fusedDirCap = 1)
-    val served = Layout.imiPqTopKFromLayout(spark, s"$base/imipq", emb, queries,
+    val served = Layout.imiPqTopKFromLayout(spark, s"$base/imipq", queries,
       k = 5, nProbe = 3)
     val planPq = served.queryExecution.executedPlan.toString
     assert(planPq.contains("PartitionFilters") && planPq.contains("cell1"))
@@ -396,37 +349,74 @@ class LayoutSpec extends SparkSpec {
       == directPq)
   }
 
-  test("legacy IMI layouts (no pair column) still serve via the superset fallback") {
-    // a layout persisted by the r12 writer: cell1 dirs, cell2-sorted
-    // files, NO pair column — serve must fall back to the Cartesian
-    // cell1/cell2 predicate (results were always exact via the probe
-    // join) and appends must not introduce a mixed schema
-    val base = Files.createTempDirectory("layout-imi-legacy").toString
+  // The on-disk shapes the current writers no longer produce (PQ layouts
+  // without the raw vector column, an IMI layout without the fused `pair`
+  // column) are neither served through a fallback nor appended in their
+  // own schema: each is refused with the writer that rebuilds it.
+  private def refusedNaming(writer: String)(body: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](body)
+    assert(e.getMessage.contains(s"Layout.$writer"),
+      s"refusal must name the rebuild writer $writer: ${e.getMessage}")
+  }
+  private def layoutFiles(p: String): Seq[String] = spark.read.parquet(p).inputFiles.sorted.toSeq
+
+  test("pre-r13 PQ layouts (no vector column) are refused on serve and append, naming the rebuild writer") {
+    val base = Files.createTempDirectory("layout-pre-r13-pq").toString
     val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val (indexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
-    val queries = emb.where(col("vec_id") === 0)
-    // hand-write the r12 shape
-    indexed.repartition(cents._1.length, col("cell1"))
+    val queries = emb.where(col("vec_id") < 3)
+    val more = emb.where(col("vec_id") >= 9990)
+
+    // IVF+PQ: strip the vector column in place (materialized driver-side
+    // first: a lazy self-overwrite would race its own read)
+    val (indexed, centroids) = Similarity.ivfIndex(emb, nCells = 8, lloydIters = 2)
+    Layout.pqWrite(indexed, centroids, Similarity.pqTrain(emb), s"$base/ivfpq")
+    locally {
+      val full = spark.read.parquet(s"$base/ivfpq/codes").select("vec_id", "packed", "cell")
+      val rows = full.collect().toSeq
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), full.schema)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$base/ivfpq/codes")
+    }
+    assert(!spark.read.parquet(s"$base/ivfpq/codes").columns.contains("embedding"))
+    val pqFiles = layoutFiles(s"$base/ivfpq/codes")
+    refusedNaming("pqWrite")(Layout.ivfPqTopKFromLayout(spark, s"$base/ivfpq", queries, k = 5, nProbe = 4))
+    refusedNaming("pqWrite")(Layout.pqAppend(more, s"$base/ivfpq"))
+    assert(layoutFiles(s"$base/ivfpq/codes") == pqFiles, "a refused append must write nothing")
+
+    // IMI+PQ: fused pair dirs with the vector column stripped
+    val (imiIndexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
+    Layout.imiPqWrite(imiIndexed, cents, Similarity.pqTrain(emb), s"$base/imipq")
+    locally {
+      val full = spark.read.parquet(s"$base/imipq/codes")
+        .select("vec_id", "cell1", "cell2", "packed", "pair")
+      val rows = full.collect().toSeq
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), full.schema)
+        .write.mode("overwrite").partitionBy("pair").parquet(s"$base/imipq/codes")
+    }
+    assert(!spark.read.parquet(s"$base/imipq/codes").columns.contains("embedding"))
+    val imiPqFiles = layoutFiles(s"$base/imipq/codes")
+    refusedNaming("imiPqWrite")(Layout.imiPqTopKFromLayout(spark, s"$base/imipq", queries, k = 5, nProbe = 3))
+    refusedNaming("imiPqWrite")(Layout.imiPqAppend(more, s"$base/imipq"))
+    assert(layoutFiles(s"$base/imipq/codes") == imiPqFiles, "a refused append must write nothing")
+  }
+
+  test("pre-r13 IMI layout (no pair column) is refused on serve and append, naming imiWrite") {
+    val base = Files.createTempDirectory("layout-pre-r13-imi").toString
+    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val queries = emb.where(col("vec_id") < 3)
+    val more = emb.where(col("vec_id") >= 9990)
+
+    // the r12 shape: cell1 dirs, cell2-sorted files, no pair column
+    val (imiIndexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
+    Layout.imiWrite(imiIndexed, cents, s"$base/imi") // for the sidecars
+    graft.core.FsUtil.deleteRecursive(java.nio.file.Paths.get(s"$base/imi/data"))
+    imiIndexed.repartition(cents._1.length, col("cell1"))
       .sortWithinPartitions("cell1", "cell2")
       .write.mode("overwrite").partitionBy("cell1").parquet(s"$base/imi/data")
-    Layout.imiWrite(indexed, cents, s"$base/sidecars") // for the tsv files
-    for (f <- Seq("_centroids1.tsv", "_centroids2.tsv")) {
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$base/sidecars/$f"), fs,
-        new org.apache.hadoop.fs.Path(s"$base/imi/$f"),
-        false, spark.sessionState.newHadoopConf())
-    }
     assert(!spark.read.parquet(s"$base/imi/data").columns.contains("pair"))
-    val rows = Layout.imiTopKFromLayout(spark, s"$base/imi", queries, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    val direct = Similarity.imiTopK(indexed, cents, queries, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(rows == direct)
-    // append keeps the legacy schema (no pair column creeps in)
-    Layout.imiAppend(emb.where(col("vec_id") >= 9990), s"$base/imi")
-    assert(!spark.read.parquet(s"$base/imi/data").columns.contains("pair"))
+    val imiFiles = layoutFiles(s"$base/imi/data")
+    refusedNaming("imiWrite")(Layout.imiTopKFromLayout(spark, s"$base/imi", queries, k = 5, nProbe = 3))
+    refusedNaming("imiWrite")(Layout.imiAppend(more, s"$base/imi"))
+    assert(layoutFiles(s"$base/imi/data") == imiFiles, "a refused append must write nothing")
   }
 
   test("ANN layout appends: incremental maintenance equals a full rebuild (all four layouts)") {
@@ -461,8 +451,8 @@ class LayoutSpec extends SparkSpec {
     Layout.pqWrite(indexedFull, cents, books, s"$base/pq_full")
     Layout.pqWrite(Similarity.assignCells(half1, cents), cents, books, s"$base/pq_inc")
     Layout.pqAppend(half2, s"$base/pq_inc")
-    assert(sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_inc", emb, queries, k = 5, nProbe = 3)) ==
-      sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_full", emb, queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_full", queries, k = 5, nProbe = 3)))
 
     // IMI raw
     Layout.imiWrite(indexedImiFull, imiCents, s"$base/imi_full")
@@ -475,8 +465,8 @@ class LayoutSpec extends SparkSpec {
     Layout.imiPqWrite(indexedImiFull, imiCents, books, s"$base/imipq_full")
     Layout.imiPqWrite(Similarity.assignImiCells(half1, imiCents), imiCents, books, s"$base/imipq_inc")
     Layout.imiPqAppend(half2, s"$base/imipq_inc")
-    assert(sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_inc", emb, queries, k = 5, nProbe = 3)) ==
-      sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_full", emb, queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_full", queries, k = 5, nProbe = 3)))
 
     // appends landed as ADDITIONAL files inside the same partition
     // dirs — serve stays partition-pruned, no rewrite of existing data
@@ -495,12 +485,12 @@ class LayoutSpec extends SparkSpec {
     assert(files(s"$base/pq_inc/codes") < beforeC)
     assert(sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_inc", queries, k = 5, nProbe = 3)) ==
       sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_full", queries, k = 5, nProbe = 3)))
-    assert(sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_inc", emb, queries, k = 5, nProbe = 3)) ==
-      sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_full", emb, queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_full", queries, k = 5, nProbe = 3)))
     assert(sortedRows(Layout.imiTopKFromLayout(spark, s"$base/imi_inc", queries, k = 5, nProbe = 3)) ==
       sortedRows(Layout.imiTopKFromLayout(spark, s"$base/imi_full", queries, k = 5, nProbe = 3)))
-    assert(sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_inc", emb, queries, k = 5, nProbe = 3)) ==
-      sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_full", emb, queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.imiPqTopKFromLayout(spark, s"$base/imipq_full", queries, k = 5, nProbe = 3)))
     // a fresh append into the compacted layout round-trips
     Layout.pqAppend(queries, s"$base/pq_inc") // re-appending a few rows is legal
     assert(files(s"$base/pq_inc/codes") > 0)

@@ -55,7 +55,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
     // the streamed layout serves IDENTICAL results to the full build
     val queries = emb.where(col("vec_id") < 3)
     def rows(dir: String) =
-      Layout.imiPqTopKFromLayout(spark, dir, emb, queries, k = 5, nProbe = 3)
+      Layout.imiPqTopKFromLayout(spark, dir, queries, k = 5, nProbe = 3)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
         .sorted.toSeq
     assert(rows(s"$base/inc") == rows(s"$base/full"),
