@@ -1,6 +1,9 @@
 package graft.catalog
 
 import graft.core.{Account, VaultName}
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,7 +17,7 @@ final case class UploadEvent(vault: VaultName, cid: String, timestampSec: Long,
                              digest: String = "", window: Option[Long] = None)
 
 /**
- * Vault catalog + per-vault event log as DataFrames.
+ * Vault catalog + per-vault event log.
  *
  * Replaces the reference's provider-side HTTP catalog
  * (`pkg/vaultsprovider/provider.go:39-121`): `create` (M1) appends to the
@@ -22,32 +25,52 @@ final case class UploadEvent(vault: VaultName, cid: String, timestampSec: Long,
  * vault's event log by before/after with limit/offset — the reference's
  * only filter+limit "query" (`cmd/vaults/commands.go:427-586`).
  *
- * Storage: parquet directories under a root path, partition-friendly.
- * At scale the event log is `partitionBy(vault)` so per-vault queries
- * partition-prune instead of scanning the full log.
+ * Storage: two parquet stores under `root`, written only here: `vaults`
+ * (one file per create) and `events`, `partitionBy(vault)` (one file per
+ * vault per append). Their schemas are declared
+ * ([[VaultCatalog.VaultsSchema]], [[VaultCatalog.EventsSchema]]), so no
+ * Spark job runs just to learn a schema from footers, and a file written
+ * before a column existed (events without `digest`/`window`, vaults
+ * without `created_seq`) reads that column as NULL.
  *
- * Both stores are written only here, so their schemas are declared
- * ([[VaultCatalog.VaultsSchema]], [[VaultCatalog.EventsSchema]]) and every
- * read passes them to `spark.read.schema`: no Spark job runs just to
- * learn a schema from footers. A file written before a column existed
- * (events without `digest`/`window`, vaults without `created_seq`) reads
- * that column as NULL. A per-vault read opens only that vault's
- * partition, so a corrupt file in one vault fails that vault's reads and
- * whole-log reads, not another vault's listing.
+ * The per-vault calls (listings, cache durations, vault creates, the
+ * append's replay dedupe) read a driver-side snapshot of each directory
+ * they need: a vault's partition `events/vault=<v>` or the `vaults`
+ * store. A snapshot is keyed by the (name, length, modification time) of
+ * the directory's data files (names not starting with `_` or `.`), from
+ * one listing of that directory alone. While the key is current the call
+ * runs no Spark job; when it changed, one read of exactly the listed
+ * files refreshes every stale directory of the call (only the added
+ * files when every file already read is still listed unchanged, as after
+ * an append). So a listing costs the same whatever the number of vaults,
+ * and a change made through another instance or process shows at the
+ * next call. A missing directory reads as empty; a corrupt file, or a
+ * file that vanishes between the listing and the read, fails the call
+ * and every later call on that directory. Snapshots are held per
+ * instance (the sink's batch thread and a reader may share one) through
+ * soft references, so heap pressure drops them instead of failing the
+ * driver; a vault's holds one row per artifact published to it.
+ *
+ * The whole-store [[events]] and [[vaults]] frames stay Spark reads, for
+ * whole-log queries.
  */
 final case class VaultCatalog(spark: SparkSession, root: String) {
-  import VaultCatalog.{EventsSchema, VaultsSchema}
+  import VaultCatalog.{EventsSchema, ListedSchema, Newest, Snapshot, VaultsSchema}
 
   private def vaultsPath = s"$root/vaults"
   private def eventsPath = s"$root/events"
+  private def partitionPath(vault: String) = s"$eventsPath/vault=$vault"
+
+  private lazy val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+  private val snapshots = new ConcurrentHashMap[String, SoftReference[Snapshot]]()
 
   /** M1: vault create — append a catalog row stamped with a monotonic
     * `created_seq` so "latest row wins" is well-defined (parquet file
     * enumeration order is arbitrary). Catalog mutations are single-writer
     * (CLI control plane), so read-max-then-append is race-free here. */
   def createVault(vault: VaultName, account: Account, cacheDurationMins: Int): Unit = {
-    val nextSeq =
-      vaults.agg(coalesce(max("created_seq"), lit(0L))).collect()(0).getLong(0) + 1L
+    val seqs = vaultRows.filterNot(_.isNullAt(3)).map(_.getLong(3))
+    val nextSeq = seqs.maxOption.getOrElse(0L) + 1L
     frameOf(VaultsSchema, Row(vault.toString, account.address, cacheDurationMins, nextSeq))
       .write.mode("append").parquet(vaultsPath)
   }
@@ -69,29 +92,90 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   private def frameOf(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
+  /** The data files of `dir`, sorted by name, as its snapshot key; empty
+    * when `dir` does not exist. */
+  private def listing(dir: String): Vector[(String, Long, Long)] =
+    try fs.listStatus(new Path(dir)).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toVector.sorted
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
+
+  /** The rows of each directory in `dirs` (of the store at `base`, read
+    * with `schema`), sorted by `order`: from its snapshot while the
+    * snapshot's key is current, else refreshed by one Spark read of the
+    * stale directories' files. A stale snapshot whose files are all still
+    * listed, unchanged, keeps their rows, so only the files added since
+    * are read; any other change re-reads the whole directory. `dirOf`
+    * names a read row's directory. */
+  private def snapshotRows(schema: StructType, base: String, dirs: Seq[String],
+                           order: Ordering[Row])(dirOf: Row => String): Map[String, IndexedSeq[Row]] = {
+    val plans = dirs.distinct.map { d =>
+      val key = listing(d)
+      val listed = key.toSet
+      val prior = Option(snapshots.get(d)).flatMap(r => Option(r.get))
+        .filter(_.key.forall(listed)).getOrElse(Snapshot(Vector.empty, IndexedSeq.empty))
+      (d, key, prior, key.filterNot(prior.key.toSet))
+    }
+    val files = plans.flatMap { case (d, _, _, added) => added.map(f => s"$d/${f._1}") }
+    val read: Map[String, Array[Row]] =
+      if (files.isEmpty) Map.empty
+      else spark.read.schema(schema).option("basePath", base).parquet(files: _*)
+        .collect().groupBy(dirOf)
+    plans.map { case (d, key, prior, added) =>
+      if (added.isEmpty) d -> prior.rows
+      else {
+        val rows = (prior.rows ++ read.getOrElse(d, Array.empty[Row])).sorted(order)
+        snapshots.put(d, new SoftReference(Snapshot(key, rows)))
+        d -> rows
+      }
+    }.toMap
+  }
+
+  /** Every row of the vault catalog, by vault then `created_seq`. */
+  private def vaultRows: IndexedSeq[Row] =
+    snapshotRows(VaultsSchema, vaultsPath, Seq(vaultsPath),
+      Ordering.by((r: Row) => (r.getString(0), if (r.isNullAt(3)) Long.MinValue else r.getLong(3)))
+    )(_ => vaultsPath)(vaultsPath)
+
+  /** The event rows of each of `vaults`, newest first. A vault with no
+    * partition directory has none — unless the events store holds data
+    * files outside every vault partition, which no writer here makes: the
+    * call then fails rather than read a damaged store as empty. */
+  private def eventRows(vaults: Seq[String]): Map[String, IndexedSeq[Row]] = {
+    val rows = snapshotRows(EventsSchema, eventsPath, vaults.map(partitionPath), Newest)(
+      r => partitionPath(r.getString(6)))
+    if (rows.exists(_._2.isEmpty)) {
+      val stray = listing(eventsPath)
+      if (stray.nonEmpty) throw new IllegalStateException(
+        s"$eventsPath holds data files outside any vault partition: ${stray.map(_._1).mkString(", ")}")
+    }
+    vaults.map(v => v -> rows(partitionPath(v))).toMap
+  }
+
   def vaults: DataFrame = readOrEmpty(VaultsSchema, vaultsPath)
 
-  /** Q1: list vaults for an account. */
+  /** Q1: list vaults for an account, sorted by vault. */
   def listVaults(account: Account): DataFrame =
-    vaults.where(col("account") === account.address)
-      .select(col("vault"), col("cache_duration"))
-      .orderBy(col("vault"))
+    frameOf(StructType(Seq(VaultsSchema("vault"), VaultsSchema("cache_duration"))),
+      vaultRows.filter(_.getString(1) == account.address)
+        .map(r => Row(r.get(0), r.get(2))): _*)
 
   /** Cache duration (minutes) configured at vault create, if any. */
   def cacheDurationOf(vault: VaultName): Option[Int] =
     cacheDurations(Seq(vault)).get(vault.toString)
 
-  /** The cache durations of `names` in one read: the row with the highest
+  /** The cache durations of `names`: the row with the highest
     * `created_seq` wins if a vault was re-created (deterministic, unlike
     * file enumeration order; an unsequenced row loses to any other). */
-  private def cacheDurations(names: Seq[VaultName]): Map[String, Int] =
-    vaults.where(col("vault").isin(names.map(_.toString).distinct: _*))
-      .select("vault", "cache_duration", "created_seq").collect()
-      .groupBy(_.getString(0))
+  private def cacheDurations(names: Seq[VaultName]): Map[String, Int] = {
+    val wanted = names.map(_.toString).toSet
+    // rows are sorted by vault then created_seq: the last one wins
+    vaultRows.filter(r => wanted(r.getString(0))).groupBy(_.getString(0))
       .flatMap { case (vault, rows) =>
-        val latest = rows.maxBy(r => if (r.isNullAt(2)) Long.MinValue else r.getLong(2))
-        Option.when(!latest.isNullAt(1))(vault -> latest.getInt(1))
+        Option.when(!rows.last.isNullAt(2))(vault -> rows.last.getInt(2))
       }
+  }
 
   /** P8/M1: record uploaded artifacts' events in one append (one task,
     * so one file per vault per call). Each event's hot-cache expiry is
@@ -106,21 +190,17 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
     * is a distinct (cid, window) and appends. An event without a window
     * always appends: a deliberate re-upload of identical content is an
     * event (`CompactorSpec` pins the repeated cid). The existence check
-    * is one read pruned to the batch's vault partitions and cids; a
-    * failed read throws rather than append a duplicate. Single-writer
-    * per vault (one streaming query owns a vault's exports) makes
-    * read-then-append sound. */
+    * reads the batch vaults' snapshots; a failed read throws rather than
+    * append a duplicate. Single-writer per vault (one streaming query
+    * owns a vault's exports) makes read-then-append sound. */
   def appendEvents(batch: Seq[UploadEvent]): Unit = if (batch.nonEmpty) {
     val mins = cacheDurations(batch.map(_.vault))
-    val windowed = batch.filter(_.window.isDefined)
     // pre-window event files read window = NULL, which never equals a token
     val logged: Set[(String, String, Long)] =
-      if (windowed.isEmpty) Set.empty
-      else events
-        .where(col("vault").isin(windowed.map(_.vault.toString).distinct: _*) &&
-          col("cid").isin(windowed.map(_.cid).distinct: _*) && col("window").isNotNull)
-        .select("vault", "cid", "window").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+      eventRows(batch.filter(_.window.isDefined).map(_.vault.toString)).iterator
+        .flatMap { case (v, rows) =>
+          rows.filterNot(_.isNullAt(5)).map(r => (v, r.getString(0), r.getLong(5)))
+        }.toSet
     val fresh = batch.filterNot(e =>
       e.window.exists(w => logged((e.vault.toString, e.cid, w))))
     if (fresh.nonEmpty)
@@ -136,16 +216,25 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
 
   /**
    * Q2: per-vault event listing with before/after/at/latest filters and
-   * limit/offset, newest-first — semantics of
+   * limit/offset, newest-first (ties by cid) — semantics of
    * `cmd/vaults/commands.go:427-586` (`--at` ⇒ before=after=at;
-   * `--latest N` ⇒ limit=N, offset=0). Partition pruning on `vault` makes
-   * this an index lookup, not a scan, at scale.
+   * `--latest N` ⇒ limit=N, offset=0). Served from the vault's snapshot
+   * as a local frame of (cid, timestamp, is_archived, cache_expiry): no
+   * Spark job while the snapshot is current.
    */
   def listEvents(vault: VaultName,
                  before: Option[Long] = None, after: Option[Long] = None,
                  at: Option[Long] = None,
-                 limit: Option[Int] = None, offset: Option[Int] = None): DataFrame =
-    VaultCatalog.filterEvents(events, vault, before, after, at, limit, offset)
+                 limit: Option[Int] = None, offset: Option[Int] = None): DataFrame = {
+    require(limit.forall(_ >= 0) && offset.forall(_ >= 0),
+      s"limit and offset must not be negative: $limit, $offset")
+    val (b, a) = at.map(t => (Some(t), Some(t))).getOrElse((before, after))
+    val hits = eventRows(Seq(vault.toString))(vault.toString).iterator
+      .filter(r => b.forall(r.getLong(1) <= _) && a.forall(r.getLong(1) >= _))
+      .drop(offset.getOrElse(0))
+    frameOf(ListedSchema, limit.fold(hits)(hits.take)
+      .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3))).toSeq: _*)
+  }
 }
 
 object VaultCatalog {
@@ -159,21 +248,15 @@ object VaultCatalog {
     "cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, " +
       "digest STRING, window BIGINT, vault STRING")
 
-  /** Q2 filter core, shared by the instance method (separated so the
-    * archival view below can reuse the exact newest-first semantics). */
-  private[catalog] def filterEvents(events: DataFrame, vault: VaultName,
-                 before: Option[Long] = None, after: Option[Long] = None,
-                 at: Option[Long] = None,
-                 limit: Option[Int] = None, offset: Option[Int] = None): DataFrame = {
-    val (b, a) = at.map(t => (Some(t), Some(t))).getOrElse((before, after))
-    var df = events.where(col("vault") === vault.toString)
-    b.foreach(t => df = df.where(col("timestamp") <= t))
-    a.foreach(t => df = df.where(col("timestamp") >= t))
-    df = df.orderBy(col("timestamp").desc, col("cid"))
-    offset.foreach(o => df = df.offset(o))
-    limit.foreach(n => df = df.limit(n))
-    df.select("cid", "timestamp", "is_archived", "cache_expiry")
-  }
+  /** The columns a listing returns. */
+  private val ListedSchema: StructType = StructType(EventsSchema.take(4))
+
+  /** Newest first, ties by cid: the listing order. */
+  private val Newest: Ordering[Row] =
+    Ordering.by((r: Row) => r.getLong(1)).reverse.orElseBy(_.getString(0))
+
+  /** A directory's rows and the data files they were read from. */
+  private final case class Snapshot(key: Vector[(String, Long, Long)], rows: IndexedSeq[Row])
 
   /**
    * Retention/archival view of an upload log — the provider-side

@@ -325,13 +325,11 @@ final class VaultSink(
       val artifact =
         if (singleFile) singleParquetFile(stagePath, table, windowToken)
         else {
-          val dir = stagePath.resolveSibling(s"$table-$windowToken")
           // strip _SUCCESS/. markers; keep only data files
           FsUtil.listDir(stagePath)
             .filter(p => !p.getFileName.toString.endsWith(".parquet"))
             .foreach(p => Files.deleteIfExists(p))
-          Files.move(stagePath, dir, StandardCopyOption.REPLACE_EXISTING)
-          dir
+          stagePath
         }
       val sig = signer.map(_.sign(artifact)).getOrElse(Array.emptyByteArray)
       val vault = VaultName(namespace, table)

@@ -1,9 +1,12 @@
 package graft.catalog
 
 import graft.SparkSpec
-import graft.core.{Account, VaultName}
+import graft.core.{Account, FsUtil, VaultName}
 import java.nio.file.{Files, Path}
-import org.apache.spark.graftspec.JobCount
+import org.apache.spark.graftspec.{JobCount, ScanCount}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Q1/Q2/M1 catalog semantics: filters, flag mapping, ordering
   * (cmd/vaults/commands.go:427-586, :787-803, :524-549). */
@@ -25,6 +28,23 @@ class CatalogSpec extends SparkSpec {
 
   private def corrupt(file: Path): Unit =
     Files.write(file, "this is not a parquet file".getBytes("UTF-8"))
+
+  private def jobs(body: => Any): Int = JobCount.of(spark.sparkContext)(body)._2
+
+  /** The Spark filter a listing must equal: newest first, ties by cid,
+    * over a whole-store read of the event log. */
+  private def reference(events: DataFrame, vault: VaultName,
+                        before: Option[Long], after: Option[Long], at: Option[Long],
+                        limit: Option[Int], offset: Option[Int]): DataFrame = {
+    val (b, a) = at.map(t => (Some(t), Some(t))).getOrElse((before, after))
+    var df = events.where(col("vault") === vault.toString)
+    b.foreach(t => df = df.where(col("timestamp") <= t))
+    a.foreach(t => df = df.where(col("timestamp") >= t))
+    df = df.orderBy(col("timestamp").desc, col("cid"))
+    offset.foreach(o => df = df.offset(o))
+    limit.foreach(n => df = df.limit(n))
+    df.select("cid", "timestamp", "is_archived", "cache_expiry")
+  }
 
   test("events: newest-first default, before/after window") {
     val c = freshCatalog(); seed(c)
@@ -194,13 +214,13 @@ class CatalogSpec extends SparkSpec {
     val other = VaultName("ns", "other")
     c.createVault(other, acct, 0)
     for (i <- 1 to 3) c.appendEvents(Seq(UploadEvent(other, s"o$i", i * 10L)))
-    def jobs(body: => Any): Int = JobCount.of(spark.sparkContext)(body)._2
     def files(vault: VaultName): Int =
       Files.list(Path.of(c.root, "events", s"vault=$vault"))
         .filter(_.toString.endsWith(".parquet")).count().toInt
     val filesBefore = Seq(v, other).map(files)
     val counts = Seq(
-      "listEvents" -> jobs(c.listEvents(v, limit = Some(5)).collect()),
+      "stale listEvents" -> jobs(c.listEvents(v, limit = Some(5)).collect()),
+      "current listEvents" -> jobs(c.listEvents(v, limit = Some(5)).collect()),
       "listVaults" -> jobs(c.listVaults(acct).collect()),
       "appendEvents of 1" -> jobs(c.appendEvents(Seq(
         UploadEvent(v, "cidNew", 600L, window = Some(7L))))),
@@ -208,15 +228,100 @@ class CatalogSpec extends SparkSpec {
         UploadEvent(v, "cidA", 700L, window = Some(8L)),
         UploadEvent(v, "cidB", 700L, window = Some(9L)),
         UploadEvent(other, "oNew", 700L, window = Some(8L))))))
-    // each read's own jobs only, no footer job to infer a schema: a top-N
-    // listing is one job; the sorted vault listing samples, shuffles and
-    // collects; an append reads its vaults' cache durations, probes the
-    // log for its (vault, cid, window)s and writes, whatever its size
-    assert(counts == Seq("listEvents" -> 1, "listVaults" -> 3,
-      "appendEvents of 1" -> 3, "appendEvents of 3 in 2 vaults" -> 3))
+    // each read's own jobs only, no footer job to infer a schema: a
+    // listing whose partition changed refreshes its snapshot in one job,
+    // a current one runs none; the vault catalog has not changed since
+    // the appends above read it; an append writes in one job, plus one
+    // refresh of whichever of its vaults' partitions changed
+    assert(counts == Seq("stale listEvents" -> 1, "current listEvents" -> 0,
+      "listVaults" -> 0, "appendEvents of 1" -> 1, "appendEvents of 3 in 2 vaults" -> 2))
     // one file per vault per append
     assert(Seq(v, other).map(files) == filesBefore.zip(Seq(2, 1)).map(p => p._1 + p._2))
     assert(cids(c.listEvents(v, limit = Some(3))) == Seq("cidA", "cidB", "cidNew"))
     assert(cids(c.listEvents(other, limit = Some(1))) == Seq("oNew"))
+  }
+
+  test("listEvents equals the Spark filter on every filter and page") {
+    val c = freshCatalog()
+    c.createVault(v, acct, 30)
+    val w = VaultName("ns", "w")
+    c.createVault(w, acct, 0)
+    // created, never published to: no partition directory
+    val empty = VaultName("ns", "empty")
+    c.createVault(empty, acct, 5)
+    // an old-format file, without digest and window
+    val ts0 = new java.sql.Timestamp(0)
+    spark.createDataFrame(Seq(("old1", 50L, true, ts0), ("old2", 200L, false, ts0)))
+      .toDF("cid", "timestamp", "is_archived", "cache_expiry")
+      .write.parquet(s"${c.root}/events/vault=$v")
+    // three more events at 200: ties list by cid
+    c.appendEvents(Seq(UploadEvent(v, "c200b", 200L, "d", Some(1L)),
+      UploadEvent(v, "c200a", 200L, "d", Some(1L)), UploadEvent(v, "c100", 100L),
+      UploadEvent(v, "c300", 300L, window = Some(2L)), UploadEvent(w, "w250", 250L)))
+    c.appendEvents(Seq(UploadEvent(v, "c200c", 200L), UploadEvent(v, "c400", 400L, "d", Some(3L)),
+      UploadEvent(w, "w100", 100L)))
+    assert(!Files.exists(Path.of(c.root, "events", s"vault=$empty")))
+    // the reference runs over a local copy of the whole-store read
+    val events = spark.createDataFrame(c.events.collect().toSeq.asJava, VaultCatalog.EventsSchema)
+    assert(events.count() == 10)
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val times = Seq(None, Some(100L), Some(200L), Some(250L))
+    val pages = Seq(None, Some(0), Some(2), Some(50))
+    for (vault <- Seq(v, w, empty); b <- times; a <- times; at <- Seq(None, Some(200L), Some(250L));
+         limit <- pages; offset <- pages)
+      assert(rows(c.listEvents(vault, b, a, at, limit, offset)) ==
+        rows(reference(events, vault, b, a, at, limit, offset)),
+        s"listEvents($vault, before = $b, after = $a, at = $at, limit = $limit, offset = $offset)")
+    assert(cids(c.listEvents(v, at = Some(200L))) == Seq("c200a", "c200b", "c200c", "old2"))
+  }
+
+  test("snapshots see changes made through another instance") {
+    val c = freshCatalog(); seed(c)
+    val late = VaultName("ns", "late")
+    assert(cids(c.listEvents(v, limit = Some(1))) == Seq("cid5"))
+    assert(c.cacheDurationOf(late).isEmpty)
+    val writer = VaultCatalog(spark, c.root)
+    writer.appendEvents(Seq(UploadEvent(v, "cid6", 600L, window = Some(6L))))
+    writer.createVault(late, acct, 7)
+    assert(cids(c.listEvents(v, limit = Some(1))) == Seq("cid6"))
+    assert(c.cacheDurationOf(late).contains(7))
+    assert(c.listVaults(acct).collect().map(_.getString(0)).toSeq == Seq("ns.late", "ns.t"))
+  }
+
+  test("a data file rewritten in place after a snapshot fails that vault's listings") {
+    val c = freshCatalog(); seed(c)
+    val other = VaultName("ns", "other")
+    c.appendEvents(Seq(UploadEvent(other, "cidB", 999L)))
+    assert(c.listEvents(v).collect().length == 5)
+    assert(cids(c.listEvents(other)) == Seq("cidB"))
+    FsUtil.listDir(Path.of(c.root, "events", s"vault=$v"))
+      .filter(_.toString.endsWith(".parquet")).take(1).foreach(corrupt)
+    intercept[Exception] { c.listEvents(v).collect() }
+    // a failed refresh leaves nothing to serve: the next call fails too
+    intercept[Exception] { c.listEvents(v).collect() }
+    assert(cids(c.listEvents(other)) == Seq("cidB"))
+  }
+
+  test("in a 40-vault store a listing refresh reads only its own partition, in one job") {
+    val c = freshCatalog()
+    // 25 one-row files in each of 40 vault partitions, in one write
+    spark.range(0, 1000, 1, 25).select(
+      concat(lit("c"), format_string("%04d", col("id"))).as("cid"), col("id").as("timestamp"),
+      lit(false).as("is_archived"), lit(new java.sql.Timestamp(0)).as("cache_expiry"),
+      lit("").as("digest"), lit(null).cast("bigint").as("window"),
+      concat(lit("ns.v"), (col("id") % 40).cast("string")).as("vault"))
+      .write.partitionBy("vault").parquet(s"${c.root}/events")
+    val v7 = VaultName("ns", "v7")
+    val ((listed, scanned), refresh) = JobCount.of(spark.sparkContext)(
+      ScanCount.of(spark)(c.listEvents(v7, limit = Some(3)).collect()))
+    assert(listed.map(_.getLong(1)).toSeq == Seq(967L, 927L, 887L))
+    assert((refresh, scanned) == (1, 25L))
+    assert(jobs(c.listEvents(v7, after = Some(900L)).collect()) == 0)
+    // after an append the refresh reads the appended file alone
+    c.appendEvents(Seq(UploadEvent(v7, "cNew", 2000L)))
+    val ((after, added), again) = JobCount.of(spark.sparkContext)(
+      ScanCount.of(spark)(c.listEvents(v7, after = Some(900L)).collect()))
+    assert(after.map(_.getString(0)).toSeq == Seq("cNew", "c0967", "c0927"))
+    assert((again, added) == (1, 1L))
   }
 }

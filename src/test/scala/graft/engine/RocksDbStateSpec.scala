@@ -14,6 +14,27 @@ import org.apache.spark.sql.streaming.Trigger
 class RocksDbStateSpec extends SparkSpec {
   import spark.implicits._
 
+  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val Default = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+  private val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Run `f` (define + start + drain a streaming query: the provider is
+    * read at query start) with the given state store provider, and
+    * changelog checkpointing under RocksDB; both confs are restored
+    * after. */
+  private def withProvider[T](provider: String)(f: => T): T = {
+    val prev = Seq(ProviderConf, ChangelogConf).map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(ProviderConf, provider)
+    if (provider == RocksDb) spark.conf.set(ChangelogConf, "true")
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private def rec(action: String, xid: Long, lsn: String, id: Int = 0): String =
     s"""{"action": "$action", "xid": $xid, "lsn": "$lsn", "nextlsn": "",
        |"timestamp": "t", "schema": "public", "table": "t",
@@ -22,7 +43,7 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("TxAssembler under RocksDB: same output as default provider") {
     def run(provider: String, tag: String): (Seq[(Long, Long, Seq[String])], String) =
-      StateBackend.withBackend(spark, provider) {
+      withProvider(provider) {
         val base = Files.createTempDirectory(s"txasm-$tag").toString
         val in = s"$base/in"; Files.createDirectories(Paths.get(in))
         Files.writeString(Paths.get(in, "a.json"), Seq(
@@ -43,8 +64,8 @@ class RocksDbStateSpec extends SparkSpec {
         (out, progress)
       }
 
-    val (rocksOut, rocksProgress) = run(StateBackend.RocksDb, "rocks")
-    val (defaultOut, _) = run(StateBackend.Default, "dflt")
+    val (rocksOut, rocksProgress) = run(RocksDb, "rocks")
+    val (defaultOut, _) = run(Default, "dflt")
     assert(rocksOut == defaultOut)
     assert(rocksOut.map(t => (t._1, t._2)) == Seq((0x1FL, 10L), (0x2FL, 20L)))
     assert(rocksProgress.toLowerCase.contains("rocksdb"),
@@ -52,7 +73,7 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("streaming watermark dedup under RocksDB: cross-batch dups suppressed") {
-    StateBackend.withBackend(spark, StateBackend.RocksDb) {
+    withProvider(RocksDb) {
       val base = Files.createTempDirectory("rocksdedup").toString
       val in = s"$base/in"; Files.createDirectories(Paths.get(in))
       def write(rows: Seq[(Long, String, String)]): Unit =
@@ -79,9 +100,9 @@ class RocksDbStateSpec extends SparkSpec {
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(ids == Seq(1L, 3L), s"got $ids")
       // RocksDB instances left local working dirs (proof of engagement)
-      assert(spark.conf.get(StateBackend.ProviderConf) == StateBackend.RocksDb)
+      assert(spark.conf.get(ProviderConf) == RocksDb)
     }
     // scope restored
-    assert(spark.conf.getOption(StateBackend.ProviderConf).forall(_ != StateBackend.RocksDb))
+    assert(spark.conf.getOption(ProviderConf).forall(_ != RocksDb))
   }
 }
