@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /**
  * Benchmark main (driver contract): runs every SparkEntry query on
@@ -10,7 +11,8 @@ import org.apache.spark.sql.SparkSession
  * over JIT-heavy custom code (EC point math, fused vector expressions)
  * run 5-6x slower on their first execution while C2 compiles the hot
  * loops — a partial warmup would charge that one-time cost to whichever
- * queries happen to run first.
+ * queries happen to run first. Each row's first timed run is also counted
+ * by [[WorkCounters]]; the counters go to the artifact under `counters`.
  */
 object Bench {
   private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -38,8 +40,59 @@ object Bench {
     }.toMap
   }
 
+  /** The trivial queries whose timings tell a contended host. */
+  private val sentinels = Seq("q_distinct", "q_topk", "q_zorder")
+
+  /** (sentinel references, per-query references) from a committed
+    * artifact. A contended artifact's own timings must not become the
+    * reference — but its `<q>_ref` fields CARRY the last good sentinel
+    * values forward, so the tripwire survives a run of consecutive
+    * contended windows instead of silently disarming after the first one.
+    * The confirm pass (per-query refs) does disarm until a clean
+    * reference exists again. An artifact not marked contended must carry
+    * its `queries` map: reading it as empty would disarm the confirm pass
+    * and the `regressed` flag without a word. */
+  def reference(txt: String): (Map[String, Double], Map[String, Double]) = {
+    val contended = "\"host_contended\":(true|false)".r.findFirstMatchIn(txt)
+      .exists(_.group(1) == "true")
+    val sObj = flatObj(txt, "sentinels")
+    if (contended)
+      (sentinels.flatMap(s => sObj.get(s + "_ref").map(s -> _)).toMap, Map.empty)
+    else {
+      require(txt.contains("\"queries\":{"),
+        "bench reference is not marked host_contended and has no \"queries\" map")
+      (sObj.filter { case (k, _) => sentinels.contains(k) }, flatObj(txt, "queries"))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Committed reference map. Two uses: (1) host-contention tripwire —
+    // sentinel timings that balloon 3x+ on trivial queries flag the
+    // whole artifact; (2) the per-query confirm pass — any query slower
+    // than 1.5x its committed reference gets a third run and is flagged
+    // even when its own two runs agree (a both-runs-slow query is
+    // invisible to run-to-run spread; q_corpus_curate's 6.8s-vs-2.9s
+    // same-code swing is the motivating case).
+    //
+    // r16 structural fix for the three-rounds-running round-close
+    // split-brain: Bench READS the reference but never writes it. The
+    // run's full map goes to BENCH_LAST_RUN.json (gitignored), so the
+    // only path into the committed reference is an explicit, gated
+    // `tools/adopt_bench.py CANDIDATE --adopt` — a raw slow-window run
+    // sitting in the working tree can no longer be committed by the
+    // driver's round-close snapshot.
+    //
+    // Only an absent file reads as "no reference"; any other read or
+    // parse failure stops the run here, before a session starts, instead
+    // of silently disarming both gates.
+    val qfile = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_QUERIES.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST_RUN.json")
+    val (refSentinels, refQueries): (Map[String, Double], Map[String, Double]) =
+      try reference(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(qfile)), "UTF-8"))
+      catch { case _: java.nio.file.NoSuchFileException => (Map.empty, Map.empty) }
+
     // default 32 = the documented local[32] target (and every other
     // runner's default). r17: two full runs at an accidental local[4]
     // made the CPU-dense ristretto rows read as 3.3x "regressions" —
@@ -56,50 +109,11 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Committed reference map. Two uses: (1) host-contention tripwire —
-    // sentinel timings that balloon 3x+ on trivial queries flag the
-    // whole artifact; (2) the per-query confirm pass — any query slower
-    // than 1.5x its committed reference gets a third run and is flagged
-    // even when its own two runs agree (a both-runs-slow query is
-    // invisible to run-to-run spread; q_corpus_curate's 6.8s-vs-2.9s
-    // same-code swing is the motivating case).
-    //
-    // r16 structural fix for the three-rounds-running round-close
-    // split-brain: Bench READS the reference but never writes it. The
-    // run's full map goes to BENCH_LAST_RUN.json (gitignored), so the
-    // only path into the committed reference is an explicit, gated
-    // `tools/adopt_bench.py CANDIDATE --adopt` — a raw slow-window run
-    // sitting in the working tree can no longer be committed by the
-    // driver's round-close snapshot.
-    val qfile = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_QUERIES.json")
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST_RUN.json")
-    val sentinels = Seq("q_distinct", "q_topk", "q_zorder")
-    val (refSentinels, refQueries): (Map[String, Double], Map[String, Double]) =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(qfile)), "UTF-8")
-        val refContended =
-          "\"host_contended\":(true|false)".r.findFirstMatchIn(txt)
-            .exists(_.group(1) == "true")
-        val sObj = flatObj(txt, "sentinels")
-        if (refContended)
-          // a contended artifact's own timings must not become the
-          // reference — but its `<q>_ref` fields CARRY the last good
-          // sentinel values forward, so the tripwire survives a run of
-          // consecutive contended windows instead of silently disarming
-          // after the first one. The confirm pass (per-query refs) does
-          // disarm until a clean reference exists again.
-          (sentinels.flatMap(s => sObj.get(s + "_ref").map(s -> _)).toMap,
-           Map.empty[String, Double])
-        else (sObj.filter { case (k, _) => sentinels.contains(k) },
-              flatObj(txt, "queries"))
-      } catch { case _: Throwable => (Map.empty, Map.empty) }
-
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
     // warmup: run every query once (scan + shuffle + codegen + JIT)
     qs.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -107,7 +121,7 @@ object Bench {
       // noop sink: materializes every output column (count() would let
       // Catalyst prune projections and under-measure map-only queries)
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -127,7 +141,7 @@ object Bench {
     // refuses steal-polluted ones. Runs OUTSIDE every per-query timer.
     val membwPre = HostSteal.memProbe()
     val raw = qs.map { case (name, fn) =>
-      val a = timeOnce(fn)
+      val (a, work) = WorkCounters.of(spark)(timeOnce(fn))
       val b = timeOnce(fn)
       // confirm pass: both runs above 1.5x the committed reference (with
       // a 0.25s absolute floor so sub-second job-overhead constants don't
@@ -138,12 +152,12 @@ object Bench {
         if (minAb > 0 && ref > 0 && minAb > 1.5 * ref && minAb - ref >= 0.25)
           timeOnce(fn)
         else -1.0
-      (name, Seq(a, b, c).filter(_ >= 0))
+      (name, Seq(a, b, c).filter(_ >= 0), work)
     }
     val runStolenFrac =
       HostSteal.stolenFrac(stealTicks0, HostSteal.ticks()).getOrElse(-1.0)
     val membwPost = HostSteal.memProbe()
-    val results = raw.map { case (name, runs) =>
+    val results = raw.map { case (name, runs, _) =>
       name -> (if (runs.size < 2) -1.0 else runs.min)
     }
     // run-to-run spread per query (the timed runs' max/min): queries
@@ -151,10 +165,10 @@ object Bench {
     // measurements are visible in the artifact instead of silently
     // flattened by min-of-n (q_cdc_roundtrip's judged 0.9s-vs-8s round-8
     // bimodality is the motivating case)
-    val unstable = raw.filter { case (_, runs) =>
+    val unstable = raw.filter { case (_, runs, _) =>
       runs.size >= 2 && runs.max / runs.min >= 1.5 && runs.max - runs.min >= 0.25
     }
-    val spreadJson = unstable.map { case (n, runs) =>
+    val spreadJson = unstable.map { case (n, runs, _) =>
       "\"" + n + "\":[" + fmt(runs.min) + "," + fmt(runs.max) + "]"
     }.mkString("{", ",", "}")
     // regressions the confirm pass could NOT explain away: best-of-3
@@ -186,6 +200,8 @@ object Bench {
       }))).mkString("{", ",", "}")
     val qjson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    val countersJson = raw.map { case (k, _, work) => "\"" + k + "\":" + work.json }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // a query whose timed runs threw reads -1 in the map and stays out of
     // `total`; naming it here keeps a breakage from passing as a speed-up
@@ -206,10 +222,9 @@ object Bench {
     //     budget instead of a fixed top-20. build.sbt's StdoutOutput +
     //     showSuccess=false guarantee this line is the LAST line of
     //     stdout, unprefixed — the two properties the parser needs.
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"sentinels":$sentinelJson,"spread":$spreadJson,"regressed":$regressedJson,"failed":$failedJson,"queries":$qjson}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"sentinels":$sentinelJson,"spread":$spreadJson,"regressed":$regressedJson,"failed":$failedJson,"queries":$qjson,"counters":$countersJson}"""
+    // the summary line names this file: a failed write fails the run
+    java.nio.file.Files.write(java.nio.file.Paths.get(outFile), (full + "\n").getBytes("UTF-8"))
     spark.stop() // before the contract lines: nothing may print after them
     println(full)
     val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"host_contended":$contended,"stolen_frac":${fmt(runStolenFrac)},"membw_probe_sec":[${fmt(membwPre)},${fmt(membwPost)}],"failed":$failedJson,"queries_file":"$outFile","queries":"""

@@ -7,12 +7,12 @@ package graft
   * and trivial sentinels cannot see, and which point probes bracketing
   * a multi-second row miss entirely (the bursts live in the row's
   * interior — eight 1.3-2.0x loosenings were "certified" in-band by
-  * brackets while /proc/stat showed mean stolen_frac 0.30). BenchRows,
-  * the certification main for the sf0.1 map, therefore integrates
-  * steal OVER the timed body and disqualifies reads whose stolen
-  * fraction exceeds its threshold. (The 1000x registry rows in
-  * SCALING_1000.json were certified the same way; `graft.Measure time`
-  * re-reads them without a gate.)
+  * brackets while /proc/stat showed mean stolen_frac 0.30). `graft.Bench`
+  * therefore integrates steal OVER its whole timed pass and records the
+  * fraction, which `tools/adopt_bench.py` gate 4 refuses above 0.05.
+  * (The 1000x registry rows in SCALING_1000.json were certified with
+  * per-row steal integration; `graft.Measure time` re-reads them
+  * without a gate.)
   *
   * stolen_frac = steal / (busy + steal): the fraction of time the
   * guest's runnable vCPUs were denied the physical CPU; the effective

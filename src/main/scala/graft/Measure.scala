@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /**
@@ -14,16 +11,17 @@ import scala.util.control.NonFatal
  *   amplify <srcDir> <outDir> <factor> <table>...
  *     key-shifted copies of each table (the scale fixtures of SCALING.md)
  *   time [--runs N] <dir>[,<dir>...] [query...]
- *     one untimed warm-up per query on the first dir, then N timed runs
- *     (default 3) on every dir: wall, GC and per-stage lines per run,
- *     then the minimum per (query, dir)
+ *     one untimed warm-up per query on the first dir, then N >= 1 timed
+ *     runs (default 3) on every dir: per run the wall-clock and the
+ *     [[WorkCounters]] JSON, then the minimum per (query, dir)
  *   explain <dir> [query...]
  *     the formatted physical plan of each query under a
  *     `========== name ==========` header (`tools/split_plans.py` splits them)
  *
  * Queries are SparkEntry names plus the pseudo-queries `walread` and
- * `waldecode`; naming none means every registered query. An unknown
- * name, or a query that throws, makes the runner exit non-zero.
+ * `waldecode`; naming none means every registered query. Bad arguments
+ * (an unknown name, a run count below 1 or not a number) print the usage
+ * and exit 2 before a session starts; a query that throws exits 1.
  *
  * Session: local[SPARK_GRAFT_CPUS] (default 32), shuffle partitions =
  * cores, plus any `SPARK_GRAFT_CONF="k=v,k=v"` settings (the 1000x
@@ -81,56 +79,56 @@ object Measure {
     "waldecode" -> ((s, dir) => graft.cdc.WalDecoder.decodeTables(s,
       walLines(s, dir), Seq(CdcQueries.eventsSchema))("events")))
 
-  /** The one name lookup both `time` and `explain` use. */
-  private def resolve(names: Seq[String]): Seq[(String, Query)] =
-    (if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names).map { n =>
-      n -> pseudoQueries.orElse(SparkEntry.queries).applyOrElse(n, (_: String) =>
-        throw new IllegalArgumentException(s"unknown query $n; known: " +
-          (pseudoQueries.keys ++ SparkEntry.queries.keys).toSeq.sorted.mkString(",")))
+  private val known: Map[String, Query] = SparkEntry.queries ++ pseudoQueries
+
+  /** A parsed command line; query names are resolved and known. */
+  sealed trait Command
+  final case class Amplify(src: String, out: String, factor: Int, tables: Seq[String])
+    extends Command
+  final case class Time(dirs: Seq[String], queries: Seq[String], runs: Int) extends Command
+  final case class Explain(dir: String, queries: Seq[String]) extends Command
+
+  private val Usage: String = "usage: Measure amplify <srcDir> <outDir> <factor> <table>... | " +
+    "time [--runs N] <dir>[,<dir>...] [query...] | explain <dir> [query...]"
+
+  /** The command `args` name, or why they name none. Needs no session. */
+  def parse(args: List[String]): Either[String, Command] = {
+    def positive(what: String, n: String) =
+      n.toIntOption.filter(_ >= 1).toRight(s"$what must be an integer >= 1, got '$n'")
+    def names(ns: List[String]) =
+      if (ns.isEmpty) Right(SparkEntry.queries.keys.toSeq.sorted)
+      else ns.find(!known.contains(_)).map(n =>
+        s"unknown query $n; known: ${known.keys.toSeq.sorted.mkString(",")}").toLeft(ns)
+    args match {
+      case "amplify" :: src :: out :: factor :: tables if tables.nonEmpty =>
+        positive("factor", factor).map(Amplify(src, out, _, tables))
+      case "time" :: "--runs" :: n :: dirs :: qs =>
+        for (runs <- positive("--runs", n); q <- names(qs)) yield Time(dirs.split(",").toSeq, q, runs)
+      case "time" :: dirs :: qs if dirs != "--runs" =>
+        names(qs).map(Time(dirs.split(",").toSeq, _, runs = 3))
+      case "explain" :: dir :: qs => names(qs).map(Explain(dir, _))
+      case _ => Left("bad arguments")
     }
+  }
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  private def gcStats(): (Long, Long) = {
-    val beans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-    (beans.map(_.getCollectionTime).sum, beans.map(_.getCollectionCount).sum)
-  }
-
   /** Times `queries`; returns false if any of them threw. */
-  private def time(spark: SparkSession, dirs: Seq[String], queries: Seq[(String, Query)],
+  private def time(spark: SparkSession, dirs: Seq[String], queries: Seq[String],
                    runs: Int): Boolean = {
-    // per stage: id, wall (submission to completion), task run-time sum,
-    // task count — separates stragglers from driver-side gaps
-    val stages = new ConcurrentLinkedQueue[(Int, Double, Double, Int)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val info = sc.stageInfo
-        val wall = (for (s <- info.submissionTime; c <- info.completionTime)
-          yield (c - s) / 1e3).getOrElse(-1.0)
-        stages.add((info.stageId, wall, info.taskMetrics.executorRunTime / 1e3, info.numTasks))
-      }
-    })
     var ok = true
     def attempt(name: String, dir: String, what: String)(body: => Unit): Boolean =
       try { body; true } catch { case NonFatal(e) =>
         println(s"[measure] $name $dir $what FAILED: $e"); ok = false; false }
     def timedRun(name: String, dir: String, fn: Query, i: Int): Option[Double] = {
-      stages.clear()
-      val (gc0, n0) = gcStats()
-      val t0 = System.nanoTime()
-      if (!attempt(name, dir, s"run $i")(noop(fn(spark, dir)))) return None
-      val wall = (System.nanoTime() - t0) / 1e9
-      val (gc1, n1) = gcStats()
-      Thread.sleep(200) // let stage-completed events drain
-      val st = stages.asScala.toVector.sortBy(_._1)
-      println(f"[measure] $name $dir run $i%2d  wall=$wall%7.3f s  gc=${(gc1 - gc0) / 1000.0}%6.3f s  " +
-        f"collections=${n1 - n0}  stageWallSum=${st.map(_._2).sum}%7.3f")
-      st.foreach { case (id, w, run, nt) =>
-        println(f"[measure]      stage $id%4d wall=$w%7.3f s  taskRunSum=$run%7.3f s  tasks=$nt%3d")
+      val ((done, wall), work) = WorkCounters.of(spark) {
+        val t0 = System.nanoTime()
+        (attempt(name, dir, s"run $i")(noop(fn(spark, dir))), (System.nanoTime() - t0) / 1e9)
       }
-      Some(wall)
+      if (done) println(f"[measure] $name $dir run $i%2d  wall=$wall%7.3f s  counters=${work.json}")
+      Option.when(done)(wall)
     }
-    for ((name, fn) <- queries)
+    for (name <- queries; fn = known(name))
       if (attempt(name, dirs.head, "warm-up")(noop(fn(spark, dirs.head))))
         for (dir <- dirs) {
           val walls = Iterator.range(1, runs + 1).map(timedRun(name, dir, fn, _))
@@ -140,10 +138,10 @@ object Measure {
     ok
   }
 
-  private def explain(spark: SparkSession, dir: String, queries: Seq[(String, Query)]): Unit =
-    queries.foreach { case (name, fn) =>
+  private def explain(spark: SparkSession, dir: String, queries: Seq[String]): Unit =
+    queries.foreach { name =>
       println(s"\n========== $name ==========")
-      fn(spark, dir).explain("formatted")
+      known(name)(spark, dir).explain("formatted")
     }
 
   private def session(): SparkSession = {
@@ -171,25 +169,16 @@ object Measure {
 
   def main(args: Array[String]): Unit = {
     // parse (and resolve query names) before paying for a session
-    val verb: SparkSession => Boolean = args.toList match {
-      case "amplify" :: src :: out :: factor :: tables if tables.nonEmpty =>
-        spark => { amplify(spark, src, out, factor.toInt, tables); true }
-      case "time" :: "--runs" :: n :: dirs :: names =>
-        val qs = resolve(names)
-        spark => time(spark, dirs.split(",").toSeq, qs, n.toInt)
-      case "time" :: dirs :: names =>
-        val qs = resolve(names)
-        spark => time(spark, dirs.split(",").toSeq, qs, runs = 3)
-      case "explain" :: dir :: names =>
-        val qs = resolve(names)
-        spark => { explain(spark, dir, qs); true }
-      case _ =>
-        System.err.println("usage: Measure amplify <srcDir> <outDir> <factor> <table>... | " +
-          "time [--runs N] <dir>[,<dir>...] [query...] | explain <dir> [query...]")
-        sys.exit(2)
-    }
+    val cmd = parse(args.toList).fold({ why =>
+      System.err.println(s"$why\n$Usage")
+      sys.exit(2)
+    }, identity)
     val spark = session()
-    val ok = try verb(spark) finally spark.stop()
+    val ok = try cmd match {
+      case Amplify(src, out, factor, tables) => amplify(spark, src, out, factor, tables); true
+      case Time(dirs, queries, runs) => time(spark, dirs, queries, runs)
+      case Explain(dir, queries) => explain(spark, dir, queries); true
+    } finally spark.stop()
     if (!ok) sys.exit(1)
   }
 }

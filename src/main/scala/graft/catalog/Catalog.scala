@@ -214,6 +214,13 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
 
   def events: DataFrame = readOrEmpty(EventsSchema, eventsPath)
 
+  /** The digest on `cid`'s newest event in `vault`'s log ("" when none was
+    * recorded), None when the log has no such cid. Read from the vault's
+    * snapshot: no Spark job while it is current. */
+  def digestOf(vault: VaultName, cid: String): Option[String] =
+    eventRows(Seq(vault.toString))(vault.toString).find(_.getString(0) == cid)
+      .map(r => Option(r.getString(4)).getOrElse(""))
+
   /**
    * Q2: per-vault event listing with before/after/at/latest filters and
    * limit/offset, newest-first (ties by cid) — semantics of

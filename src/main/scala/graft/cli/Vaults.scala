@@ -96,23 +96,20 @@ final class Vaults(
   def retrieve(cid: String, output: String = "-"): Boolean =
     new Retriever(store).retrieveTo(cid, output)
 
-  /** Beyond-reference: `vaults verify <cid>` — retrieve the artifact and
-    * check its rows against the ECMH digest recorded on its catalog
-    * event. Returns Some(true/false) (false = no digest was recorded),
-    * None when the cid is unknown to the catalog or unretrievable;
-    * throws on a digest MISMATCH (corrupt/tampered content). */
-  def verifyArtifact(cid: String, schema: graft.cdc.TableSchema): Option[Boolean] = {
-    import org.apache.spark.sql.functions.col
-    val ev = catalog.events.where(col("cid") === cid)
-      .select("digest").collect().headOption
-    ev.flatMap { row =>
-      val digest = row.getString(0)
-      if (digest == null || digest.isEmpty) Some(false)
+  /** Beyond-reference: `vaults verify <vault> <cid>` — retrieve the
+    * artifact and check its rows against the ECMH digest recorded on its
+    * catalog event. The event is looked up in the vault's catalog
+    * snapshot (no Spark job while it is current). Returns Some(true/false)
+    * (false = no digest was recorded), None when the cid is not in the
+    * vault's log or is unretrievable; throws on a digest MISMATCH
+    * (corrupt/tampered content). */
+  def verifyArtifact(vault: String, cid: String, schema: graft.cdc.TableSchema): Option[Boolean] =
+    catalog.digestOf(VaultName.unsafe(vault), cid).flatMap { digest =>
+      if (digest.isEmpty) Some(false)
       else new Retriever(store)
         .retrieveVerified(spark, cid, digest, schema.columns.map(_.name))
         .map(_ => true)
     }
-  }
 
   /** C3: `vaults account create <keyfile>` → prints address */
   def accountCreate(keyFile: String): String = Signer.createAccount(Paths.get(keyFile))

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -9,7 +11,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * (Spark 4 moved Column to a ColumnNode representation; this is the
  * supported internal hop for libraries that define Catalyst expressions).
  */
-object Bridge {
+object Bridge extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
@@ -17,6 +19,27 @@ object Bridge {
   def showString(df: org.apache.spark.sql.DataFrame, numRows: Int, truncate: Int): String =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .showString(numRows, truncate)
+
+  /** Wait until every queued listener event was delivered. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Listeners on the context's bus, for specs that check one was removed. */
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+
+  /** Files read by the file scans of the SQL execution whose end `e` is,
+    * if `ours` accepts its id (the `spark.sql.execution.id` its jobs
+    * carry): the `numFiles` metric summed over every file scan of the
+    * executed plan, AQE stages and subqueries included. 0 for any other
+    * event. Only an accepted execution's plan is touched, so an execution
+    * that failed before it was planned is never re-planned here. */
+  def scannedFiles(e: SparkListenerEvent, ours: Long => Boolean): Long = e match {
+    case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+        if x.qe != null && ours(x.executionId) =>
+      collectWithSubqueries(x.qe.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.flatMap(_.metrics.get("numFiles").map(_.value)).sum
+    case _ => 0L
+  }
 
   /** `numFiles` metric of every file scan in an EXECUTED plan (run an
     * action first; AQE subtrees are unwrapped). Lets specs assert

@@ -1,9 +1,8 @@
 package graft.catalog
 
-import graft.SparkSpec
+import graft.{SparkSpec, WorkCounters}
 import graft.core.{Account, FsUtil, VaultName}
 import java.nio.file.{Files, Path}
-import org.apache.spark.graftspec.{JobCount, ScanCount}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -29,7 +28,7 @@ class CatalogSpec extends SparkSpec {
   private def corrupt(file: Path): Unit =
     Files.write(file, "this is not a parquet file".getBytes("UTF-8"))
 
-  private def jobs(body: => Any): Int = JobCount.of(spark.sparkContext)(body)._2
+  private def jobs(body: => Any): Int = WorkCounters.of(spark)(body)._2.jobs
 
   /** The Spark filter a listing must equal: newest first, ties by cid,
     * over a whole-store read of the event log. */
@@ -312,16 +311,14 @@ class CatalogSpec extends SparkSpec {
       concat(lit("ns.v"), (col("id") % 40).cast("string")).as("vault"))
       .write.partitionBy("vault").parquet(s"${c.root}/events")
     val v7 = VaultName("ns", "v7")
-    val ((listed, scanned), refresh) = JobCount.of(spark.sparkContext)(
-      ScanCount.of(spark)(c.listEvents(v7, limit = Some(3)).collect()))
+    val (listed, refresh) = WorkCounters.of(spark)(c.listEvents(v7, limit = Some(3)).collect())
     assert(listed.map(_.getLong(1)).toSeq == Seq(967L, 927L, 887L))
-    assert((refresh, scanned) == (1, 25L))
+    assert((refresh.jobs, refresh.files) == (1, 25L))
     assert(jobs(c.listEvents(v7, after = Some(900L)).collect()) == 0)
     // after an append the refresh reads the appended file alone
     c.appendEvents(Seq(UploadEvent(v7, "cNew", 2000L)))
-    val ((after, added), again) = JobCount.of(spark.sparkContext)(
-      ScanCount.of(spark)(c.listEvents(v7, after = Some(900L)).collect()))
+    val (after, again) = WorkCounters.of(spark)(c.listEvents(v7, after = Some(900L)).collect())
     assert(after.map(_.getString(0)).toSeq == Seq("cNew", "c0967", "c0927"))
-    assert((again, added) == (1, 1L))
+    assert((again.jobs, again.files) == (1, 1L))
   }
 }

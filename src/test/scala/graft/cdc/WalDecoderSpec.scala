@@ -1,7 +1,6 @@
 package graft.cdc
 
-import graft.SparkSpec
-import org.apache.spark.graftspec.JobCount
+import graft.{SparkSpec, WorkCounters}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
@@ -353,11 +352,11 @@ class WalDecoderSpec extends SparkSpec {
       "text dir" -> spark.read.text(dir.toString))
     val schema = TableSchema("t", Seq(TableColumn("c", "integer", true, true)))
     for ((feed, lines) <- feeds) {
-      val (frames, jobs) = JobCount.of(spark.sparkContext)(Seq(
+      val (frames, work) = WorkCounters.of(spark)(Seq(
         "decodeTables" -> WalDecoder.decodeTables(spark, lines, Seq(schema))("t"),
         "decodeTablesWithTs" -> WalDecoder.decodeTablesWithTs(spark, lines, Seq(schema))("t"),
         "latestState" -> CdcMerge.latestState(lines, schema, strict = true)))
-      assert(jobs == 0, s"$feed: building the frames ran $jobs Spark jobs")
+      assert(work.jobs == 0, s"$feed: building the frames ran ${work.jobs} Spark jobs")
       for ((entry, df) <- frames) {
         val plan = df.queryExecution.optimizedPlan
         assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))) &&

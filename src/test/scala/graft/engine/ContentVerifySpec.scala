@@ -1,7 +1,9 @@
 package graft.engine
 
-import graft.SparkSpec
+import graft.{SparkSpec, WorkCounters}
+import graft.catalog.UploadEvent
 import graft.cdc.{TableColumn, TableSchema}
+import graft.core.VaultName
 import java.nio.file.{Files, Paths}
 
 /** Vault-content verification (Q3 × C2): the sink records each
@@ -52,9 +54,23 @@ class ContentVerifySpec extends SparkSpec {
     // the CLI verb wraps the same check: catalog lookup → verified read
     val cli = new graft.cli.Vaults(spark, base)
     events.foreach { e =>
-      assert(cli.verifyArtifact(e.getString(0), schemaT) == Some(true))
+      assert(cli.verifyArtifact("ns.t", e.getString(0), schemaT) == Some(true))
     }
-    assert(cli.verifyArtifact("no-such-cid", schemaT).isEmpty)
+    assert(cli.verifyArtifact("ns.t", "no-such-cid", schemaT).isEmpty)
+
+    // the lookup reads the vault's own log: another vault's cid is unknown
+    // here, and this vault's cids are unknown there
+    catalog.appendEvents(Seq(UploadEvent(VaultName("ns", "other"), "cid-other", 5L, "00" * 32),
+      UploadEvent(VaultName("ns", "t"), "cid-undigested", 6L)))
+    assert(cli.verifyArtifact("ns.t", "cid-other", schemaT).isEmpty)
+    assert(cli.verifyArtifact("ns.other", events.head.getString(0), schemaT).isEmpty)
+    assert(cli.verifyArtifact("ns.t", "cid-undigested", schemaT) == Some(false))
+
+    // on a current snapshot the lookup runs no Spark job and reads no file
+    for (cid <- Seq("cid-undigested", "cid-other", "no-such-cid")) {
+      val (_, work) = WorkCounters.of(spark)(cli.verifyArtifact("ns.t", cid, schemaT))
+      assert((work.jobs, work.files) == (0, 0L), s"$cid: $work")
+    }
   }
 
   test("tampered artifact fails verification loudly") {
@@ -62,7 +78,7 @@ class ContentVerifySpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base/wal"))
     Files.writeString(Paths.get(s"$base/wal/a.json"), walTx(1, 1 -> "one"))
     val store = new LocalContentStore(s"$base/store")
-    val catalog = new graft.catalog.VaultCatalog(spark, s"$base/catalog")
+    val catalog = new graft.catalog.VaultCatalog(spark, base)
     val q = StreamPipeline.start(spark, "ns", Seq(schemaT), s"$base/wal",
       s"$base/staging", s"$base/ckpt", store, catalog = Some(catalog),
       availableNow = true)
@@ -84,5 +100,10 @@ class ContentVerifySpec extends SparkSpec {
       r.retrieveVerified(spark, cid, digest, schemaT.columns.map(_.name))
     }
     assert(ex.getMessage.contains("digest mismatch"))
+    // the CLI verb fails as loudly
+    val cliEx = intercept[IllegalStateException] {
+      new graft.cli.Vaults(spark, base).verifyArtifact("ns.t", cid, schemaT)
+    }
+    assert(cliEx.getMessage.contains("digest mismatch"))
   }
 }

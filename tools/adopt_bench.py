@@ -127,11 +127,10 @@ def main():
     if zeroish:
         failures.append(
             f"spread rows with min <= 0 (broken timing?): {sorted(zeroish)}")
-    # r19: BenchRows candidates now record EVERY accepted row's runs here
-    # (previously only predicate-failing rows, which was vacuous). Mirror
-    # BenchRows' absolute-diff escape: a sub-second row whose two runs
-    # differ by < 0.25 s can post a large RATIO without the window being
-    # unhealthy, and BenchRows accepted it on exactly that basis.
+    # Bench records a row's runs here only when they spread; a candidate
+    # may also record every row's runs. Mirror Bench's absolute-diff
+    # escape: a sub-second row whose two runs differ by < 0.25 s can post
+    # a large RATIO without the window being unhealthy.
     worst = max(((mx / mn, k, mn, mx) for k, (mn, mx) in spread.items()
                  if mn > 0 and (mx - mn) >= 0.25),
                 default=None)
