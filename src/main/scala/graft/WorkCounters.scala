@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler._
@@ -10,8 +11,11 @@ import org.apache.spark.sql.graftbridge.Bridge
  * The Spark work a block runs, counted by a listener that lives only for
  * the block: jobs, stages and tasks, executor CPU, run and GC time, input
  * bytes and records, files scanned, shuffle read and write bytes, and
- * memory and disk spill. Unlike wall-clock, the job, stage, file, byte and
- * record counts do not move with host load.
+ * memory and disk spill; plus the calling thread's own CPU time (planning,
+ * driver-side loops over collected rows), which no executor counter sees.
+ * Unlike wall-clock, the file and record counts do not move with host
+ * load, and the job, stage, task and byte counts move little (see
+ * [[Bench]] for what moved between two runs of the same code).
  *
  * Only work submitted from the calling thread counts: the block runs with
  * a local property naming it, and a job counts when it carries that tag.
@@ -32,22 +36,34 @@ object WorkCounters {
   private val ExecutionId = "spark.sql.execution.id"
   private val seq = new AtomicInteger
 
-  /** One block's counters. Times are summed over tasks, so on many cores
-    * CPU and run time exceed the block's wall-clock. */
-  final case class Counters(jobs: Int, stages: Int, tasks: Long, cpuNs: Long, runMs: Long,
-                            gcMs: Long, inputBytes: Long, inputRecords: Long, files: Long,
-                            shuffleReadBytes: Long, shuffleWriteBytes: Long,
+  /** One block's counters. Executor times are summed over tasks, so on
+    * many cores CPU and run time exceed the block's wall-clock. */
+  final case class Counters(jobs: Int, stages: Int, tasks: Long, cpuNs: Long, driverCpuNs: Long,
+                            runMs: Long, gcMs: Long, inputBytes: Long, inputRecords: Long,
+                            files: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
                             memorySpillBytes: Long, diskSpillBytes: Long) {
+    /** The counters by their JSON names; names ending in `_s` are seconds. */
+    def named: Seq[(String, Double)] = Seq("jobs" -> jobs.toDouble, "stages" -> stages.toDouble,
+      "tasks" -> tasks.toDouble, "cpu_s" -> cpuNs / 1e9, "driver_cpu_s" -> driverCpuNs / 1e9,
+      "run_s" -> runMs / 1e3, "gc_s" -> gcMs / 1e3, "input_bytes" -> inputBytes.toDouble,
+      "input_records" -> inputRecords.toDouble, "files" -> files.toDouble,
+      "shuffle_read_bytes" -> shuffleReadBytes.toDouble,
+      "shuffle_write_bytes" -> shuffleWriteBytes.toDouble,
+      "memory_spill_bytes" -> memorySpillBytes.toDouble, "disk_spill_bytes" -> diskSpillBytes.toDouble)
+
+    /** Each counter's smaller value of the two blocks. */
+    def min(o: Counters): Counters = Counters(jobs.min(o.jobs), stages.min(o.stages),
+      tasks.min(o.tasks), cpuNs.min(o.cpuNs), driverCpuNs.min(o.driverCpuNs), runMs.min(o.runMs),
+      gcMs.min(o.gcMs), inputBytes.min(o.inputBytes), inputRecords.min(o.inputRecords),
+      files.min(o.files), shuffleReadBytes.min(o.shuffleReadBytes),
+      shuffleWriteBytes.min(o.shuffleWriteBytes), memorySpillBytes.min(o.memorySpillBytes),
+      diskSpillBytes.min(o.diskSpillBytes))
+
     /** One flat JSON object, times in seconds. */
-    def json: String = {
-      def sec(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      Seq("jobs" -> jobs, "stages" -> stages, "tasks" -> tasks, "cpu_s" -> sec(cpuNs / 1e9),
-        "run_s" -> sec(runMs / 1e3), "gc_s" -> sec(gcMs / 1e3), "input_bytes" -> inputBytes,
-        "input_records" -> inputRecords, "files" -> files, "shuffle_read_bytes" -> shuffleReadBytes,
-        "shuffle_write_bytes" -> shuffleWriteBytes, "memory_spill_bytes" -> memorySpillBytes,
-        "disk_spill_bytes" -> diskSpillBytes)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    }
+    def json: String = named.map { case (k, v) =>
+      "\"" + k + "\":" + (if (k.endsWith("_s")) "%.3f".formatLocal(java.util.Locale.ROOT, v)
+                         else v.toLong.toString)
+    }.mkString("{", ",", "}")
   }
 
   /** The block's result and the Spark work it ran. */
@@ -58,10 +74,13 @@ object WorkCounters {
     sc.addSparkListener(listener)
     val outer = sc.getLocalProperty(Tag)
     sc.setLocalProperty(Tag, Option(outer).fold(listener.token)(_ + "," + listener.token))
+    val threadCpu = ManagementFactory.getThreadMXBean
+    val cpu0 = threadCpu.getCurrentThreadCpuTime
     try {
       val r = body
+      val driverCpuNs = threadCpu.getCurrentThreadCpuTime - cpu0
       Bridge.drain(sc)
-      (r, listener.counters)
+      (r, listener.counters(driverCpuNs))
     } finally {
       sc.setLocalProperty(Tag, outer)
       sc.removeSparkListener(listener)
@@ -107,8 +126,8 @@ object WorkCounters {
     override def onOtherEvent(e: SparkListenerEvent): Unit =
       files.addAndGet(Bridge.scannedFiles(e, ourExecutions.contains))
 
-    def counters: Counters = Counters(jobs.get, stages.get, tasks.get, cpuNs.get, runMs.get,
-      gcMs.get, inBytes.get, inRecords.get, files.get, shuffleRead.get, shuffleWrite.get,
-      memSpill.get, diskSpill.get)
+    def counters(driverCpuNs: Long): Counters = Counters(jobs.get, stages.get, tasks.get,
+      cpuNs.get, driverCpuNs, runMs.get, gcMs.get, inBytes.get, inRecords.get, files.get,
+      shuffleRead.get, shuffleWrite.get, memSpill.get, diskSpill.get)
   }
 }

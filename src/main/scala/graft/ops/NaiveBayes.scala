@@ -19,12 +19,18 @@ import org.apache.spark.sql.functions._
  * token-keyed, built with map-side-combinable aggregations; scoring
  * joins the doc's DISTINCT tokens (not occurrences) against the model
  * on the token key and reduces per (doc, label). No broadcast of
- * anything doc-scale; the model side broadcasts when it fits, else
- * it's an 8-byte-key hash join. Floats appear only inside the two `ln`
- * terms (exact-integer ratios) and the final per-doc sum, rounded at
- * emission (the q_unigram_logprob discipline).
+ * anything doc-scale; the model side broadcasts when its known row
+ * count fits the session's broadcast threshold, else the planner
+ * joins. Floats appear only inside the two `ln` terms (exact-integer
+ * ratios) and the final per-doc sum, rounded at emission (the
+ * q_unigram_logprob discipline).
  */
 object NaiveBayes {
+
+  /** Bytes one model row (tok, label, logp) is taken to occupy in a
+    * broadcast: an UnsafeRow's 8-byte null bits and three 8-byte slots,
+    * plus token and label bytes of up to 48 each. */
+  private val ModelRowBytes = 128L
 
   /**
    * Per-(doc, label) log-posterior scores, one row each, `score`
@@ -93,11 +99,16 @@ object NaiveBayes {
     // NOT repeated float addition — the sum shape the oracle mirrors)
     val docTok = toks.groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("cnt"))
 
-    // broadcast the MODEL explicitly: it is V×labels rows, but its
-    // lineage (aggregates + cross joins) defeats size estimation and
-    // Spark was observed broadcasting the doc-scale side instead
-    // (1.5M-row driver collect at the 10× bench — 20s, super-linear)
-    val scores = docTok.join(broadcast(model), Seq("tok"))
+    // broadcast the MODEL explicitly when it fits: its lineage
+    // (aggregates + cross joins) defeats size estimation and Spark was
+    // observed broadcasting the doc-scale side instead (1.5M-row driver
+    // collect at the 10× bench — 20s, super-linear). Its row count is
+    // known here; past the session's broadcast threshold (a 1e8-token
+    // vocabulary would kill the driver) the join is left to the planner.
+    val modelBytes = vCount * priorCounts.length * ModelRowBytes
+    val sized =
+      if (modelBytes < spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(model) else model
+    val scores = docTok.join(sized, Seq("tok"))
       .groupBy(col(idCol), col("__lbl"))
       .agg(sum(col("cnt").cast("double") * col("logp")).as("__ll"))
       .join(broadcast(priors), Seq("__lbl"))

@@ -37,6 +37,15 @@ class WorkCountersSpec extends SparkSpec {
     assert(w.shuffleWriteBytes > 0 && w.shuffleReadBytes == w.shuffleWriteBytes, w)
   }
 
+  test("driver CPU is the calling thread's own CPU time over the block") {
+    val bean = java.lang.management.ManagementFactory.getThreadMXBean
+    val (_, w) = WorkCounters.of(spark) {
+      val t0 = bean.getCurrentThreadCpuTime
+      while (bean.getCurrentThreadCpuTime - t0 < 300000000L) {}
+    }
+    assert(w.jobs == 0 && w.cpuNs == 0 && w.driverCpuNs >= 300000000L, w)
+  }
+
   test("a job another thread runs during the block is not counted") {
     val go = new CountDownLatch(1)
     val other = new Thread(() => { go.await(); noop(scan.groupBy("k").count()) })

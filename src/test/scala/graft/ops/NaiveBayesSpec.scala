@@ -1,11 +1,14 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Multinomial NB domain classifier: hand-computed posteriors on a tiny
-  * corpus, separable-corpus accuracy, determinism. */
-class NaiveBayesSpec extends SparkSpec {
+  * corpus, separable-corpus accuracy, determinism, the model's sized
+  * broadcast. */
+class NaiveBayesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val docs = Seq(
@@ -81,5 +84,18 @@ class NaiveBayesSpec extends SparkSpec {
     val scores = NaiveBayes.domainScores(d)
     assert(scores.count() == n * labels)
     assert(scores.where(col("score").isNull || isnan(col("score"))).count() == 0)
+  }
+
+  test("the model is broadcast only when its known size fits the threshold") {
+    // 201 tokens x 2 labels x 128 bytes = 51,456: under the default 10 MB
+    val wide = (1 to 200).map(i => (i.toLong, if (i % 2 == 0) "a" else "b", s"w$i w${i + 1}"))
+      .toDF("doc_id", "source", "text")
+    def modelBroadcasts = collect(NaiveBayes.domainScores(wide).queryExecution.executedPlan) {
+      case b: BroadcastExchangeExec if b.output.exists(_.name == "logp") => b
+    }.size
+    assert(modelBroadcasts == 1)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "16k")
+    try assert(modelBroadcasts == 0) finally spark.conf.unset(key)
   }
 }
