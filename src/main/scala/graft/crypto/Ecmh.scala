@@ -1,7 +1,5 @@
 package graft.crypto
 
-import java.math.BigInteger
-
 /**
  * ECMH — elliptic-curve multiset hash (C2): a homomorphic, order-
  * independent, multiset-aware digest. `insert` = point addition,
@@ -73,15 +71,17 @@ object Ecmh {
  * addition makes partial (map-side) aggregation safe in any partitioning
  * — the distributed form of the reference's accumulator.
  *
- * The buffer is an extended-coordinate ristretto255 point (X‖Y‖Z‖T,
- * 4 × 32 bytes): per-row reduction is one hash-to-group derivation plus
- * one inversion-free extended addition; the normalization (one inverse
- * square root) and 32-byte canonical encoding happen once, in `finish`.
- * Partials carry NO base-point offset (identity-initialized) so merge is
- * a plain point add regardless of how many partials a partition tree
- * produces; the single generator offset that makes the digest equal to
- * the reference's `NewMultisetHash → InsertAll → String` is added in
- * `finish`. Shuffle traffic is 128 bytes per partial.
+ * The buffer is the extended-coordinate ristretto255 point itself (four
+ * 10-limb field elements), updated in place: per-row reduction is one
+ * hash-to-group derivation plus one inversion-free extended addition into
+ * the buffer, and `merge` adds the other partial into the first. Nothing
+ * is encoded per row; the normalization (one inverse square root) and the
+ * 32-byte canonical encoding happen once, in `finish`. Partials carry NO
+ * base-point offset (identity-initialized) so merge is a plain point add
+ * regardless of how many partials a partition tree produces; the single
+ * generator offset that makes the digest equal to the reference's
+ * `NewMultisetHash → InsertAll → String` is added in `finish`. A partial
+ * crosses a shuffle as a struct of four 10-`Long` arrays.
  *
  * `offsetBase = false` yields the PURE multiset sum (hex of
  * encode(Σ points), identity → the all-zero encoding) — the algebraic
@@ -89,35 +89,19 @@ object Ecmh {
  * combined (+ inserts, − removals) and re-encoded across batches;
  * a constant Base offset would accumulate once per combination.
  */
-class EcmhAggregator(offsetBase: Boolean = true) extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], String] {
-  import Ristretto255.{Pt, Base, Identity, deriveDalek, encode}
+class EcmhAggregator(offsetBase: Boolean = true)
+    extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Ristretto255.Pt, String] {
+  import Ristretto255.{Pt, Base, deriveDalek}
 
-  private def enc(p: Pt): Array[Byte] =
-    if (p eq Identity) Array.emptyByteArray
-    else Ristretto255.toLe32(p.x) ++ Ristretto255.toLe32(p.y) ++
-         Ristretto255.toLe32(p.z) ++ Ristretto255.toLe32(p.t)
-  private def le(b: Array[Byte], off: Int): BigInteger =
-    new BigInteger(1, java.util.Arrays.copyOfRange(b, off, off + 32).reverse)
-  private def dec(b: Array[Byte]): Pt =
-    if (b.isEmpty) Identity
-    else Pt(le(b, 0), le(b, 32), le(b, 64), le(b, 96))
-
-  override def zero: Array[Byte] = Array.emptyByteArray
-  override def reduce(buf: Array[Byte], item: Array[Byte]): Array[Byte] =
-    if (item == null) buf
-    else enc(dec(buf) + deriveDalek(item))
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a.isEmpty) b else if (b.isEmpty) a
-    else enc(dec(a) + dec(b))
-  override def finish(buf: Array[Byte]): String = {
-    val sum = dec(buf)
-    val digest = encode(if (offsetBase) Base + sum else sum)
-    val sb = new java.lang.StringBuilder(64)
-    digest.foreach(x => sb.append("%02x".format(x & 0xff)))
-    sb.toString
+  override def zero: Pt = Pt.identity
+  override def reduce(buf: Pt, item: Array[Byte]): Pt = {
+    if (item != null) Pt.addInto(buf, buf, deriveDalek(item))
+    buf
   }
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
+  override def merge(a: Pt, b: Pt): Pt = { Pt.addInto(a, a, b); a }
+  override def finish(buf: Pt): String = Ecmh.encodeHex(if (offsetBase) Base + buf else buf)
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Pt] =
+    org.apache.spark.sql.Encoders.product[Pt]
   override def outputEncoder: org.apache.spark.sql.Encoder[String] =
     org.apache.spark.sql.Encoders.STRING
 }

@@ -6,7 +6,8 @@ package graft.crypto
  * (`tools/ristretto_check.py`) — the in-sandbox substitute for the
  * go-ristretto cross-diff (no Go toolchain here; see EcmhSpec's PENDING
  * note). Output: `<case-name>\t<hex-digest>` lines, the case names a
- * tiny language the Python side replays.
+ * tiny language the Python side replays: 26 fixed cases, then 200 seeded
+ * random items.
  *
  *   sbt "runMain graft.crypto.EcmhDump" > /tmp/ecmh_dump.txt
  *   python3 tools/ristretto_check.py /tmp/ecmh_dump.txt
@@ -42,5 +43,13 @@ object EcmhDump {
             .map { case (_, j) => seed(j % 32) }
         }
     cases.foreach(b => line(s"bytes:${hex(b)}", Ecmh.MultisetHash.of(b).digest))
+
+    // volume: 200 seeded random items of 0..299 bytes, so the replay covers
+    // many more derivations, both MAP branches among them
+    val rnd = new scala.util.Random(255L)
+    (0 until 200).foreach { _ =>
+      val b = new Array[Byte](rnd.nextInt(300)); rnd.nextBytes(b)
+      line(s"bytes:${hex(b)}", Ecmh.MultisetHash.of(b).digest)
+    }
   }
 }

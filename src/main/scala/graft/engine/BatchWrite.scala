@@ -3,7 +3,11 @@ package graft.engine
 import graft.catalog.UploadEvent
 import graft.core.{Timestamps, VaultName}
 import java.nio.file.{Files, Path, StandardCopyOption}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /**
  * `vaults write` (B1): upload an existing Parquet file to a vault —
@@ -19,8 +23,8 @@ object BatchWrite {
             catalog: Option[graft.catalog.VaultCatalog] = None,
             timestamp: Option[String] = None): String = {
     // validation: must parse as Parquet (the reference trusts extension;
-    // we actually read the footer via the Spark reader)
-    val n = spark.read.parquet(file.toString).columns.length
+    // we actually read the footer)
+    val n = footerSchema(spark, file).length
     require(n > 0, s"not a readable parquet file: $file")
     val ts = timestamp match {
       case Some(t) => Timestamps.parse(t).fold(e => throw new IllegalArgumentException(e),
@@ -34,6 +38,28 @@ object BatchWrite {
     val cid = store.put(vault, staged, ts, sig)
     catalog.foreach(_.appendEvents(Seq(UploadEvent(vault, cid, ts))))
     cid
+  }
+
+  /** The Spark schema of a parquet artifact, read from its footer on the
+    * driver: what `spark.read.parquet(artifact).schema` infers (Spark's
+    * own footer-to-schema conversion under the session's parquet
+    * settings, `nanosAsLong` included, every field nullable as a file
+    * source reads it), without the inference job. A directory artifact's
+    * parts share one schema, so its first data file (in name order,
+    * `_`/`.` files skipped, as Spark lists) stands for it. Throws on a
+    * file that is not parquet. */
+  def footerSchema(spark: SparkSession, artifact: Path): StructType = {
+    val file = if (!Files.isDirectory(artifact)) artifact else
+      graft.core.FsUtil.listDirSorted(artifact)
+        .find(p => !Seq("_", ".").exists(p.getFileName.toString.startsWith))
+        .getOrElse(throw new IllegalArgumentException(s"no parquet data file in $artifact"))
+    val path = new org.apache.hadoop.fs.Path(file.toUri)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(path, spark.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    org.apache.spark.sql.graftbridge.Bridge.asNullable(
+      ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 }
 
@@ -100,9 +126,10 @@ final class Retriever(cache: ContentStore, cold: Option[ContentStore] = None) {
       }
   }
 
-  /** Retrieved parquet straight back into a DataFrame (read path). */
+  /** Retrieved parquet straight back into a DataFrame (read path), with
+    * the schema of its footer: no inference job. */
   def retrieveAsDataFrame(spark: SparkSession, cid: String): Option[org.apache.spark.sql.DataFrame] =
-    retrieve(cid).map(p => spark.read.parquet(p.toString))
+    retrieve(cid).map(p => spark.read.schema(BatchWrite.footerSchema(spark, p)).parquet(p.toString))
 
   /** Retrieve + content verification (Q3 × C2): re-derive the ECMH row
     * digest from the downloaded parquet and compare to the digest the

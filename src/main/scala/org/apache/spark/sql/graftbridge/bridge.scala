@@ -20,6 +20,11 @@ object Bridge extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanH
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .showString(numRows, truncate)
 
+  /** `s` with every field nullable, as a file source reads a data schema
+    * (`StructType.asNullable` is private[spark]). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Wait until every queued listener event was delivered. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 

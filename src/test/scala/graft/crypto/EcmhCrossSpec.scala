@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * digests must agree with the fully independent pure-Python RFC 9496
  * implementation (`tools/ristretto_check.py` — written only from the
  * RFC pseudocode, no shared code or structure; see its header). Runs
- * the same 26 cases [[EcmhDump]] emits, in-process, and hands them to
- * the script for replay. Cancels (does not fail) when no python3 is on
+ * the same 226 cases [[EcmhDump]] emits (26 fixed, 200 seeded random),
+ * in-process, and hands them to the script for replay. Cancels (does not fail) when no python3 is on
  * PATH, mirroring `LivePostgresSpec`'s environment gate.
  */
 class EcmhCrossSpec extends AnyFunSuite {
@@ -37,6 +37,6 @@ class EcmhCrossSpec extends AnyFunSuite {
     val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
     val code = proc.waitFor()
     assert(code == 0, s"cross-diff failed (exit $code):\n$out")
-    assert(out.contains("cross-diff OK: 26 digests"), out)
+    assert(out.contains("cross-diff OK: 226 digests"), out)
   }
 }

@@ -11,18 +11,34 @@ class Ristretto255Spec extends AnyFunSuite {
 
   private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
 
+  /** -x² + y² = 1 + d·x²·y², on the oracle's affine coordinates. */
+  private def onCurve(pt: Pt): Boolean = {
+    import RistrettoOracle.{P, value}
+    val (x, y) = RistrettoOracle.affine(pt)
+    val lhs = y.multiply(y).subtract(x.multiply(x)).mod(P)
+    val rhs = BigInteger.ONE.add(value(D).multiply(x).multiply(x).multiply(y).multiply(y)).mod(P)
+    lhs == rhs
+  }
+  /** Z·T = X·Y, on the oracle's values of the limbs. */
+  private def tConsistent(pt: Pt): Boolean = {
+    import RistrettoOracle.{P, value}
+    value(pt.z).multiply(value(pt.t)).subtract(value(pt.x).multiply(value(pt.y))).mod(P).signum() == 0
+  }
+
   test("constants re-derive: SQRT_M1, INVSQRT_A_MINUS_D, SQRT_AD_MINUS_ONE") {
+    import RistrettoOracle.{P, mul, value}
+    val (sqrtM1, d) = (value(SQRT_M1), value(D))
     val minusOne = P.subtract(BigInteger.ONE)
-    assert(SQRT_M1.multiply(SQRT_M1).mod(P) == minusOne)
-    assert(!isNegative(SQRT_M1), "canonical sqrt(-1) is the even root")
+    assert(mul(sqrtM1, sqrtM1) == minusOne)
+    assert(!Fe.isNegative(SQRT_M1), "canonical sqrt(-1) is the even root")
     // (1/sqrt(a-d))^2 * (a-d) = 1, a = -1
-    val aMinusD = P.subtract(BigInteger.ONE).subtract(D).mod(P)
-    assert(INVSQRT_A_MINUS_D.modPow(BigInteger.TWO, P).multiply(aMinusD).mod(P) == BigInteger.ONE)
+    val aMinusD = P.subtract(BigInteger.ONE).subtract(d).mod(P)
+    assert(value(INVSQRT_A_MINUS_D).modPow(BigInteger.TWO, P).multiply(aMinusD).mod(P) == BigInteger.ONE)
     // sqrt(ad-1)^2 = -d - 1
-    val adMinusOne = P.subtract(D).subtract(BigInteger.ONE).mod(P)
-    assert(SQRT_AD_MINUS_ONE.multiply(SQRT_AD_MINUS_ONE).mod(P) == adMinusOne)
+    val adMinusOne = P.subtract(d).subtract(BigInteger.ONE).mod(P)
+    assert(mul(value(SQRT_AD_MINUS_ONE), value(SQRT_AD_MINUS_ONE)) == adMinusOne)
     // d = -121665/121666
-    assert(D.multiply(BigInteger.valueOf(121666)).add(BigInteger.valueOf(121665)).mod(P).signum() == 0)
+    assert(d.multiply(BigInteger.valueOf(121666)).add(BigInteger.valueOf(121665)).mod(P).signum() == 0)
   }
 
   test("RFC 9496 A.1: encodings of B*0 .. B*15 (repeated addition)") {
@@ -74,15 +90,8 @@ class Ristretto255Spec extends AnyFunSuite {
     // to plausible-looking strings).
     (1 to 40).foreach { i =>
       val pt = deriveDalek(s"probe-$i".getBytes)
-      val zInv = pt.z.modInverse(P)
-      val x = pt.x.multiply(zInv).mod(P)
-      val y = pt.y.multiply(zInv).mod(P)
-      val lhs = y.multiply(y).subtract(x.multiply(x)).mod(P)
-      val rhs = BigInteger.ONE.add(
-        D.multiply(x).multiply(x).multiply(y).multiply(y)).mod(P)
-      assert(lhs == rhs, s"probe-$i off-curve")
-      assert(pt.z.multiply(pt.t).subtract(pt.x.multiply(pt.y)).mod(P).signum() == 0,
-        s"probe-$i T invariant")
+      assert(onCurve(pt), s"probe-$i off-curve")
+      assert(tConsistent(pt), s"probe-$i T invariant")
     }
   }
 
@@ -131,15 +140,11 @@ class Ristretto255Spec extends AnyFunSuite {
     val prop = Prop.forAll(bytesGen) { b: Array[Byte] =>
       val p = fromUniformBytes(b)
       // on-curve, consistent T, and the encoding round-trips canonically
-      val zInv = p.z.modInverse(P)
-      val x = p.x.multiply(zInv).mod(P)
-      val y = p.y.multiply(zInv).mod(P)
-      val onCurve = y.multiply(y).subtract(x.multiply(x)).mod(P) ==
-        BigInteger.ONE.add(D.multiply(x).multiply(x).multiply(y).multiply(y)).mod(P)
-      val tOk = p.z.multiply(p.t).subtract(p.x.multiply(p.y)).mod(P).signum() == 0
+      val curveOk = onCurve(p)
+      val tOk = tConsistent(p)
       val enc = encode(p)
       val rt = decode(enc).exists(q => hex(encode(q)) == hex(enc))
-      onCurve && tOk && rt
+      curveOk && tOk && rt
     }
     assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop).passed)
   }

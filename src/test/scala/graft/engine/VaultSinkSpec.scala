@@ -57,26 +57,36 @@ class VaultSinkSpec extends SparkSpec {
     ("interval", "\"1 year 2 mons 21 days 05:00:00\"", "\"-00:00:07\""),
     ("double precision[]", "\"{42.01,-42.01,NULL}\"", "\"{}\""))
 
-  test("sink digest round trip: every PgTypes scalar, an array and a decimal") {
-    val schema = TableSchema("t",
-      TableColumn("id", "integer", nullable = false, isPrimary = true) +:
-        typed.zipWithIndex.map { case ((t, _, _), i) =>
-          TableColumn(s"c$i", t, nullable = true, isPrimary = false) })
+  private val typedSchema = TableSchema("t",
+    TableColumn("id", "integer", nullable = false, isPrimary = true) +:
+      typed.zipWithIndex.map { case ((t, _, _), i) =>
+        TableColumn(s"c$i", t, nullable = true, isPrimary = false) })
+
+  /** The typed feed published by one sink: its store, its cid and the
+    * digest its catalog event recorded. */
+  private def publishTyped(numericAsDecimal: Boolean, singleFile: Boolean)
+      : (LocalContentStore, String, Seq[String]) = {
     val row: (Int, Int => String) => Seq[(String, String, String)] = (id, value) =>
       ("id", "integer", id.toString) +:
         typed.zipWithIndex.map { case ((t, _, _), i) => (s"c$i", t, value(i)) }
     val batch = lines(
       tx(1, "t", "2024-01-01 00:00:10", Seq(row(1, typed(_)._2), row(2, typed(_)._3))),
       tx(2, "t", "2024-01-01 00:00:20", Seq(row(3, _ => "null"))))
+    val base = Files.createTempDirectory("sink-digest")
+    val store = new LocalContentStore(base.resolve("store").toString)
+    val catalog = graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString)
+    val sink = new VaultSink("ns", Seq(typedSchema), base.resolve("staging").toString, store,
+      catalog = Some(catalog), singleFile = singleFile, numericAsDecimal = numericAsDecimal)
+    val Seq(("t", cid)) = sink.processBatch(batch, 0L)
+    val recorded = catalog.events.where(org.apache.spark.sql.functions.col("cid") === cid)
+      .select("digest").collect().map(_.getString(0)).toSeq
+    (store, cid, recorded)
+  }
+
+  test("sink digest round trip: every PgTypes scalar, an array and a decimal") {
+    val schema = typedSchema
     for ((numericAsDecimal, singleFile) <- Seq(false -> true, true -> false)) {
-      val base = Files.createTempDirectory("sink-digest")
-      val store = new LocalContentStore(base.resolve("store").toString)
-      val catalog = graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString)
-      val sink = new VaultSink("ns", Seq(schema), base.resolve("staging").toString, store,
-        catalog = Some(catalog), singleFile = singleFile, numericAsDecimal = numericAsDecimal)
-      val Seq(("t", cid)) = sink.processBatch(batch, 0L)
-      val recorded = catalog.events.where(org.apache.spark.sql.functions.col("cid") === cid)
-        .select("digest").collect().map(_.getString(0)).toSeq
+      val (store, cid, recorded) = publishTyped(numericAsDecimal, singleFile)
       val artifact = spark.read.parquet(store.get(cid).get.toString)
       assert(artifact.count() == 3L)
       assert(artifact.schema("c6").dataType.isInstanceOf[
@@ -84,6 +94,47 @@ class VaultSinkSpec extends SparkSpec {
       assert(recorded == Seq(EcmhAggregator.rowDigest(artifact, schema.columns.map(_.name))),
         s"numericAsDecimal=$numericAsDecimal singleFile=$singleFile")
     }
+  }
+
+  test("verify reads the schema from the artifact's footer: every PgTypes mapping, no inference job") {
+    for ((numericAsDecimal, singleFile) <- Seq(false -> true, true -> false)) {
+      val (store, cid, recorded) = publishTyped(numericAsDecimal, singleFile)
+      val artifact = store.get(cid).get
+      assert(BatchWrite.footerSchema(spark, artifact) == spark.read.parquet(artifact.toString).schema,
+        s"numericAsDecimal=$numericAsDecimal singleFile=$singleFile")
+      // the verify runs the digest's two jobs (adaptive execution runs the
+      // partial aggregate's shuffle stage as a job of its own) and no
+      // schema-inference job
+      val (df, work) = graft.WorkCounters.of(spark)(
+        new Retriever(store).retrieveVerified(spark, cid, recorded.head, typedSchema.columns.map(_.name)))
+      assert(df.isDefined && work.jobs == 2, s"singleFile=$singleFile: $work")
+    }
+
+    // an INT64 TIMESTAMP(NANOS) column reads as LongType under nanosAsLong
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val nanosSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); optional binary s (STRING); }")
+    val nanos = Files.createTempDirectory("footer-nanos").resolve("nanos.parquet")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(nanos.toUri))
+      .withType(nanosSchema).build()
+    try writer.write(new SimpleGroupFactory(nanosSchema).newGroup()
+      .append("ts", 1700000000123456789L).append("s", "x"))
+    finally writer.close()
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val inferred = spark.read.parquet(nanos.toString).schema
+    assert(inferred("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(BatchWrite.footerSchema(spark, nanos) == inferred)
+
+    // a file that is not parquet fails `vaults write` loudly; a truncated
+    // artifact fails its verify
+    val (store, cid, recorded) = publishTyped(numericAsDecimal = false, singleFile = true)
+    val text = Files.writeString(Files.createTempFile("not-parquet", ".parquet"), "just text\n")
+    intercept[Exception](BatchWrite.write(spark, graft.core.VaultName("ns", "t"), text, store))
+    val artifact = store.get(cid).get
+    Files.write(artifact, Files.readAllBytes(artifact).dropRight(16))
+    intercept[Exception](new Retriever(store)
+      .retrieveVerified(spark, cid, recorded.head, typedSchema.columns.map(_.name)))
   }
 
   /** Content id of a parquet artifact with each column chunk's encoding
