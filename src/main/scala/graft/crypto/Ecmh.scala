@@ -127,7 +127,14 @@ object EcmhAggregator {
 
   /** Content digest of a DataFrame's rows over `cols`. Order- and
     * partitioning-independent, so writer and reader need not agree on
-    * row layout — the vault-event verification digest. */
-  def rowDigest(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): String =
-    df.agg(digest(canonicalRow(cols)).as("d")).collect()(0).getString(0)
+    * row layout — the vault-event verification digest. Observed on a
+    * `noop` write, as the sink observes its own: one job and no shuffle,
+    * where an aggregate would run its partial stage as a job of its own. */
+  def rowDigest(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): String = {
+    import org.apache.spark.sql.functions.col
+    val o = org.apache.spark.sql.Observation()
+    df.select(cols.map(col): _*).observe(o, digest(canonicalRow(cols)).as("d"))
+      .write.format("noop").mode("overwrite").save()
+    o.get("d").asInstanceOf[String]
+  }
 }

@@ -5,8 +5,12 @@ import graft.cdc.{TableSchema, WalDecoder}
 import graft.core.{FsUtil, VaultName}
 import graft.crypto.EcmhAggregator
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, count, floor, lit, max}
+import scala.util.{Failure, Try}
 
 /** Pluggable file signer (C1). Production impl = keccak256 + secp256k1;
   * see [[graft.crypto.Keccak256]]. */
@@ -112,6 +116,13 @@ final case class EventTimeWindows(windowSeconds: Long, latenessSeconds: Long) {
  *
  * Called from `foreachBatch` — micro-batch sequencing replaces the
  * reference's mutex-serialized ticker rotation (`internal/app/db.go:83-101`).
+ * Batches stay sequential, but the tables of one batch publish side by
+ * side (and, in event-time mode, its slice writes and the windows it
+ * closes) on a per-batch pool of min(tables, cores) threads
+ * ([[VaultSink.concurrently]]), where the reference exports, signs and
+ * uploads each table in turn (`internal/app/db.go:128-182`). The catalog
+ * append and the watermark move still happen once per batch, on the
+ * stream thread, after every table is done.
  * Output naming `<table>-<windowId>` mirrors `<table>-<unixnano>.db.parquet`
  * (`internal/app/db.go:168`). Single-file output (`coalesce(1)`) matches the
  * reference's one-file-per-window contract; at 100 TB disable
@@ -161,9 +172,9 @@ final class VaultSink(
         val tables = WalDecoder.decodeTables(spark, batch, schemas, replayActions,
           strict = strictSchema, driftMode = driftMode,
           numericAsDecimal = numericAsDecimal)
-        val out = tables.toSeq.sortBy(_._1).flatMap { case (table, df) =>
-          publish(table, df, windowId, ts)
-        }
+        val out = VaultSink.concurrently(spark, tables.toSeq.sortBy(_._1)) {
+          case (table, df) => publish(table, df, windowId, ts)
+        }.flatten
         catalog.foreach(_.appendEvents(out))
         out
     }
@@ -186,7 +197,7 @@ final class VaultSink(
     val tables = WalDecoder.decodeTablesWithTs(spark, batch, schemas,
       replayActions, strict = strictSchema, driftMode = driftMode,
       numericAsDecimal = numericAsDecimal)
-    val seen = tables.toSeq.sortBy(_._1).map { case (table, df0) =>
+    val seen = VaultSink.concurrently(spark, tables.toSeq.sortBy(_._1)) { case (table, df0) =>
       // the watermark input is observed on the rows this write decodes,
       // BEFORE the `live` filter so late rows still advance it; only
       // tracked tables are decoded, so an untracked table's commits can
@@ -223,7 +234,7 @@ final class VaultSink(
     // replay may have erased one slice, so republishing from what
     // remains would upload a PARTIAL artifact under a new cid). They
     // are reclaimed below, after this batch's own commit point.
-    val out = schemas.map(_.table).sorted.flatMap { table =>
+    val closed = schemas.map(_.table).sorted.flatMap { table =>
       val tdir = pendingRoot.resolve(table)
       if (!Files.exists(tdir)) Nil
       else {
@@ -236,14 +247,14 @@ final class VaultSink(
             .map(_.stripPrefix("__wstart=").toLong))
           .distinct.sorted
         wstarts.filter(ws => ws + w.windowSeconds <= newWm &&
-            ws + w.windowSeconds > priorWm).flatMap { ws =>
-          val slices = batchDirs.map(_.resolve(s"__wstart=$ws"))
-            .filter(Files.exists(_))
-          val df = spark.read.parquet(slices.map(_.toString): _*)
-          publish(table, df, ws, ts)
+            ws + w.windowSeconds > priorWm).map { ws =>
+          (table, ws, batchDirs.map(_.resolve(s"__wstart=$ws")).filter(Files.exists(_)))
         }
       }
     }
+    val out = VaultSink.concurrently(spark, closed) { case (table, ws, slices) =>
+      publish(table, spark.read.parquet(slices.map(_.toString): _*), ws, ts)
+    }.flatten
     // events land before the commit point: a crash after the append
     // replays into a no-op append of the same (cid, window)s
     catalog.foreach(_.appendEvents(out))
@@ -348,4 +359,41 @@ final class VaultSink(
     Files.move(part, named, StandardCopyOption.REPLACE_EXISTING)
     named
   }
+}
+
+object VaultSink {
+  /** `f` over `items`, the items side by side on a pool of
+    * min(items, `defaultParallelism`) daemon threads that lives for this
+    * call only; results in input order. Each task runs with the calling
+    * thread's Spark local properties (job group and tags, so cancelling
+    * the caller's jobs cancels the pool's) and active session. Every task
+    * is waited for before the first failure, in input order, is rethrown
+    * as thrown. An interrupt of the caller (`StreamingQuery.stop`)
+    * interrupts the pool's tasks and is rethrown once they have ended.
+    * A single item runs on the calling thread. */
+  private[engine] def concurrently[A, B](spark: SparkSession, items: Seq[A])(f: A => B): Seq[B] =
+    if (items.lengthCompare(1) <= 0) items.map(f)
+    else {
+      val threads = new AtomicInteger
+      val pool = Executors.newFixedThreadPool(
+        math.min(items.length, spark.sparkContext.defaultParallelism), (r: Runnable) => {
+          val t = new Thread(r, s"vault-publish-${threads.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      try {
+        val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val tasks = items.map(a => SQLExecution.withThreadLocalCaptured(classic, pool)(f(a)))
+        // Try lets an InterruptedException through (it is not NonFatal)
+        tasks.map(t => Try(t.get())).map {
+          case Failure(e: ExecutionException) => throw e.getCause
+          case done => done.get
+        }
+      } catch {
+        case e: InterruptedException => pool.shutdownNow(); throw e
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 }

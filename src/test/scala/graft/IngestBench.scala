@@ -205,7 +205,8 @@ object IngestBench {
   private def runFileFeed(spark: SparkSession, base: String, nTx: Long,
                           nBatches: Int,
                           eventTime: Option[graft.engine.EventTimeWindows] = None,
-                          hostile: Boolean = false)
+                          hostile: Boolean = false,
+                          singleFile: Boolean = false)
       : Map[String, Any] = {
     val wal = s"$base/wal"; val store = s"$base/store"
     genSpool(wal, nTx, files = 8, eventTimed = eventTime.isDefined,
@@ -216,7 +217,7 @@ object IngestBench {
     val q = StreamPipeline.start(spark, "bench", schemas, wal, s"$base/staging",
       s"$base/ckpt", new LocalContentStore(store),
       availableNow = true, maxTxPerTrigger = Some((nTx / nBatches).toInt max 1),
-      singleFile = false, eventTime = eventTime)
+      singleFile = singleFile, eventTime = eventTime)
     q.awaitTermination(math.max(600000L, nTx * 3)) // scale the cap with the feed
     val wallSec = (System.nanoTime() - t0) / 1e9
     spark.streams.removeListener(collector)
@@ -475,6 +476,12 @@ object IngestBench {
 
     val file1x = runFileFeed(spark, s"$base/file1x", nTx / 10, nBatches = 10)
     val file10x = runFileFeed(spark, s"$base/file10x", nTx, nBatches = 10)
+    // the default shape (`vaults stream`): one `coalesce(1)` file per
+    // table and window, the batch's tables written side by side
+    val single1x = runFileFeed(spark, s"$base/single1x", nTx / 10, nBatches = 10,
+      singleFile = true)
+    val single10x = runFileFeed(spark, s"$base/single10x", nTx, nBatches = 10,
+      singleFile = true)
     // 100× row (round 12): 10M records through the flagship path, and —
     // the live-feed half — the same scale through the walsender socket,
     // spool-segment writes and ack-time GC under ~400 segment rolls
@@ -562,6 +569,10 @@ object IngestBench {
       "recordsPerTx" -> RecordsPerTx, "tables" -> TableNames.length,
       "cpus" -> cpus.toInt,
       "file_feed_1x" -> file1x, "file_feed_10x" -> file10x,
+      // each with the core count it ran at, as these rows are refreshed
+      // on their own when the sink's write path changes
+      "file_feed_single_file_1x" -> (single1x + ("cpus" -> cpus.toInt)),
+      "file_feed_single_file_10x" -> (single10x + ("cpus" -> cpus.toInt)),
       "file_feed_100x" -> file100x,
       "file_feed_eventtime_10x" -> fileEt,
       "file_feed_eventtime_100x" -> fileEt100,

@@ -26,6 +26,7 @@ class IngestBenchSpec extends AnyFunSuite {
     // 100x rows (round 12) likewise gate only when the artifact has them
     val runs = Seq("file_feed_1x", "file_feed_10x", "pg_feed") ++
       Seq("file_feed_100x", "pg_feed_100x", "pg_live_feed",
+        "file_feed_single_file_1x", "file_feed_single_file_10x",
         "file_feed_eventtime_10x", "file_feed_eventtime_100x",
         "file_feed_1000x", "file_feed_eventtime_1000x",
         "pg_feed_eventtime").filter(root.has)
@@ -46,6 +47,10 @@ class IngestBenchSpec extends AnyFunSuite {
     // the 10x point is a real decade over the 1x point
     assert(root.get("file_feed_10x").get("n_records").asLong ==
       10 * root.get("file_feed_1x").get("n_records").asLong)
+    // the default single-file shape, when recorded: the same decade
+    if (root.has("file_feed_single_file_10x"))
+      assert(root.get("file_feed_single_file_10x").get("n_records").asLong ==
+        10 * root.get("file_feed_single_file_1x").get("n_records").asLong)
     // ≥1M records through the flagship path, sub-linear through the decade
     assert(root.get("file_feed_10x").get("n_records").asLong >= 1000000L)
     assert(root.get("scaling_exponent_file_feed").asDouble < 1.0)

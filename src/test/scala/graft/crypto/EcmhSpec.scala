@@ -106,4 +106,20 @@ class EcmhSpec extends SparkSpec {
       .agg(EcmhAggregator.digest(col("v")).as("d")).collect()(0).getString(0)
     assert(empty == MultisetHash().digest)
   }
+
+  test("rowDigest: the aggregate's digest in one job, encode(B) for no rows") {
+    val cols = Seq("id", "name", "flag")
+    def rows(parts: Int) = spark.range(0, 4000, 1, parts).select(col("id"),
+      concat(lit("name-"), col("id")).as("name"), (col("id") % 7 === 0).as("flag"))
+    for (parts <- Seq(1, 4)) {
+      val df = rows(parts)
+      val aggregate = df.agg(EcmhAggregator.digest(EcmhAggregator.canonicalRow(cols)))
+        .collect()(0).getString(0)
+      val (d, work) = graft.WorkCounters.of(spark)(EcmhAggregator.rowDigest(df, cols))
+      assert(d == aggregate, s"partitions=$parts")
+      assert(work.jobs == 1 && work.shuffleWriteBytes == 0, s"partitions=$parts: $work")
+    }
+    assert(EcmhAggregator.rowDigest(rows(4).where(col("id") < 0), cols) == MultisetHash().digest)
+    assert(EcmhAggregator.rowDigest(rows(1).limit(0), cols) == MultisetHash().digest)
+  }
 }

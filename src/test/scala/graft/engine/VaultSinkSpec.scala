@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.cdc.{TableColumn, TableSchema}
 import graft.crypto.EcmhAggregator
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** What the sink learns from its own write: the catalog digest of a
   * published window, and (event-time) the watermark input. */
@@ -102,12 +103,11 @@ class VaultSinkSpec extends SparkSpec {
       val artifact = store.get(cid).get
       assert(BatchWrite.footerSchema(spark, artifact) == spark.read.parquet(artifact.toString).schema,
         s"numericAsDecimal=$numericAsDecimal singleFile=$singleFile")
-      // the verify runs the digest's two jobs (adaptive execution runs the
-      // partial aggregate's shuffle stage as a job of its own) and no
-      // schema-inference job
+      // the verify runs one job, the digest observed on a noop write: no
+      // schema-inference job and no aggregate's shuffle stage
       val (df, work) = graft.WorkCounters.of(spark)(
         new Retriever(store).retrieveVerified(spark, cid, recorded.head, typedSchema.columns.map(_.name)))
-      assert(df.isDefined && work.jobs == 2, s"singleFile=$singleFile: $work")
+      assert(df.isDefined && work.jobs == 1, s"singleFile=$singleFile: $work")
     }
 
     // an INT64 TIMESTAMP(NANOS) column reads as LongType under nanosAsLong
@@ -166,49 +166,203 @@ class VaultSinkSpec extends SparkSpec {
     CarV1.Cid.v1FromDigest(CarV1.CodecRaw, md.digest()).toString
   }
 
+  private val orders = TableSchema("orders", Seq(
+    TableColumn("id", "integer", nullable = false, isPrimary = true),
+    TableColumn("amount", "numeric(10,2)", nullable = true, isPrimary = false),
+    TableColumn("placed", "timestamp without time zone", nullable = true, isPrimary = false),
+    TableColumn("tags", "text[]", nullable = true, isPrimary = false)))
+  private val notes = TableSchema("notes", Seq(
+    TableColumn("body", "text", nullable = true, isPrimary = false),
+    TableColumn("seen", "boolean", nullable = true, isPrimary = false)))
+  private val items = TableSchema("items", Seq(
+    TableColumn("id", "integer", nullable = false, isPrimary = true),
+    TableColumn("label", "text", nullable = true, isPrimary = false)))
+  private def order(id: Int, amount: String, placed: String, tags: String) =
+    Seq(("id", "integer", id.toString), ("amount", "numeric(10,2)", amount),
+      ("placed", "timestamp without time zone", placed), ("tags", "text[]", tags))
+  private def note(body: String, seen: String) =
+    Seq(("body", "text", body), ("seen", "boolean", seen))
+  private def item(id: Int, label: String) =
+    Seq(("id", "integer", id.toString), ("label", "text", label))
+
+  /** The fixed orders and notes feed of the golden artifacts. */
+  private val goldenTxs = Seq(
+    tx(1, "orders", "2024-01-01 00:00:01", Seq(
+      order(3, "12.50", "\"2024-01-01 00:00:01\"", "\"{a,b}\""),
+      order(1, "-0.07", "\"2023-12-31 23:59:59.5\"", "\"{}\""))),
+    tx(2, "notes", "2024-01-01 00:00:02", Seq(
+      note("\"first\"", "true"), note("\"sec\\\"ond\"", "null"))),
+    tx(3, "orders", "2024-01-01 00:00:03", Seq(order(2, "null", "null", "null"))),
+    tx(4, "notes", "2024-01-01 00:00:04", Seq(note("null", "false"))))
+  /** The golden feed with a third table's transaction. */
+  private val threeTableTxs = goldenTxs :+
+    tx(5, "items", "2024-01-01 00:00:05", Seq(item(2, "\"b\""), item(1, "null")))
+
+  // (canonical cid, digest) of each table's artifact of the golden feed
+  private val golden = Map(
+    "orders" -> ("bafkreie72gylceelznesyjq63ovw3ujjgj3v7erx3gjajoy7lk6gi4ojja",
+      "f00261a61bc42891db4d2478cc40a85940ea8a47748a3491139f19ff5bd74b14"),
+    "notes" -> ("bafkreif4yyegvyrya6g5fqbcej2nast4rgpfc2xu4liztuir6fygtk6rsu",
+      "aee30dfde514c29176a3fe05c3bd8b82b253d29e68f2c31238e3eea2c3fd9205"))
+
+  /** A published batch: its (table, cid) list, the catalog's (digest,
+    * timestamp) per cid and each cid's canonical content id. */
+  private def published(sink: VaultSink, store: LocalContentStore,
+                        catalog: graft.catalog.VaultCatalog, feed: Seq[String], batchId: Long)
+      : (Seq[(String, String)], Map[String, (String, Long)], Map[String, String]) = {
+    val out = sink.processBatch(lines(feed: _*), batchId)
+    val events = catalog.events.select("cid", "digest", "timestamp").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    (out, events, out.map { case (_, cid) => cid -> canonicalCid(store.get(cid).get) }.toMap)
+  }
+
+  /** `expected` (canonical cid, digest) per table, the tables in name
+    * order, each event stamped at the sinks' fixed clock. */
+  private def assertGolden(expected: Map[String, (String, String)],
+                           published: (Seq[(String, String)], Map[String, (String, Long)],
+                             Map[String, String])): Unit = {
+    val (out, events, canonical) = published
+    assert(out.map(_._1) == expected.keys.toSeq.sorted, "tables in name order")
+    for ((table, cid) <- out) {
+      val (canonicalGolden, digest) = expected(table)
+      assert(canonical(cid) == canonicalGolden, table)
+      assert(events(cid) == (digest -> 1700000000L), table)
+    }
+  }
+
+  private def freshStore(name: String) = {
+    val base = Files.createTempDirectory(name)
+    (base, new LocalContentStore(base.resolve("store").toString),
+      graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString))
+  }
+
   test("golden artifacts: a fixed two-table feed publishes pinned bytes and digests") {
     // an artifact's bytes are its content id: any change to the decode
     // (column types, nullability, row order, values) shows up here
-    val orders = TableSchema("orders", Seq(
-      TableColumn("id", "integer", nullable = false, isPrimary = true),
-      TableColumn("amount", "numeric(10,2)", nullable = true, isPrimary = false),
-      TableColumn("placed", "timestamp without time zone", nullable = true, isPrimary = false),
-      TableColumn("tags", "text[]", nullable = true, isPrimary = false)))
-    val notes = TableSchema("notes", Seq(
-      TableColumn("body", "text", nullable = true, isPrimary = false),
-      TableColumn("seen", "boolean", nullable = true, isPrimary = false)))
-    def order(id: Int, amount: String, placed: String, tags: String) =
-      Seq(("id", "integer", id.toString), ("amount", "numeric(10,2)", amount),
-        ("placed", "timestamp without time zone", placed), ("tags", "text[]", tags))
-    def note(body: String, seen: String) =
-      Seq(("body", "text", body), ("seen", "boolean", seen))
-    val feed = lines(
-      tx(1, "orders", "2024-01-01 00:00:01", Seq(
-        order(3, "12.50", "\"2024-01-01 00:00:01\"", "\"{a,b}\""),
-        order(1, "-0.07", "\"2023-12-31 23:59:59.5\"", "\"{}\""))),
-      tx(2, "notes", "2024-01-01 00:00:02", Seq(
-        note("\"first\"", "true"), note("\"sec\\\"ond\"", "null"))),
-      tx(3, "orders", "2024-01-01 00:00:03", Seq(order(2, "null", "null", "null"))),
-      tx(4, "notes", "2024-01-01 00:00:04", Seq(note("null", "false"))))
-    val base = Files.createTempDirectory("sink-golden")
-    val store = new LocalContentStore(base.resolve("store").toString)
-    val catalog = graft.catalog.VaultCatalog(spark, base.resolve("catalog").toString)
+    val (base, store, catalog) = freshStore("sink-golden")
     val sink = new VaultSink("ns", Seq(orders, notes), base.resolve("staging").toString,
       store, catalog = Some(catalog), clock = () => 1700000000L)
-    val published = sink.processBatch(feed, 7L).toMap
-    val events = catalog.events.select("cid", "digest", "timestamp").collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-    val golden = Map(
-      "orders" -> ("bafkreie72gylceelznesyjq63ovw3ujjgj3v7erx3gjajoy7lk6gi4ojja",
-        "f00261a61bc42891db4d2478cc40a85940ea8a47748a3491139f19ff5bd74b14"),
-      "notes" -> ("bafkreif4yyegvyrya6g5fqbcej2nast4rgpfc2xu4liztuir6fygtk6rsu",
-        "aee30dfde514c29176a3fe05c3bd8b82b253d29e68f2c31238e3eea2c3fd9205"))
-    assert(published.keySet == golden.keySet)
-    for ((table, (canonical, digest)) <- golden) {
-      val cid = published(table)
-      assert(canonicalCid(store.get(cid).get) == canonical, table)
-      assert(events(cid) == (digest -> 1700000000L), table)
+    assertGolden(golden, published(sink, store, catalog, goldenTxs, 7L))
+  }
+
+  /** Signs only once `parties` signers wait together (or fails after
+    * 30 s), so a batch of that many tables publishes only when its tables
+    * sign side by side. Records each signing thread's name. */
+  private final class BarrierSigner(parties: Int) extends FileSigner {
+    @transient private val barrier = new java.util.concurrent.CyclicBarrier(parties)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def sign(file: java.nio.file.Path): Array[Byte] = {
+      threads.add(Thread.currentThread.getName)
+      barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      Array[Byte](1)
     }
+  }
+
+  private def poolThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("vault-publish-"))
+
+  test("the tables of a batch publish side by side, to the same artifacts and events") {
+    // processing time: three tables sign together, and the two golden
+    // tables keep their golden bytes and digests
+    val (base, store, catalog) = freshStore("sink-concurrent")
+    val signer = new BarrierSigner(3)
+    val sink = new VaultSink("ns", Seq(orders, notes, items), base.resolve("staging").toString,
+      store, signer = Some(signer), catalog = Some(catalog), clock = () => 1700000000L)
+    // the items artifact as the tables published one after another
+    val threeTableGolden = golden + ("items" ->
+      ("bafkreiapm4bvur5arb4nhcug6kobgz7udqp6gaaoehx2zi35xsjll4y26e",
+        "62a50b2d2321e85b35c99ef34d7e2ab735d955710ddee36e541f57157790cf0b"))
+    assertGolden(threeTableGolden, published(sink, store, catalog, threeTableTxs, 7L))
+    assert(signer.threads.size == 3 && poolThreads.isEmpty)
+
+    // event time: the three windows a batch closes publish side by side,
+    // each the same artifact as the processing-time batch of its rows
+    val (etBase, etStore, etCatalog) = freshStore("sink-concurrent-et")
+    val etSigner = new BarrierSigner(3)
+    val etSink = new VaultSink("ns", Seq(orders, notes, items), etBase.resolve("staging").toString,
+      etStore, signer = Some(etSigner), catalog = Some(etCatalog), clock = () => 1700000000L,
+      eventTime = Some(EventTimeWindows(60L, 0L)))
+    assert(etSink.processBatch(lines(threeTableTxs: _*), 0L).isEmpty)
+    val closing = Seq(
+      tx(6, "orders", "2024-01-01 00:02:00", Seq(order(9, "1.00", "null", "null"))),
+      tx(7, "notes", "2024-01-01 00:02:00", Seq(note("null", "true"))),
+      tx(8, "items", "2024-01-01 00:02:00", Seq(item(9, "null"))))
+    val etPublished = published(etSink, etStore, etCatalog, closing, 1L)
+    assertGolden(threeTableGolden, etPublished)
+    val windowStart = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
+    for ((table, cid) <- etPublished._1)
+      assert(etStore.get(cid).get.getFileName.toString.endsWith(s"$table-$windowStart.parquet"))
+    assert(etSigner.threads.size == 3 && poolThreads.isEmpty)
+  }
+
+  test("a one-table sink publishes on the calling thread") {
+    // every tracked table is one publish, rows or not
+    val (base, store, _) = freshStore("sink-one-table")
+    val signer = new BarrierSigner(1)
+    val sink = new VaultSink("ns", Seq(items), base.resolve("staging").toString,
+      store, signer = Some(signer))
+    val Seq(("items", _)) = sink.processBatch(lines(threeTableTxs.last), 0L)
+    assert(signer.threads.asScala.toSeq == Seq(Thread.currentThread.getName))
+  }
+
+  test("a table that fails its batch fails it with its own exception, after every table's job") {
+    val drifted = tx(9, "notes", "2024-01-01 00:00:06",
+      Seq(note("\"x\"", "true") :+ (("extra", "integer", "1"))))
+    // the exception the failing table throws alone, on the calling thread
+    val alone = intercept[Exception] {
+      val (base, store, _) = freshStore("sink-drift-alone")
+      new VaultSink("ns", Seq(notes), base.resolve("staging").toString, store)
+        .processBatch(lines(drifted), 0L)
+    }
+    def messages(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(messages(alone).contains("schema drift detected on table 'notes'"))
+    for (eventTime <- Seq(None, Some(EventTimeWindows(60L, 0L)))) {
+      val (base, store, catalog) = freshStore("sink-drift")
+      val staging = base.resolve("staging")
+      val sink = new VaultSink("ns", Seq(orders, notes, items), staging.toString, store,
+        catalog = Some(catalog), eventTime = eventTime)
+      def watermark = Option(staging.resolve("_watermark")).filter(Files.exists(_))
+        .map(Files.readString(_))
+      if (eventTime.isDefined) sink.processBatch(lines(threeTableTxs: _*), 0L)
+      val events = catalog.events.count()
+      val wm = watermark
+      val e = intercept[Exception](sink.processBatch(lines(threeTableTxs :+ drifted: _*), 1L))
+      assert(e.getClass == alone.getClass, s"eventTime=$eventTime: $e")
+      assert(messages(e).contains("schema drift detected on table 'notes'"), s"eventTime=$eventTime")
+      assert(catalog.events.count() == events && watermark == wm, s"eventTime=$eventTime")
+      org.apache.spark.sql.graftbridge.Bridge.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, s"eventTime=$eventTime")
+      assert(poolThreads.isEmpty, s"eventTime=$eventTime")
+    }
+  }
+
+  /** Counts down `entered`, then blocks until interrupted. */
+  private final class BlockingSigner extends FileSigner {
+    @transient val entered = new java.util.concurrent.CountDownLatch(1)
+    override def sign(file: java.nio.file.Path): Array[Byte] = {
+      entered.countDown()
+      new java.util.concurrent.CountDownLatch(1).await()
+      Array.emptyByteArray
+    }
+  }
+
+  test("stopping a query whose tables block in their signer leaves no pool thread") {
+    val base = Files.createTempDirectory("sink-stop")
+    val wal = base.resolve("wal")
+    Files.createDirectories(wal)
+    Files.writeString(wal.resolve("tx.json"), threeTableTxs.mkString("", "\n", "\n"))
+    val signer = new BlockingSigner
+    val q = StreamPipeline.start(spark, "ns", Seq(orders, notes, items), wal.toString,
+      base.resolve("staging").toString, base.resolve("ckpt").toString,
+      new LocalContentStore(base.resolve("store").toString), signer = Some(signer),
+      availableNow = true)
+    try {
+      assert(signer.entered.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(poolThreads.nonEmpty)
+    } finally q.stop()
+    assert(!q.isActive && poolThreads.isEmpty)
   }
 
   test("scale mode: a replayed batch id keeps its stored directory artifact and logs one event") {
@@ -266,3 +420,4 @@ class VaultSinkSpec extends SparkSpec {
     assert(rows == Seq(1 -> "a", 2 -> "b"))
   }
 }
+
