@@ -2,9 +2,14 @@ package graft.catalog
 
 import graft.core.{Account, VaultName}
 import java.lang.ref.SoftReference
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -25,37 +30,42 @@ final case class UploadEvent(vault: VaultName, cid: String, timestampSec: Long,
  * vault's event log by before/after with limit/offset — the reference's
  * only filter+limit "query" (`cmd/vaults/commands.go:427-586`).
  *
- * Storage: two parquet stores under `root`, written only here: `vaults`
- * (one file per create) and `events`, `partitionBy(vault)` (one file per
- * vault per append). Their schemas are declared
- * ([[VaultCatalog.VaultsSchema]], [[VaultCatalog.EventsSchema]]), so no
- * Spark job runs just to learn a schema from footers, and a file written
- * before a column existed (events without `digest`/`window`, vaults
- * without `created_seq`) reads that column as NULL.
+ * Storage: two parquet stores under `root`: `vaults` (one file per
+ * create) and `events`, partitioned by vault (`events/vault=<v>`, one
+ * file per vault per append, without the `vault` column). Their schemas
+ * are declared ([[VaultCatalog.VaultsSchema]], [[VaultCatalog.EventsSchema]]),
+ * so no Spark job runs just to learn a schema from footers, and a file
+ * written before a column existed (events without `digest`/`window`,
+ * vaults without `created_seq`) reads that column as NULL.
  *
- * The per-vault calls (listings, cache durations, vault creates, the
- * append's replay dedupe) read a driver-side snapshot of each directory
- * they need: a vault's partition `events/vault=<v>` or the `vaults`
- * store. A snapshot is keyed by the (name, length, modification time) of
- * the directory's data files (names not starting with `_` or `.`), from
- * one listing of that directory alone. While the key is current the call
- * runs no Spark job; when it changed, one read of exactly the listed
- * files refreshes every stale directory of the call (only the added
- * files when every file already read is still listed unchanged, as after
- * an append). So a listing costs the same whatever the number of vaults,
- * and a change made through another instance or process shows at the
- * next call. A missing directory reads as empty; a corrupt file, or a
- * file that vanishes between the listing and the read, fails the call
- * and every later call on that directory. Snapshots are held per
- * instance (the sink's batch thread and a reader may share one) through
- * soft references, so heap pressure drops them instead of failing the
- * driver; a vault's holds one row per artifact published to it.
+ * Every call reads a driver-side snapshot of each directory it needs: a
+ * vault's partition or the `vaults` store. A snapshot is keyed by the
+ * (name, length, modification time) of the directory's data files (names
+ * not starting with `_` or `.`), from one listing of that directory
+ * alone. While the key is current the call runs no Spark job; when it
+ * changed, one read of exactly the listed files refreshes every stale
+ * directory of the call (only the added files when every file already
+ * read is still listed unchanged). So a listing costs the same whatever
+ * the number of vaults, and a change made through another instance or
+ * process shows at the next call. A missing directory reads as empty; a
+ * corrupt file, or a file that vanishes between the listing and the
+ * read, fails the call and every later call on that directory.
+ * Snapshots are held per instance (the sink's batch thread and a reader
+ * may share one) through soft references, so heap pressure drops them
+ * instead of failing the driver; a vault's holds one row per artifact
+ * published to it, and [[events]] holds every vault's.
  *
- * The whole-store [[events]] and [[vaults]] frames stay Spark reads, for
- * whole-log queries.
+ * Writes run no Spark job either: a create or an append writes its few
+ * rows on the driver through Spark's own parquet writer (the physical
+ * types, compression and footer of a Spark write) to a hidden temp name,
+ * renamed into place, so no listing or read sees a partial file. The
+ * written file is then folded into its directory's snapshot when the
+ * snapshot was current just before the write; otherwise the next read
+ * refreshes it, picking up another writer's files too.
  */
 final case class VaultCatalog(spark: SparkSession, root: String) {
-  import VaultCatalog.{EventsSchema, ListedSchema, Newest, Snapshot, VaultsSchema}
+  import VaultCatalog.{ByCreate, EventFileSchema, EventsSchema, ListedSchema, Newest, Snapshot,
+    VaultsSchema}
 
   private def vaultsPath = s"$root/vaults"
   private def eventsPath = s"$root/events"
@@ -71,72 +81,102 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   def createVault(vault: VaultName, account: Account, cacheDurationMins: Int): Unit = {
     val seqs = vaultRows.filterNot(_.isNullAt(3)).map(_.getLong(3))
     val nextSeq = seqs.maxOption.getOrElse(0L) + 1L
-    frameOf(VaultsSchema, Row(vault.toString, account.address, cacheDurationMins, nextSeq))
-      .write.mode("append").parquet(vaultsPath)
+    append(vaultsPath, VaultsSchema,
+      Seq(Row(vault.toString, account.address, cacheDurationMins, nextSeq)), ByCreate)
   }
-
-  /** The store at `path` read with `schema`, or an empty local frame of
-    * it (no Spark job) when the store is not there yet
-    * ([[graft.core.FsUtil.readIfPresent]]).
-    * Anything but absence propagates: a swallow-all would let a corrupt
-    * `vaults` store read as empty (the next create restarting
-    * `created_seq` at 1) and let appendEvents' replay dedupe read
-    * "not logged" off a failed `events` read and silently append a
-    * duplicate. */
-  private def readOrEmpty(schema: StructType, path: String): DataFrame =
-    graft.core.FsUtil.readIfPresent(spark.read.schema(schema).parquet(path))
-      .getOrElse(frameOf(schema))
 
   /** A frame of `rows` in `schema`: the stores are written with the
     * schema they are read with. */
   private def frameOf(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** The data files of `dir`, sorted by name, as its snapshot key; empty
-    * when `dir` does not exist. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** The entries of `dir`; none when `dir` does not exist. */
+  private def entries(dir: String): Seq[FileStatus] =
+    try fs.listStatus(new Path(dir)).toSeq.filterNot(s => hidden(s.getPath.getName))
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The data files of `dir`, sorted by name, as its snapshot key. */
   private def listing(dir: String): Vector[(String, Long, Long)] =
-    try fs.listStatus(new Path(dir)).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+    entries(dir).filter(_.isFile)
       .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toVector.sorted
-    catch { case _: java.io.FileNotFoundException => Vector.empty }
+
+  private def held(dir: String): Option[Snapshot] =
+    Option(snapshots.get(dir)).flatMap(r => Option(r.get))
 
   /** The rows of each directory in `dirs` (of the store at `base`, read
     * with `schema`), sorted by `order`: from its snapshot while the
     * snapshot's key is current, else refreshed by one Spark read of the
     * stale directories' files. A stale snapshot whose files are all still
     * listed, unchanged, keeps their rows, so only the files added since
-    * are read; any other change re-reads the whole directory. `dirOf`
-    * names a read row's directory. */
+    * are read; any other change re-reads the whole directory. Every
+    * directory listed ends with a current snapshot, an empty one
+    * included, so a later write can fold its file in. `dirOf` names a
+    * read row's directory. */
   private def snapshotRows(schema: StructType, base: String, dirs: Seq[String],
                            order: Ordering[Row])(dirOf: Row => String): Map[String, IndexedSeq[Row]] = {
     val plans = dirs.distinct.map { d =>
       val key = listing(d)
       val listed = key.toSet
-      val prior = Option(snapshots.get(d)).flatMap(r => Option(r.get))
-        .filter(_.key.forall(listed)).getOrElse(Snapshot(Vector.empty, IndexedSeq.empty))
-      (d, key, prior, key.filterNot(prior.key.toSet))
+      val old = held(d)
+      val prior = old.filter(_.key.forall(listed)).getOrElse(Snapshot.Empty)
+      (d, key, old, prior, key.filterNot(prior.key.toSet))
     }
-    val files = plans.flatMap { case (d, _, _, added) => added.map(f => s"$d/${f._1}") }
+    val files = plans.flatMap { case (d, _, _, _, added) => added.map(f => s"$d/${f._1}") }
     val read: Map[String, Array[Row]] =
       if (files.isEmpty) Map.empty
       else spark.read.schema(schema).option("basePath", base).parquet(files: _*)
         .collect().groupBy(dirOf)
-    plans.map { case (d, key, prior, added) =>
-      if (added.isEmpty) d -> prior.rows
-      else {
-        val rows = (prior.rows ++ read.getOrElse(d, Array.empty[Row])).sorted(order)
-        snapshots.put(d, new SoftReference(Snapshot(key, rows)))
-        d -> rows
-      }
+    plans.map { case (d, key, old, prior, added) =>
+      val rows =
+        if (added.isEmpty) prior.rows
+        else (prior.rows ++ read.getOrElse(d, Array.empty[Row])).sorted(order)
+      if (!old.exists(_.key == key)) snapshots.put(d, new SoftReference(Snapshot(key, rows)))
+      d -> rows
     }.toMap
+  }
+
+  /** Writes `rows` (each cut to the columns of `fileSchema`, a prefix of
+    * the store's schema) as one new parquet file of `dir`, on the driver:
+    * Spark's parquet writer writes a hidden temp file, renamed to a
+    * `part-` name once closed. A failed write throws and leaves no data
+    * file. The file is folded into `dir`'s snapshot (rows sorted by
+    * `order`) when the snapshot held was current just before the write;
+    * else the snapshot stays stale, and the next read of `dir` refreshes
+    * it, files of other writers included. */
+  private def append(dir: String, fileSchema: StructType, rows: Seq[Row],
+                     order: Ordering[Row]): Unit = {
+    val before = listing(dir)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, fileSchema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-${UUID.randomUUID}${factory.getFileExtension(context)}"
+    val (tmp, file) = (new Path(dir, s".$name.tmp"), new Path(dir, name))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(fileSchema)
+    try {
+      val writer = factory.newInstance(tmp.toString, fileSchema, context)
+      try rows.foreach { r =>
+        val cut = Row.fromSeq(r.toSeq.take(fileSchema.length))
+        writer.write(toInternal(cut).asInstanceOf[InternalRow])
+      } finally writer.close()
+      if (!fs.rename(tmp, file)) throw new java.io.IOException(s"could not rename $tmp to $file")
+    } catch {
+      case e: Throwable =>
+        try fs.delete(tmp, false) catch { case d: Exception => e.addSuppressed(d) }
+        throw e
+    }
+    val status = fs.getFileStatus(file)
+    held(dir).filter(_.key == before).foreach { prior =>
+      snapshots.put(dir, new SoftReference(Snapshot(
+        (prior.key :+ ((name, status.getLen, status.getModificationTime))).sorted,
+        (prior.rows ++ rows).sorted(order))))
+    }
   }
 
   /** Every row of the vault catalog, by vault then `created_seq`. */
   private def vaultRows: IndexedSeq[Row] =
-    snapshotRows(VaultsSchema, vaultsPath, Seq(vaultsPath),
-      Ordering.by((r: Row) => (r.getString(0), if (r.isNullAt(3)) Long.MinValue else r.getLong(3)))
-    )(_ => vaultsPath)(vaultsPath)
+    snapshotRows(VaultsSchema, vaultsPath, Seq(vaultsPath), ByCreate)(_ => vaultsPath)(vaultsPath)
 
   /** The event rows of each of `vaults`, newest first. A vault with no
     * partition directory has none — unless the events store holds data
@@ -145,15 +185,16 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
   private def eventRows(vaults: Seq[String]): Map[String, IndexedSeq[Row]] = {
     val rows = snapshotRows(EventsSchema, eventsPath, vaults.map(partitionPath), Newest)(
       r => partitionPath(r.getString(6)))
-    if (rows.exists(_._2.isEmpty)) {
-      val stray = listing(eventsPath)
-      if (stray.nonEmpty) throw new IllegalStateException(
-        s"$eventsPath holds data files outside any vault partition: ${stray.map(_._1).mkString(", ")}")
-    }
+    if (rows.exists(_._2.isEmpty)) failOnStray(listing(eventsPath).map(_._1))
     vaults.map(v => v -> rows(partitionPath(v))).toMap
   }
 
-  def vaults: DataFrame = readOrEmpty(VaultsSchema, vaultsPath)
+  private def failOnStray(names: Seq[String]): Unit =
+    if (names.nonEmpty) throw new IllegalStateException(
+      s"$eventsPath holds data files outside any vault partition: ${names.mkString(", ")}")
+
+  /** The whole vault catalog, as a local frame of its snapshot. */
+  def vaults: DataFrame = frameOf(VaultsSchema, vaultRows: _*)
 
   /** Q1: list vaults for an account, sorted by vault. */
   def listVaults(account: Account): DataFrame =
@@ -177,16 +218,18 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
       }
   }
 
-  /** P8/M1: record uploaded artifacts' events in one append (one task,
-    * so one file per vault per call). Each event's hot-cache expiry is
-    * ts + its vault's `cache_duration` minutes (the reference's provider
-    * computes the same from the `cache` form field, provider.go:39-64),
-    * epoch 0 when the vault has none (never cached / unknown vault).
+  /** P8/M1: record uploaded artifacts' events in one append: one file
+    * per vault, written in the order the batch first names the vaults.
+    * Each event's hot-cache expiry is ts + its vault's `cache_duration`
+    * minutes (the reference's provider computes the same from the
+    * `cache` form field, provider.go:39-64), epoch 0 when the vault has
+    * none (never cached / unknown vault).
     *
     * An event with a window token is replay-safe: it is dropped when its
     * (vault, cid, window) is already in the log, so a crash-replayed
     * window, which re-derives the same content cid for the same window,
-    * adds no listing row. A later window emitting byte-identical content
+    * adds no listing row — also when the crash fell between two vaults'
+    * files of one append. A later window emitting byte-identical content
     * is a distinct (cid, window) and appends. An event without a window
     * always appends: a deliberate re-upload of identical content is an
     * event (`CompactorSpec` pins the repeated cid). The existence check
@@ -203,16 +246,27 @@ final case class VaultCatalog(spark: SparkSession, root: String) {
         }.toSet
     val fresh = batch.filterNot(e =>
       e.window.exists(w => logged((e.vault.toString, e.cid, w))))
-    if (fresh.nonEmpty)
-      frameOf(EventsSchema, fresh.map { e =>
-        val expiryMs = mins.get(e.vault.toString).filter(_ > 0)
-          .fold(0L)(m => (e.timestampSec + m * 60L) * 1000L)
-        Row(e.cid, e.timestampSec, false, new java.sql.Timestamp(expiryMs), e.digest,
-          e.window.map(Long.box).orNull, e.vault.toString)
-      }: _*).coalesce(1).write.mode("append").partitionBy("vault").parquet(eventsPath)
+    for (vault <- fresh.map(_.vault.toString).distinct)
+      append(partitionPath(vault), EventFileSchema,
+        fresh.filter(_.vault.toString == vault).map { e =>
+          val expiryMs = mins.get(vault).filter(_ > 0)
+            .fold(0L)(m => (e.timestampSec + m * 60L) * 1000L)
+          Row(e.cid, e.timestampSec, false, new java.sql.Timestamp(expiryMs), e.digest,
+            e.window.map(Long.box).orNull, vault)
+        }, Newest)
   }
 
-  def events: DataFrame = readOrEmpty(EventsSchema, eventsPath)
+  /** The whole event log, as a local frame of every vault partition's
+    * snapshot (stale ones refreshed in one read). A data file outside
+    * every vault partition fails the call. */
+  def events: DataFrame = {
+    val (partitions, stray) = entries(eventsPath)
+      .partition(s => s.isDirectory && s.getPath.getName.startsWith("vault="))
+    failOnStray(stray.map(_.getPath.getName))
+    val vaults = partitions.map(_.getPath.getName.stripPrefix("vault=")).sorted
+    val rows = eventRows(vaults)
+    frameOf(EventsSchema, vaults.flatMap(rows): _*)
+  }
 
   /** The digest on `cid`'s newest event in `vault`'s log ("" when none was
     * recorded), None when the log has no such cid. Read from the vault's
@@ -255,6 +309,9 @@ object VaultCatalog {
     "cid STRING, timestamp BIGINT, is_archived BOOLEAN, cache_expiry TIMESTAMP, " +
       "digest STRING, window BIGINT, vault STRING")
 
+  /** An event file's columns: the event log's but its partition column. */
+  private val EventFileSchema: StructType = StructType(EventsSchema.dropRight(1))
+
   /** The columns a listing returns. */
   private val ListedSchema: StructType = StructType(EventsSchema.take(4))
 
@@ -262,8 +319,15 @@ object VaultCatalog {
   private val Newest: Ordering[Row] =
     Ordering.by((r: Row) => r.getLong(1)).reverse.orElseBy(_.getString(0))
 
+  /** By vault, then `created_seq` (an unsequenced row first). */
+  private val ByCreate: Ordering[Row] =
+    Ordering.by((r: Row) => (r.getString(0), if (r.isNullAt(3)) Long.MinValue else r.getLong(3)))
+
   /** A directory's rows and the data files they were read from. */
   private final case class Snapshot(key: Vector[(String, Long, Long)], rows: IndexedSeq[Row])
+  private object Snapshot {
+    val Empty: Snapshot = Snapshot(Vector.empty, IndexedSeq.empty)
+  }
 
   /**
    * Retention/archival view of an upload log — the provider-side

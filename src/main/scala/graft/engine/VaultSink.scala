@@ -390,7 +390,12 @@ object VaultSink {
           case done => done.get
         }
       } catch {
-        case e: InterruptedException => pool.shutdownNow(); throw e
+        case e: InterruptedException =>
+          // interrupt the tasks until they have ended: code a task runs
+          // may drop one interrupt (Hadoop's `Shell.joinThread` does,
+          // under a local file write's permission call)
+          while ({ pool.shutdownNow(); !pool.awaitTermination(100, TimeUnit.MILLISECONDS) }) ()
+          throw e
       } finally {
         pool.shutdown()
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)

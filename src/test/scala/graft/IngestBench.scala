@@ -206,7 +206,8 @@ object IngestBench {
                           nBatches: Int,
                           eventTime: Option[graft.engine.EventTimeWindows] = None,
                           hostile: Boolean = false,
-                          singleFile: Boolean = false)
+                          singleFile: Boolean = false,
+                          withCatalog: Boolean = false)
       : Map[String, Any] = {
     val wal = s"$base/wal"; val store = s"$base/store"
     genSpool(wal, nTx, files = 8, eventTimed = eventTime.isDefined,
@@ -217,7 +218,8 @@ object IngestBench {
     val q = StreamPipeline.start(spark, "bench", schemas, wal, s"$base/staging",
       s"$base/ckpt", new LocalContentStore(store),
       availableNow = true, maxTxPerTrigger = Some((nTx / nBatches).toInt max 1),
-      singleFile = singleFile, eventTime = eventTime)
+      singleFile = singleFile, eventTime = eventTime,
+      catalog = Option.when(withCatalog)(graft.catalog.VaultCatalog(spark, s"$base/catalog")))
     q.awaitTermination(math.max(600000L, nTx * 3)) // scale the cap with the feed
     val wallSec = (System.nanoTime() - t0) / 1e9
     spark.streams.removeListener(collector)
@@ -477,11 +479,12 @@ object IngestBench {
     val file1x = runFileFeed(spark, s"$base/file1x", nTx / 10, nBatches = 10)
     val file10x = runFileFeed(spark, s"$base/file10x", nTx, nBatches = 10)
     // the default shape (`vaults stream`): one `coalesce(1)` file per
-    // table and window, the batch's tables written side by side
+    // table and window, the batch's tables written side by side, and
+    // each batch's events appended to a vault catalog
     val single1x = runFileFeed(spark, s"$base/single1x", nTx / 10, nBatches = 10,
-      singleFile = true)
+      singleFile = true, withCatalog = true)
     val single10x = runFileFeed(spark, s"$base/single10x", nTx, nBatches = 10,
-      singleFile = true)
+      singleFile = true, withCatalog = true)
     // 100× row (round 12): 10M records through the flagship path, and —
     // the live-feed half — the same scale through the walsender socket,
     // spool-segment writes and ack-time GC under ~400 segment rolls

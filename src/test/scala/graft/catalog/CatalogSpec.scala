@@ -228,12 +228,14 @@ class CatalogSpec extends SparkSpec {
         UploadEvent(v, "cidB", 700L, window = Some(9L)),
         UploadEvent(other, "oNew", 700L, window = Some(8L))))))
     // each read's own jobs only, no footer job to infer a schema: a
-    // listing whose partition changed refreshes its snapshot in one job,
-    // a current one runs none; the vault catalog has not changed since
-    // the appends above read it; an append writes in one job, plus one
-    // refresh of whichever of its vaults' partitions changed
+    // listing of a partition this catalog has not read refreshes its
+    // snapshot in one job, a current one runs none; the vault catalog's
+    // snapshot took in this catalog's own creates; an append writes on
+    // the driver, and runs one refresh of whichever of its vaults'
+    // partitions it holds no current snapshot of (here `other`, written
+    // but never read)
     assert(counts == Seq("stale listEvents" -> 1, "current listEvents" -> 0,
-      "listVaults" -> 0, "appendEvents of 1" -> 1, "appendEvents of 3 in 2 vaults" -> 2))
+      "listVaults" -> 0, "appendEvents of 1" -> 0, "appendEvents of 3 in 2 vaults" -> 1))
     // one file per vault per append
     assert(Seq(v, other).map(files) == filesBefore.zip(Seq(2, 1)).map(p => p._1 + p._2))
     assert(cids(c.listEvents(v, limit = Some(3))) == Seq("cidA", "cidB", "cidNew"))
@@ -315,10 +317,193 @@ class CatalogSpec extends SparkSpec {
     assert(listed.map(_.getLong(1)).toSeq == Seq(967L, 927L, 887L))
     assert((refresh.jobs, refresh.files) == (1, 25L))
     assert(jobs(c.listEvents(v7, after = Some(900L)).collect()) == 0)
-    // after an append the refresh reads the appended file alone
+    // an append to a current snapshot is folded into it: no refresh
     c.appendEvents(Seq(UploadEvent(v7, "cNew", 2000L)))
     val (after, again) = WorkCounters.of(spark)(c.listEvents(v7, after = Some(900L)).collect())
     assert(after.map(_.getString(0)).toSeq == Seq("cNew", "c0967", "c0927"))
-    assert((again.jobs, again.files) == (1, 1L))
+    assert((again.jobs, again.files) == (0, 0L))
+  }
+
+  test("a create on an existing store runs no job") {
+    val c = freshCatalog()
+    c.createVault(v, acct, 30)
+    // the vault catalog's snapshot took in this catalog's own create
+    assert(jobs(c.createVault(VaultName("ns", "other"), acct, 5)) == 0)
+    assert(c.listVaults(acct).collect().map(_.getString(0)).toSeq == Seq("ns.other", "ns.t"))
+  }
+
+  test("an append on a current snapshot runs no job") {
+    val c = freshCatalog(); seed(c)
+    assert(cids(c.listEvents(v, limit = Some(1))) == Seq("cid5"))
+    assert(jobs(c.appendEvents(Seq(UploadEvent(v, "c6", 600L, "d6", Some(6L))))) == 0)
+    assert(jobs(c.appendEvents(Seq(UploadEvent(v, "c7", 700L)))) == 0)
+  }
+
+  test("a read right after this catalog's own append or create runs no job") {
+    val c = freshCatalog()
+    c.createVault(v, acct, 30)
+    val other = VaultName("ns", "other")
+    c.createVault(other, acct, 5)
+    assert(jobs(c.cacheDurationOf(other)) == 0)
+    assert(c.cacheDurationOf(other).contains(5))
+    // the first append makes the partition: its snapshot starts empty
+    assert(cids(c.listEvents(v)).isEmpty)
+    c.appendEvents(Seq(UploadEvent(v, "c1", 100L, "d1", Some(1L))))
+    assert(jobs(c.listEvents(v).collect()) == 0)
+    c.appendEvents(Seq(UploadEvent(v, "c2", 200L, window = Some(2L))))
+    assert(jobs(c.digestOf(v, "c1")) == 0)
+    assert(c.digestOf(v, "c1").contains("d1") && c.digestOf(v, "c2").contains(""))
+    assert(cids(c.listEvents(v)) == Seq("c2", "c1"))
+  }
+
+  test("the whole-log frames on current snapshots run no job") {
+    val c = freshCatalog(); seed(c)
+    val other = VaultName("ns", "other")
+    c.createVault(other, acct, 0)
+    c.appendEvents(Seq(UploadEvent(other, "o1", 50L, window = Some(1L))))
+    assert(c.listEvents(v).collect().length == 5)
+    assert(jobs(c.events.collect()) == 0)
+    assert(jobs(c.vaults.collect()) == 0)
+    assert(c.events.collect().map(r => (r.getString(6), r.getString(0))).toSeq ==
+      Seq(("ns.other", "o1")) ++ (5 to 1 by -1).map(i => ("ns.t", s"cid$i")))
+    assert(c.vaults.collect().map(_.getString(0)).toSeq == Seq("ns.other", "ns.t"))
+  }
+
+  /** `rows` as value lists, in a fixed order. */
+  private def valueSet(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+    rows.map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  /** The footer of a parquet file: its schema, its key-value metadata, its
+    * writer, and each column chunk's path, physical type and codec. */
+  private def footerShape(file: Path) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), spark.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    val meta = footer.getFileMetaData
+    (meta.getSchema, meta.getKeyValueMetaData.asScala.toMap, meta.getCreatedBy,
+      footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+        (c.getPath.toDotString, c.getPrimitiveType, c.getCodec))))
+  }
+
+  test("catalog files read back the writer's rows through a fresh catalog and through Spark") {
+    val c = freshCatalog()
+    val ts0 = new java.sql.Timestamp(0)
+    // an old-format event file and vaults file, and a Spark-written event
+    // file of every column
+    spark.createDataFrame(Seq(("old1", 50L, true, ts0)))
+      .toDF("cid", "timestamp", "is_archived", "cache_expiry")
+      .write.parquet(s"${c.root}/events/vault=$v")
+    spark.createDataFrame(Seq((v.toString, acct.address, 10)))
+      .toDF("vault", "account", "cache_duration").write.parquet(s"${c.root}/vaults")
+    spark.createDataFrame(Seq(org.apache.spark.sql.Row("spark1", 60L, false,
+      new java.sql.Timestamp(123000L), "ds", 5L, v.toString)).asJava, VaultCatalog.EventsSchema)
+      .write.mode("append").partitionBy("vault").parquet(s"${c.root}/events")
+    val sparkFiles = FsUtil.listDir(Path.of(c.root, "events", s"vault=$v")).toSet
+    // this catalog's files: NULL windows, empty and set digests, expiries
+    // of a cached and an uncached vault, and sequenced creates
+    val w = VaultName("ns", "w")
+    c.createVault(v, acct, 30)
+    c.createVault(w, acct, 0)
+    c.appendEvents(Seq(UploadEvent(v, "c1", 100L, "d1", Some(1L)), UploadEvent(w, "c2", 200L),
+      UploadEvent(v, "c3", 300L)))
+    c.appendEvents(Seq(UploadEvent(w, "c4", 400L, "d4", Some(2L))))
+    def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val events = valueSet(Array(
+      Seq("old1", 50L, true, ts0, null, null, v.toString),
+      Seq("spark1", 60L, false, new java.sql.Timestamp(123000L), "ds", 5L, v.toString),
+      Seq("c1", 100L, false, at(100L + 30 * 60), "d1", 1L, v.toString),
+      Seq("c3", 300L, false, at(300L + 30 * 60), "", null, v.toString),
+      Seq("c2", 200L, false, ts0, "", null, w.toString),
+      Seq("c4", 400L, false, ts0, "d4", 2L, w.toString)).map(org.apache.spark.sql.Row.fromSeq))
+    val vaults = valueSet(Array(Seq(v.toString, acct.address, 10, null),
+      Seq(v.toString, acct.address, 30, 1L), Seq(w.toString, acct.address, 0, 2L))
+      .map(org.apache.spark.sql.Row.fromSeq))
+    // the writer serves its own rows from its snapshots, without a job
+    assert(jobs(c.events.collect()) == 0 && jobs(c.vaults.collect()) == 0)
+    assert(valueSet(c.events.collect()) == events && valueSet(c.vaults.collect()) == vaults)
+    // and its files hold exactly those rows
+    val fresh = VaultCatalog(spark, c.root)
+    assert(valueSet(fresh.events.collect()) == events)
+    assert(valueSet(fresh.vaults.collect()) == vaults)
+    assert(valueSet(spark.read.schema(VaultCatalog.EventsSchema).parquet(s"${c.root}/events")
+      .collect()) == events)
+    assert(valueSet(spark.read.schema(VaultCatalog.VaultsSchema).parquet(s"${c.root}/vaults")
+      .collect()) == vaults)
+    for (vault <- Seq(v, w))
+      assert(valueSet(fresh.listEvents(vault).collect()) == valueSet(c.listEvents(vault).collect()))
+    // a file this catalog wrote has the footer of Spark's write of the
+    // same columns
+    val own = FsUtil.listDir(Path.of(c.root, "events", s"vault=$v"))
+      .filterNot(sparkFiles).filter(_.getFileName.toString.startsWith("part-"))
+    val spark1 = sparkFiles.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
+      .filter(f => spark.read.parquet(f.toString).columns.contains("digest"))
+    assert(own.length == 1 && spark1.length == 1)
+    assert(own.head.getFileName.toString.endsWith(".snappy.parquet"))
+    assert(footerShape(own.head) == footerShape(spark1.head))
+  }
+
+  test("a file another catalog appends is not folded in, and the next listing reads it") {
+    val c = freshCatalog(); seed(c)
+    assert(cids(c.listEvents(v, limit = Some(1))) == Seq("cid5"))
+    VaultCatalog(spark, c.root).appendEvents(Seq(UploadEvent(v, "foreign", 600L)))
+    // the listing before this catalog's own append no longer equals its
+    // snapshot's key, so the append leaves the snapshot stale
+    assert(jobs(c.appendEvents(Seq(UploadEvent(v, "own", 700L)))) == 0)
+    val (listed, work) = WorkCounters.of(spark)(cids(c.listEvents(v, limit = Some(3))))
+    assert(listed == Seq("own", "foreign", "cid5"))
+    assert((work.jobs, work.files) == (1, 2L))
+    assert(jobs(c.listEvents(v).collect()) == 0)
+  }
+
+  test("a failed catalog write throws, leaves no data file, and the snapshot keeps serving") {
+    val c = freshCatalog(); seed(c)
+    val before = cids(c.listEvents(v))
+    val partition = Path.of(c.root, "events", s"vault=$v")
+    val names = FsUtil.listDir(partition).map(_.getFileName.toString).toSet
+    // a plain file where a vault's partition directory must be: the file
+    // cannot be made
+    val bad = VaultName("ns", "bad")
+    Files.writeString(Path.of(c.root, "events", s"vault=$bad"), "not a directory")
+    intercept[java.io.IOException](c.appendEvents(Seq(UploadEvent(bad, "b1", 100L))))
+    // an expiry beyond the timestamp range fails inside the temp file
+    intercept[ArithmeticException](c.appendEvents(Seq(UploadEvent(v, "huge", 10000000000000L))))
+    // neither a data file nor a temp file is left
+    assert(FsUtil.listDir(partition).map(_.getFileName.toString).toSet == names)
+    val (listed, work) = WorkCounters.of(spark)(cids(c.listEvents(v)))
+    assert(listed == before && work.jobs == 0)
+  }
+
+  test("a leftover hidden temp file is ignored by listings, events and a Spark read") {
+    val c = freshCatalog(); seed(c)
+    for (dir <- Seq(Path.of(c.root, "events", s"vault=$v"), Path.of(c.root, "vaults")))
+      Files.writeString(dir.resolve(".part-leftover.snappy.parquet.tmp"), "a partial file")
+    val fresh = VaultCatalog(spark, c.root)
+    assert(cids(fresh.listEvents(v)) == Seq("cid5", "cid4", "cid3", "cid2", "cid1"))
+    assert(fresh.events.collect().length == 5 && fresh.vaults.collect().length == 1)
+    assert(spark.read.schema(VaultCatalog.EventsSchema).parquet(s"${c.root}/events").count() == 5)
+    assert(spark.read.schema(VaultCatalog.VaultsSchema).parquet(s"${c.root}/vaults").count() == 1)
+  }
+
+  test("a windowed append that fails after its first vault's file logs each event once on replay") {
+    val c = freshCatalog()
+    val u = VaultName("ns", "u")
+    c.createVault(v, acct, 30)
+    c.createVault(u, acct, 30)
+    val batch = Seq(UploadEvent(v, "cv", 100L, "dv", Some(1L)),
+      UploadEvent(u, "cu", 100L, "du", Some(1L)))
+    // a dangling link where u's partition directory must be: it lists as
+    // empty, and no directory can be made there
+    val link = Path.of(c.root, "events", s"vault=$u")
+    Files.createDirectories(link.getParent)
+    Files.createSymbolicLink(link, Path.of(c.root, "missing"))
+    intercept[java.io.IOException](c.appendEvents(batch))
+    assert(cids(c.listEvents(v)) == Seq("cv") && cids(c.listEvents(u)).isEmpty)
+    Files.delete(link)
+    c.appendEvents(batch)
+    val logged = VaultCatalog(spark, c.root).events.select("vault", "cid", "window").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    assert(logged == Seq((v.toString, "cv", 1L), (u.toString, "cu", 1L)))
   }
 }

@@ -296,6 +296,22 @@ class VaultSinkSpec extends SparkSpec {
     assert(etSigner.threads.size == 3 && poolThreads.isEmpty)
   }
 
+  test("a batch of three tables with a catalog runs one job per table") {
+    val (base, store, catalog) = freshStore("sink-jobs")
+    val account = graft.core.Account("0x396F15b0A2be942193BBBdC11BE3bF6F6EB1a08a")
+    for (t <- Seq("orders", "notes", "items"))
+      catalog.createVault(graft.core.VaultName("ns", t), account, 60)
+    val sink = new VaultSink("ns", Seq(orders, notes, items), base.resolve("staging").toString,
+      store, catalog = Some(catalog), clock = () => 1700000000L)
+    // the batch right after the creates, and the next one: each table's
+    // write is the only job; the catalog append runs none
+    for (batchId <- Seq(7L, 8L)) {
+      val (out, work) = graft.WorkCounters.of(spark)(sink.processBatch(lines(threeTableTxs: _*), batchId))
+      assert(out.length == 3 && work.jobs == 3, s"batch $batchId: $work")
+    }
+    assert(catalog.events.collect().length == 6)
+  }
+
   test("a one-table sink publishes on the calling thread") {
     // every tracked table is one publish, rows or not
     val (base, store, _) = freshStore("sink-one-table")
