@@ -14,22 +14,6 @@ object FsUtil {
     if (!Files.isDirectory(dir)) Vector.empty
     else Using.resource(Files.list(dir))(_.iterator().asScala.toVector)
 
-  /** `read` of a store that may not exist yet: None ONLY for the two
-    * legitimate absent shapes — the path not existing, and an existing
-    * dir with no data file to infer a schema from. Anything else
-    * (transient IO, a corrupt footer) PROPAGATES, so a damaged store
-    * never reads as an empty one. The second shape needs a read that
-    * infers its schema: `VaultCatalog` declares its schemas, so only
-    * `IncrementalDedup`'s index read can reach it. */
-  def readIfPresent[T](read: => T): Option[T] =
-    try Some(read)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        None
-    }
-
   /** `listDir` sorted by path name. */
   def listDirSorted(dir: Path): Vector[Path] = listDir(dir).sorted
 

@@ -579,8 +579,8 @@ object Layout {
     import spark.implicits._
     val stats = Seq((old.getLong(0) + fresh.getLong(0), old.getLong(1) + fresh.getLong(1), nBuckets))
       .toDF("n_docs", "sum_dl", "n_buckets")
-    // sibling-dir + rename (compactIndex's dance): the read-then-overwrite
-    // of the stats row must not be able to crash into a stats-less layout
+    // write a sibling dir, then swap it in by rename: an overwrite in
+    // place of the stats row just read could crash into a stats-less layout
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val dst = new org.apache.hadoop.fs.Path(s"$dir/stats")

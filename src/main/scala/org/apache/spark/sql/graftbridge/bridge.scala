@@ -28,8 +28,11 @@ object Bridge extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanH
   /** Wait until every queued listener event was delivered. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
-  /** Listeners on the context's bus, for specs that check one was removed. */
-  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+  /** Listeners on the context's bus whose class name starts with `prefix`,
+    * for specs that check one was removed. (The bus's total moves on its
+    * own: the context cleaner removes a collected session's listener.) */
+  def listenerCount(sc: SparkContext, prefix: String): Int =
+    sc.listenerBus.listeners.stream().filter(_.getClass.getName.startsWith(prefix)).count().toInt
 
   /** Files read by the file scans of the SQL execution whose end `e` is,
     * if `ours` accepts its id (the `spark.sql.execution.id` its jobs

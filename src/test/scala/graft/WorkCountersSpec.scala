@@ -60,18 +60,19 @@ class WorkCountersSpec extends SparkSpec {
 
   test("blocks nest, and the listener is removed after the block, also when it throws") {
     val sc = spark.sparkContext
-    val listeners = Bridge.listenerCount(sc)
+    def ours = Bridge.listenerCount(sc, "graft.WorkCounters")
+    val listeners = ours
     val ((_, inner), outer) = WorkCounters.of(spark) {
-      val r = WorkCounters.of(spark)(noop(scan))
+      val r = WorkCounters.of(spark) { assert(ours == listeners + 2); noop(scan) }
       noop(scan)
       r
     }
     assert((inner.jobs, inner.files, outer.jobs, outer.files) == (1, 1L, 2, 2L))
-    assert(Bridge.listenerCount(sc) == listeners)
+    assert(ours == listeners)
     intercept[IllegalStateException] {
       WorkCounters.of(spark)(throw new IllegalStateException("boom"))
     }
-    assert(Bridge.listenerCount(sc) == listeners)
+    assert(ours == listeners)
     assert(WorkCounters.of(spark)(noop(scan))._2.jobs == 1)
   }
 }
