@@ -41,11 +41,8 @@ object Layout {
     * partitioning). */
   def ivfWrite(indexed: DataFrame, centroids: Array[(Int, Array[Double])],
                dir: String): Unit = {
-    indexed
-      .repartition(centroids.length, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    writeTsv(indexed.sparkSession, s"$dir/_centroids.tsv",
-      centroids.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
+    writeCells(indexed, centroids.length, dir, mode = "overwrite")
+    writeCentroids(indexed.sparkSession, s"$dir/_centroids.tsv", centroids)
   }
 
   /**
@@ -74,120 +71,78 @@ object Layout {
   def pqWrite(indexed: DataFrame, centroids: Array[(Int, Array[Double])],
               books: Similarity.PqBooks, dir: String, dims: Int = 64,
               idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val m = books.length
-    Similarity.pqEncode(indexed, books, dims, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol))
-      .repartition(centroids.length, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    writeCells(packedCodes(indexed, books, dims, idCol, vecCol, "cell"),
+      centroids.length, s"$dir/codes", mode = "overwrite")
     val spark = indexed.sparkSession
-    writeTsv(spark, s"$dir/_centroids.tsv",
-      centroids.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
-    writeTsv(spark, s"$dir/_codebooks.tsv",
-      for { s <- books.indices.iterator; (cid, c) <- books(s).iterator }
-        yield s"$s\t$cid\t${c.mkString(",")}")
+    writeCentroids(spark, s"$dir/_centroids.tsv", centroids)
+    writePqBooks(spark, dir, books)
   }
 
   /**
    * Persist an [[Similarity.imiIndex]]'d corpus as a TWO-LEVEL pruned
-   * layout. Every row carries the FUSED pair key `pair = cell1·k₂ +
-   * cell2` (a physical int column), and the partitioning adapts to the
-   * pair-space size (r13, erasing the small-pair-space regime caveat):
-   *
-   *  - pair-space ≤ `fusedDirCap`: `partitionBy(pair)` — probed pairs
-   *    become EXACT partition pruning (one directory per probed pair,
-   *    never the Cartesian cell1×cell2 superset).
-   *  - larger: `partitionBy(cell1)` — bounded at k directories — with
-   *    rows sorted by (cell1, cell2) ≡ by `pair` inside each
-   *    partition's files, so a probe prunes twice: cell1 at the
-   *    listing, and the probed `pair` set at the parquet row-group
-   *    min/max stats (`pair IN (...)` is EXACT, unlike the old
-   *    cell2-IN superset). Materializing the k² pairs as directories
-   *    up there would be a filesystem problem (16.8M dirs at
-   *    k = 4096); k dirs × exact pair row-group pruning gives the same
-   *    read bound without the listing blowup.
-   *
-   * The default cap is 256 — MEASURED, not a style choice (r13 sweep,
-   * same window per pair): at a 1024-pair space the row-group regime
-   * served 1.3× faster than fused directories (4.41 vs 5.77 s @2M),
-   * at 4096 pairs 1.5–1.9× (3.53 vs 5.36 s). Fused directories pay a
-   * per-directory listing + per-file parquet-footer cost that grows
-   * with the pair count, and under the [[Similarity.autoCellsImi]]
-   * sizing rule (~2k rows/cell) each pair directory holds ~2k rows —
-   * tiny files at ANY corpus size — while the row-group regime keeps
-   * k₁ directories of large pair-sorted files whose row groups prune
-   * on the same exact fused-pair set. Below ~256 pairs a realistic
-   * probe set saturates the pair space anyway, so the regimes tie and
-   * fused keeps the simpler all-directory pruning story.
-   *
-   * Serve/append/compact DETECT the regime from the directory names, so
-   * one code path covers both. Sidecars carry both half codebooks.
+   * layout: `partitionBy(cell1)` — k₁ directories — with every row
+   * carrying the fused pair key `pair = cell1·k₂ + cell2` as a column
+   * and the files sorted by (cell1, cell2) ≡ by `pair`. A probe prunes
+   * twice: cell1 at the listing, and the EXACT probed `pair` set at the
+   * parquet row-group min/max stats. Directories per pair would be a
+   * filesystem problem at scale (16.8M dirs at k = 4096), and measured
+   * no faster where they fit (r13, SCALING.md: a tie at 256 pairs,
+   * 1.4× / 1.9× slower at 1024 / 4096 — per-directory listing and
+   * footer costs grow with the pair count, and a ~2k-row pair cell is
+   * a tiny file at any corpus size). Sidecars carry both half codebooks.
    */
   def imiWrite(indexed: DataFrame,
                cents: (Array[(Int, Array[Double])], Array[(Int, Array[Double])]),
-               dir: String, fusedDirCap: Int = 256): Unit = {
-    writeImiPartitioned(withPairKey(indexed, cents._2.length), cents,
-      s"$dir/data", fusedDirCap, mode = "overwrite")
+               dir: String): Unit = {
+    writeImiPartitioned(indexed, cents, s"$dir/data", mode = "overwrite")
     val spark = indexed.sparkSession
-    writeTsv(spark, s"$dir/_centroids1.tsv",
-      cents._1.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
-    writeTsv(spark, s"$dir/_centroids2.tsv",
-      cents._2.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
+    writeCentroids(spark, s"$dir/_centroids1.tsv", cents._1)
+    writeCentroids(spark, s"$dir/_centroids2.tsv", cents._2)
   }
 
-  /** The fused pair key: `cell1·k₂ + cell2`, one int per row. Int range
-    * is safe by construction (k ≤ 4096 per half ⇒ pair < 2²⁴). */
-  private def withPairKey(df: DataFrame, k2: Int): DataFrame =
-    df.withColumn("pair", (col("cell1") * k2 + col("cell2")).cast("int"))
+  /** The one partitioned writer behind every ANN layout's build, append
+    * and compaction: hash-repartition on `partCol` into `nParts` tasks,
+    * so each write lands at most one file per partition directory, then
+    * sort by `sortCols` within those files (tight row-group stats). */
+  private def writePartitioned(df: DataFrame, partCol: String, nParts: Int,
+                               sortCols: Seq[String], path: String, mode: String): Unit = {
+    val parts = df.repartition(nParts, col(partCol))
+    val sorted = if (sortCols.isEmpty) parts else parts.sortWithinPartitions(sortCols.map(col): _*)
+    sorted.write.mode(mode).partitionBy(partCol).parquet(path)
+  }
 
-  /** Shared writer for both IMI regimes (see [[imiWrite]]): fused-pair
-    * directories when the pair space is bounded, cell1 directories with
-    * pair-sorted files otherwise. */
-  private def writeImiPartitioned(withPair: DataFrame,
+  /** The single-level shape ([[ivfWrite]], [[pqWrite]]): one `cell=`
+    * directory per coarse cell. */
+  private def writeCells(df: DataFrame, nCells: Int, path: String, mode: String): Unit =
+    writePartitioned(df, "cell", nCells, Nil, path, mode)
+
+  /** The IMI shape ([[imiWrite]], [[imiPqWrite]]): `cell1=` directories
+    * of (cell1, cell2)-sorted files, with the fused `pair` key stored as
+    * a column. Int range is safe by construction (k ≤ 4096 per half ⇒
+    * pair < 2²⁴). */
+  private def writeImiPartitioned(assigned: DataFrame,
                                   cents: (Array[(Int, Array[Double])], Array[(Int, Array[Double])]),
-                                  path: String, fusedDirCap: Int,
-                                  mode: String): Unit = {
-    val pairSpace = cents._1.length.toLong * cents._2.length
-    if (pairSpace <= fusedDirCap)
-      withPair
-        // task count capped at the parallelism: hash-partitioning on
-        // `pair` already lands each pair wholly in one task (≤ one file
-        // per pair dir either way), and pairSpace tasks for a small
-        // append is pure commit overhead (measured: the 20k-row append
-        // arm spent ~1 s on 256 task commits)
-        .repartition(math.min(pairSpace,
-          withPair.sparkSession.sparkContext.defaultParallelism.toLong).toInt,
-          col("pair"))
-        .write.mode(mode).partitionBy("pair").parquet(path)
-    else
-      withPair
-        .repartition(cents._1.length, col("cell1"))
-        // (cell1, cell2) sort ≡ pair sort within a cell1 partition:
-        // tight pair min/max row-group stats
-        .sortWithinPartitions("cell1", "cell2")
-        .write.mode(mode).partitionBy("cell1").parquet(path)
-  }
+                                  path: String, mode: String): Unit =
+    writePartitioned(
+      assigned.withColumn("pair", (col("cell1") * cents._2.length + col("cell2")).cast("int")),
+      "cell1", cents._1.length, Seq("cell1", "cell2"), path, mode)
 
-  /** Which partition column an IMI layout's data/codes dir was written
-    * with — `pair` (fused regime) or `cell1`. Detected from the
-    * directory names so serve/append/compact never need to be told. */
-  private def imiPartCol(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.listStatus(p).exists(s => s.isDirectory &&
-        s.getPath.getName.startsWith("pair="))) "pair" else "cell1"
-  }
+  /** PQ-encode `df` under `books` into a PQ layout's row: the id, the
+    * `cellCols`, the packed 8-byte code word and the raw vector. */
+  private def packedCodes(df: DataFrame, books: Similarity.PqBooks, dims: Int,
+                          idCol: String, vecCol: String, cellCols: String*): DataFrame =
+    Similarity.pqEncode(df, books, dims, idCol, vecCol)
+      .select((col(idCol) +: cellCols.map(col)) ++
+        Seq(Similarity.pqPack(col("codes"), books.length).as("packed"), col(vecCol)): _*)
 
-  /** Exact pair-probe predicate for an IMI layout scan: partition
-    * pruning on the layout's partition column plus the EXACT fused-pair
-    * set pushed to row-group stats. */
-  private def prunePairs(all: DataFrame, partCol: String, k2: Int,
-                         pairs: Array[(Int, Int)]): DataFrame = {
-    if (pairs.isEmpty) return all.where(lit(false))
-    val fusedPairs = col("pair").isin(pairs.map { case (a, b) => a * k2 + b }.toIndexedSeq: _*)
-    if (partCol == "pair") all.where(fusedPairs)
-    else all.where(col("cell1").isin(pairs.map(_._1).distinct.toIndexedSeq: _*) && fusedPairs)
-  }
+  /** Exact pair-probe predicate for an IMI layout scan: cell1 partition
+    * pruning plus the EXACT fused-pair set pushed to row-group stats.
+    * Exact on the retired `pair=` directory shape too, where `pair` is
+    * the partition column and `cell1` a data column. */
+  private def prunePairs(all: DataFrame, k2: Int, pairs: Array[(Int, Int)]): DataFrame =
+    if (pairs.isEmpty) all.where(lit(false))
+    else all.where(col("cell1").isin(pairs.map(_._1).distinct.toIndexedSeq: _*) &&
+      col("pair").isin(pairs.map { case (a, b) => a * k2 + b }.toIndexedSeq: _*))
 
   /** Refuse a layout dir that lacks a column the current format stores
     * (`pair` in IMI layouts, the raw vector in PQ layouts): it was
@@ -205,15 +160,14 @@ object Layout {
 
   /**
    * Persist the full two-level compressed index (IMI + PQ): 8-byte
-   * packed code words in the [[imiWrite]] partition regimes (fused
-   * `pair` directories, or `cell1` directories with pair-sorted files),
-   * plus both half codebooks and the PQ codebooks as sidecars. The
-   * production serving layout past the single-level cell cap: pair
-   * probes prune exactly to the probed pair set AND every scanned row
-   * is a packed code word instead of a raw vector — the [[pqWrite]]
-   * compression and the [[imiWrite]] cell-count path composed. Raw
-   * vectors are stored beside the code words (as in [[pqWrite]]) for
-   * the shortlist re-rank only.
+   * packed code words in the [[imiWrite]] shape (`cell1` directories of
+   * pair-sorted files), plus both half codebooks and the PQ codebooks
+   * as sidecars. The production serving layout past the single-level
+   * cell cap: pair probes prune exactly to the probed pair set AND
+   * every scanned row is a packed code word instead of a raw vector —
+   * the [[pqWrite]] compression and the [[imiWrite]] cell-count path
+   * composed. Raw vectors are stored beside the code words (as in
+   * [[pqWrite]]) for the shortlist re-rank only.
    *
    * Expects `indexed` from [[Similarity.imiIndex]] (has `cell1`/`cell2`)
    * and `books` from [[Similarity.pqTrain]] on the same corpus.
@@ -221,23 +175,13 @@ object Layout {
   def imiPqWrite(indexed: DataFrame,
                  cents: (Array[(Int, Array[Double])], Array[(Int, Array[Double])]),
                  books: Similarity.PqBooks, dir: String, dims: Int = 64,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 fusedDirCap: Int = 256): Unit = {
-    val m = books.length
-    writeImiPartitioned(
-      withPairKey(Similarity.pqEncode(indexed, books, dims, idCol, vecCol)
-        .select(col(idCol), col("cell1"), col("cell2"),
-          Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol)),
-        cents._2.length),
-      cents, s"$dir/codes", fusedDirCap, mode = "overwrite")
+                 idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    writeImiPartitioned(packedCodes(indexed, books, dims, idCol, vecCol, "cell1", "cell2"),
+      cents, s"$dir/codes", mode = "overwrite")
     val spark = indexed.sparkSession
-    writeTsv(spark, s"$dir/_centroids1.tsv",
-      cents._1.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
-    writeTsv(spark, s"$dir/_centroids2.tsv",
-      cents._2.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
-    writeTsv(spark, s"$dir/_codebooks.tsv",
-      for { s <- books.indices.iterator; (cid, c) <- books(s).iterator }
-        yield s"$s\t$cid\t${c.mkString(",")}")
+    writeCentroids(spark, s"$dir/_centroids1.tsv", cents._1)
+    writeCentroids(spark, s"$dir/_centroids2.tsv", cents._2)
+    writePqBooks(spark, dir, books)
   }
 
   /**
@@ -266,7 +210,7 @@ object Layout {
       .map(r => (r.getInt(0), r.getInt(1)))
     val all = spark.read.parquet(s"$dir/codes")
     requireCurrent(all.columns, s"$dir/codes", Seq("pair", vecCol), "imiPqWrite")
-    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/codes"), cents._2.length, pairs)
+    val pruned = prunePairs(all, cents._2.length, pairs)
     // fused ADC over the packed words (r13) — see [[graft.functions.PqAdcDist]]
     val approx = pruned
       .join(broadcast(probes), Seq("cell1", "cell2"))
@@ -285,51 +229,37 @@ object Layout {
     * the maintenance contract. */
   def ivfAppend(newVectors: DataFrame, dir: String,
                 vecCol: String = "embedding"): Unit = {
-    val spark = newVectors.sparkSession
-    val centroids = readIvfCentroids(spark, dir)
-    Similarity.assignCells(newVectors, centroids, vecCol)
-      .repartition(centroids.length, col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(dir)
+    val centroids = readIvfCentroids(newVectors.sparkSession, dir)
+    writeCells(Similarity.assignCells(newVectors, centroids, vecCol),
+      centroids.length, dir, mode = "append")
   }
 
   /** Incremental maintenance for an [[imiWrite]] layout: pair-cell
     * assignment under the frozen sidecar codebooks, appended in the
-    * layout's OWN regime (fused pair dirs or cell1 dirs + pair-sorted
-    * files — detected, never guessed, so an append can't split the
-    * layout across regimes). */
+    * layout's shape (see [[appendImiPartitioned]]). */
   def imiAppend(newVectors: DataFrame, dir: String, dims: Int = 64,
                 vecCol: String = "embedding"): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = readImiCentroids(spark, dir)
-    appendImiPartitioned(
-      Similarity.assignImiCells(newVectors, cents, dims, vecCol),
+    val cents = readImiCentroids(newVectors.sparkSession, dir)
+    appendImiPartitioned(Similarity.assignImiCells(newVectors, cents, dims, vecCol),
       cents, s"$dir/data", Seq("pair"), "imiWrite")
   }
 
   /** Append `assigned` (has cell1/cell2) into an existing IMI layout
-    * dir in its own partition regime, after [[requireCurrent]] on the
-    * `needed` columns. A fused-regime dir is named by `pair`, so its
-    * schema is read only when `needed` holds more than `pair` — at most
-    * one schema read per append (each spark.read.parquet is a leaf-file
-    * listing job, measurable per micro-batch under streaming ingest). */
+    * dir, after [[requireCurrent]] on the `needed` columns. A layout in
+    * the retired `pair=` directory shape is refused before anything is
+    * written: appending `cell1=` directories beside it would split the
+    * layout across two shapes. Both checks use the one schema read
+    * (each spark.read.parquet is a leaf-file listing, measurable per
+    * micro-batch under streaming ingest). */
   private def appendImiPartitioned(assigned: DataFrame,
                                    cents: (Array[(Int, Array[Double])], Array[(Int, Array[Double])]),
                                    path: String, needed: Seq[String], writer: String): Unit = {
-    val spark = assigned.sparkSession
-    val partCol = imiPartCol(spark, path)
-    val unproven = if (partCol == "pair") needed.filterNot(_ == "pair") else needed
-    if (unproven.nonEmpty)
-      requireCurrent(spark.read.parquet(path).columns, path, unproven, writer)
-    val df = withPairKey(assigned, cents._2.length)
-    if (partCol == "pair")
-      df.repartition(math.min(cents._1.length.toLong * cents._2.length,
-          df.sparkSession.sparkContext.defaultParallelism.toLong).toInt,
-          col("pair"))
-        .write.mode("append").partitionBy("pair").parquet(path)
-    else
-      df.repartition(cents._1.length, col("cell1"))
-        .sortWithinPartitions("cell1", "cell2")
-        .write.mode("append").partitionBy("cell1").parquet(path)
+    val existing = assigned.sparkSession.read.parquet(path)
+    requireCurrent(existing.columns, path, needed, writer)
+    require(!existing.inputFiles.exists(_.contains("/pair=")),
+      s"layout $path is in the retired pair= directory shape; rewrite it with " +
+        s"Layout.${writer.stripSuffix("Write")}Compact or rebuild it with Layout.$writer")
+    writeImiPartitioned(assigned, cents, path, mode = "append")
   }
 
   /**
@@ -351,53 +281,40 @@ object Layout {
     val spark = newVectors.sparkSession
     val centroids = readIvfCentroids(spark, dir)
     val books = readPqBooks(spark, dir)
-    val m = books.length
     requireCurrent(spark.read.parquet(s"$dir/codes").columns, s"$dir/codes",
       Seq(vecCol), "pqWrite")
-    Similarity.pqEncode(
-        Similarity.assignCells(newVectors, centroids, vecCol), books, dims, idCol, vecCol)
-      .select(col(idCol), col("cell"),
-        Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol))
-      .repartition(centroids.length, col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+    writeCells(packedCodes(Similarity.assignCells(newVectors, centroids, vecCol),
+        books, dims, idCol, vecCol, "cell"),
+      centroids.length, s"$dir/codes", mode = "append")
   }
 
   /** [[pqAppend]] for an [[imiPqWrite]] layout: new vectors are
     * pair-cell-assigned and PQ-encoded under the frozen sidecar
-    * codebooks, then appended in the layout's own partition regime
-    * (see [[appendImiPartitioned]]). */
+    * codebooks, then appended in the layout's shape (see
+    * [[appendImiPartitioned]]). */
   def imiPqAppend(newVectors: DataFrame, dir: String, dims: Int = 64,
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = newVectors.sparkSession
     val cents = readImiCentroids(spark, dir)
     val books = readPqBooks(spark, dir)
-    val m = books.length
     appendImiPartitioned(
-      Similarity.pqEncode(
-          Similarity.assignImiCells(newVectors, cents, dims, vecCol), books, dims, idCol, vecCol)
-        .select(col(idCol), col("cell1"), col("cell2"),
-          Similarity.pqPack(col("codes"), m).as("packed"), col(vecCol)),
+      packedCodes(Similarity.assignImiCells(newVectors, cents, dims, vecCol),
+        books, dims, idCol, vecCol, "cell1", "cell2"),
       cents, s"$dir/codes", Seq("pair", vecCol), "imiPqWrite")
   }
 
   /** Both codebook sidecars of an [[imiWrite]] layout. */
   def readImiCentroids(spark: SparkSession, dir: String)
-      : (Array[(Int, Array[Double])], Array[(Int, Array[Double])]) = {
-    def read(path: String) = readTsvLines(spark, path).map { line =>
-      val Array(cid, vec) = line.split("\t", 2)
-      (cid.toInt, vec.split(",").map(_.toDouble))
-    }
-    (read(s"$dir/_centroids1.tsv"), read(s"$dir/_centroids2.tsv"))
-  }
+      : (Array[(Int, Array[Double])], Array[(Int, Array[Double])]) =
+    (readCentroids(spark, s"$dir/_centroids1.tsv"), readCentroids(spark, s"$dir/_centroids2.tsv"))
 
   /**
    * IMI search straight off an [[imiWrite]] layout — identical results
    * to the in-memory [[Similarity.imiTopK]] (spec-pinned): the probed
    * pair set is bounded (nQueries × nProbe, collected to literals) and
-   * pruned EXACTLY via [[prunePairs]] — fused-pair partition pruning in
-   * the fused regime, or cell1 partition pruning plus the fused-pair IN
-   * set at the pair-sorted row-group stats in the big-pair-space
-   * regime — two pruning levels, no query-time index structure.
+   * pruned EXACTLY via [[prunePairs]] — cell1 partition pruning plus
+   * the fused-pair IN set at the pair-sorted row-group stats — two
+   * pruning levels, no query-time index structure.
    */
   def imiTopKFromLayout(spark: SparkSession, dir: String, queries: DataFrame,
                         k: Int, nProbe: Int = 32, dims: Int = 64,
@@ -412,7 +329,7 @@ object Layout {
       .map(r => (r.getInt(0), r.getInt(1)))
     val all = spark.read.parquet(s"$dir/data")
     requireCurrent(all.columns, s"$dir/data", Seq("pair"), "imiWrite")
-    val pruned = prunePairs(all, imiPartCol(spark, s"$dir/data"), cents._2.length, pairs)
+    val pruned = prunePairs(all, cents._2.length, pairs)
     val c = pruned.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"),
       col("cell1"), col("cell2"))
     Similarity.ivfScore(c, q, k, keys = Seq("cell1", "cell2"))
@@ -426,6 +343,34 @@ object Layout {
     }
     rows.groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(r => (r._2, r._3)))
+  }
+
+  private def writePqBooks(spark: SparkSession, dir: String, books: Similarity.PqBooks): Unit =
+    writeTsv(spark, s"$dir/_codebooks.tsv",
+      for { s <- books.indices.iterator; (cid, c) <- books(s).iterator }
+        yield s"$s\t$cid\t${c.mkString(",")}")
+
+  /**
+   * IVF search against an [[ivfWrite]] cell-partitioned layout: the
+   * probe-cell set (bounded by nQueries × nProbe, collected to
+   * literals) becomes the scan's PARTITION filter, so Spark lists and
+   * reads only the probed cell directories — nProbe/nCells of the files
+   * with no query-time index structure at all. Same results as
+   * [[Similarity.ivfTopK]] over the equivalent in-memory index
+   * (spec-checked).
+   */
+  def ivfTopKFromLayout(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
+                        nProbe: Int = 32, idCol: String = "vec_id",
+                        vecCol: String = "embedding"): DataFrame = {
+    val q = Similarity.ivfProbes(queries, readIvfCentroids(spark, dir), nProbe, idCol, vecCol)
+    val cells = q.select("cell").distinct().collect().map(_.getInt(0))
+    val all = spark.read.parquet(dir)
+    // empty query set → empty probe set: skip the scan entirely rather
+    // than build an empty IN filter
+    val pruned = if (cells.isEmpty) all.where(lit(false))
+      else all.where(col("cell").isin(cells.toIndexedSeq: _*))
+    val c = pruned.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"), col("cell"))
+    Similarity.ivfScore(c, q, k)
   }
 
   /**
@@ -468,6 +413,23 @@ object Layout {
       queries, k, shortlist, idCol, vecCol)
   }
 
+  /** The centroid-table sidecar codec (`_centroids.tsv`,
+    * `_centroids1.tsv`, `_centroids2.tsv`): one `cid<TAB>v1,v2,…` line
+    * per centroid. */
+  private def writeCentroids(spark: SparkSession, path: String,
+                             cents: Array[(Int, Array[Double])]): Unit =
+    writeTsv(spark, path, cents.iterator.map { case (cid, v) => s"$cid\t${v.mkString(",")}" })
+
+  private def readCentroids(spark: SparkSession, path: String): Array[(Int, Array[Double])] =
+    readTsvLines(spark, path).map { line =>
+      val Array(cid, vec) = line.split("\t", 2)
+      (cid.toInt, vec.split(",").map(_.toDouble))
+    }
+
+  /** Centroid sidecar of an [[ivfWrite]] layout. */
+  def readIvfCentroids(spark: SparkSession, dir: String): Array[(Int, Array[Double])] =
+    readCentroids(spark, s"$dir/_centroids.tsv")
+
   private def writeTsv(spark: SparkSession, path: String,
                        lines: Iterator[String]): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -483,19 +445,6 @@ object Layout {
     val in = new java.io.BufferedReader(
       new java.io.InputStreamReader(fs.open(p), "UTF-8"))
     try Iterator.continually(in.readLine()).takeWhile(_ != null).toArray
-    finally in.close()
-  }
-
-  /** Centroid sidecar of an [[ivfWrite]] layout. */
-  def readIvfCentroids(spark: SparkSession, dir: String): Array[(Int, Array[Double])] = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_centroids.tsv")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try Iterator.continually(in.readLine()).takeWhile(_ != null).map { line =>
-      val Array(cid, vec) = line.split("\t", 2)
-      (cid.toInt, vec.split(",").map(_.toDouble))
-    }.toArray
     finally in.close()
   }
 
@@ -652,26 +601,19 @@ object Layout {
     fs.delete(bak, true)
   }
 
-  /** Rewrite a cell-partitioned data dir back to one file per cell
-    * (re-sorting `sortCols` within partitions so merged files keep
-    * tight row-group stats), then [[swapDir]] it into place — the
-    * ANN-layout half of the [[postingsCompact]] maintenance story.
-    * `nParts` comes from LISTING the `partCol=` directory names, not a
-    * distinct() scan of the data: compaction already pays one full
-    * read for the rewrite, it must not pay a second one to size it.
-    * `preSwap` runs after the `.compact` write, before the promotion
-    * (sidecar carry-over for layouts whose data dir is the root). */
+  /** Rewrite an ANN layout's data dir with its own build writer — one
+    * file per partition directory, sized from the sidecar quantizer so
+    * no scan or listing precedes the one full read — then [[swapDir]]
+    * it into place: the ANN-layout half of the [[postingsCompact]]
+    * maintenance story. `preSwap` runs after the `.compact` write,
+    * before the promotion (sidecar carry-over for layouts whose data dir
+    * is the root). */
   private def compactPartitioned(spark: SparkSession, path: String,
-                                 partCol: String, sortCols: Seq[String],
+                                 rewrite: (DataFrame, String) => Unit,
                                  preSwap: org.apache.hadoop.fs.FileSystem => Unit = _ => ()): Unit = {
+    rewrite(spark.read.parquet(path), s"$path.compact")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val nParts = math.max(1, fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .count(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol=")))
-    val out = spark.read.parquet(path).repartition(nParts, col(partCol))
-    val sorted =
-      if (sortCols.nonEmpty) out.sortWithinPartitions(sortCols.map(col): _*) else out
-    sorted.write.mode("overwrite").partitionBy(partCol).parquet(s"$path.compact")
     preSwap(fs)
     swapDir(fs, path)
   }
@@ -681,32 +623,31 @@ object Layout {
     * compacted dir before the swap). Serving parity and
     * append-after-compact are spec-pinned for all four ANN compacts. */
   def ivfCompact(spark: SparkSession, dir: String): Unit =
-    compactPartitioned(spark, dir, "cell", Nil, preSwap = fs =>
-      org.apache.hadoop.fs.FileUtil.copy(fs,
+    compactPartitioned(spark, dir,
+      writeCells(_, readIvfCentroids(spark, dir).length, _, mode = "overwrite"),
+      preSwap = fs => org.apache.hadoop.fs.FileUtil.copy(fs,
         new org.apache.hadoop.fs.Path(s"$dir/_centroids.tsv"), fs,
         new org.apache.hadoop.fs.Path(s"$dir.compact/_centroids.tsv"),
         false, spark.sessionState.newHadoopConf()): Unit)
 
   /** Small-file compaction for a [[pqWrite]] layout's codes dir. */
   def pqCompact(spark: SparkSession, dir: String): Unit =
-    compactPartitioned(spark, s"$dir/codes", "cell", Nil)
+    compactPartitioned(spark, s"$dir/codes",
+      writeCells(_, readIvfCentroids(spark, dir).length, _, mode = "overwrite"))
 
-  /** Small-file compaction for an [[imiWrite]] layout's data dir, in
-    * the layout's own partition regime: fused pair dirs need no re-sort
-    * (a dir holds one pair); cell1 dirs re-sort (cell1, cell2) ≡ pair
-    * so the merged files' row-group stats stay tight. */
+  /** Small-file compaction for an [[imiWrite]] layout's data dir: the
+    * merged files are re-sorted by (cell1, cell2) ≡ pair so their
+    * row-group stats stay tight. It also rewrites a layout in the
+    * retired `pair=` directory shape into the current one. */
   def imiCompact(spark: SparkSession, dir: String): Unit =
-    compactImiPartitioned(spark, s"$dir/data")
+    compactPartitioned(spark, s"$dir/data",
+      writeImiPartitioned(_, readImiCentroids(spark, dir), _, mode = "overwrite"))
 
-  /** Small-file compaction for an [[imiPqWrite]] layout's codes dir. */
+  /** Small-file compaction for an [[imiPqWrite]] layout's codes dir
+    * (see [[imiCompact]]). */
   def imiPqCompact(spark: SparkSession, dir: String): Unit =
-    compactImiPartitioned(spark, s"$dir/codes")
-
-  private def compactImiPartitioned(spark: SparkSession, path: String): Unit =
-    imiPartCol(spark, path) match {
-      case "pair" => compactPartitioned(spark, path, "pair", Nil)
-      case _ => compactPartitioned(spark, path, "cell1", Seq("cell1", "cell2"))
-    }
+    compactPartitioned(spark, s"$dir/codes",
+      writeImiPartitioned(_, readImiCentroids(spark, dir), _, mode = "overwrite"))
 
   /** Parquet data files under a layout subdirectory (recursive; excludes
     * _SUCCESS etc.) — the compaction gate's measurement. */
@@ -794,10 +735,6 @@ object Layout {
     }
   }
 
-  /** Range-pruned read: scan only files whose [min,max] interval for
-    * `column` intersects [lo, hi], then apply the exact filter. Result
-    * is identical to filtering the full scan; only the I/O differs.
-    * Returns (dataframe, filesRead, filesTotal). */
   /**
    * Rendezvous (highest-random-weight) shard routing: key → the shard
    * whose `md5(key ":" shard)` is lexicographically largest. The
@@ -821,6 +758,10 @@ object Layout {
         lit(s).as("shard"))): _*)).getField("shard")
   }
 
+  /** Range-pruned read: scan only files whose [min,max] interval for
+    * `column` intersects [lo, hi], then apply the exact filter. Result
+    * is identical to filtering the full scan; only the I/O differs.
+    * Returns (dataframe, filesRead, filesTotal). */
   def prunedRead(spark: SparkSession, dataDir: String, index: DataFrame,
                  column: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val total = index.count().toInt

@@ -332,12 +332,17 @@ object Similarity {
   def ivfTopK(indexed: DataFrame, centroids: Array[(Int, Array[Double])],
               queries: DataFrame, k: Int, nProbe: Int = 32,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      explode(transform(probeCellsCol(centroids, nProbe, vecCol),
-        p => p.getField("cell"))).as("cell"))
     val c = indexed.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"), col("cell"))
-    ivfScore(c, q, k)
+    ivfScore(c, ivfProbes(queries, centroids, nProbe, idCol, vecCol), k)
   }
+
+  /** The IVF query side: one (query_id, qvec, cell) row per probed
+    * cell, for [[ivfScore]]. */
+  private[ops] def ivfProbes(queries: DataFrame, centroids: Array[(Int, Array[Double])],
+                             nProbe: Int, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
+      explode(transform(probeCellsCol(centroids, nProbe, col(vecCol)),
+        p => p.getField("cell"))).as("cell"))
 
   /** Top-`nProbe` nearest cells for a query vector expression, as an
     * array<struct(sim, cell)> sorted descending: the multi-dot against
@@ -359,9 +364,6 @@ object Similarity {
       (s, c) => struct(s.as("sim"), c.as("cell")))
     slice(reverse(array_sort(scored)), 1, nProbe)
   }
-  private def probeCellsCol(centroids: Array[(Int, Array[Double])], nProbe: Int,
-                            vecCol: String): Column =
-    probeCellsCol(centroids, nProbe, col(vecCol))
 
   /** Shared IVF scoring tail: cell-keyed candidate join (queries
     * broadcast), exact cosine, per-query top-k. `keys` is the cell key —
@@ -377,31 +379,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
-  }
-
-  /**
-   * IVF search against a [[Layout.ivfWrite]] cell-partitioned layout:
-   * the probe-cell set (bounded by nQueries × nProbe, collected to
-   * literals) becomes the scan's PARTITION filter, so Spark lists and
-   * reads only the probed cell directories — nProbe/nCells of the files
-   * with no query-time index structure at all. Same results as
-   * [[ivfTopK]] over the equivalent in-memory index (spec-checked).
-   */
-  def ivfTopKFromLayout(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                        nProbe: Int = 32, idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val centroids = Layout.readIvfCentroids(spark, dir)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      explode(transform(probeCellsCol(centroids, nProbe, vecCol),
-        p => p.getField("cell"))).as("cell"))
-    val cells = q.select("cell").distinct().collect().map(_.getInt(0))
-    val all = spark.read.parquet(dir)
-    // empty query set → empty probe set: skip the scan entirely rather
-    // than build an empty IN filter
-    val pruned = if (cells.isEmpty) all.where(lit(false))
-      else all.where(col("cell").isin(cells.toIndexedSeq: _*))
-    val c = pruned.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"), col("cell"))
-    ivfScore(c, q, k)
   }
 
   /** IMI half-codebook sizing: k per half ≈ √(rows / targetCellRows),

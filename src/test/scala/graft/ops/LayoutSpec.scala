@@ -114,7 +114,7 @@ class LayoutSpec extends SparkSpec {
 
     val queries = emb.where(col("vec_id") < 3)
     val nProbe = 2
-    val result = Similarity.ivfTopKFromLayout(spark, dir, queries, k = 5, nProbe = nProbe)
+    val result = Layout.ivfTopKFromLayout(spark, dir, queries, k = 5, nProbe = nProbe)
     val rows = result.collect()
     assert(rows.length == 3 * 5)
 
@@ -138,48 +138,69 @@ class LayoutSpec extends SparkSpec {
     assert(fromLayout == direct)
   }
 
+  // The FileScan node's `PartitionFilters: [...]` / `PushedFilters: [...]`
+  // lists (up to the first `]`, which closes an `In(col, [...])` value
+  // list at the latest)
+  private def scanFilters(plan: String, kind: String): Seq[String] =
+    s"$kind: \\[([^\\]]*)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+
+  // The one IMI on-disk shape, at every k: cell1 directories pruned at
+  // the listing, the EXACT probed `pair` set pushed to the pair-sorted
+  // row-group stats
+  private def assertImiPruned(plan: String): Unit = {
+    assert(scanFilters(plan, "PartitionFilters").exists(_.contains("cell1")),
+      s"no cell1 partition filter in plan:\n$plan")
+    assert(scanFilters(plan, "PushedFilters").exists(_.contains("pair")),
+      s"no exact pair pushed filter in plan:\n$plan")
+  }
+  private def sortedHits(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+
   test("IMI layout: two-level pruning (cell1 partitions, cell2 row groups), parity with in-memory") {
     val dir = Files.createTempDirectory("layout-imi").toString + "/imi"
     val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
     val (indexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
-    Layout.imiWrite(indexed, cents, dir)
+    // ONE query, nProbe = 3: at most 3 of the 4 cell1 dirs are probed,
+    // so pruning is guaranteed visible
+    val queries = emb.where(col("vec_id") === 0)
 
+    Layout.imiWrite(indexed, cents, dir)
     // sidecars round-trip both codebooks exactly
     val (b1, b2) = Layout.readImiCentroids(spark, dir)
     assert(b1.map(_._1).toSeq == cents._1.map(_._1).toSeq &&
       b1.map(_._2.toSeq).toSeq == cents._1.map(_._2.toSeq).toSeq)
     assert(b2.map(_._1).toSeq == cents._2.map(_._1).toSeq &&
       b2.map(_._2.toSeq).toSeq == cents._2.map(_._2.toSeq).toSeq)
-
-    // k = 4 per half ⇒ pair space 16 ≤ fusedDirCap: the FUSED regime —
-    // one directory per (cell1, cell2) pair, ≤ pair-space files
-    val filesTotal = spark.read.parquet(s"$dir/data").inputFiles.length
-    assert(filesTotal <= cents._1.length * cents._2.length,
-      s"expected <= pair-space files, got $filesTotal")
-
-    // ONE query, nProbe = 3: only 3 of the 16 pair dirs are probed, so
-    // pruning is guaranteed visible
-    val queries = emb.where(col("vec_id") === 0)
+    // one file per cell1 directory, never one per pair
+    val filesTotal = spark.read.parquet(s"$dir/data").inputFiles
+    assert(filesTotal.length <= cents._1.length && filesTotal.forall(_.contains("/cell1=")),
+      s"expected <= k1 cell1 files, got ${filesTotal.toSeq}")
     val result = Layout.imiTopKFromLayout(spark, dir, queries, k = 5, nProbe = 3)
-    val rows = result.collect()
+    val rows = sortedHits(result)
     assert(rows.nonEmpty)
-
-    // plan: the fused pair key is a PARTITION filter — EXACT pruning to
-    // the probed pairs, never the cell1×cell2 Cartesian superset (r13)
-    val plan = result.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pair"),
-      s"no fused-pair partition filter in plan:\n$plan")
-    // files actually read = the probed pair set, < total
+    assertImiPruned(result.queryExecution.executedPlan.toString)
     val scanned = org.apache.spark.sql.graftbridge.Bridge.scannedFileCounts(result)
-    assert(scanned.nonEmpty && scanned.max < filesTotal,
-      s"scan touched ${scanned.max} of $filesTotal files; pair probes must prune partitions")
+    assert(scanned.nonEmpty && scanned.max < filesTotal.length,
+      s"scan touched ${scanned.max} of ${filesTotal.length} files; probes must prune partitions")
+    assert(rows == sortedHits(Similarity.imiTopK(indexed, cents, queries, k = 5, nProbe = 3)))
+  }
 
-    // parity with the in-memory pair index at the same probes
-    val direct = Similarity.imiTopK(indexed, cents, queries, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    val fromLayout = rows
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(fromLayout == direct)
+  test("IMI deep-cell regime: cell1 partitions + EXACT fused-pair row-group pruning") {
+    // the shape a big pair space (k = 4096 per half) needs is the one
+    // the writers produce at every k, so k = 4 exercises it; here under
+    // the composed IMI+PQ layout
+    val dir = Files.createTempDirectory("layout-imi-deep").toString + "/imipq"
+    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val (indexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
+    val books = Similarity.pqTrain(emb)
+    val queries = emb.where(col("vec_id") === 0)
+
+    Layout.imiPqWrite(indexed, cents, books, dir)
+    assert(spark.read.parquet(s"$dir/codes").inputFiles.length <= cents._1.length)
+    val served = Layout.imiPqTopKFromLayout(spark, dir, queries, k = 5, nProbe = 3)
+    assertImiPruned(served.queryExecution.executedPlan.toString)
+    assert(sortedHits(served) ==
+      sortedHits(Similarity.imiPqTopK(indexed, cents, books, queries, k = 5, nProbe = 3)))
   }
 
   test("IVF+PQ layout: ADC served off packed codes, partition-pruned, parity with in-memory") {
@@ -264,28 +285,28 @@ class LayoutSpec extends SparkSpec {
       assert(bb(s).map(_._2.toSeq).toSeq == books(s).map(_._2.toSeq).toSeq)
     }
 
-    // the persisted index rows are 8-byte packed words; k = 4 per half
-    // ⇒ FUSED regime, ≤ pair-space files (one per pair directory)
+    // the persisted index rows are 8-byte packed words, at most one
+    // file per cell1 directory
     val codes = spark.read.parquet(s"$dir/codes")
     assert(codes.schema("packed").dataType.typeName == "long")
-    assert(codes.inputFiles.length <= cents._1.length * cents._2.length)
+    assert(codes.inputFiles.length <= cents._1.length)
 
-    // ONE query, nProbe = 3: only 3 of the 16 pair dirs are probed, so
-    // partition pruning is guaranteed visible
+    // ONE query, nProbe = 3: at most 3 of the 4 cell1 dirs are probed,
+    // so partition pruning is guaranteed visible
     val queries = emb.where(col("vec_id") === 0)
     val result = Layout.imiPqTopKFromLayout(spark, dir, queries,
       k = 5, nProbe = 3)
     val rows = result.collect()
     assert(rows.nonEmpty)
 
-    // fused-pair partition pruning: exact to the probed pair set (r13)
+    // cell1 partition pruning, then the exact pair set at the row groups
     val scanned = org.apache.spark.sql.graftbridge.Bridge.scannedFileCounts(result)
     val filesTotal = codes.inputFiles.length
     assert(scanned.nonEmpty && scanned.max < filesTotal,
       s"scan touched ${scanned.max} of $filesTotal files; pair probes must prune partitions")
     val plan = result.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pair"),
-      s"no fused-pair partition filter in plan:\n$plan")
+    assert(scanFilters(plan, "PartitionFilters").exists(_.contains("cell1")),
+      s"no cell1 partition filter in plan:\n$plan")
 
     // parity: identical (query, rank, neighbor, sim) to the in-memory
     // composed index on the same quantizer + codebooks
@@ -304,49 +325,6 @@ class LayoutSpec extends SparkSpec {
       s"ADC scan reads the vector column (width regression): $widths")
     assert(widths.exists(_._2.contains("embedding")),
       s"no layout scan reads vectors — re-rank source missing: $widths")
-  }
-
-  test("IMI deep-cell regime: cell1 partitions + EXACT fused-pair row-group pruning") {
-    // fusedDirCap = 1 forces the big-pair-space shape (what k = 4096
-    // per half produces): cell1 partition dirs, pair-sorted files, and
-    // the probed pair set pushed as an exact `pair IN (...)` data
-    // filter — not the r12 cell2-IN Cartesian superset
-    val base = Files.createTempDirectory("layout-imi-deep").toString
-    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val (indexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
-    val books = Similarity.pqTrain(emb)
-    val queries = emb.where(col("vec_id") === 0)
-
-    Layout.imiWrite(indexed, cents, s"$base/imi", fusedDirCap = 1)
-    val filesTotal = spark.read.parquet(s"$base/imi/data").inputFiles.length
-    assert(filesTotal <= cents._1.length, // cell1 dirs, not pair dirs
-      s"deep regime must partition by cell1, got $filesTotal files")
-    val result = Layout.imiTopKFromLayout(spark, s"$base/imi", queries, k = 5, nProbe = 3)
-    val rows = result.collect()
-    assert(rows.nonEmpty)
-    val plan = result.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell1"),
-      s"no cell1 partition filter in plan:\n$plan")
-    assert(plan.contains("PushedFilters") && plan.contains("pair"),
-      s"no exact fused-pair pushed filter in plan:\n$plan")
-    val direct = Similarity.imiTopK(indexed, cents, queries, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(rows.map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-      == direct)
-
-    // same for the composed IMI+PQ layout, including append + compact
-    // staying in the layout's own regime
-    Layout.imiPqWrite(indexed, cents, books, s"$base/imipq", fusedDirCap = 1)
-    val served = Layout.imiPqTopKFromLayout(spark, s"$base/imipq", queries,
-      k = 5, nProbe = 3)
-    val planPq = served.queryExecution.executedPlan.toString
-    assert(planPq.contains("PartitionFilters") && planPq.contains("cell1"))
-    assert(planPq.contains("PushedFilters") && planPq.contains("pair"))
-    val directPq = Similarity.imiPqTopK(indexed, cents, books, queries, k = 5, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(served.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-      == directPq)
   }
 
   // The on-disk shapes the current writers no longer produce (PQ layouts
@@ -382,7 +360,7 @@ class LayoutSpec extends SparkSpec {
     refusedNaming("pqWrite")(Layout.pqAppend(more, s"$base/ivfpq"))
     assert(layoutFiles(s"$base/ivfpq/codes") == pqFiles, "a refused append must write nothing")
 
-    // IMI+PQ: fused pair dirs with the vector column stripped
+    // IMI+PQ: the cell1 shape with the vector column stripped
     val (imiIndexed, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
     Layout.imiPqWrite(imiIndexed, cents, Similarity.pqTrain(emb), s"$base/imipq")
     locally {
@@ -390,7 +368,7 @@ class LayoutSpec extends SparkSpec {
         .select("vec_id", "cell1", "cell2", "packed", "pair")
       val rows = full.collect().toSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), full.schema)
-        .write.mode("overwrite").partitionBy("pair").parquet(s"$base/imipq/codes")
+        .write.mode("overwrite").partitionBy("cell1").parquet(s"$base/imipq/codes")
     }
     assert(!spark.read.parquet(s"$base/imipq/codes").columns.contains("embedding"))
     val imiPqFiles = layoutFiles(s"$base/imipq/codes")
@@ -419,6 +397,46 @@ class LayoutSpec extends SparkSpec {
     assert(layoutFiles(s"$base/imi/data") == imiFiles, "a refused append must write nothing")
   }
 
+  test("retired pair= IMI layout: serves with parity, append refused writing nothing") {
+    // The shape imiWrite wrote for pair spaces <= 256 before the single
+    // cell1 shape: one `pair=` directory per (cell1, cell2) pair, cell1
+    // and cell2 as data columns. Built from half the corpus.
+    val base = Files.createTempDirectory("layout-pair-dirs").toString
+    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val queries = emb.where(col("vec_id") < 3)
+    val half2 = emb.where(col("vec_id") % 2 =!= 0)
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    val (indexedFull, cents) = Similarity.imiIndex(emb, k = 4, lloydIters = 2)
+    val half1 = indexedFull.where(col("vec_id") % 2 === 0)
+    Layout.imiWrite(half1, cents, s"$base/imi") // for the sidecars
+    graft.core.FsUtil.deleteRecursive(java.nio.file.Paths.get(s"$base/imi/data"))
+    half1.withColumn("pair", (col("cell1") * cents._2.length + col("cell2")).cast("int"))
+      .repartition(col("pair"))
+      .write.partitionBy("pair").parquet(s"$base/imi/data")
+    val pairFiles = layoutFiles(s"$base/imi/data")
+    assert(pairFiles.nonEmpty && pairFiles.forall(_.contains("/pair=")))
+
+    // serving stays exact: `cell1 IN … AND pair IN …` prunes this shape too
+    assert(sortedRows(Layout.imiTopKFromLayout(spark, s"$base/imi", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Similarity.imiTopK(half1, cents, queries, k = 5, nProbe = 3)))
+
+    // an append would split the layout across two shapes: refused before
+    // it writes, naming both ways out
+    val e = intercept[IllegalArgumentException](Layout.imiAppend(half2, s"$base/imi"))
+    assert(e.getMessage.contains("Layout.imiCompact") && e.getMessage.contains("Layout.imiWrite"),
+      e.getMessage)
+    assert(layoutFiles(s"$base/imi/data") == pairFiles, "a refused append must write nothing")
+
+    // the named way out: compaction rewrites it into the cell1 shape,
+    // after which the append lands and serves like the full index
+    Layout.imiCompact(spark, s"$base/imi")
+    assert(layoutFiles(s"$base/imi/data").forall(_.contains("/cell1=")))
+    Layout.imiAppend(half2, s"$base/imi")
+    assert(sortedRows(Layout.imiTopKFromLayout(spark, s"$base/imi", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Similarity.imiTopK(indexedFull, cents, queries, k = 5, nProbe = 3)))
+  }
+
   test("ANN layout appends: incremental maintenance equals a full rebuild (all four layouts)") {
     // The production shape: an index is built once and fed increments —
     // rebuilding a 100 TB index per ingest batch is not an option. Each
@@ -444,8 +462,8 @@ class LayoutSpec extends SparkSpec {
     Layout.ivfWrite(indexedFull, cents, s"$base/ivf_full")
     Layout.ivfWrite(Similarity.assignCells(half1, cents), cents, s"$base/ivf_inc")
     Layout.ivfAppend(half2, s"$base/ivf_inc")
-    assert(sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_inc", queries, k = 5, nProbe = 3)) ==
-      sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_full", queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.ivfTopKFromLayout(spark, s"$base/ivf_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.ivfTopKFromLayout(spark, s"$base/ivf_full", queries, k = 5, nProbe = 3)))
 
     // IVF+PQ codes
     Layout.pqWrite(indexedFull, cents, books, s"$base/pq_full")
@@ -483,8 +501,8 @@ class LayoutSpec extends SparkSpec {
     Layout.imiCompact(spark, s"$base/imi_inc")
     Layout.imiPqCompact(spark, s"$base/imipq_inc")
     assert(files(s"$base/pq_inc/codes") < beforeC)
-    assert(sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_inc", queries, k = 5, nProbe = 3)) ==
-      sortedRows(Similarity.ivfTopKFromLayout(spark, s"$base/ivf_full", queries, k = 5, nProbe = 3)))
+    assert(sortedRows(Layout.ivfTopKFromLayout(spark, s"$base/ivf_inc", queries, k = 5, nProbe = 3)) ==
+      sortedRows(Layout.ivfTopKFromLayout(spark, s"$base/ivf_full", queries, k = 5, nProbe = 3)))
     assert(sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_inc", queries, k = 5, nProbe = 3)) ==
       sortedRows(Layout.ivfPqTopKFromLayout(spark, s"$base/pq_full", queries, k = 5, nProbe = 3)))
     assert(sortedRows(Layout.imiTopKFromLayout(spark, s"$base/imi_inc", queries, k = 5, nProbe = 3)) ==
